@@ -10,9 +10,9 @@
 Each query is forced end-to-end with the noop sink (full computation,
 no driver collect). Per-query wall time includes Catalyst planning —
 that is the user-visible latency. ``panel`` is the fixed 12-query
-cross-round comparison set (see PANEL) — timed every round regardless
-of the driver-slot rotation, so round-over-round perf deltas compare
-like with like; ``value``/``queries`` still cover exactly the declared
+cross-round comparison set (see PANEL) — timed every round whatever
+the declared slate holds, so round-over-round perf deltas compare like
+with like; ``value``/``queries`` still cover exactly the declared
 slate.
 """
 
@@ -33,12 +33,12 @@ try:
 except OSError:
     LOAD_START = None
 
-# Fixed cross-round comparison panel (VERDICT r5 task 6): the driver
-# rotates ~46 of the 50 declared slots every round, so round-over-round
-# totals compare different query sets. These 12 (a slice of the
-# SCALING.md set spanning scan/agg, join, dedup, similarity, pandas
-# UDAF, TPC-H, iterative and composed families) are timed EVERY round
-# regardless of rotation and reported separately — the stable series
+# Fixed cross-round comparison panel (VERDICT r5 task 6): the declared
+# slate changes between rounds, so round-over-round totals can compare
+# different query sets. These 12 (a slice of the SCALING.md set
+# spanning scan/agg, join, dedup, similarity, pandas UDAF, TPC-H,
+# iterative and composed families) are timed EVERY round whether or not
+# they are declared, and reported separately — the stable series
 # regression tracking reads.
 PANEL = [
     "word_count",
@@ -203,10 +203,7 @@ def main() -> None:
     # declared window come from the full registry
     from mapreduce_project_spark import queries_registry as _R
 
-    registry = {**_R.QUERIES, **_R.EXTRA_QUERIES}
-    to_time = dict(queries)
-    for name in PANEL:
-        to_time.setdefault(name, registry[name])
+    to_time = {**queries, **{name: _R.ALL_QUERIES[name] for name in PANEL}}
 
     first = sorted(to_time)[0]
     try:

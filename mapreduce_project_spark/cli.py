@@ -115,11 +115,8 @@ def _build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
     args = _build_parser().parse_args(argv)
-    from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES
-
-    # the CLI serves users, not the driver: expose the full inventory
-    # (declared + pytest-only extras) for list/run
-    ALL = {**QUERIES, **EXTRA_QUERIES}
+    # the CLI serves users, not the driver: list/run see every query
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES as ALL
 
     if args.cmd == "list":
         for name in sorted(ALL):

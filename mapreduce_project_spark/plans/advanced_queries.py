@@ -27,10 +27,10 @@ from mapreduce_project_spark.operators.relational import (
     rollup_agg,
 )
 from mapreduce_project_spark.operators.similarity import topk_ivf
-from mapreduce_project_spark.queries_registry import extra_query, query, t
+from mapreduce_project_spark.queries_registry import query, t
 
 
-@extra_query(
+@query(
     "rollup_customer_balance",
     """
     SELECT c_mktsegment, c_nationkey,
@@ -373,7 +373,7 @@ def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rk", F.col("rk").cast("bigint"))
 
 
-@extra_query(
+@query(
     "pagerank_trade_graph",
     """
     WITH raw AS (
@@ -505,7 +505,7 @@ _PPR_ORACLE = """
     """
 
 
-@extra_query("pagerank_personalized_seeded", _PPR_ORACLE)
+@query("pagerank_personalized_seeded", _PPR_ORACLE)
 def q_pagerank_personalized_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized (seeded-teleport) PageRank over the trade graph
     (D303) — the recommender-graph sibling of `pagerank_trade_graph`:
@@ -644,7 +644,7 @@ _RCTE_SQL = """
     """
 
 
-@extra_query("recursive_supplier_chain", _RCTE_SQL)
+@query("recursive_supplier_chain", _RCTE_SQL)
 def q_recursive_supplier_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE (new SQL surface in Spark 4) — hierarchical
     reachability declared IN SQL instead of a driver-side loop: walk
@@ -662,7 +662,7 @@ def q_recursive_supplier_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_RCTE_SQL)
 
 
-@extra_query(
+@query(
     "asof_purchase_after_view",
     """
     WITH v AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'),
@@ -701,7 +701,7 @@ def q_asof_purchase_after_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "rollup_with_grouping_id",
     """
     SELECT o_orderstatus, o_orderpriority,
@@ -729,7 +729,7 @@ def q_rollup_with_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "shortest_paths_trade",
     """
     WITH raw AS (
@@ -839,7 +839,7 @@ _COMPONENTS_ORACLE = """
     """
 
 
-@extra_query("graph_components_cosupply", _COMPONENTS_ORACLE)
+@query("graph_components_cosupply", _COMPONENTS_ORACLE)
 def q_graph_components_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the January-1995 co-supply graph
     (suppliers joined when they supplied the same order) — the
@@ -883,7 +883,7 @@ def q_graph_components_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "mad_quantity_by_flag",
     """
     WITH med AS (
@@ -918,7 +918,7 @@ def q_mad_quantity_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "winsorize_quantity",
     """
     WITH b AS (
@@ -1000,7 +1000,7 @@ _ASSORT_ORACLE = """
     """
 
 
-@extra_query("graph_degree_assortativity", _ASSORT_ORACLE)
+@query("graph_degree_assortativity", _ASSORT_ORACLE)
 def q_graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (D233, Newman 2002) of the January-1995
     co-supply graph — the one-number structural fingerprint the graph
@@ -1117,7 +1117,7 @@ _LPA_ORACLE = (
 )
 
 
-@extra_query("graph_label_propagation", _LPA_ORACLE)
+@query("graph_label_propagation", _LPA_ORACLE)
 def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label-propagation community detection (D245,
     Raghavan 2007) over the January-1995 co-supply graph — the
@@ -1257,7 +1257,7 @@ _KCORE_ORACLE = (
 )
 
 
-@extra_query("graph_kcore_membership", _KCORE_ORACLE)
+@query("graph_kcore_membership", _KCORE_ORACLE)
 def q_graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded k-core peel (D255, k = 3, six synchronous rounds) over
     the January-1995 co-supply graph — the density-tier member of the
@@ -1455,7 +1455,7 @@ _NPROBE_ORACLE = f"""
     """
 
 
-@extra_query("ivf_nprobe_recall_curve", _NPROBE_ORACLE)
+@query("ivf_nprobe_recall_curve", _NPROBE_ORACLE)
 def q_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF nprobe recall-vs-cost ladder (D276) — the ANN-serving
     counterpart of the LSH width ladder (D221 audits the DEDUP
@@ -1601,7 +1601,7 @@ def q_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "graph_clustering_coefficient",
     """
     WITH o AS (
@@ -1810,7 +1810,7 @@ _BTW_ORACLE = f"""
     """
 
 
-@extra_query("graph_betweenness_sampled", _BTW_ORACLE)
+@query("graph_betweenness_sampled", _BTW_ORACLE)
 def q_graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled-pair BETWEENNESS centrality (D296) — the bridge/broker
     statistic completing the graph family's centrality axis
@@ -2046,7 +2046,7 @@ def _hits_oracle() -> str:
     """
 
 
-@extra_query("graph_hits_bipartite", _hits_oracle())
+@query("graph_hits_bipartite", _hits_oracle())
 def q_graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities (D301, Kleinberg 1999) over the
     January-1995 customer→supplier bipartite order graph — the

@@ -6,12 +6,11 @@ optimizes end to end: filters pushed into every parquet scan, dims
 broadcast, partial aggregation before the shuffle, top-k via
 TakeOrderedAndProject instead of a total sort.
 
-Q3/Q6/Q10/Q18 are pytest-only (`extra_query`) — they certify COMPOSED
-plans whose individual operators already carry driver slots. The
-correlated-subquery shapes (Q4/Q22) are driver-declared: they are the
-driver-visible proof of the semi/anti decorrelation surface (the plain
-join twins `join_semi_customers`/`join_anti_customers` moved to pytest
-slots in exchange). Money arithmetic uses the module-wide
+Q3/Q6/Q10/Q18 certify COMPOSED plans whose individual operators are
+checked on their own. The correlated-subquery shapes (Q4/Q22) prove the
+semi/anti decorrelation surface beside the plain join twins
+`join_semi_customers`/`join_anti_customers`. Only Q5 holds a driver
+slot (`queries_registry.DECLARED`). Money arithmetic uses the module-wide
 DECIMAL(18,2) convention (`relational.dec*` — exact, associative,
 engine-identical).
 """
@@ -22,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.relational import dec, dec_sum
-from mapreduce_project_spark.queries_registry import extra_query, query, t
+from mapreduce_project_spark.queries_registry import query, t
 from mapreduce_project_spark.sources import register_tables
 
 # revenue term used by Q3/Q5/Q10-shaped queries
@@ -33,7 +32,7 @@ def _rev() -> "F.Column":
     return F.sum(dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast("double")
 
 
-@extra_query(
+@query(
     "tpch_q3_shipping_priority",
     f"""
     SELECT l_orderkey,
@@ -76,7 +75,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "tpch_q6_revenue_forecast",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -112,7 +111,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "tpch_q10_returned_items",
     f"""
     SELECT c_custkey, c_name,
@@ -151,7 +150,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "tpch_q18_large_orders",
     """
     WITH big AS (
@@ -266,7 +265,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q22_SQL)
 
 
-@extra_query(
+@query(
     "tpch_q14_promo_share",
     """
     SELECT CAST(100.0 * promo / total AS DOUBLE) AS promo_revenue_pct,
@@ -369,7 +368,7 @@ _Q19_SQL = f"""
     """
 
 
-@extra_query("tpch_q5_local_supplier_volume", _Q5_SQL)
+@query("tpch_q5_local_supplier_volume", _Q5_SQL)
 def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5 shape — the 6-way join-ordering stress: region gates nation
     gates supplier, customer joins orders joins lineitem, and the extra
@@ -384,7 +383,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q5_SQL)
 
 
-@extra_query("tpch_q7_volume_shipping", _Q7_SQL)
+@query("tpch_q7_volume_shipping", _Q7_SQL)
 def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 shape — self-joined dimension (nation appears twice under two
     aliases as supplier-side and customer-side), cross-nation trade
@@ -397,7 +396,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q7_SQL)
 
 
-@extra_query("tpch_q19_disjunctive_brackets", _Q19_SQL)
+@query("tpch_q19_disjunctive_brackets", _Q19_SQL)
 def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q19 shape — disjunctive multi-bracket predicate across BOTH join
     sides (part attributes AND lineitem quantity per branch). The
@@ -421,7 +420,7 @@ _LATERAL_SQL = """
     """
 
 
-@extra_query("lateral_recent_orders", _LATERAL_SQL)
+@query("lateral_recent_orders", _LATERAL_SQL)
 def q_lateral_recent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL correlated subquery — each customer's two most recent
     orders via a per-row dependent subquery (the SQL:1999 lateral-join
@@ -448,7 +447,7 @@ _Q13_SQL = """
     """
 
 
-@extra_query("tpch_q13_customer_distribution", _Q13_SQL)
+@query("tpch_q13_customer_distribution", _Q13_SQL)
 def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13 shape — the double aggregation: orders per customer
     (LEFT join so zero-order customers keep their c_count = 0 bucket —

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.relational import dec
-from mapreduce_project_spark.queries_registry import extra_query, t
+from mapreduce_project_spark.queries_registry import query, t
 from mapreduce_project_spark.sources import register_tables
 
 _Q2_SQL = """
@@ -62,7 +62,7 @@ _Q2_SQL = """
     """
 
 
-@extra_query("tpch_q2_min_cost_supplier", _Q2_SQL)
+@query("tpch_q2_min_cost_supplier", _Q2_SQL)
 def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 shape — minimum-cost supplier: for each mid-size part, the
     EU supplier(s) whose best observed price equals the part's regional
@@ -101,7 +101,7 @@ _Q8_ORACLE = """
     """
 
 
-@extra_query("tpch_q8_market_share", _Q8_ORACLE)
+@query("tpch_q8_market_share", _Q8_ORACLE)
 def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 shape — national market share: one nation's fraction of a
     region's ECONOMY-part import volume per order year. Seven joins
@@ -165,7 +165,7 @@ _Q9_ORACLE = """
     """
 
 
-@extra_query("tpch_q9_product_profit", _Q9_ORACLE)
+@query("tpch_q9_product_profit", _Q9_ORACLE)
 def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 shape — product-type profit by supplier nation and year.
     Cost proxy is retail price × quantity (no ps_supplycost in this
@@ -209,7 +209,7 @@ _Q11_SQL = """
     """
 
 
-@extra_query("tpch_q11_important_stock", _Q11_SQL)
+@query("tpch_q11_important_stock", _Q11_SQL)
 def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11 shape — important stock: parts whose supply value from a
     nation group exceeds twice the group's MEAN part value. TPC-H's
@@ -240,7 +240,7 @@ _Q12_ORACLE = """
     """
 
 
-@extra_query("tpch_q12_shipmode_priority", _Q12_ORACLE)
+@query("tpch_q12_shipmode_priority", _Q12_ORACLE)
 def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q12 shape — priority counts per shipping class: conditional
     aggregation (urgent vs not, both counted in one pass) grouped by a
@@ -281,7 +281,7 @@ _Q15_SQL = """
     """
 
 
-@extra_query("tpch_q15_top_supplier", _Q15_SQL)
+@query("tpch_q15_top_supplier", _Q15_SQL)
 def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q15 shape — top supplier: quarterly revenue per supplier as a
     named view, then the supplier(s) attaining the maximum — the
@@ -302,7 +302,7 @@ _Q16_ORACLE = """
     """
 
 
-@extra_query("tpch_q16_supplier_variety", _Q16_ORACLE)
+@query("tpch_q16_supplier_variety", _Q16_ORACLE)
 def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16 shape — supplier variety per part profile: distinct supplier
     counts by (brand, type, size), excluding an unwanted brand and a
@@ -337,7 +337,7 @@ _Q17_SQL = """
     """
 
 
-@extra_query("tpch_q17_small_quantity_revenue", _Q17_SQL)
+@query("tpch_q17_small_quantity_revenue", _Q17_SQL)
 def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q17 shape — small-quantity-order revenue: lineitems under 20% of
     their part's average quantity. The correlated AVG is expressed as
@@ -368,7 +368,7 @@ _Q20_SQL = """
     """
 
 
-@extra_query("tpch_q20_excess_suppliers", _Q20_SQL)
+@query("tpch_q20_excess_suppliers", _Q20_SQL)
 def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q20 shape — dominant suppliers: suppliers who covered more than
     a quarter of some widget part's annual demand (lineitem supply
@@ -400,7 +400,7 @@ _Q21_SQL = """
     """
 
 
-@extra_query("tpch_q21_waiting_supplier", _Q21_SQL)
+@query("tpch_q21_waiting_supplier", _Q21_SQL)
 def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21 shape — suppliers who kept orders waiting: within finished
     multi-supplier orders, the supplier who was the ONLY one to fail

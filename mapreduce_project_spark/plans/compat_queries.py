@@ -18,7 +18,7 @@ from mapreduce_project_spark.jobs import inverted_index_mr as ii
 from mapreduce_project_spark.jobs import word_count_mr as wc
 from mapreduce_project_spark.mapreduce import run_job
 from mapreduce_project_spark.operators.multimodal import attach_payload, byte_features
-from mapreduce_project_spark.queries_registry import extra_query, query, t
+from mapreduce_project_spark.queries_registry import query, t
 
 
 def _docs_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,7 +44,7 @@ def q_word_count_mr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_job(spark, _docs_kv(spark, sf_dir), wc.mr_map, wc.mr_reduce, num_partitions=8)
 
 
-@extra_query(
+@query(
     "inverted_index_mr",
     """
     SELECT word AS key,
@@ -120,7 +120,7 @@ def q_multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return byte_features(attach_payload(t(spark, sf_dir, "documents")))
 
 
-@extra_query(
+@query(
     "multimodal_downsample",
     """
     SELECT doc_id, block,
@@ -152,7 +152,7 @@ def q_multimodal_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "block", "val")
 
 
-@extra_query(
+@query(
     "multimodal_header_probe",
     """
     SELECT doc_id,
@@ -232,7 +232,7 @@ _PATCHIFY_ORACLE = """
     """
 
 
-@extra_query("multimodal_patchify", _PATCHIFY_ORACLE)
+@query("multimodal_patchify", _PATCHIFY_ORACLE)
 def q_multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5 ViT patch tokenization: each payload interpreted as a
     row-major byte image of its metadata width, cut into a 16×16
@@ -250,7 +250,7 @@ def q_multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "patch_row", "patch_col", "n_real", "byte_sum")
 
 
-@extra_query(
+@query(
     "orders_xml_roundtrip",
     """
     SELECT o_orderkey,
@@ -282,7 +282,7 @@ def q_orders_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "multimodal_decode_roundtrip",
     """
     SELECT doc_id,
@@ -340,7 +340,7 @@ def q_multimodal_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@extra_query(
+@query(
     "multimodal_png_roundtrip",
     """
     SELECT doc_id,
@@ -403,7 +403,7 @@ def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "multimodal_wav_roundtrip",
     """
     WITH t AS (
@@ -490,7 +490,7 @@ def q_multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query("multimodal_jpeg_roundtrip", None)
+@query("multimodal_jpeg_roundtrip", None)
 def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5 LOSSY-codec closure: each sampled document's bytes become a
     16-wide RGB raster, encode through the REAL baseline JPEG codec
@@ -550,7 +550,7 @@ def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query("multimodal_audio_logmel")
+@query("multimodal_audio_logmel")
 def q_multimodal_audio_logmel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5 audio FEATURE-EXTRACT closure (the brief's 'feature-extract'
     step made real, not a stub): document text becomes a real RIFF/WAVE
@@ -621,7 +621,7 @@ def q_multimodal_audio_logmel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query("multimodal_phash_dedup")
+@query("multimodal_phash_dedup")
 def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IMAGE near-duplicate detection via 64-bit DCT perceptual hash
     (pHash) — the C2 dedup discipline applied to the pixel modality:
@@ -723,7 +723,7 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.unionByName(near)
 
 
-@extra_query(
+@query(
     "multimodal_audio_resample",
     """
     WITH t AS (

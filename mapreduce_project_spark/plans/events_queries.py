@@ -19,10 +19,10 @@ from mapreduce_project_spark.operators.events import (
     tumbling_window_agg,
 )
 from mapreduce_project_spark.operators.relational import dec, dec_sum
-from mapreduce_project_spark.queries_registry import extra_query, query, t
+from mapreduce_project_spark.queries_registry import query, t
 
 
-@extra_query(
+@query(
     "events_tumbling_hour",
     """
     SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
@@ -49,7 +49,7 @@ def q_events_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "events_sliding_hour",
     """
     SELECT strftime(win_start, '%Y-%m-%d %H:%M:%S') AS window_start,
@@ -78,7 +78,7 @@ def q_events_sliding_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "events_sessions",
     """
     WITH flagged AS (
@@ -228,7 +228,7 @@ def q_events_rollup_day_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "events_json_extract",
     """
     SELECT event_id, event_type,
@@ -283,7 +283,7 @@ def q_events_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "cdc_latest_state",
     """
     SELECT user_id,
@@ -319,7 +319,7 @@ def q_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "events_funnel",
     """
     WITH s0 AS (
@@ -359,7 +359,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "events_trailing_hour",
     """
     SELECT event_id,
@@ -396,7 +396,7 @@ def q_events_trailing_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "events_cohort_retention",
     """
     WITH first AS (
@@ -426,7 +426,7 @@ def q_events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "scd2_user_state",
     """
     WITH ordered AS (
@@ -472,7 +472,7 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "interval_join_error_sessions",
     """
     WITH sess_flag AS (
@@ -541,7 +541,7 @@ def q_interval_join_error_sessions(spark: SparkSession, sf_dir: str) -> DataFram
     ).distinct()
 
 
-@extra_query(
+@query(
     "events_sessions_dynamic_gap",
     """
     WITH g AS (
@@ -595,7 +595,7 @@ def q_events_sessions_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@extra_query(
+@query(
     "trailing_distinct_users",
     """
     SELECT event_id, event_type,
@@ -634,7 +634,7 @@ def q_trailing_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "event_transition_matrix",
     """
     WITH seq AS (
@@ -667,7 +667,7 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "events_context_pairs",
     """
     WITH seq AS (
@@ -727,7 +727,7 @@ def q_events_context_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "events_gapfill_daily",
     """
     WITH daily AS (
@@ -799,7 +799,7 @@ def q_events_gapfill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "session_cooccurrence_lift",
     """
     WITH seq AS (
@@ -917,7 +917,7 @@ _EWMA_ORACLE = """
     """
 
 
-@extra_query("events_ewma_value", _EWMA_ORACLE)
+@query("events_ewma_value", _EWMA_ORACLE)
 def q_events_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact fixed-point EWMA (α = 1/2) of event value-cents per user —
     the one windowed statistic no frame can express: each output
@@ -956,7 +956,7 @@ _COGROUP_ORACLE = """
     """
 
 
-@extra_query("cogroup_view_purchase_pairs", _COGROUP_ORACLE)
+@query("cogroup_view_purchase_pairs", _COGROUP_ORACLE)
 def q_cogroup_view_purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COGROUPED applyInPandas surface — the fourth and last
     Python-UDF shape (after mapInPandas, per-group applyInPandas, and
@@ -1046,7 +1046,7 @@ _ANOMALY_ORACLE = """
     """
 
 
-@extra_query("events_anomaly_flags", _ANOMALY_ORACLE)
+@query("events_anomaly_flags", _ANOMALY_ORACLE)
 def q_events_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust anomaly detection on metric streams — the composition
     the EWMA + MAD primitives exist for: each event's residual against
@@ -1122,7 +1122,7 @@ _ABTEST_ORACLE = """
     """
 
 
-@extra_query("abtest_conversion_z", _ABTEST_ORACLE)
+@query("abtest_conversion_z", _ABTEST_ORACLE)
 def q_abtest_conversion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experimentation analytics: a two-proportion z-test on high-value
     purchase conversion (value > 250 — rare enough that neither arm
@@ -1190,7 +1190,7 @@ _PSEUDO_ORACLE = """
     """
 
 
-@extra_query("events_pseudonymized", _PSEUDO_ORACLE)
+@query("events_pseudonymized", _PSEUDO_ORACLE)
 def q_events_pseudonymized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Privacy-preserving event export — the pseudonymization +
     generalization pass a GDPR-style pipeline runs before sharing
@@ -1241,7 +1241,7 @@ _DAU_WAU_ORACLE = """
     """
 
 
-@extra_query("events_dau_wau", _DAU_WAU_ORACLE)
+@query("events_dau_wau", _DAU_WAU_ORACLE)
 def q_events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU / trailing-7-day WAU / stickiness per calendar day — the
     product-analytics headline series. The corpus first collapses to
@@ -1316,7 +1316,7 @@ _TWAP_ORACLE = """
     """
 
 
-@extra_query("events_twap_daily", _TWAP_ORACLE)
+@query("events_twap_daily", _TWAP_ORACLE)
 def q_events_twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-WEIGHTED average price per (user, day) — the
     irregular-sample integral (TimescaleDB's `time_weight('LOCF')`)
@@ -1391,7 +1391,7 @@ _OHLC_ORACLE = """
     """
 
 
-@extra_query("events_ohlc_daily", _OHLC_ORACLE)
+@query("events_ohlc_daily", _OHLC_ORACLE)
 def q_events_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC candlestick bars per (user, day) — the canonical
     time-series downsample every market/telemetry store ships
@@ -1480,7 +1480,7 @@ _ATTRIB_ORACLE = """
     """
 
 
-@extra_query("events_attribution_position", _ATTRIB_ORACLE)
+@query("events_attribution_position", _ATTRIB_ORACLE)
 def q_events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-based (U-shaped) MULTI-TOUCH ATTRIBUTION — the marketing
     analytics workhorse beyond D45's ordered funnel: each purchase's
@@ -1593,7 +1593,7 @@ _WELCH_ORACLE = """
     """
 
 
-@extra_query("abtest_value_welch", _WELCH_ORACLE)
+@query("abtest_value_welch", _WELCH_ORACLE)
 def q_abtest_value_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t-test on a CONTINUOUS metric (purchase
     value) between the same deterministic md5 arms as the D135
@@ -1682,7 +1682,7 @@ _CUSUM_ORACLE = """
     """
 
 
-@extra_query("events_cusum_changepoints", _CUSUM_ORACLE)
+@query("events_cusum_changepoints", _CUSUM_ORACLE)
 def q_events_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM CHANGE-POINT detection on the daily event-count series —
     the classic sequential drift detector (Page 1954) the monitoring
@@ -1778,7 +1778,7 @@ _PATHS_ORACLE = """
     """
 
 
-@extra_query("session_path_mining", _PATHS_ORACLE)
+@query("session_path_mining", _PATHS_ORACLE)
 def q_session_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 user-journey PATHS (clickstream path / Sankey analysis —
     the sequence-shaped sibling of D45's fixed funnel and D88's
@@ -1906,7 +1906,7 @@ _MK_ORACLE = """
     """
 
 
-@extra_query("trend_mann_kendall", _MK_ORACLE)
+@query("trend_mann_kendall", _MK_ORACLE)
 def q_trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotone-trend test + Sen's slope over the daily
     revenue series — the nonparametric trend detector (Mann 1945,
@@ -2156,7 +2156,7 @@ def _markov_oracle(k_iters: int = 12) -> str:
     """
 
 
-@extra_query("events_markov_attribution", _markov_oracle(12))
+@query("events_markov_attribution", _markov_oracle(12))
 def q_events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov REMOVAL-EFFECT attribution (D211, Anderl et al. 2014) —
     the data-driven counterpart of D181's heuristic U-shaped credits:
@@ -2304,7 +2304,7 @@ _SEASONAL_ORACLE = """
     """
 
 
-@extra_query("events_seasonal_baseline", _SEASONAL_ORACLE)
+@query("events_seasonal_baseline", _SEASONAL_ORACLE)
 def q_events_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive DECOMPOSITION of the daily event series (D214) —
     the weekday-profile baseline every ops dashboard subtracts before
@@ -2396,7 +2396,7 @@ _SEQPAIR_ORACLE = """
     """
 
 
-@extra_query("events_sequential_pairs", _SEQPAIR_ORACLE)
+@query("events_sequential_pairs", _SEQPAIR_ORACLE)
 def q_events_sequential_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDERED sequential patterns with gaps (D215, the length-2
     PrefixSpan/SPADE cell) — the third co-occurrence geometry: D88
@@ -2543,7 +2543,7 @@ _CUPED_ORACLE = """
     """
 
 
-@extra_query("abtest_cuped_adjust", _CUPED_ORACLE)
+@query("abtest_cuped_adjust", _CUPED_ORACLE)
 def q_abtest_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction (D217, Deng et al., WSDM 2013) — the
     modern experimentation technique beyond D135's z-test and D186's
@@ -2736,7 +2736,7 @@ _BOT_ORACLE = """
     """
 
 
-@extra_query("events_bot_scores", _BOT_ORACLE)
+@query("events_bot_scores", _BOT_ORACLE)
 def q_events_bot_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user AUTOMATION/BOT telemetry (D223) — the abuse screen a
     behavioral-data pipeline runs before events become training signal
@@ -2866,7 +2866,7 @@ _ACF_ORACLE = f"""
     """
 
 
-@extra_query("events_hourly_acf", _ACF_ORACLE)
+@query("events_hourly_acf", _ACF_ORACLE)
 def q_events_hourly_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of the HOURLY event-count series (D224) at the
     seasonality lags {1, 2, 3, 24, 168} — the statistic that DECIDES
@@ -2989,7 +2989,7 @@ _CONCURRENCY_ORACLE = """
     """
 
 
-@extra_query("events_concurrency_profile", _CONCURRENCY_ORACLE)
+@query("events_concurrency_profile", _CONCURRENCY_ORACLE)
 def q_events_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak-concurrency profile (D229) — the capacity-planning statistic
     behind connection pools, rate limits and autoscaling targets: per
@@ -3139,7 +3139,7 @@ _BOOT_ORACLE = f"""
     """
 
 
-@extra_query("abtest_bootstrap_ci", _BOOT_ORACLE)
+@query("abtest_bootstrap_ci", _BOOT_ORACLE)
 def q_abtest_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bootstrap confidence interval for the A/B mean difference
     (D230) — the nonparametric member of the experimentation family
@@ -3292,7 +3292,7 @@ _HOLT_ORACLE = """
     """
 
 
-@extra_query("events_holt_forecast", _HOLT_ORACLE)
+@query("events_holt_forecast", _HOLT_ORACLE)
 def q_events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt linear-trend double exponential smoothing (D232) — the
     trend-aware member of the forecasting family (EWMA D112 tracks
@@ -3405,7 +3405,7 @@ _HAZARD_ORACLE = """
     """
 
 
-@extra_query("events_retention_hazard", _HAZARD_ORACLE)
+@query("events_retention_hazard", _HAZARD_ORACLE)
 def q_events_retention_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discrete-time conversion hazard table (D234) — survival analysis
     without the float product: for each day k since a user's first
@@ -3516,7 +3516,7 @@ _BEHAVE_ORACLE = """
     """
 
 
-@extra_query("assemble_behavioral_dataset", _BEHAVE_ORACLE)
+@query("assemble_behavioral_dataset", _BEHAVE_ORACLE)
 def q_assemble_behavioral_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral-data RELEASE flagship (D242) — the events-side
     sibling of the text flagships v1–v6 (D207 gates documents; this
@@ -3662,7 +3662,7 @@ _SHAPLEY_ORACLE = """
     """
 
 
-@extra_query("events_shapley_attribution", _SHAPLEY_ORACLE)
+@query("events_shapley_attribution", _SHAPLEY_ORACLE)
 def q_events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Shapley-value channel attribution (D249) — the
     game-theoretic member completing the attribution family
@@ -3820,7 +3820,7 @@ _HW_ORACLE = f"""
     """
 
 
-@extra_query("events_holt_winters", _HW_ORACLE)
+@query("events_holt_winters", _HW_ORACLE)
 def q_events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt-Winters ADDITIVE SEASONAL smoothing (D250, m = 7 days) —
     the model the forecasting family was converging on (EWMA D112:
@@ -3970,7 +3970,7 @@ _DRAWDOWN_ORACLE = """
     """
 
 
-@extra_query("events_max_drawdown", _DRAWDOWN_ORACLE)
+@query("events_max_drawdown", _DRAWDOWN_ORACLE)
 def q_events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum drawdown per event type (D259) — the risk statistic
     completing the financial/time-series family (OHLC D172 bars, TWAP
@@ -4082,7 +4082,7 @@ _CONVLAG_ORACLE = """
     """
 
 
-@extra_query("events_conversion_lag", _CONVLAG_ORACLE)
+@query("events_conversion_lag", _CONVLAG_ORACLE)
 def q_events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signup-to-purchase conversion-lag quartiles by cohort (D262) —
     the TIME dimension the funnel family was missing (funnel D45
@@ -4183,7 +4183,7 @@ _WATERMARK_ORACLE = """
     """
 
 
-@extra_query("events_watermark_audit", _WATERMARK_ORACLE)
+@query("events_watermark_audit", _WATERMARK_ORACLE)
 def q_events_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-arrival (watermark-sizing) audit (D263) — the number every
     Structured Streaming deployment needs BEFORE it exists: treating
@@ -4293,7 +4293,7 @@ _SIMPSON_ORACLE = """
     """
 
 
-@extra_query("simpson_paradox_audit", _SIMPSON_ORACLE)
+@query("simpson_paradox_audit", _SIMPSON_ORACLE)
 def q_simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simpson's-paradox (confounding) audit (D264) — the validity
     screen the experimentation family was missing (z-test D135 scores
@@ -4451,7 +4451,7 @@ _AUC_ORACLE = """
     """
 
 
-@extra_query("classifier_auc_activity", _AUC_ORACLE)
+@query("classifier_auc_activity", _AUC_ORACLE)
 def q_classifier_auc_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact binary-classifier AUC via the Mann-Whitney rank statistic
     (D265) — the model-eval member the retrieval metrics can't cover
@@ -4577,7 +4577,7 @@ _LIFT_ORACLE = """
     """
 
 
-@extra_query("classifier_lift_deciles", _LIFT_ORACLE)
+@query("classifier_lift_deciles", _LIFT_ORACLE)
 def q_classifier_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile gains/lift table (D266) — the threshold-choosing
     companion to D265's AUC (AUC scores the ORDERING; the lift table
@@ -4738,7 +4738,7 @@ _KM_ORACLE = """
     """
 
 
-@extra_query("events_km_survival", _KM_ORACLE)
+@query("events_km_survival", _KM_ORACLE)
 def q_events_km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier product-limit survival curve (D267) — the estimator
     D234's hazard table is the sufficient statistics FOR, now a
@@ -4867,7 +4867,7 @@ _HILL_ORACLE = """
     """
 
 
-@extra_query("events_tail_index_hill", _HILL_ORACLE)
+@query("events_tail_index_hill", _HILL_ORACLE)
 def q_events_tail_index_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill tail-index estimator (D268) — the heavy-tail audit the
     value-distribution family was missing (winsorize D142 and MAD
@@ -5000,7 +5000,7 @@ _CCF_ORACLE = """
     """
 
 
-@extra_query("events_cross_correlation", _CCF_ORACLE)
+@query("events_cross_correlation", _CCF_ORACLE)
 def q_events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily lead-lag cross-correlation between event-type pairs
     (D269) — the CROSS-series member of the forecasting family (ACF
@@ -5164,7 +5164,7 @@ _BACKTEST_ORACLE = (
 )
 
 
-@extra_query("forecast_backtest_mase", _BACKTEST_ORACLE)
+@query("forecast_backtest_mase", _BACKTEST_ORACLE)
 def q_forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Walk-forward forecast backtest with MASE (D271) — the
     EVALUATION the forecasting family was missing (seasonal-naive
@@ -5316,7 +5316,7 @@ _ISO_ORACLE = """
     """
 
 
-@extra_query("calibration_isotonic", _ISO_ORACLE)
+@query("calibration_isotonic", _ISO_ORACLE)
 def q_calibration_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAVA) probability calibration (D273) — the third
     member of the model-eval trio (AUC D265 scores the ORDERING, the
@@ -5477,7 +5477,7 @@ _CMH_ORACLE = """
     """
 
 
-@extra_query("abtest_cmh_pooled", _CMH_ORACLE)
+@query("abtest_cmh_pooled", _CMH_ORACLE)
 def q_abtest_cmh_pooled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Mantel-Haenszel pooled odds ratio (D275) — the FIX for
     what the Simpson audit detects (D264 flags that the marginal
@@ -5670,7 +5670,7 @@ _BURST_ORACLE = """
     """
 
 
-@extra_query("events_burst_detection", _BURST_ORACLE)
+@query("events_burst_detection", _BURST_ORACLE)
 def q_events_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kleinberg-style two-state burst detection (D278) — the
     INTERVAL-shaped member of the anomaly family (CUSUM D195 finds a
@@ -5832,7 +5832,7 @@ _BH_ORACLE = f"""
     """
 
 
-@extra_query("abtest_bh_fdr", _BH_ORACLE)
+@query("abtest_bh_fdr", _BH_ORACLE)
 def q_abtest_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Hochberg FDR correction (D279) — the multiple-testing
     closer the experimentation family needs the moment it tests MORE
@@ -5952,7 +5952,7 @@ _REPORT_ORACLE = (
 )
 
 
-@extra_query("abtest_report_card", _REPORT_ORACLE)
+@query("abtest_report_card", _REPORT_ORACLE)
 def q_abtest_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experimentation report card (D280) — the one-table readout the
     whole A/B family exists to produce (an analyst never reads D135's
@@ -6068,7 +6068,7 @@ _CONFORMAL_ORACLE = """
     """
 
 
-@extra_query("conformal_value_intervals", _CONFORMAL_ORACLE)
+@query("conformal_value_intervals", _CONFORMAL_ORACLE)
 def q_conformal_value_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPLIT-CONFORMAL prediction intervals (D293, Vovk / Lei et al.) —
     the distribution-free interval member completing the model-eval

@@ -28,7 +28,7 @@ from mapreduce_project_spark.operators.windows import (
     running_dec_sum,
     top_k_per_group,
 )
-from mapreduce_project_spark.queries_registry import extra_query, query, t
+from mapreduce_project_spark.queries_registry import query, t
 
 
 @query(
@@ -165,7 +165,7 @@ def q_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "join_semi_customers",
     """
     SELECT c_custkey, c_name, c_acctbal
@@ -183,7 +183,7 @@ def q_join_semi_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name", "c_acctbal")
 
 
-@extra_query(
+@query(
     "join_anti_customers",
     """
     SELECT c_custkey, c_name
@@ -314,7 +314,7 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "running_order_total",
     """
     SELECT o_custkey, o_orderkey,
@@ -359,7 +359,7 @@ def q_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "approx_distinct_parts",
     """
     SELECT l_returnflag,
@@ -407,7 +407,7 @@ def q_approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "approx_quantiles_price",
     """
     WITH q AS (
@@ -462,7 +462,7 @@ def q_approx_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("approx_within_band"),
     ).orderBy("o_orderstatus")
 
-@extra_query(
+@query(
     "window_rank_family",
     """
     SELECT o_custkey, o_orderkey,
@@ -498,7 +498,7 @@ def q_window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.nth_value("o_orderkey", 2).over(w).alias("second_key"),
     )
 
-@extra_query(
+@query(
     "histogram_equi_depth",
     """
     SELECT o_orderpriority, CAST(bucket AS BIGINT) AS bucket,
@@ -543,7 +543,7 @@ def q_histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-@extra_query(
+@query(
     "skew_profile_custkey",
     """
     WITH c AS (SELECT o_custkey, COUNT(*) AS n FROM orders GROUP BY o_custkey)
@@ -564,7 +564,7 @@ def q_skew_profile_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return key_skew_profile(t(spark, sf_dir, "orders"), ["o_custkey"])
 
-@extra_query(
+@query(
     "unpivot_part_metrics",
     """
     SELECT p_partkey, 'p_size' AS metric, CAST(p_size AS DOUBLE) AS value
@@ -589,7 +589,7 @@ def q_unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "metric", F.col("value").cast("double").alias("value"))
 
 
-@extra_query(
+@query(
     "map_event_type_counts",
     """
     SELECT user_id,
@@ -625,7 +625,7 @@ def q_map_event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "dq_audit_orders",
     """
     WITH corrupt AS (
@@ -695,7 +695,7 @@ def q_dq_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "snapshot_diff_orders",
     """
     SELECT 'removed' AS change, o_orderkey FROM orders WHERE o_orderkey % 101 = 0
@@ -735,7 +735,7 @@ def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_diff(orders, new, ["o_orderkey"])
 
 
-@extra_query(
+@query(
     "profile_orders_columns",
     """
     WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_rows FROM orders)
@@ -776,7 +776,7 @@ def q_profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "spatial_radius_join",
     """
     WITH c AS (
@@ -826,7 +826,7 @@ def q_spatial_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "histogram_price_equiwidth",
     """
     SELECT CAST(floor(CAST(l_extendedprice AS DOUBLE) / 5000.0) AS BIGINT) AS bucket,
@@ -855,7 +855,7 @@ def q_histogram_price_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "corr_quantity_discount",
     """
     WITH s AS (
@@ -908,7 +908,7 @@ def q_corr_quantity_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select("l_returnflag", "n", (num / den).alias("corr"))
 
 
-@extra_query(
+@query(
     "weighted_avg_udaf",
     """
     SELECT l_returnflag,
@@ -956,7 +956,7 @@ def q_weighted_avg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "trend_revenue_by_nation",
     """
     WITH yearly AS (
@@ -1023,7 +1023,7 @@ def q_trend_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select("nation", "n", slope.alias("slope"), intercept.alias("intercept"))
 
 
-@extra_query(
+@query(
     "argmax_order_per_segment",
     """
     SELECT c_mktsegment AS segment,
@@ -1061,7 +1061,7 @@ def q_argmax_order_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "global_rank_orders",
     """
     SELECT o_orderkey, CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
@@ -1089,7 +1089,7 @@ def q_global_rank_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return global_rank(o, ["cents", "o_orderkey"], "rank")
 
 
-@extra_query(
+@query(
     "k_anonymity_audit",
     """
     WITH cells AS (
@@ -1155,7 +1155,7 @@ _CHECKSUM_ORACLE = """
     """
 
 
-@extra_query("table_checksums", _CHECKSUM_ORACLE)
+@query("table_checksums", _CHECKSUM_ORACLE)
 def q_table_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent table fingerprints — the cheap cross-replica /
     post-migration verification every lakehouse runs: XOR-fold of a
@@ -1249,7 +1249,7 @@ _GDPR_ORACLE = """
     """
 
 
-@extra_query("gdpr_delete_audit", _GDPR_ORACLE)
+@query("gdpr_delete_audit", _GDPR_ORACLE)
 def q_gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-erasure cascade audit (D304): one deterministic data-
     subject set (c_custkey % 997 = 1 — in production, the request's id
@@ -1307,7 +1307,7 @@ def q_gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.unionByName(ords).unionByName(lis).unionByName(evs)
 
 
-@extra_query(
+@query(
     "fulfillment_latency_histogram",
     """
     WITH first_ship AS (
@@ -1377,7 +1377,7 @@ _DP_NOISY_ORACLE = """
     """
 
 
-@extra_query("dp_noisy_source_counts", _DP_NOISY_ORACLE)
+@query("dp_noisy_source_counts", _DP_NOISY_ORACLE)
 def q_dp_noisy_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DP-SHAPED noisy release of the per-(source, lang) document
     histogram — the governance sibling of the k-anonymity audit and the
@@ -1470,7 +1470,7 @@ _WMEDIAN_ORACLE = """
     """
 
 
-@extra_query("weighted_median_price", _WMEDIAN_ORACLE)
+@query("weighted_median_price", _WMEDIAN_ORACLE)
 def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact grouped WEIGHTED median — the robust location estimate when
     rows carry unequal mass (here: price weighted by quantity, the
@@ -1556,7 +1556,7 @@ _ASSOC_ORACLE = """
     """
 
 
-@extra_query("basket_association_rules", _ASSOC_ORACLE)
+@query("basket_association_rules", _ASSOC_ORACLE)
 def q_basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket ASSOCIATION RULES (the A-priori classic, order =
     basket, part = item): directional A -> B with exact integer
@@ -1630,7 +1630,7 @@ _SKYLINE_ORACLE = """
     """
 
 
-@extra_query("skyline_orders", _SKYLINE_ORACLE)
+@query("skyline_orders", _SKYLINE_ORACLE)
 def q_skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D SKYLINE (Pareto frontier) — the multi-objective operator
     (Börzsönyi et al., ICDE'01) the relational tier lacked: orders not
@@ -1714,7 +1714,7 @@ _RFM_ORACLE = """
     """
 
 
-@extra_query("rfm_segmentation", _RFM_ORACLE)
+@query("rfm_segmentation", _RFM_ORACLE)
 def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation (Hughes' recency/frequency/monetary
     scoring — the classic CRM workhorse) with EXACT balanced quintiles
@@ -1810,7 +1810,7 @@ _BENFORD_ORACLE = f"""
     """
 
 
-@extra_query("benford_first_digit_audit", _BENFORD_ORACLE)
+@query("benford_first_digit_audit", _BENFORD_ORACLE)
 def q_benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit over order totals — the
     fabrication/anomaly screen auditors run on financial columns
@@ -1872,7 +1872,7 @@ _LDIV_ORACLE = """
     """
 
 
-@extra_query("l_diversity_audit", _LDIV_ORACLE)
+@query("l_diversity_audit", _LDIV_ORACLE)
 def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit (Machanavajjhala et al., ICDE'06) — the
     governance check k-anonymity (D131) cannot make: a cell can be
@@ -1949,7 +1949,7 @@ _ITEMCF_ORACLE = """
     """
 
 
-@extra_query("itemcf_topk", _ITEMCF_ORACLE)
+@query("itemcf_topk", _ITEMCF_ORACLE)
 def q_itemcf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item COLLABORATIVE FILTERING (D216, the Amazon-classic
     co-purchase kNN; Linden et al., IEEE IC 2003): per part, the top-5
@@ -2097,7 +2097,7 @@ _FK_ORACLE = " UNION ALL ".join(
 )
 
 
-@extra_query("fk_integrity_audit", _FK_ORACLE)
+@query("fk_integrity_audit", _FK_ORACLE)
 def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit (D227) across every FK edge of the
     schema — the ingest gate a warehouse runs before trusting joins:
@@ -2215,7 +2215,7 @@ _TCLOSE_ORACLE = """
     """
 
 
-@extra_query("t_closeness_audit", _TCLOSE_ORACLE)
+@query("t_closeness_audit", _TCLOSE_ORACLE)
 def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit (D237, Li et al., ICDE'07) — the third leg of
     the release-governance triad: k-anonymity (D131) bounds cell size,
@@ -2333,7 +2333,7 @@ _GINI_ORACLE = """
     """
 
 
-@extra_query("events_lorenz_gini", _GINI_ORACLE)
+@query("events_lorenz_gini", _GINI_ORACLE)
 def q_events_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue-concentration profile (D239): the Lorenz decile table
     and exact Gini coefficient of per-user event value — the whale
@@ -2444,7 +2444,7 @@ _ABC_ORACLE = """
     """
 
 
-@extra_query("abc_classification_suppliers", _ABC_ORACLE)
+@query("abc_classification_suppliers", _ABC_ORACLE)
 def q_abc_classification_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC / Pareto classification (D240) — the inventory-management
     classic (Pareto's 80/15/5 cut on cumulative revenue): suppliers
@@ -2533,7 +2533,7 @@ _SPEARMAN_ORACLE = """
     """
 
 
-@extra_query("corr_spearman_price_demand", _SPEARMAN_ORACLE)
+@query("corr_spearman_price_demand", _SPEARMAN_ORACLE)
 def q_corr_spearman_price_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation (D241) between part price and total
     ordered quantity — the robust sibling of the exact-moment Pearson
@@ -2648,7 +2648,7 @@ _CHI2_ORACLE = """
     """
 
 
-@extra_query("contingency_chi_square", _CHI2_ORACLE)
+@query("contingency_chi_square", _CHI2_ORACLE)
 def q_contingency_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square test of independence + Cramer's V (D243) over the
     (market segment x order priority) contingency table — the
@@ -2829,7 +2829,7 @@ _PSI_ORACLE = """
     """
 
 
-@extra_query("psi_value_drift", _PSI_ORACLE)
+@query("psi_value_drift", _PSI_ORACLE)
 def q_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index (D244) of the order-value
     distribution between a reference window (orders before 1996) and
@@ -2970,7 +2970,7 @@ _HHI_ORACLE = """
     """
 
 
-@extra_query("customer_brand_hhi", _HHI_ORACLE)
+@query("customer_brand_hhi", _HHI_ORACLE)
 def q_customer_brand_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer brand-concentration Herfindahl index (D253) — the
     loyalty/concentration statistic completing the segmentation family
@@ -3090,7 +3090,7 @@ _PREFLIGHT_ORACLE = """
     """
 
 
-@extra_query("join_size_preflight", _PREFLIGHT_ORACLE)
+@query("join_size_preflight", _PREFLIGHT_ORACLE)
 def q_join_size_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact join-size preflight (D277) — the number a planner (or an
     engineer about to launch a 100 TB join) wants BEFORE the shuffle
@@ -3202,7 +3202,7 @@ _ADVISOR_ORACLE = """
     """
 
 
-@extra_query("join_order_advisor", _ADVISOR_ORACLE)
+@query("join_order_advisor", _ADVISOR_ORACLE)
 def q_join_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cost-based join-ORDER advisor (D288) — D277's exact preflight
     turned into the decision a planner actually makes (VERDICT r10
@@ -3337,7 +3337,7 @@ _LAYOUT_ORACLE = " UNION ALL ".join(
 )
 
 
-@extra_query("partition_layout_advisor", _LAYOUT_ORACLE)
+@query("partition_layout_advisor", _LAYOUT_ORACLE)
 def q_partition_layout_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-LAYOUT advisor (D290) — the ops-side number that sizes
     `spark.sql.shuffle.partitions` / `maxPartitionBytes` BEFORE a 100 TB
@@ -3445,7 +3445,7 @@ _TREND_ORACLE = f"""
     """
 
 
-@extra_query("correctness_trend_report", _TREND_ORACLE)
+@query("correctness_trend_report", _TREND_ORACLE)
 def q_correctness_trend_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-round CORRECTNESS trend (D298) — the engine dogfooding its
     own telemetry (VERDICT r11 task 7 candidate): the per-round driver
@@ -3453,8 +3453,7 @@ def q_correctness_trend_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema/hash match}) become a queryable table, answering the
     questions the round process itself asks — how many queries held a
     driver slot each round, how many hash-matched, how many were
-    FIRST-TIME slots (min round per query — the rotation-backlog burn
-    rate the round-11/12 waves were sized by), and the cumulative
+    FIRST-TIME slots (min round per query), and the cumulative
     distinct-query coverage curve. Semi-structured ingestion with
     DYNAMIC keys (the D52 VARIANT lesson at file scope): Spark reads
     each artifact as ONE wholetext row and `from_json`s it to a
@@ -3617,7 +3616,7 @@ _BENCH_TREND_ORACLE = f"""
     """
 
 
-@extra_query("bench_trend_report", _BENCH_TREND_ORACLE)
+@query("bench_trend_report", _BENCH_TREND_ORACLE)
 def q_bench_trend_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-round BENCH trend with probe normalization (D302, VERDICT
     r12 task 6) — the performance twin of D298: the committed

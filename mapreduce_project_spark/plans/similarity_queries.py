@@ -16,7 +16,7 @@ from mapreduce_project_spark.operators.similarity import (
     topk_ann_lsh,
     topk_bruteforce,
 )
-from mapreduce_project_spark.queries_registry import extra_query, query, t
+from mapreduce_project_spark.queries_registry import query, t
 
 # DuckDB twin of operators.similarity.cosine: left-fold dot / (norm*norm).
 def _duck_cos(a: str, b: str) -> str:
@@ -63,7 +63,7 @@ _HARD_NEG_ORACLE = f"""
     """
 
 
-@extra_query("hard_negative_mining", _HARD_NEG_ORACLE)
+@query("hard_negative_mining", _HARD_NEG_ORACLE)
 def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive hard-negative mining (`operators/similarity.py:
     hard_negatives`): per anchor (vec_id < 10), the 5 most-similar
@@ -81,7 +81,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query("similarity_topk", _TOPK_ORACLE)
+@query("similarity_topk", _TOPK_ORACLE)
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3 baseline: exact top-5 cosine neighbors for query vectors
     (vec_id < 10). Pytest-only slot: `similarity_ann_lsh` hash-matches
@@ -153,7 +153,7 @@ _KNN_LABEL_ORACLE = f"""
     """
 
 
-@extra_query("knn_join_label", _KNN_LABEL_ORACLE)
+@query("knn_join_label", _KNN_LABEL_ORACLE)
 def q_knn_join_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN GRAPH (top-3 neighbors for EVERY vector), blocked on
     the label column — each unordered pair's cosine is evaluated once
@@ -172,7 +172,7 @@ def q_knn_join_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rk", F.col("rk").cast("bigint"))
 
 
-@extra_query("knn_join_ann")
+@query("knn_join_ann")
 def q_knn_join_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate global kNN graph (top-3 per vector, NO blocking
     key): hyperplane-LSH candidate pairs (32 tables × 4 bits), exact
@@ -187,7 +187,7 @@ def q_knn_join_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rk", F.col("rk").cast("bigint"))
 
 
-@extra_query(
+@query(
     "dedup_embedding_clusters",
     f"""
     WITH RECURSIVE e AS (
@@ -271,7 +271,7 @@ def _lsh_cluster_oracle(threshold: float, n_tables: int, n_bits: int, dim: int) 
     """
 
 
-@extra_query("dedup_embedding_clusters_lsh", _lsh_cluster_oracle(0.3, 32, 8, 64))
+@query("dedup_embedding_clusters_lsh", _lsh_cluster_oracle(0.3, 32, 8, 64))
 def q_dedup_embedding_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic near-dup clusters WITHOUT a blocking key — sign-LSH
     candidates (32 tables x 8 bits, seeded Rademacher planes), exact
@@ -349,7 +349,7 @@ def _lsh_auto_cluster_oracle(threshold: float, n_tables: int, dim: int) -> str:
     """
 
 
-@extra_query(
+@query(
     "dedup_embedding_clusters_lsh_auto", _lsh_auto_cluster_oracle(0.3, 32, 64)
 )
 def q_dedup_embedding_clusters_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,7 +426,7 @@ def _kmeans_oracle(k: int, iters: int) -> str:
     )
 
 
-@extra_query("kmeans_embeddings", _kmeans_oracle(8, 2))
+@query("kmeans_embeddings", _kmeans_oracle(8, 2))
 def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative Lloyd k-means (k=8, 2 rounds) over the embedding corpus
     — the general iterative-algorithm pattern (per-round: broadcast
@@ -465,7 +465,7 @@ def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "embedding_quantize_int8",
     """
     WITH m AS (
@@ -638,7 +638,7 @@ def _pq_adc_oracle(m: int, k: int, iters: int, dim: int, topk: int) -> str:
     )
 
 
-@extra_query("embedding_pq_codes", _pq_oracle(4, 16, 1, 64))
+@query("embedding_pq_codes", _pq_oracle(4, 16, 1, 64))
 def q_embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (m=4 subspaces × k=16 centroids): each
     64-dim embedding compressed to 4 codes = 16 bits — the storage tier
@@ -658,7 +658,7 @@ def q_embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query("similarity_topk_pq", _pq_adc_oracle(4, 16, 1, 64, 5))
+@query("similarity_topk_pq", _pq_adc_oracle(4, 16, 1, 64, 5))
 def q_similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ serving path (ADC): top-5 neighbors for the vec_id < 10
     queries computed entirely from 16-bit PQ codes — per query, m=4
@@ -783,7 +783,7 @@ def _ivfpq_oracle(m: int, k: int, iters: int, dim: int, topk: int) -> str:
     )
 
 
-@extra_query("similarity_topk_ivfpq", _ivfpq_oracle(4, 16, 1, 64, 5))
+@query("similarity_topk_ivfpq", _ivfpq_oracle(4, 16, 1, 64, 5))
 def q_similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL ANN serving composition — IVF coarse routing THEN
     PQ/ADC scoring inside the probed cells
@@ -832,7 +832,7 @@ _SQ8_ORACLE = """
     """
 
 
-@extra_query("similarity_topk_sq8", _SQ8_ORACLE)
+@query("similarity_topk_sq8", _SQ8_ORACLE)
 def q_similarity_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 scalar-quantized top-5 search
     (`operators/similarity.py:topk_sq8`): the D82 quantization turned
@@ -872,7 +872,7 @@ _MRR_ORACLE = f"""
     """
 
 
-@extra_query("search_reciprocal_rank", _MRR_ORACLE)
+@query("search_reciprocal_rank", _MRR_ORACLE)
 def q_search_reciprocal_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-quality measurement: for each query vector, the rank
     of the first SAME-LABEL neighbor within the exact cosine top-20
@@ -938,7 +938,7 @@ _RECALL_ORACLE = f"""
     """
 
 
-@extra_query("search_recall_at_k", _RECALL_ORACLE)
+@query("search_recall_at_k", _RECALL_ORACLE)
 def q_search_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@20 per query — `search_reciprocal_rank`'s companion
     (ranking position vs coverage): same-label neighbors found in the
@@ -1036,7 +1036,7 @@ def _mrl_oracle(dims=(8, 16, 32, 64), k=5, nq=10) -> str:
     )
 
 
-@extra_query("matryoshka_recall_curve", _mrl_oracle())
+@query("matryoshka_recall_curve", _mrl_oracle())
 def q_matryoshka_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka (MRL) TRUNCATION-QUALITY curve — the measurement
     behind serving embeddings at a prefix of their trained
@@ -1087,53 +1087,6 @@ def q_matryoshka_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CENTROID_ORACLE = """
-    WITH cell AS (
-      SELECT label, CAST(i AS BIGINT) AS dim,
-             CAST(round(CAST(embedding[CAST(i AS INT)] AS DOUBLE)
-                        * 1000000000.0) AS BIGINT) AS v_fp
-      FROM embeddings,
-           LATERAL unnest(generate_series(1, len(embedding))) AS g(i)
-    )
-    SELECT label, dim,
-           CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           CAST(SUM(v_fp) AS BIGINT) AS sum_fp,
-           CAST(SUM(v_fp) // COUNT(*) AS BIGINT) AS mean_fp
-    FROM cell GROUP BY label, dim
-    """
-
-
-@extra_query("embedding_label_centroids", _CENTROID_ORACLE)
-def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-label embedding CENTROIDS — the class prototype every
-    nearest-class-mean classifier, k-means seeding, and domain-drift
-    monitor starts from. Float summation is order-dependent (a plain
-    AVG over a shuffled explode is NOT reproducible run-to-run, let
-    alone cross-engine), so each component quantizes to 1e-9
-    fixed-point BIGINT BEFORE aggregation — integer sums are
-    order-independent, the mean is one truncating division, and the
-    result is bit-identical at any parallelism. Plan: posexplode is a
-    map-side projection; ONE partial-agg shuffle on (label, dim) —
-    at 100 TB this is the canonical map-side-combine aggregation, KB
-    of state per (label, dim). float32 -> float64 widening is exact on
-    both engines, so quantization agrees bit-for-bit."""
-    emb = t(spark, sf_dir, "embeddings")
-    cell = emb.select(
-        "label", F.posexplode("embedding").alias("pos", "v")
-    ).select(
-        "label",
-        (F.col("pos") + 1).cast("bigint").alias("dim"),
-        F.round(F.col("v").cast("double") * F.lit(1000000000.0), 0)
-        .cast("bigint")
-        .alias("v_fp"),
-    )
-    return cell.groupBy("label", "dim").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-        F.sum("v_fp").cast("bigint").alias("sum_fp"),
-        F.expr("sum(v_fp) div count(1)").cast("bigint").alias("mean_fp"),
-    )
-
-
 _MUTUAL_KNN_ORACLE = f"""
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
     scored AS (
@@ -1153,7 +1106,7 @@ _MUTUAL_KNN_ORACLE = f"""
     """
 
 
-@extra_query("mutual_knn_pairs", _MUTUAL_KNN_ORACLE)
+@query("mutual_knn_pairs", _MUTUAL_KNN_ORACLE)
 def q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MUTUAL k-nearest-neighbor pairs — the reciprocity filter on the
     D34 kNN graph (a IN b's top-3 AND b IN a's top-3, unordered): the
@@ -1239,7 +1192,7 @@ _JL_ORACLE = f"""
     """
 
 
-@extra_query("embedding_jl_projection", _JL_ORACLE)
+@query("embedding_jl_projection", _JL_ORACLE)
 def q_embedding_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss RANDOM PROJECTION 64 → 16 dims with the
     database-friendly ±1 Rademacher matrix (Achlioptas 2003) — the
@@ -1341,7 +1294,7 @@ def _mmr_oracle() -> str:
     return "".join(parts) + "\n    " + selects
 
 
-@extra_query("similarity_mmr_rerank", _mmr_oracle())
+@query("similarity_mmr_rerank", _mmr_oracle())
 def q_similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diverse top-k re-ranking (Carbonell & Goldstein, SIGIR'98 —
     maximal marginal relevance): the retrieval-diversity stage between
@@ -1464,7 +1417,7 @@ def _pca_power_oracle(iters: int = 8) -> str:
     """
 
 
-@extra_query("embedding_top_pc", _pca_power_oracle(8))
+@query("embedding_top_pc", _pca_power_oracle(8))
 def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top PRINCIPAL COMPONENT of the embedding corpus (D219) — the
     train-free spectral sibling of JL projection (D194, random) and
@@ -1617,7 +1570,7 @@ def _width_ladder_oracle(
     """
 
 
-@extra_query("lsh_width_ladder", _width_ladder_oracle(0.3, 16, (8, 12, 16), 64))
+@query("lsh_width_ladder", _width_ladder_oracle(0.3, 16, (8, 12, 16), 64))
 def q_lsh_width_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall-vs-cost CURVE for the sign-LSH width ladder (D221) — the
     audit that makes the D206 auto-width rule itself a measured,
@@ -1811,7 +1764,7 @@ def _width_ladder_sampled_oracle(
     """
 
 
-@extra_query(
+@query(
     "lsh_width_ladder_sampled",
     _width_ladder_sampled_oracle(0.3, 16, (8, 12, 16), 64, 2048),
 )
@@ -2023,7 +1976,7 @@ def _semantic_recall_cert_oracle(
     """
 
 
-@extra_query(
+@query(
     "dedup_semantic_recall_cert",
     _semantic_recall_cert_oracle(0.3, 32, 64, 2048, 990000),
 )
@@ -2188,7 +2141,7 @@ _SQ2_ORACLE = """
     """
 
 
-@extra_query("embedding_sq2_codebook", _SQ2_ORACLE)
+@query("embedding_sq2_codebook", _SQ2_ORACLE)
 def q_embedding_sq2_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension QUARTILE scalar quantization (D235) — the
     data-adaptive 2-bit rung of the quantization ladder (int8 linear
@@ -2323,7 +2276,7 @@ _HYGIENE_ORACLE = """
     """
 
 
-@extra_query("embedding_hygiene_audit", _HYGIENE_ORACLE)
+@query("embedding_hygiene_audit", _HYGIENE_ORACLE)
 def q_embedding_hygiene_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-column hygiene audit (D248) — the vector-side ingest
     gate beside the relational data-quality audit (D93) and the FK
@@ -2476,7 +2429,7 @@ _NDCG_ORACLE = f"""
     """
 
 
-@extra_query("search_ndcg", _NDCG_ORACLE.format(cos=_duck_cos("q.v", "c.v")))
+@query("search_ndcg", _NDCG_ORACLE.format(cos=_duck_cos("q.v", "c.v")))
 def q_search_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact nDCG@20 per query (D260) — the graded-ranking member
     completing the retrieval-evaluation family (MRR D136 scores the
@@ -2601,7 +2554,7 @@ def _silhouette_oracle() -> str:
     )
 
 
-@extra_query("clustering_silhouette", _silhouette_oracle())
+@query("clustering_silhouette", _silhouette_oracle())
 def q_clustering_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified-silhouette cluster-quality audit (D274) — the
     EVALUATION the clustering family was missing (Lloyd k-means D32
@@ -2751,7 +2704,7 @@ def _gmedian_oracle() -> str:
     )
 
 
-@extra_query("embedding_geometric_median", _gmedian_oracle())
+@query("embedding_geometric_median", _gmedian_oracle())
 def q_embedding_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weiszfeld geometric median per label (D281) — the ROBUST member
     of the centroid family (mean centroids D182 shift arbitrarily far
@@ -3067,7 +3020,7 @@ def mips_topk_certified(emb: DataFrame) -> DataFrame:
     )
 
 
-@extra_query("similarity_topk_mips", _MIPS_ORACLE)
+@query("similarity_topk_mips", _MIPS_ORACLE)
 def q_similarity_topk_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT maximum-inner-product top-k with a norm-bound pruning
     CERTIFICATE (D300) — the MIPS member completing the similarity
@@ -3184,7 +3137,7 @@ _LSHP_ORACLE = f"""
     """
 
 
-@extra_query("lsh_param_planner", _LSHP_ORACLE)
+@query("lsh_param_planner", _LSHP_ORACLE)
 def q_lsh_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH (bands × rows) PLANNER for the MinHash dedup family (D307)
     — the design-time member of the advisor family (join-order,

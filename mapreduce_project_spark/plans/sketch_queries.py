@@ -29,14 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_project_spark.queries_registry import ROWS_ONLY_RTOL, extra_query, t
+from mapreduce_project_spark.queries_registry import ROWS_ONLY_RTOL, query, t
 
 # 2^14 nominal entries: theta stays exact to 16384 distincts (10× the
 # sf0.1 fixture cardinality), HLL's relative standard error is ~0.8%.
 _LGK = 14
 
 
-@extra_query(
+@query(
     "sketch_theta_distinct_users",
     """
     SELECT event_type,
@@ -60,7 +60,7 @@ def q_sketch_theta_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@extra_query("sketch_hll_distinct_users", None)
+@query("sketch_hll_distinct_users", None)
 def q_sketch_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL distinct users per event type PLUS the '__all__' row built by
     UNIONING the per-group sketches (`hll_union_agg`) — the mergeability
@@ -89,7 +89,7 @@ def q_sketch_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 ROWS_ONLY_RTOL["sketch_quantiles_price"] = 0.02
 
 
-@extra_query("sketch_quantiles_price", None)
+@query("sketch_quantiles_price", None)
 def q_sketch_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLL quantile sketches of lineitem extended price per return flag,
     plus the '__ALL' row from MERGING the per-flag sketches (pairwise
@@ -125,7 +125,7 @@ def q_sketch_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "sketch_theta_retention",
     """
     WITH a AS (SELECT DISTINCT user_id FROM events
@@ -215,7 +215,7 @@ _HLL_EXACT_ORACLE = """
     """
 
 
-@extra_query("sketch_hll_registers_exact", _HLL_EXACT_ORACLE)
+@query("sketch_hll_registers_exact", _HLL_EXACT_ORACLE)
 def q_sketch_hll_registers_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hand-rolled HyperLogLog whose REGISTERS are engine-exact — the
     hash-checkable complement of the built-in DataSketches HLL (which
@@ -358,7 +358,7 @@ _HLL_ROLLING_ORACLE = """
     """
 
 
-@extra_query("sketch_hll_rolling_7d", _HLL_ROLLING_ORACLE)
+@query("sketch_hll_rolling_7d", _HLL_ROLLING_ORACLE)
 def q_sketch_hll_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct users per day via HLL REGISTER MERGE —
     the operation that justifies keeping registers at all (D176's
@@ -483,7 +483,7 @@ _CMS_ORACLE = """
     """
 
 
-@extra_query("sketch_cms_registers_exact", _CMS_ORACLE)
+@query("sketch_cms_registers_exact", _CMS_ORACLE)
 def q_sketch_cms_registers_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hand-rolled COUNT-MIN sketch with engine-exact registers — the
     frequency-sketch member completing the mergeable family (theta D81
@@ -530,7 +530,7 @@ def q_sketch_cms_registers_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "join_preflight_sketch_audit",
     """
     WITH lk AS (SELECT l_suppkey AS k, CAST(COUNT(*) AS BIGINT) AS c

@@ -29,7 +29,7 @@ from mapreduce_project_spark.operators.text import (
     with_token_stats,
 )
 from mapreduce_project_spark.functions import tokens
-from mapreduce_project_spark.queries_registry import extra_query, query, t
+from mapreduce_project_spark.queries_registry import query, t
 
 _TOKS = "regexp_extract_all(lower(text), '[a-z]+')"
 
@@ -58,7 +58,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "text_quality",
     f"""
     SELECT doc_id,
@@ -184,7 +184,7 @@ _JACCARD_PAIRS_ORACLE = """
     """
 
 
-@extra_query("dedup_ngram_jaccard", _JACCARD_PAIRS_ORACLE)
+@query("dedup_ngram_jaccard", _JACCARD_PAIRS_ORACLE)
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 exact: all doc pairs with 3-gram Jaccard >= 0.8 via the
     quadratic shingle self-join. Pytest-only slot: quadratic in the
@@ -196,7 +196,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(t(spark, sf_dir, "documents"), "doc_id", "text", 3, 0.8)
 
 
-@extra_query("dedup_jaccard_prefix_filter", _JACCARD_PAIRS_ORACLE)
+@query("dedup_jaccard_prefix_filter", _JACCARD_PAIRS_ORACLE)
 def q_dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 exact at scale: the SAME pair set as `dedup_ngram_jaccard`
     (identical quadratic SQL oracle, bit-wise) via the AllPairs/PPJoin
@@ -212,7 +212,7 @@ def q_dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@extra_query(
+@query(
     "text_normalize",
     """
     SELECT doc_id,
@@ -327,7 +327,7 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query("dedup_snm_pairs", _JACCARD_PAIRS_ORACLE)
+@query("dedup_snm_pairs", _JACCARD_PAIRS_ORACLE)
 def q_dedup_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 via SORTED NEIGHBORHOOD (D209) — the third candidate family
     beside LSH banding and PPJoin prefixes: sort on the first-24-char
@@ -388,7 +388,7 @@ _INCR_CRAWL_ORACLE = """
     """
 
 
-@extra_query("dedup_incremental_crawl", _INCR_CRAWL_ORACLE)
+@query("dedup_incremental_crawl", _INCR_CRAWL_ORACLE)
 def q_dedup_incremental_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 incremental: dedup a NEW crawl (doc_id ≡ 0 mod 5 plays the
     fresh snapshot) against the EXISTING corpus (the other 4/5) via the
@@ -415,7 +415,7 @@ def q_dedup_incremental_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_probe_pairs(index, crawl, "doc_id", "text", 3, 64, 16, 0.8)
 
 
-@extra_query(
+@query(
     "dedup_duplicate_spans",
     """
     WITH toks AS (
@@ -449,7 +449,7 @@ def q_dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_spans(t(spark, sf_dir, "documents"), "doc_id", "text", 16, 2)
 
 
-@extra_query(
+@query(
     "dedup_exact_substrings",
     f"""
     WITH toks AS (
@@ -529,7 +529,7 @@ _DSIR_BK = """
     """
 
 
-@extra_query("dsir_bucket_stats", f"WITH {_DSIR_BK} SELECT * FROM stats")
+@query("dsir_bucket_stats", f"WITH {_DSIR_BK} SELECT * FROM stats")
 def q_dsir_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection, part 1 — the hash-matchable INTEGER model
     (`operators/text.py:dsir_bucket_stats`): hashed-bigram counts of
@@ -545,7 +545,7 @@ def q_dsir_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "dsir_select_topk",
     f"""
     WITH {_DSIR_BK},
@@ -651,7 +651,7 @@ from mapreduce_project_spark.operators.text import PII_PATTERNS, pii_counts, red
 _EMAIL_PAT, _IP_PAT, _PHONE_PAT = (p for _, p, _ in PII_PATTERNS)
 
 
-@extra_query(
+@query(
     "text_redact_pii",
     f"""
     WITH dirty AS (
@@ -700,7 +700,7 @@ def q_text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "heavy_hitters_bigrams",
     """
     WITH bg AS (
@@ -733,7 +733,7 @@ def q_heavy_hitters_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heavy_hitters(bg, "bigram", phi=0.00125, k=2048, budget=65536)
 
 
-@extra_query(
+@query(
     "text_repetition",
     """
     WITH toks AS (
@@ -784,7 +784,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_stats(t(spark, sf_dir, "documents"))
 
 
-@extra_query(
+@query(
     "fuzzy_token_pairs",
     """
     WITH v AS (
@@ -813,7 +813,7 @@ def q_fuzzy_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_pairs(vocab, "tok")
 
 
-@extra_query(
+@query(
     "text_bigram_lm_score",
     """
     WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
@@ -872,7 +872,7 @@ def q_text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "zscore_doc_length",
     f"""
     WITH sized AS (
@@ -926,7 +926,7 @@ def q_zscore_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "dedup_passages",
     f"""
     WITH toks AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
@@ -958,7 +958,7 @@ def q_dedup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return passage_dedup(t(spark, sf_dir, "documents"), "doc_id", "text", 16)
 
 
-@extra_query(
+@query(
     "bpe_merge_pairs",
     f"""
     WITH toks AS (SELECT {_TOKS} AS tk FROM documents)
@@ -1005,7 +1005,7 @@ def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "chunk_documents",
     f"""
     WITH toks AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
@@ -1057,7 +1057,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "text_normalize_nfc",
     """
     SELECT doc_id,
@@ -1086,7 +1086,7 @@ def q_text_normalize_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", normalize_nfc(planted).alias("text_nfc"))
 
 
-@extra_query("text_compression_ratio", None)
+@query("text_compression_ratio", None)
 def q_text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-free redundancy signal (`operators/text.py:
     compression_ratio`): zlib-level-6 bytes-out/bytes-in per document —
@@ -1100,7 +1100,7 @@ def q_text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compression_ratio(t(spark, sf_dir, "documents"))
 
 
-@extra_query(
+@query(
     "bm25_search",
     """
     WITH toks AS (
@@ -1142,7 +1142,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-term float sum is order-dependent at the last ulp — both are
     absorbed by the test comparator's 1e-9 rounding, but not by a
     byte-level hash. The INTEGER sufficient statistics this render
-    consumes are hash-matchable and carried by the rotation-eligible
+    consumes are hash-matchable and carried by the slot-eligible
     twin `bm25_stats` below (which also pins, in pytest, that this
     query's scores are a pure function of those stats)."""
     from mapreduce_project_spark.functions import tokens
@@ -1185,7 +1185,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "bm25_stats",
     """
     WITH toks AS (
@@ -1213,7 +1213,7 @@ def q_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, dlen, per-term df, corpus n_docs and total_tokens (avgdl =
     total_tokens/n_docs). All BIGINT, so the whole retrieval DATA PATH
     (tokenize → explode+prune → partial-agg TF → DF roll-up → broadcast
-    corpus scalars) is byte-hash-matchable and driver-rotation-eligible;
+    corpus scalars) is byte-hash-matchable and can hold a driver slot;
     only the final ln()/float render stays at pytest tolerance in
     `bm25_search`, and `tests/test_skew_and_tokens.py` pins that the
     rendered scores are a pure function of exactly these stats."""
@@ -1273,7 +1273,7 @@ _BPE_TRAIN_ORACLE = f"""
     """
 
 
-@extra_query("bpe_train_merges", _BPE_TRAIN_ORACLE)
+@query("bpe_train_merges", _BPE_TRAIN_ORACLE)
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL iterative BPE training (2 rounds): count adjacent pairs →
     adopt the winner (count DESC, l, r tie-break) → greedy leftmost
@@ -1292,7 +1292,7 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train(t(spark, sf_dir, "documents"), tokens("text"), rounds=2)
 
 
-@extra_query(
+@query(
     "doc_feature_vectors",
     """
     WITH tok AS (
@@ -1328,7 +1328,7 @@ def q_doc_feature_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hashed_doc_vectors(t(spark, sf_dir, "documents"), "doc_id", "text", 32)
 
 
-@extra_query(
+@query(
     "fuzzy_token_pairs_d2",
     """
     WITH v AS (
@@ -1395,7 +1395,7 @@ _BPE_ENCODE_ORACLE = f"""
     """
 
 
-@extra_query("bpe_encode_corpus", _BPE_ENCODE_ORACLE)
+@query("bpe_encode_corpus", _BPE_ENCODE_ORACLE)
 def q_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer train + APPLY: the 2-round merge table from
     `bpe_train` re-applied to the corpus in learn order
@@ -1448,7 +1448,7 @@ _QNORM_ORACLE = """
     """
 
 
-@extra_query("quantile_normalize_lengths", _QNORM_ORACLE)
+@query("quantile_normalize_lengths", _QNORM_ORACLE)
 def q_quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile normalization across sources — map every document's
     length onto the POOLED length distribution so per-source length
@@ -1508,7 +1508,7 @@ _OOV_ORACLE = f"""
     """
 
 
-@extra_query("vocab_oov_rate", _OOV_ORACLE)
+@query("vocab_oov_rate", _OOV_ORACLE)
 def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-coverage scoring: per-document out-of-vocabulary
     rate against the corpus's own top-25 token vocabulary (count DESC,
@@ -1562,7 +1562,7 @@ _ZIPF_ORACLE = f"""
     """
 
 
-@extra_query(
+@query(
     "corpus_drift_kl",
     """
     WITH tok AS (
@@ -1620,7 +1620,7 @@ def q_corpus_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query("zipf_coverage_curve", _ZIPF_ORACLE)
+@query("zipf_coverage_curve", _ZIPF_ORACLE)
 def q_zipf_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf coverage curve: how much of the corpus's token mass the
     top-k vocabulary covers at each rank — the plot every tokenizer
@@ -1680,7 +1680,7 @@ _MANIFEST_ORACLE = f"""
     """
 
 
-@extra_query("corpus_manifest", _MANIFEST_ORACLE)
+@query("corpus_manifest", _MANIFEST_ORACLE)
 def q_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dataset-card readout: one row summarizing corpus health —
     document/unique-fingerprint counts and the dup rate, language and
@@ -1717,7 +1717,7 @@ def q_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "doc_novelty_scores",
     """
     WITH toks AS (
@@ -1881,7 +1881,7 @@ _HYBRID_RRF_ORACLE = """
     """
 
 
-@extra_query("search_hybrid_rrf", _HYBRID_RRF_ORACLE)
+@query("search_hybrid_rrf", _HYBRID_RRF_ORACLE)
 def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID retrieval with Reciprocal Rank Fusion (k=60) — the
     two-tower search shape every production stack runs (Elasticsearch
@@ -1890,7 +1890,7 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     query vector in the D116 feature space) fused by
     rrf = 1/(60+rank_lex) + 1/(60+rank_dense), top-10.
 
-    Hash-exactness engineering (this query IS rotation-eligible,
+    Hash-exactness engineering (this query CAN hold a driver slot,
     unlike the float-render `bm25_search`): both rankings order by
     INTEGERS — BM25 per-(doc,term) contributions quantize idf and the
     tf-saturation factor separately to micro-fixed-point (the proven
@@ -2038,7 +2038,7 @@ _SPAN_CORRUPT_ORACLE = """
     """
 
 
-@extra_query("denoise_span_corruption_pairs", _SPAN_CORRUPT_ORACLE)
+@query("denoise_span_corruption_pairs", _SPAN_CORRUPT_ORACLE)
 def q_denoise_span_corruption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5-style SPAN-CORRUPTION pair builder — the denoising-objective
     training-data transform (Raffel et al. 2020): each document yields
@@ -2136,7 +2136,7 @@ _SOURCE_OVERLAP_ORACLE = """
     """
 
 
-@extra_query("source_overlap_matrix", _SOURCE_OVERLAP_ORACLE)
+@query("source_overlap_matrix", _SOURCE_OVERLAP_ORACLE)
 def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-SOURCE near-dup overlap matrix — the corpus-composition
     audit run before mixing sources into a training set (which feeds
@@ -2212,7 +2212,7 @@ _CCNET_ORACLE = """
     """
 
 
-@extra_query("ccnet_quality_buckets", _CCNET_ORACLE)
+@query("ccnet_quality_buckets", _CCNET_ORACLE)
 def q_ccnet_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style per-source quality terciles (Wenzek et al. 2020):
     score every document with the corpus-trained char-bigram LM
@@ -2300,7 +2300,7 @@ _MOJIBAKE_ORACLE = f"""
     """
 
 
-@extra_query("text_mojibake_audit", _MOJIBAKE_ORACLE)
+@query("text_mojibake_audit", _MOJIBAKE_ORACLE)
 def q_text_mojibake_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encoding-artifact (mojibake) audit — the ftfy-class crawl-hygiene
     check every web corpus needs before training: per document, counts
@@ -2357,7 +2357,7 @@ _PHRASE_ORACLE = f"""
     """
 
 
-@extra_query("search_phrase_positions", _PHRASE_ORACLE)
+@query("search_phrase_positions", _PHRASE_ORACLE)
 def q_search_phrase_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PHRASE search over positional postings — the retrieval primitive
     BM25/RRF (D105/D167) cannot express: "these tokens, ADJACENT, in
@@ -2446,7 +2446,7 @@ _PMI_ORACLE = f"""
     """
 
 
-@extra_query("term_pmi_top", _PMI_ORACLE)
+@query("term_pmi_top", _PMI_ORACLE)
 def q_term_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COLLOCATION mining: top-20 term pairs by document-level pointwise
     mutual information — the statistic behind phrase induction and
@@ -2520,7 +2520,7 @@ _CONTAINMENT_ORACLE = """
     """
 
 
-@extra_query("dedup_containment_pairs", _CONTAINMENT_ORACLE)
+@query("dedup_containment_pairs", _CONTAINMENT_ORACLE)
 def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional near-CONTAINMENT detection (|A∩B| ≥ 0.7·|A| over
     3-gram shingles, |A| ≥ 5): the asymmetric dedup question the C2
@@ -2565,7 +2565,7 @@ _FERTILITY_ORACLE = """
     """
 
 
-@extra_query("tokenizer_fertility_by_source", _FERTILITY_ORACLE)
+@query("tokenizer_fertility_by_source", _FERTILITY_ORACLE)
 def q_tokenizer_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer FERTILITY audit per source — the compression telemetry
     every tokenizer/corpus pairing is judged by (tokens per word,
@@ -2669,7 +2669,7 @@ _BACKOFF_ORACLE = f"""
     """
 
 
-@extra_query("text_trigram_backoff_score", _BACKOFF_ORACLE)
+@query("text_trigram_backoff_score", _BACKOFF_ORACLE)
 def q_text_trigram_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stupid-Backoff trigram LM scoring (Brants et al., EMNLP 2007) —
     the distributed-LM design point the bigram-frequency score (D59)
@@ -2830,7 +2830,7 @@ _ENTROPY_ORACLE = f"""
     """
 
 
-@extra_query("token_entropy_by_source", _ENTROPY_ORACLE)
+@query("token_entropy_by_source", _ENTROPY_ORACLE)
 def q_token_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon token entropy per source — the diversity telemetry next
     to the drift KL (D153) and fertility (D189) audits: a source whose
@@ -2968,7 +2968,7 @@ _WINNOW_ORACLE = f"""
     """
 
 
-@extra_query("text_winnow_pairs", _WINNOW_ORACLE)
+@query("text_winnow_pairs", _WINNOW_ORACLE)
 def q_text_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WINNOWING document fingerprints (D212, Schleimer-Wilkerson-Aiken
     SIGMOD'03 — the MOSS algorithm): per document, hash every 8-char
@@ -3098,7 +3098,7 @@ _PROX_ORACLE = """
     """
 
 
-@extra_query("search_proximity", _PROX_ORACLE)
+@query("search_proximity", _PROX_ORACLE)
 def q_search_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROXIMITY search (D213) — the retrieval primitive between
     boolean AND (co-occurrence anywhere) and D179's exact phrase
@@ -3189,7 +3189,7 @@ _RAKE_ORACLE = f"""
     """
 
 
-@extra_query("text_rake_keyphrases", _RAKE_ORACLE)
+@query("text_rake_keyphrases", _RAKE_ORACLE)
 def q_text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyphrase extraction (D218, Rose et al. 2010 — Rapid
     Automatic Keyword Extraction): candidate phrases are maximal runs
@@ -3307,7 +3307,7 @@ _SOURCE_DRIFT_ORACLE = f"""
     """
 
 
-@extra_query("source_quality_drift", _SOURCE_DRIFT_ORACLE)
+@query("source_quality_drift", _SOURCE_DRIFT_ORACLE)
 def q_source_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-SOURCE quality-drift monitor (D220) — the production
     curation dashboard composed from the corpus-wide KL decomposition
@@ -3416,7 +3416,7 @@ def _lrs_oracle(ladder: tuple[int, ...]) -> str:
     """
 
 
-@extra_query("text_longest_repeat", _lrs_oracle((2, 3, 5)))
+@query("text_longest_repeat", _lrs_oracle((2, 3, 5)))
 def q_text_longest_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest-repeated-substring TELEMETRY per document (D222) — the
     suffix-automaton-free ladder approximation: for widths k ∈
@@ -3500,7 +3500,7 @@ _GT_SPECTRUM_ORACLE = f"""
     """
 
 
-@extra_query("vocab_gt_spectrum", _GT_SPECTRUM_ORACLE)
+@query("vocab_gt_spectrum", _GT_SPECTRUM_ORACLE)
 def q_vocab_gt_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Good-Turing frequency-of-frequencies SPECTRUM (D225) over
     token-BIGRAM types — for each observed count r ≤ 10: how many
@@ -3603,7 +3603,7 @@ _TFIDF_COS_ORACLE = """
     """.format(toks=_TOKS)
 
 
-@extra_query("text_tfidf_cosine_pairs", _TFIDF_COS_ORACLE)
+@query("text_tfidf_cosine_pairs", _TFIDF_COS_ORACLE)
 def q_text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHTED set-similarity join (D226): TF-IDF cosine over trigram
     shingles — the weighted sibling of the unweighted Jaccard PPJoin
@@ -3814,7 +3814,7 @@ _TFLSH_ORACLE = """
 )
 
 
-@extra_query("text_tfidf_cosine_pairs_lsh", _TFLSH_ORACLE)
+@query("text_tfidf_cosine_pairs_lsh", _TFLSH_ORACLE)
 def q_text_tfidf_cosine_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF weighted-cosine pairs via MINHASH-LSH candidates (D295)
     — the 100 TB-registered form of D226 (VERDICT r11 task 4): same
@@ -4029,7 +4029,7 @@ _ROUGE_ORACLE = """
     """.format(toks=_TOKS)
 
 
-@extra_query("text_rouge_adjacent", _ROUGE_ORACLE)
+@query("text_rouge_adjacent", _ROUGE_ORACLE)
 def q_text_rouge_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROUGE-2 overlap scoring (D228) — the summarization/overlap
     metric (Lin 2004) computed as a CORPUS operator: every document
@@ -4185,7 +4185,7 @@ _BURROWS_ORACLE = """
     """.format(toks=_TOKS)
 
 
-@extra_query("stylometry_burrows_delta", _BURROWS_ORACLE)
+@query("stylometry_burrows_delta", _BURROWS_ORACLE)
 def q_stylometry_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Burrows's Delta stylometry (D231, MAD-scaled — Argamon's robust
     variant) — authorship/style attribution as a corpus operator: for
@@ -4347,7 +4347,7 @@ _MI_ORACLE = """
     """
 
 
-@extra_query("mutual_information_source_lang", _MI_ORACLE)
+@query("mutual_information_source_lang", _MI_ORACLE)
 def q_mutual_information_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information + normalized MI (D246) between document
     SOURCE and LANGUAGE — the information-theoretic association
@@ -4492,7 +4492,7 @@ _READABILITY_ORACLE = """
     """
 
 
-@extra_query("text_readability_scores", _READABILITY_ORACLE)
+@query("text_readability_scores", _READABILITY_ORACLE)
 def q_text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch Reading Ease + Flesch-Kincaid grade level (D247) per
     document — the classic readability gate in the text-quality stack
@@ -4612,7 +4612,7 @@ _KN_ORACLE = f"""
     """
 
 
-@extra_query("text_kn_bigram_score", _KN_ORACLE)
+@query("text_kn_bigram_score", _KN_ORACLE)
 def q_text_kn_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM scoring (D252) — the
     properly-smoothed member of the LM-quality family (Stupid Backoff
@@ -4732,7 +4732,7 @@ _TEMPLATE_ORACLE = """
     """
 
 
-@extra_query("source_template_prefixes", _TEMPLATE_ORACLE)
+@query("source_template_prefixes", _TEMPLATE_ORACLE)
 def q_source_template_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source boilerplate/template-prefix audit (D256) — the
     cheap screen that catches what full near-dup pipelines pay for
@@ -4841,7 +4841,7 @@ _VOCABGROWTH_ORACLE = """
     """
 
 
-@extra_query("vocab_growth_curve", _VOCABGROWTH_ORACLE)
+@query("vocab_growth_curve", _VOCABGROWTH_ORACLE)
 def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary growth (Heaps-law) curve (D257) — the corpus-
     saturation audit beside Zipf coverage (D138), OOV rate (D137) and
@@ -4953,7 +4953,7 @@ _DUPRATE_ORACLE = """
     """
 
 
-@extra_query("source_dup_rates", _DUPRATE_ORACLE)
+@query("source_dup_rates", _DUPRATE_ORACLE)
 def q_source_dup_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source duplication-rate dashboard (D258) — the #1 number a
     curation review actually reads off the exact-dedup pass (C1 gives
@@ -5051,7 +5051,7 @@ _RM3_ORACLE = """
     """
 
 
-@extra_query("search_rm3_expansion", _RM3_ORACLE)
+@query("search_rm3_expansion", _RM3_ORACLE)
 def q_search_rm3_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance-feedback query expansion (RM1/RM3 relevance
     model, D270) — the retrieval family's missing feedback loop (BM25
@@ -5195,7 +5195,7 @@ _KEYNESS_ORACLE = f"""
     """
 
 
-@extra_query("text_keyness_g2", _KEYNESS_ORACLE)
+@query("text_keyness_g2", _KEYNESS_ORACLE)
 def q_text_keyness_g2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dunning log-likelihood keyness (D283) — the WHAT-changed
     companion to the corpus-drift monitors (KL drift D153 and PSI
@@ -5369,7 +5369,7 @@ _TEXTRANK_ORACLE = """
     """
 
 
-@extra_query("text_textrank_summary", _TEXTRANK_ORACLE)
+@query("text_textrank_summary", _TEXTRANK_ORACLE)
 def q_text_textrank_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank extractive summarization (D284) — the per-document
     member of the graph family applied to text (PageRank D49 ranks a
@@ -5529,7 +5529,7 @@ _QL_ORACLE = f"""
     """
 
 
-@extra_query("search_query_likelihood", _QL_ORACLE)
+@query("search_query_likelihood", _QL_ORACLE)
 def q_search_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-likelihood retrieval with DIRICHLET smoothing (D292,
     Ponte-Croft / Zhai-Lafferty) — the language-modeling member
@@ -5666,7 +5666,7 @@ _ZIPF_SLOPE_ORACLE = f"""
     """
 
 
-@extra_query("source_zipf_slope", _ZIPF_SLOPE_ORACLE)
+@query("source_zipf_slope", _ZIPF_SLOPE_ORACLE)
 def q_source_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source ZIPF-MANDELBROT slope (D294) — the power-law exponent
     the Zipf coverage curve (D138) draws but never fits, and the OLS

@@ -22,7 +22,7 @@ from mapreduce_project_spark.operators.sampling import (
     stratified_sample_exact,
 )
 from mapreduce_project_spark.plans.text_queries import _JACCARD_PAIRS_ORACLE
-from mapreduce_project_spark.queries_registry import extra_query, query, t
+from mapreduce_project_spark.queries_registry import query, t
 
 
 @query(
@@ -98,7 +98,7 @@ _CANON_ORACLE = f"""
     """
 
 
-@extra_query("dedup_canonical_map", _CANON_ORACLE)
+@query("dedup_canonical_map", _CANON_ORACLE)
 def q_dedup_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-representative SELECTION (D210) — the survivorship
     step between cluster formation (D27) and a deduped corpus: every
@@ -171,7 +171,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "pack_sequences",
     """
     SELECT doc_id, source, n_tok,
@@ -203,7 +203,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packed.select("doc_id", "source", "n_tok", F.col("bin").cast("bigint").alias("bin"))
 
 
-@extra_query(
+@query(
     "stratified_sample",
     """
     SELECT doc_id, lang, source
@@ -229,7 +229,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_sample_exact(docs, ["lang", "source"], "doc_id", 50)
 
 
-@extra_query(
+@query(
     "source_mixture",
     """
     SELECT doc_id, source
@@ -261,7 +261,7 @@ def q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "decontam_hits",
     """
     WITH grams AS (
@@ -303,7 +303,7 @@ def q_decontam_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_hits(train, test, "doc_id", "text", 3)
 
 
-@extra_query(
+@query(
     "source_epochs",
     """
     SELECT doc_id, source, CAST(epoch AS BIGINT) AS epoch
@@ -492,7 +492,7 @@ def q_assemble_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packed.select("doc_id", "source", "n_tok", "bin")
 
 
-@extra_query(
+@query(
     "quality_weighted_sample",
     f"""
     WITH q AS (
@@ -530,7 +530,7 @@ def q_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "shuffle_shards",
     """
     WITH keyed AS (
@@ -562,7 +562,7 @@ def q_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "pack_contiguous",
     f"""
     WITH sized AS (
@@ -623,7 +623,7 @@ def q_pack_contiguous(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query(
+@query(
     "temperature_sample_sources",
     """
     WITH tagged AS (
@@ -761,7 +761,7 @@ _ASSEMBLE_V2_SQL = f"""
     """
 
 
-@extra_query("assemble_training_set_v2", _ASSEMBLE_V2_SQL)
+@query("assemble_training_set_v2", _ASSEMBLE_V2_SQL)
 def q_assemble_training_set_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship composition, GENERATION 2 — the round-3 operator
     families composed end to end in one plan: language/quality gate →
@@ -866,7 +866,7 @@ _LINEAR_GD_ORACLE = """
     """
 
 
-@extra_query("linear_gd_price_model", _LINEAR_GD_ORACLE)
+@query("linear_gd_price_model", _LINEAR_GD_ORACLE)
 def q_linear_gd_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed model training as a first-class pipeline op: two
     exact fixed-point batch-GD rounds fitting
@@ -913,7 +913,7 @@ _SEM_DECONTAM_ORACLE = """
     """
 
 
-@extra_query("semantic_decontam_pairs", _SEM_DECONTAM_ORACLE)
+@query("semantic_decontam_pairs", _SEM_DECONTAM_ORACLE)
 def q_semantic_decontam_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic decontamination — the embedding-space sibling of
     `decontam_hits`: corpus vectors (vec_id % 50 ≠ 0) whose cosine to
@@ -957,7 +957,7 @@ _BATCHES_ORACLE = """
     """
 
 
-@extra_query("training_batches_bucketed", _BATCHES_ORACLE)
+@query("training_batches_bucketed", _BATCHES_ORACLE)
 def q_training_batches_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-batching layout: 8-sequence training batches assembled
     within data-independent 64-token length buckets, with per-batch
@@ -1004,7 +1004,7 @@ _NEG_SAMPLES_ORACLE = """
     """
 
 
-@extra_query("contrastive_negative_samples", _NEG_SAMPLES_ORACLE)
+@query("contrastive_negative_samples", _NEG_SAMPLES_ORACLE)
 def q_contrastive_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling for contrastive training: 4
     uniform pseudo-random negatives per anchor (vec_id < 50) WITHOUT
@@ -1061,7 +1061,7 @@ _CONTRASTIVE_ORACLE = f"""
     """
 
 
-@extra_query("assemble_contrastive_pairs", _CONTRASTIVE_ORACLE)
+@query("assemble_contrastive_pairs", _CONTRASTIVE_ORACLE)
 def q_assemble_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship composition v3 — contrastive-pair dataset assembly
     from this round's families in ONE plan: POSITIVES are the exact
@@ -1162,7 +1162,7 @@ _V4_ORACLE = f"""
     """
 
 
-@extra_query("assemble_training_set_v4", _V4_ORACLE)
+@query("assemble_training_set_v4", _V4_ORACLE)
 def q_assemble_training_set_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP composition, generation 4 — the TARGETED-selection
     pipeline: DSIR importance selection (top-200 most-target-like raw
@@ -1218,7 +1218,7 @@ _LEAKSAFE_ORACLE = f"""
     """
 
 
-@extra_query("train_test_split_leakage_safe", _LEAKSAFE_ORACLE)
+@query("train_test_split_leakage_safe", _LEAKSAFE_ORACLE)
 def q_train_test_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEAKAGE-SAFE train/test split — the dedup-aware version of D28
     that evaluation hygiene actually requires: a near-duplicate of a
@@ -1298,7 +1298,7 @@ _WATERFILL_ORACLE = """
     """
 
 
-@extra_query("source_token_allocation", _WATERFILL_ORACLE)
+@query("source_token_allocation", _WATERFILL_ORACLE)
 def q_source_token_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source TOKEN-BUDGET allocation by exact integer
     WATER-FILLING — the data-mixture planning step every pretraining
@@ -1440,7 +1440,7 @@ _BLOOM_DECONTAM_ORACLE = """
     """
 
 
-@extra_query("decontam_bloom_audit", _BLOOM_DECONTAM_ORACLE)
+@query("decontam_bloom_audit", _BLOOM_DECONTAM_ORACLE)
 def q_decontam_bloom_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter decontamination audit (`operators/decontam.py:
     bloom_contamination_audit`): the constant-memory twin of D42's
@@ -1512,7 +1512,7 @@ _V6_ORACLE = """
     """
 
 
-@extra_query("assemble_training_set_v6", _V6_ORACLE)
+@query("assemble_training_set_v6", _V6_ORACLE)
 def q_assemble_training_set_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP composition, generation 6 — the GOVERNANCE-gated release
     the round-7/8 privacy operators were built for: where v5 certifies
@@ -1672,7 +1672,7 @@ def _build_v5_oracle() -> str:
     """
 
 
-@extra_query("assemble_training_set_v5", _build_v5_oracle())
+@query("assemble_training_set_v5", _build_v5_oracle())
 def q_assemble_training_set_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP composition, generation 5 — the HYGIENE-gated quality
     pipeline the round-6 operators were built for: mojibake audit
@@ -1944,7 +1944,7 @@ def _v8_oracle() -> str:
     """
 
 
-@extra_query("assemble_training_set_v8", _v8_oracle())
+@query("assemble_training_set_v8", _v8_oracle())
 def q_assemble_training_set_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP composition, generation 8 — the first CROSS-MODALITY
     release (VERDICT r10 task 7): v7 certifies text learnability
@@ -2152,7 +2152,7 @@ def q_assemble_training_set_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@extra_query("assemble_training_set_v7", _v7_oracle())
+@query("assemble_training_set_v7", _v7_oracle())
 def q_assemble_training_set_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP composition, generation 7 — the CURRICULUM-ordered
     quality release built from this round's gates (v5 certifies
@@ -2298,7 +2298,7 @@ _PREF_ORACLE = """
     """
 
 
-@extra_query("assemble_preference_pairs", _PREF_ORACLE)
+@query("assemble_preference_pairs", _PREF_ORACLE)
 def q_assemble_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preference-pair assembly for reward-model / DPO training
     (D308) — the data-prep step between quality scoring and pairwise

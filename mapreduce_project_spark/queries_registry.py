@@ -1,11 +1,17 @@
-"""The declared query inventory: name → (spark, sf_dir) -> DataFrame,
-plus the DuckDB oracle SQL twin for every SQL-expressible query.
+"""The query inventory: name → (spark, sf_dir) -> DataFrame, plus the
+DuckDB oracle SQL twin for every SQL-expressible query.
 
 This is the engine's public face for the driver contract
 (``__spark_entry__.py``) and mirrors the reference's own differential
 test pattern: ``client_folder/scripts/test.py:48-72`` re-runs each job
 through a sequential local executor and compares order-insensitively
 (``test.py:126-139``); here DuckDB plays that local-oracle role.
+
+Adding a query: define it in a ``plans`` module under
+``@query(name, oracle_sql)``. That registers it in ``ALL_QUERIES`` (and
+its oracle in ``ALL_ORACLES``), which pytest, the CLI and the service
+read. To give it one of the driver's slots as well, add its name to
+``DECLARED``.
 
 Conventions (keep, or the driver's value-hash comparison breaks):
 - alias every computed column identically in Spark and SQL;
@@ -28,21 +34,9 @@ from mapreduce_project_spark.sources import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Declared inventory — exposed to the driver via __spark_entry__.
-# CAPPED AT 50 ENTRIES: the driver's correctness harness records at
-# most 50 queries (CORRECTNESS_r01.json stopped at exactly 50, in
-# registry order), so every declared query must fit inside that window
-# to get a hard external signal. Near-duplicate variants and
-# sketch-twin queries live in EXTRA_QUERIES instead: fully implemented,
-# identically oracle-checked by tests/test_oracle.py, just not spending
-# a driver slot.
-MAX_DECLARED = 50
-
-QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, str] = {}
-
-EXTRA_QUERIES: dict[str, QueryFn] = {}
-EXTRA_ORACLES: dict[str, str] = {}
+# Every registered query and oracle, in registration order.
+ALL_QUERIES: dict[str, QueryFn] = {}
+ALL_ORACLES: dict[str, str] = {}
 
 # Rows-only queries whose VALUES are legitimately run-varying within a
 # published error bound (e.g. KLL sketch compaction depends on partial-
@@ -53,12 +47,11 @@ EXTRA_ORACLES: dict[str, str] = {}
 ROWS_ONLY_RTOL: dict[str, float] = {}
 
 
-def _register(
-    registry: dict[str, QueryFn],
-    oracles: dict[str, str],
-    name: str,
-    oracle: str | None,
-) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register a query (and its DuckDB oracle twin) under a new name."""
+    if name in ALL_QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             prep_session(spark)
@@ -66,30 +59,77 @@ def _register(
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
-        registry[name] = wrapped
+        ALL_QUERIES[name] = wrapped
         if oracle is not None:
-            oracles[name] = oracle
+            ALL_ORACLES[name] = oracle
         return wrapped
 
     return deco
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a driver-declared query (and its DuckDB oracle twin)."""
-    return _register(QUERIES, ORACLES, name, oracle)
-
-
-def extra_query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a pytest-only query: same implementation and oracle
-    discipline as `query`, but outside the driver's 50-slot correctness
-    window (see MAX_DECLARED). Used for near-duplicate variants whose
-    declared twin already carries the driver signal."""
-    return _register(EXTRA_QUERIES, EXTRA_ORACLES, name, oracle)
-
-
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
+
+# The driver's correctness harness records at most 50 queries, in
+# registry order (CORRECTNESS_r01.json stopped at exactly 50), so the
+# declared slate is capped there. Every other registered query is just
+# as oracle-checked by tests/test_oracle.py; it only lacks a driver slot.
+MAX_DECLARED = 50
+
+# The driver's slate, in the order the driver records it.
+DECLARED: tuple[str, ...] = (
+    "word_count",
+    "inverted_index",
+    "agg_pricing_summary",
+    "assemble_training_set",
+    "join_revenue_by_nation",
+    "dedup_exact",
+    "dedup_minhash_lsh",
+    "dedup_jaccard_prefix_filter",
+    "similarity_topk_ivf",
+    "events_sessions_pandas",
+    "tpch_q5_local_supplier_volume",
+    "bpe_train_merges",
+    "pagerank_trade_graph",
+    "events_watermark_audit",
+    "classifier_auc_activity",
+    "classifier_lift_deciles",
+    "events_km_survival",
+    "events_tail_index_hill",
+    "events_cross_correlation",
+    "search_rm3_expansion",
+    "forecast_backtest_mase",
+    "calibration_isotonic",
+    "clustering_silhouette",
+    "abtest_cmh_pooled",
+    "ivf_nprobe_recall_curve",
+    "join_size_preflight",
+    "events_burst_detection",
+    "abtest_bh_fdr",
+    "abtest_report_card",
+    "embedding_geometric_median",
+    "text_keyness_g2",
+    "text_textrank_summary",
+    "lsh_width_ladder_sampled",
+    "dedup_semantic_recall_cert",
+    "assemble_training_set_v8",
+    "join_order_advisor",
+    "join_preflight_sketch_audit",
+    "partition_layout_advisor",
+    "graph_clustering_coefficient",
+    "search_query_likelihood",
+    "conformal_value_intervals",
+    "source_zipf_slope",
+    "text_tfidf_cosine_pairs_lsh",
+    "graph_betweenness_sampled",
+    "correctness_trend_report",
+    "similarity_topk_mips",
+    "graph_hits_bipartite",
+    "bench_trend_report",
+    "pagerank_personalized_seeded",
+    "gdpr_delete_audit",
+)
 
 # Import side-effect: each module registers its queries via @query.
 from mapreduce_project_spark.plans import core_queries  # noqa: E402,F401
@@ -104,1045 +144,29 @@ from mapreduce_project_spark.plans import classic_queries  # noqa: E402,F401
 from mapreduce_project_spark.plans import classic_queries2  # noqa: E402,F401
 from mapreduce_project_spark.plans import sketch_queries  # noqa: E402,F401
 
-# Per-round slot rotation. The driver's correctness window records at
-# most MAX_DECLARED queries, but 130+ are oracle-equipped; rotating
-# which ones occupy driver slots lets every operator earn a hard
-# external (driver-green) signal across rounds while the full set stays
-# pytest-oracle-checked every round regardless. Definition sites keep
-# their original @query/@extra_query decorator; this wave table is the
-# only thing that changes between rounds. Waves apply IN ORDER (a name
-# rotated in by one wave can be rotated back out by a later one).
-_ROTATION_WAVES: tuple[tuple[tuple[str, ...], tuple[str, ...]], ...] = (
-    # --- Round 3: swap sixteen low-information scalar/variant slots
-    # (all r01/r02 driver-green) out in favor of the heavyweight
-    # operator families that round 2 left with repo-only signal.
-    (
-        (
-            "word_count_mr",      # facade twin of the driver-green word_count
-            "date_functions",     # scalar-function smoke
-            "array_functions",    # scalar-function smoke
-            "string_funcs",       # scalar-function smoke
-            "posexplode_tokens",  # near-variant of the explode path in word_count
-            "union_party_keys",       # B11 union — structurally trivial
-            "except_order_keys",      # D2 twin; intersect keeps the driver slot
-            "top_orders",             # global top-k; per-group top-k variant stays
-            "distinct_segments",      # B3 twin of the declared dedup_exact
-            "text_token_count_bpe",   # scalar smoke; bpe_merge_pairs is stronger
-            "multimodal_meta",        # metadata-struct smoke; byte_features carries C5
-            "doc_fingerprints",       # md5 projection; dedup_exact re-proves the fp
-            "text_lang_id",           # marker CASE; the lang gate rides clean_corpus
-            "intersect_nation_keys",  # D2 set-op smoke (driver-green r02)
-            "embedding_cosine_pairs", # exact blocked pairs; ann_lsh+ivf carry C3
-            "event_gaps",             # lag window; window_rank_family carries D9/D53
-        ),
-        (
-            "pagerank_trade_graph",      # D49 iterative fixed-point PageRank
-            "recursive_supplier_chain",  # D68 recursive CTE
-            "window_rank_family",        # D53 ranking-window family
-            "events_funnel",             # D45 ordered funnel analysis
-            "decontam_hits",             # D42 benchmark n-gram decontamination
-            "dedup_passages",                # D78 passage-level exact dedup
-            "shuffle_shards",                # D79 deterministic corpus sharding
-            "sketch_theta_distinct_users",   # D81 mergeable sketch w/ exact oracle
-            "tpch_q5_local_supplier_volume", # D36 6-way join-ordering stress
-            "embedding_quantize_int8",       # D82 int8 embedding quantization
-            "assemble_training_set_v2",      # D108 flagship composition, gen 2
-            "dedup_jaccard_prefix_filter",   # D109 exact Jaccard at scale (AllPairs)
-            "linear_gd_price_model",         # D110 fixed-point GD model training
-            "events_ewma_value",             # D112 recursive EWMA (rec-CTE oracle)
-            "bpe_train_merges",              # D113 iterative BPE training
-            "multimodal_patchify",           # D111 ViT patch tokenization
-        ),
-    ),
-    # --- Round 4: the round-3 entrants are now driver-proven
-    # (CORRECTNESS_r03.json, 16/16 hash-green); swap them for the
-    # never-driver-checked operator families. linear_gd_price_model
-    # KEEPS its slot one more round: its q-scaled step fix (ADVICE r3
-    # high finding) should earn a fresh driver-green row on the
-    # corrected arithmetic — filter_project (driver-green r01-r03,
-    # structurally trivial) gives up its slot instead.
-    (
-        (
-            "pagerank_trade_graph",
-            "recursive_supplier_chain",
-            "window_rank_family",
-            "events_funnel",
-            "decontam_hits",
-            "dedup_passages",
-            "shuffle_shards",
-            "sketch_theta_distinct_users",
-            "tpch_q5_local_supplier_volume",
-            "embedding_quantize_int8",
-            "assemble_training_set_v2",
-            "dedup_jaccard_prefix_filter",
-            "events_ewma_value",
-            "bpe_train_merges",
-            "multimodal_patchify",
-            "filter_project",
-        ),
-        (
-            "cogroup_view_purchase_pairs",  # D132 cogrouped applyInPandas
-            "weighted_avg_udaf",            # D120 pandas GROUPED_AGG UDAF
-            "global_rank_orders",           # D129 exact distributed global ranking
-            "quantile_normalize_lengths",   # D130 cross-source quantile norm
-            "events_anomaly_flags",         # D134 robust anomaly detection
-            "sketch_theta_retention",       # D126 theta-sketch set algebra
-            "embedding_pq_codes",           # D115 product quantization encode
-            "similarity_topk_pq",           # D115 ADC serving scan
-            "graph_components_cosupply",    # D114 connected components
-            "kmeans_embeddings",            # D32 Lloyd k-means (bit-exact)
-            "semantic_decontam_pairs",      # D117 embedding-space decontam
-            "bpe_encode_corpus",            # D121 BPE encoding (train→encode)
-            "orders_xml_roundtrip",         # D119 XML ingestion (Spark 4 native)
-            "k_anonymity_audit",            # D131 k-anonymity governance audit
-            "dq_audit_orders",              # D93 data-quality audit
-            "snapshot_diff_orders",         # D95 snapshot diff
-        ),
-    ),
-    # --- Round 5: the backlog-clearing wave (VERDICT r4 task 1).
-    # Keep only four sentinels — word_count, inverted_index,
-    # agg_pricing_summary (TPC-H Q1 shape), assemble_training_set
-    # (flagship) — and hand every other slot to queries that have
-    # NEVER held one: the 18 remaining TPC-H shapes (the multi-join /
-    # correlated-subquery / disjunctive-predicate stress block), the
-    # round-4 additions (incremental crawl dedup, DSIR pair, drift KL,
-    # real pixel/PCM decode proofs), the facade/run_job pair re-earning
-    # an external row on current code (VERDICT task 4), and a breadth
-    # slice across events / text / governance / training families.
-    (
-        (
-            "group_collect_set",
-            "count_distinct_parts",
-            "join_revenue_by_nation",
-            "outer_join_order_counts",
-            "top_lineitems_per_supplier",
-            "events_sessions_pandas",
-            "events_rollup_day_hour",
-            "events_variant_stats",
-            "text_stats",
-            "dedup_exact",
-            "pipeline_clean_corpus",
-            "tfidf_terms",
-            "dedup_minhash_lsh",
-            "dedup_simhash",
-            "similarity_ann_lsh",
-            "embedding_label_centroids",
-            "multimodal_byte_features",
-            "cube_order_stats",
-            "grouping_sets_lineitem",
-            "pivot_priority_status",
-            "range_join_price_bands",
-            "asof_view_before_purchase",
-            "percentile_quantity",
-            "similarity_topk_ivf",
-            "triangle_counts_cosupply",
-            "dedup_clusters",
-            "train_test_split",
-            "tpch_q4_priority_returns",
-            "tpch_q22_dormant_capital",
-            "linear_gd_price_model",
-            "cogroup_view_purchase_pairs",
-            "weighted_avg_udaf",
-            "global_rank_orders",
-            "quantile_normalize_lengths",
-            "events_anomaly_flags",
-            "sketch_theta_retention",
-            "embedding_pq_codes",
-            "similarity_topk_pq",
-            "graph_components_cosupply",
-            "kmeans_embeddings",
-            "semantic_decontam_pairs",
-            "bpe_encode_corpus",
-            "orders_xml_roundtrip",
-            "k_anonymity_audit",
-            "dq_audit_orders",
-            "snapshot_diff_orders",
-        ),
-        (
-            # TPC-H completion block (18 never-checked shapes)
-            "tpch_q2_min_cost_supplier",
-            "tpch_q3_shipping_priority",
-            "tpch_q6_revenue_forecast",
-            "tpch_q7_volume_shipping",
-            "tpch_q8_market_share",
-            "tpch_q9_product_profit",
-            "tpch_q10_returned_items",
-            "tpch_q11_important_stock",
-            "tpch_q12_shipmode_priority",
-            "tpch_q13_customer_distribution",
-            "tpch_q14_promo_share",
-            "tpch_q15_top_supplier",
-            "tpch_q16_supplier_variety",
-            "tpch_q17_small_quantity_revenue",
-            "tpch_q18_large_orders",
-            "tpch_q19_disjunctive_brackets",
-            "tpch_q20_excess_suppliers",
-            "tpch_q21_waiting_supplier",
-            # round-4 additions, all sweep-green, first driver rows
-            "dedup_incremental_crawl",      # D145
-            "dedup_duplicate_spans",        # D147
-            "dsir_bucket_stats",            # D148 integer model
-            "dsir_select_topk",             # D148 selection (fixed-point r5)
-            "hard_negative_mining",         # D150
-            "events_context_pairs",         # D149
-            "assemble_training_set_v4",     # D152 flagship gen 4
-            "corpus_drift_kl",              # D153
-            "multimodal_decode_roundtrip",  # D155 real pixel decode
-            "multimodal_wav_roundtrip",     # D156 real PCM decode
-            "bm25_stats",                   # D146 integer BM25 stats
-            # facade / run_job round-trips (VERDICT task 4)
-            "word_count_mr",                # A3-A9 via run_job
-            "inverted_index_mr",            # A3-A9 via run_job
-            # breadth slice — one per never-checked family
-            "assemble_contrastive_pairs",   # D127 flagship gen 3
-            "events_cohort_retention",      # D48
-            "events_dau_wau",               # D143
-            "event_transition_matrix",      # D88
-            "fuzzy_token_pairs_d2",         # D46 edit-distance-2 join
-            "text_normalize_nfc",           # D98
-            "zipf_coverage_curve",          # D138
-            "vocab_oov_rate",               # D137
-            "corpus_manifest",              # D140
-            "histogram_equi_depth",         # D61
-            "profile_orders_columns",       # D96
-            "table_checksums",              # D139
-            "pack_contiguous",              # D83
-            "temperature_sample_sources",   # D89
-            "training_batches_bucketed",    # D118
-        ),
-    ),
-    # --- Round 6: clear the never-checked backlog (VERDICT r5 task 1).
-    # 54 oracle-equipped queries had never held a driver slot; this
-    # wave hands 46 of them their first slot (again keeping only the
-    # four sentinels). Deferred to round 7 (8 names): bm25_search
-    # (float ln render — pytest-tolerance-only by convention, never a
-    # driver slot), plus seven near-twins of already-driver-green
-    # queries: fuzzy_token_pairs (fuzzy_token_pairs_d2 green r5),
-    # asof_purchase_after_view (asof_view_before_purchase green
-    # r1-r4), cdc_latest_state / scd2_user_state (changelog family),
-    # heavy_hitters_bigrams, map_event_type_counts,
-    # multimodal_header_probe (the decode roundtrips are stronger).
-    (
-        (
-            # round-5 entrants, now all driver-proven (r5 50/50 green)
-            "tpch_q2_min_cost_supplier",
-            "tpch_q3_shipping_priority",
-            "tpch_q6_revenue_forecast",
-            "tpch_q7_volume_shipping",
-            "tpch_q8_market_share",
-            "tpch_q9_product_profit",
-            "tpch_q10_returned_items",
-            "tpch_q11_important_stock",
-            "tpch_q12_shipmode_priority",
-            "tpch_q13_customer_distribution",
-            "tpch_q14_promo_share",
-            "tpch_q15_top_supplier",
-            "tpch_q16_supplier_variety",
-            "tpch_q17_small_quantity_revenue",
-            "tpch_q18_large_orders",
-            "tpch_q19_disjunctive_brackets",
-            "tpch_q20_excess_suppliers",
-            "tpch_q21_waiting_supplier",
-            "dedup_incremental_crawl",
-            "dedup_duplicate_spans",
-            "dsir_bucket_stats",
-            "dsir_select_topk",
-            "hard_negative_mining",
-            "events_context_pairs",
-            "assemble_training_set_v4",
-            "corpus_drift_kl",
-            "multimodal_decode_roundtrip",
-            "multimodal_wav_roundtrip",
-            "bm25_stats",
-            "word_count_mr",
-            "inverted_index_mr",
-            "assemble_contrastive_pairs",
-            "events_cohort_retention",
-            "events_dau_wau",
-            "event_transition_matrix",
-            "fuzzy_token_pairs_d2",
-            "text_normalize_nfc",
-            "zipf_coverage_curve",
-            "vocab_oov_rate",
-            "corpus_manifest",
-            "histogram_equi_depth",
-            "profile_orders_columns",
-            "table_checksums",
-            "pack_contiguous",
-            "temperature_sample_sources",
-            "training_batches_bucketed",
-        ),
-        (
-            # first-ever driver slots — the backlog, 46 of 54
-            "abtest_conversion_z",            # D135
-            "argmax_order_per_segment",       # D125
-            "bpe_merge_pairs",                # D80
-            "chunk_documents",                # D87
-            "contrastive_negative_samples",   # D122
-            "corr_quantity_discount",         # D107
-            "dedup_embedding_clusters",       # D31 (round-6 LSH rewrite)
-            "dedup_exact_substrings",         # D158
-            "doc_feature_vectors",            # D116
-            "doc_novelty_scores",             # D163
-            "events_gapfill_daily",           # D103
-            "events_pseudonymized",           # D141
-            "events_sessions_dynamic_gap",    # D71
-            "events_trailing_hour",           # D47
-            "events_twap_daily",              # D160
-            "fulfillment_latency_histogram",  # D144
-            "histogram_price_equiwidth",      # D102
-            "interval_join_error_sessions",   # D69
-            "knn_join_label",                 # D34
-            "lateral_recent_orders",          # D92
-            "mad_quantity_by_flag",           # D123
-            "multimodal_downsample",          # D33
-            "multimodal_png_roundtrip",       # D157
-            "pack_sequences",                 # D29
-            "quality_weighted_sample",        # D72
-            "rollup_with_grouping_id",        # D74
-            "search_recall_at_k",             # D136
-            "search_reciprocal_rank",         # D136
-            "session_cooccurrence_lift",      # D104
-            "shortest_paths_trade",           # D106
-            "similarity_topk_ivfpq",          # D159
-            "similarity_topk_sq8",            # D161
-            "skew_profile_custkey",           # D65
-            "source_epochs",                  # D40
-            "source_mixture",                 # D38
-            "spatial_radius_join",            # D100
-            "stratified_sample",              # D30
-            "text_bigram_lm_score",           # D59
-            "text_redact_pii",                # D35
-            "text_repetition",                # D43
-            "trailing_distinct_users",        # D76
-            "train_test_split_leakage_safe",  # D162
-            "trend_revenue_by_nation",        # D124
-            "unpivot_part_metrics",           # B-surface unpivot
-            "winsorize_quantity",             # D142
-            "zscore_doc_length",              # D73
-        ),
-    ),
-    # --- Round 7: the r6 entrants are all driver-proven (r6 50/50
-    # green); rotate them out (keeping the four sentinels and
-    # dedup_embedding_clusters, whose gemm pair stage CHANGED this
-    # round — margin scaling + self-pair guard — and must re-prove).
-    # In: the 26 remaining never-driver-checked oracle-equipped
-    # queries (12 round-6 staged + 7 round-6 deferrals + 7 round-7
-    # additions — D165-D184 complete their driver evidence) plus a
-    # 19-slot re-verification slice: the 9 non-sentinel bench-panel
-    # queries (the cross-round perf series re-earns correctness
-    # evidence at the current code state) and 10 r1-era Tier-B/C
-    # basics whose last driver proof predates five rounds of engine
-    # change.
-    (
-        (
-            "abtest_conversion_z",
-            "argmax_order_per_segment",
-            "bpe_merge_pairs",
-            "chunk_documents",
-            "contrastive_negative_samples",
-            "corr_quantity_discount",
-            "dedup_exact_substrings",
-            "doc_feature_vectors",
-            "doc_novelty_scores",
-            "events_gapfill_daily",
-            "events_pseudonymized",
-            "events_sessions_dynamic_gap",
-            "events_trailing_hour",
-            "events_twap_daily",
-            "fulfillment_latency_histogram",
-            "histogram_price_equiwidth",
-            "interval_join_error_sessions",
-            "knn_join_label",
-            "lateral_recent_orders",
-            "mad_quantity_by_flag",
-            "multimodal_downsample",
-            "multimodal_png_roundtrip",
-            "pack_sequences",
-            "quality_weighted_sample",
-            "rollup_with_grouping_id",
-            "search_recall_at_k",
-            "search_reciprocal_rank",
-            "session_cooccurrence_lift",
-            "shortest_paths_trade",
-            "similarity_topk_ivfpq",
-            "similarity_topk_sq8",
-            "skew_profile_custkey",
-            "source_epochs",
-            "source_mixture",
-            "spatial_radius_join",
-            "stratified_sample",
-            "text_bigram_lm_score",
-            "text_redact_pii",
-            "text_repetition",
-            "trailing_distinct_users",
-            "train_test_split_leakage_safe",
-            "trend_revenue_by_nation",
-            "unpivot_part_metrics",
-            "winsorize_quantity",
-            "zscore_doc_length",
-        ),
-        (
-            # first-ever driver slots — D165-D177 staged + deferrals
-            "dedup_embedding_clusters_lsh",   # D165
-            "search_hybrid_rrf",              # D167
-            "denoise_span_corruption_pairs",  # D168
-            "source_token_allocation",        # D169
-            "source_overlap_matrix",          # D170
-            "matryoshka_recall_curve",        # D171
-            "events_ohlc_daily",              # D172
-            "ccnet_quality_buckets",          # D173
-            "text_mojibake_audit",            # D174
-            "decontam_bloom_audit",           # D175
-            "sketch_hll_registers_exact",     # D176 (round-7 LC fix)
-            "dp_noisy_source_counts",         # D177
-            # first-ever driver slots — round-6 deferrals
-            "fuzzy_token_pairs",              # D46 (d2 twin green r5)
-            "asof_purchase_after_view",       # D70
-            "cdc_latest_state",               # D44
-            "scd2_user_state",                # D60
-            "heavy_hitters_bigrams",          # D41
-            "map_event_type_counts",          # A4 facade map
-            "multimodal_header_probe",        # D86
-            # first-ever driver slots — round-7 additions
-            "assemble_training_set_v5",       # D178
-            "search_phrase_positions",        # D179
-            "sketch_hll_rolling_7d",          # D180
-            "events_attribution_position",    # D181
-            "embedding_label_centroids",      # D182
-            "weighted_median_price",          # D183
-            "term_pmi_top",                   # D184
-            # re-verification: bench-panel members (non-sentinel)
-            "join_revenue_by_nation",
-            "dedup_exact",
-            "dedup_minhash_lsh",
-            "dedup_jaccard_prefix_filter",
-            "similarity_topk_ivf",
-            "events_sessions_pandas",
-            "tpch_q5_local_supplier_volume",
-            "bpe_train_merges",
-            "pagerank_trade_graph",
-            # re-verification: r1-era Tier-B/C basics
-            "similarity_topk",
-            "events_tumbling_hour",
-            "multimodal_meta",
-            "top_orders",
-            "union_party_keys",
-            "count_distinct_parts",
-            "text_normalize",
-            "filter_project",
-            "text_lang_id",
-            "text_stats",
-        ),
-    ),
-    # --- Round 9: burn down the 18-query never-driver-checked backlog
-    # (VERDICT r8 task 1 — the r8 round was interrupted before the
-    # rotation could move). Keep the four sentinels + the 12 bench-panel
-    # members (13 distinct names); rotate out 22 driver-r8-green slots
-    # (the r1-era re-verification block, six r6-deferral twins, five r7
-    # additions — all hash-green in CORRECTNESS_r08.json on current
-    # code) in favor of: the 18 oracle-equipped queries that have never
-    # held a driver slot, the two round-8 certificate upgrades
-    # (approx_distinct_parts / approx_quantiles_price — judge-verified
-    # r8, never driver-green with their new oracles; the latter carries
-    # the r9 integer-cents hardening), and the new auto-width LSH twin
-    # (D206, wires the round-8 prefix-consistent plane machinery).
-    (
-        (
-            "similarity_topk",
-            "events_tumbling_hour",
-            "multimodal_meta",
-            "top_orders",
-            "union_party_keys",
-            "count_distinct_parts",
-            "text_normalize",
-            "filter_project",
-            "text_lang_id",
-            "text_stats",
-            "fuzzy_token_pairs",
-            "asof_purchase_after_view",
-            "cdc_latest_state",
-            "scd2_user_state",
-            "map_event_type_counts",
-            "multimodal_header_probe",
-            "events_ohlc_daily",
-            "events_attribution_position",
-            "embedding_label_centroids",
-            "term_pmi_top",
-            "sketch_hll_rolling_7d",
-            "decontam_bloom_audit",
-        ),
-        (
-            # the 18-query driver backlog (first-ever slots)
-            "trend_mann_kendall",             # D202
-            "benford_first_digit_audit",      # D203
-            "token_entropy_by_source",        # D204
-            "l_diversity_audit",              # D205
-            "similarity_mmr_rerank",          # D201
-            "session_path_mining",            # D199
-            "text_trigram_backoff_score",     # D197
-            "rfm_segmentation",               # D198
-            "skyline_orders",                 # D196
-            "events_cusum_changepoints",      # D195
-            "embedding_jl_projection",        # D194
-            "basket_association_rules",       # D192
-            "mutual_knn_pairs",               # D190
-            "sketch_cms_registers_exact",     # D188
-            "tokenizer_fertility_by_source",  # D189
-            "dedup_containment_pairs",        # D185
-            "abtest_value_welch",             # D186
-            "bm25_search",                    # D105 (integer twin green r5)
-            # round-8 certificate upgrades (first driver rows w/ oracles)
-            "approx_distinct_parts",          # B14 HLL bound certificate
-            "approx_quantiles_price",         # D24 KLL bound certificate
-            # round-9 additions
-            "dedup_embedding_clusters_lsh_auto",  # D206 auto-bits lever
-            "assemble_training_set_v6",           # D207 flagship gen 6
-        ),
-    ),
-    # --- Round 10: burn the 11-query never-driver-checked backlog
-    # (VERDICT r9 task 2 — everything late-round-9 built: D209–D219).
-    # Keep the four sentinels + the 12 bench-panel members and
-    # embedding_jl_projection (D194 — its round-9 driver row went red
-    # on the array-column rendering; the fixed proj_csv form needs a
-    # first hash-green row). Rotate out 11 driver-r9-green slots.
-    (
-        (
-            "trend_mann_kendall",             # driver r9 green
-            "benford_first_digit_audit",      # driver r9 green
-            "l_diversity_audit",              # driver r9 green
-            "similarity_mmr_rerank",          # driver r9 green
-            "session_path_mining",            # driver r9 green
-            "rfm_segmentation",               # driver r9 green
-            "skyline_orders",                 # driver r9 green
-            "mutual_knn_pairs",               # driver r9 green
-            "sketch_cms_registers_exact",     # driver r9 green
-            "abtest_value_welch",             # driver r9 green (CUPED in)
-            "bm25_search",                    # driver r9 green
-        ),
-        (
-            "dedup_snm_pairs",                # D209 first slot
-            "dedup_canonical_map",            # D210 first slot
-            "events_markov_attribution",      # D211 first slot
-            "text_winnow_pairs",              # D212 first slot
-            "search_proximity",               # D213 first slot
-            "events_seasonal_baseline",       # D214 first slot
-            "events_sequential_pairs",        # D215 first slot
-            "itemcf_topk",                    # D216 first slot
-            "abtest_cuped_adjust",            # D217 first slot
-            "text_rake_keyphrases",           # D218 first slot
-            "embedding_top_pc",               # D219 first slot
-        ),
-    ),
-    # --- Round 11: wave 1 of 2 burning the 65-query round-10 backlog
-    # (VERDICT r10 task 1 — it exceeds one rotation window; round 12
-    # takes the rest). Keep only the four sentinels + the 12 bench-
-    # panel members (13 unique names); every other slot goes to the
-    # OLDEST never-driver-checked block, D220–D258 (exactly 37 batch
-    # queries — D238/D251 are pytest-pinned streaming twins). Deferred
-    # to round 12: events_max_drawdown (D259), search_ndcg (D260),
-    # events_conversion_lag (D262), and the D263–D284 batch block.
-    (
-        (
-            # driver-r10-green, giving up slots to the backlog
-            "dedup_embedding_clusters",
-            "dedup_embedding_clusters_lsh",
-            "search_hybrid_rrf",
-            "denoise_span_corruption_pairs",
-            "source_token_allocation",
-            "source_overlap_matrix",
-            "matryoshka_recall_curve",
-            "ccnet_quality_buckets",
-            "text_mojibake_audit",
-            "sketch_hll_registers_exact",
-            "dp_noisy_source_counts",
-            "heavy_hitters_bigrams",
-            "assemble_training_set_v5",
-            "search_phrase_positions",
-            "weighted_median_price",
-            "token_entropy_by_source",
-            "text_trigram_backoff_score",
-            "events_cusum_changepoints",
-            "embedding_jl_projection",
-            "basket_association_rules",
-            "tokenizer_fertility_by_source",
-            "dedup_containment_pairs",
-            "approx_distinct_parts",
-            "approx_quantiles_price",
-            "dedup_embedding_clusters_lsh_auto",
-            "assemble_training_set_v6",
-            "dedup_snm_pairs",
-            "dedup_canonical_map",
-            "events_markov_attribution",
-            "text_winnow_pairs",
-            "search_proximity",
-            "events_seasonal_baseline",
-            "events_sequential_pairs",
-            "itemcf_topk",
-            "abtest_cuped_adjust",
-            "text_rake_keyphrases",
-            "embedding_top_pc",
-        ),
-        (
-            "source_quality_drift",            # D220 first slot
-            "lsh_width_ladder",                # D221 first slot
-            "text_longest_repeat",             # D222 first slot
-            "events_bot_scores",               # D223 first slot
-            "events_hourly_acf",               # D224 first slot
-            "vocab_gt_spectrum",               # D225 first slot
-            "text_tfidf_cosine_pairs",         # D226 first slot
-            "fk_integrity_audit",              # D227 first slot
-            "text_rouge_adjacent",             # D228 first slot
-            "events_concurrency_profile",      # D229 first slot
-            "abtest_bootstrap_ci",             # D230 first slot
-            "stylometry_burrows_delta",        # D231 first slot
-            "events_holt_forecast",            # D232 first slot
-            "graph_degree_assortativity",      # D233 first slot
-            "events_retention_hazard",         # D234 first slot
-            "embedding_sq2_codebook",          # D235 first slot
-            "multimodal_audio_resample",       # D236 first slot
-            "t_closeness_audit",               # D237 first slot
-            "events_lorenz_gini",              # D239 first slot
-            "abc_classification_suppliers",    # D240 first slot
-            "corr_spearman_price_demand",      # D241 first slot
-            "assemble_behavioral_dataset",     # D242 first slot
-            "contingency_chi_square",          # D243 first slot
-            "psi_value_drift",                 # D244 first slot
-            "graph_label_propagation",         # D245 first slot
-            "mutual_information_source_lang",  # D246 first slot
-            "text_readability_scores",         # D247 first slot
-            "embedding_hygiene_audit",         # D248 first slot
-            "events_shapley_attribution",      # D249 first slot
-            "events_holt_winters",             # D250 first slot
-            "text_kn_bigram_score",            # D252 first slot
-            "customer_brand_hhi",              # D253 first slot
-            "assemble_training_set_v7",        # D254 first slot
-            "graph_kcore_membership",          # D255 first slot
-            "source_template_prefixes",        # D256 first slot
-            "vocab_growth_curve",              # D257 first slot
-            "source_dup_rates",                # D258 first slot
-        ),
-    ),
-    # --- Round 12: wave 2 of 2 — this CLOSES the never-driver-checked
-    # backlog (VERDICT r11 task 1). Keep the four sentinels + the 12
-    # bench-panel members (13 unique names); all 37 round-11 entrants
-    # are driver-r11 green (CORRECTNESS_r11.json 50/50) and give up
-    # their slots to the 33 remaining first-timers: the D259–D284
-    # deferral block (23 oracle-equipped names) and the 10 round-11
-    # additions D285–D294. lsh_width_ladder hands its audit slot to the
-    # sampled auto-rate twin (VERDICT r11 task 3) and
-    # text_tfidf_cosine_pairs to its LSH-candidate sibling (task 4).
-    # After this wave every oracle-equipped query has held a driver
-    # slot at least once — the rotation backlog is EMPTY; future waves
-    # only need to cover new operators and re-verification slices.
-    (
-        (
-            "source_quality_drift",
-            "lsh_width_ladder",
-            "text_longest_repeat",
-            "events_bot_scores",
-            "events_hourly_acf",
-            "vocab_gt_spectrum",
-            "text_tfidf_cosine_pairs",
-            "fk_integrity_audit",
-            "text_rouge_adjacent",
-            "events_concurrency_profile",
-            "abtest_bootstrap_ci",
-            "stylometry_burrows_delta",
-            "events_holt_forecast",
-            "graph_degree_assortativity",
-            "events_retention_hazard",
-            "embedding_sq2_codebook",
-            "multimodal_audio_resample",
-            "t_closeness_audit",
-            "events_lorenz_gini",
-            "abc_classification_suppliers",
-            "corr_spearman_price_demand",
-            "assemble_behavioral_dataset",
-            "contingency_chi_square",
-            "psi_value_drift",
-            "graph_label_propagation",
-            "mutual_information_source_lang",
-            "text_readability_scores",
-            "embedding_hygiene_audit",
-            "events_shapley_attribution",
-            "events_holt_winters",
-            "text_kn_bigram_score",
-            "customer_brand_hhi",
-            "assemble_training_set_v7",
-            "graph_kcore_membership",
-            "source_template_prefixes",
-            "vocab_growth_curve",
-            "source_dup_rates",
-        ),
-        (
-            # D259–D284 deferral block — first-ever driver slots
-            "events_max_drawdown",             # D259 first slot
-            "search_ndcg",                     # D260 first slot
-            "events_conversion_lag",           # D262 first slot
-            "events_watermark_audit",          # D263 first slot
-            "simpson_paradox_audit",           # D264 first slot
-            "classifier_auc_activity",         # D265 first slot
-            "classifier_lift_deciles",         # D266 first slot
-            "events_km_survival",              # D267 first slot
-            "events_tail_index_hill",          # D268 first slot
-            "events_cross_correlation",        # D269 first slot
-            "search_rm3_expansion",            # D270 first slot
-            "forecast_backtest_mase",          # D271 first slot
-            "calibration_isotonic",            # D273 first slot
-            "clustering_silhouette",           # D274 first slot
-            "abtest_cmh_pooled",               # D275 first slot
-            "ivf_nprobe_recall_curve",         # D276 first slot
-            "join_size_preflight",             # D277 first slot
-            "events_burst_detection",          # D278 first slot
-            "abtest_bh_fdr",                   # D279 first slot
-            "abtest_report_card",              # D280 first slot
-            "embedding_geometric_median",      # D281 first slot
-            "text_keyness_g2",                 # D283 first slot
-            "text_textrank_summary",           # D284 first slot
-            # round-11 additions — first-ever driver slots
-            "lsh_width_ladder_sampled",        # D285 (round-12 auto-rate re-pin)
-            "dedup_semantic_recall_cert",      # D286 first slot
-            "assemble_training_set_v8",        # D287 first slot
-            "join_order_advisor",              # D288 first slot
-            "join_preflight_sketch_audit",     # D289 first slot
-            "partition_layout_advisor",        # D290 first slot
-            "graph_clustering_coefficient",    # D291 first slot
-            "search_query_likelihood",         # D292 first slot
-            "conformal_value_intervals",       # D293 first slot
-            "source_zipf_slope",               # D294 first slot
-            # round-12 additions
-            "text_tfidf_cosine_pairs_lsh",     # D295 — takes D226's slot
-            "graph_betweenness_sampled",       # D296 first slot
-            "correctness_trend_report",        # D298 first slot
-            "similarity_topk_mips",            # D300 first slot
-        ),
-    ),
-    # --- Round 13: graph_hits_bipartite (the r12 rotation seed) takes
-    # its first driver slot (VERDICT r12 task 3) alongside the three
-    # round-13 operators; four driver-r12 hash-green veterans hand
-    # back slots.
-    (
-        (
-            "events_max_drawdown",
-            "search_ndcg",
-            "events_conversion_lag",
-            "simpson_paradox_audit",
-        ),
-        (
-            "graph_hits_bipartite",            # D301 first slot
-            "bench_trend_report",              # D302 first slot
-            "pagerank_personalized_seeded",    # D303 first slot
-            "gdpr_delete_audit",               # D304 first slot
-        ),
-    ),
+
+def check_declared(declared: tuple[str, ...]) -> None:
+    """Raise unless every declared name is registered exactly once."""
+    dups = sorted({n for n in declared if declared.count(n) > 1})
+    unknown = [n for n in declared if n not in ALL_QUERIES]
+    if dups or unknown:
+        raise ValueError(
+            f"DECLARED lists duplicate names {dups} and unregistered names {unknown}"
+        )
+
+
+check_declared(DECLARED)
+assert len(DECLARED) <= MAX_DECLARED, (
+    f"{len(DECLARED)} declared queries exceed the driver's {MAX_DECLARED}-entry "
+    "correctness window"
 )
 
-# Round-5 rotation candidates (oracle-equipped extras that have not yet
-# held a driver slot): the TPC-H completion set (q2/q7/q8/q9/q11/q12/
-# q15/q16/q17/q19/q20/q21), lateral_recent_orders, profile_orders_columns,
-# chunk_documents, event_transition_matrix, temperature_sample_sources,
-# multimodal_header_probe, text_normalize_nfc, bpe_merge_pairs,
-# pack_contiguous, doc_feature_vectors, training_batches_bucketed,
-# contrastive_negative_samples, fuzzy_token_pairs_d2, mad_quantity_by_flag,
-# trend_revenue_by_nation, argmax_order_per_segment,
-# assemble_contrastive_pairs (flagship v3), abtest_conversion_z,
-# search_reciprocal_rank, search_recall_at_k, vocab_oov_rate,
-# zipf_coverage_curve, table_checksums, corpus_manifest,
-# events_pseudonymized, events_dau_wau, winsorize_quantity,
-# fulfillment_latency_histogram, bm25_stats (the integer
-# sufficient-statistics twin that makes BM25 rotation-eligible; only
-# the float ln() render bm25_search stays pytest-tolerance-only), and
-# the round-4 additions (all strict-EQUAL at sf0.01 AND sf0.1):
-# dedup_incremental_crawl (D145), dedup_duplicate_spans (D147),
-# dsir_bucket_stats + dsir_select_topk (D148), hard_negative_mining
-# (D150), events_context_pairs (D149), assemble_training_set_v4
-# (D152, flagship gen 4), corpus_drift_kl (D153),
-# multimodal_decode_roundtrip + multimodal_wav_roundtrip (D155/D156,
-# the real pixel/PCM decoder proofs).
-#
-# Round-7 rotation pool (added round 6, all strict-EQUAL at
-# sf0.001/0.01/0.1): dedup_embedding_clusters_lsh (D165, no-block-key
-# sign-LSH semantic dedup with the bit-replayed bucket codes),
-# search_hybrid_rrf (D167, integer-ranked BM25 + dense RRF fusion),
-# denoise_span_corruption_pairs (D168, T5-style span corruption),
-# source_token_allocation (D169, exact water-filling mixture budget),
-# source_overlap_matrix (D170, cross-source near-dup contamination
-# matrix), matryoshka_recall_curve (D171, MRL truncation quality),
-# events_ohlc_daily (D172, integer-cents OHLC bars),
-# ccnet_quality_buckets (D173, per-source LM-score terciles),
-# text_mojibake_audit (D174, encoding-artifact audit),
-# decontam_bloom_audit (D175, Bloom FP-mass audit),
-# sketch_hll_registers_exact (D176, exact-register HLL — round-7
-# LinearCounting fix applied + re-proven at three SFs),
-# dp_noisy_source_counts (D177, seeded Laplace mechanism demo),
-# plus the 8 round-6 deferrals listed in the round-6 wave comment
-# above (bm25_search stays pytest-tolerance-only).
-#
-# Round-7 additions (built round 7, strict-EQUAL at sf0.001/0.01/0.1):
-# assemble_training_set_v5 (D178, hygiene-gated flagship),
-# search_phrase_positions (D179, positional phrase search),
-# sketch_hll_rolling_7d (D180, register-merge rolling distinct),
-# events_attribution_position (D181, U-shaped multi-touch attribution),
-# embedding_label_centroids (D182, fixed-point exact centroids),
-# weighted_median_price (D183, exact grouped weighted median),
-# term_pmi_top (D184, df-pruned PMI collocations),
-# dedup_containment_pairs (D185, PPJoin-C directional containment),
-# abtest_value_welch (D186, Welch t on exact integer moments),
-# sketch_cms_registers_exact (D188, exact-register count-min sketch),
-# tokenizer_fertility_by_source (D189, per-source fertility audit) —
-# mutual_knn_pairs (D190, reciprocity-filtered kNN pairs),
-# basket_association_rules (D192, A-priori rules w/ exact lift),
-# embedding_jl_projection (D194, hash-exact JL projection),
-# events_cusum_changepoints (D195, CUSUM drift detector),
-# skyline_orders (D196, 2-D Pareto frontier),
-# text_trigram_backoff_score (D197, Stupid-Backoff trigram LM),
-# rfm_segmentation (D198, exact-quintile RFM lattice),
-# session_path_mining (D199, top-20 journey paths),
-# similarity_mmr_rerank (D201, MMR diverse top-k),
-# trend_mann_kendall (D202, MK trend + Sen slope),
-# benford_first_digit_audit (D203, Benford screen),
-# token_entropy_by_source (D204, Shannon diversity telemetry),
-# l_diversity_audit (D205, homogeneity-attack audit) —
-# D185/D186/D188-D190/D192/D194-D199/D201-D205 postdate the round-7
-# wave; they are
-# the round-8 rotation seed (D187 merge_hll_register_rollup and D191
-# merge_join_view are pytest-pinned streaming/sink classes;
-# multimodal_audio_logmel D193 is the rows-only FFT class, and
-# multimodal_phash_dedup D200 the rows-only DCT class).
-#
-# Round-9 additions (built round 9, strict-EQUAL at sf0.001/0.01/0.1,
-# both holding round-9 driver slots): dedup_embedding_clusters_lsh_auto
-# (D206, the data-dependent-width sign-LSH lever with the
-# prefix-consistent plane family and the masked full-width oracle) and
-# assemble_training_set_v6 (D207, governance-gated release flagship:
-# k-gate -> l-gate -> pseudonymized release -> DP noisy counts ->
-# checksummed manifest). Late round-9 additions (strict-EQUAL at three
-# SFs, SWEEP_r9-regenerated): dedup_snm_pairs (D209, sorted-
-# neighborhood candidates vs the exact quadratic oracle) and
-# dedup_canonical_map (D210, quality-argmax survivorship over the D27
-# clusters), events_markov_attribution (D211, removal-effect
-# attribution via the truncating absorption recurrence), and
-# text_winnow_pairs (D212, MOSS winnowing fingerprints with the df-16
-# stop-fingerprint gate), search_proximity (D213, NEAR/k), 
-# events_seasonal_baseline (D214, dow-profile decomposition), and
-# events_sequential_pairs (D215, gapped length-2 sequential patterns),
-# itemcf_topk (D216, co-purchase cosine kNN with whale cap + min
-# support), abtest_cuped_adjust (D217, CUPED variance reduction),
-# text_rake_keyphrases (D218, RAKE corpus keywording), and
-# embedding_top_pc (D219, exact-scatter power-iteration top PC)
-# — the round-10 rotation seed, together with the 21
-# round-9 rotated-out names (all driver-green through r8, re-verify on
-# demand); streaming twins (cusum_stream, D208) stay pytest-pinned.
-#
-# Round-11 rotation seed (round-10 additions, every one oracle-green
-# at sf0.001/0.01/0.1 and in SWEEP_r10, never yet a driver slot):
-# source_quality_drift (D220), lsh_width_ladder (D221),
-# text_longest_repeat (D222), events_bot_scores (D223),
-# events_hourly_acf (D224), vocab_gt_spectrum (D225),
-# text_tfidf_cosine_pairs (D226), fk_integrity_audit (D227),
-# text_rouge_adjacent (D228), events_concurrency_profile (D229),
-# abtest_bootstrap_ci (D230), stylometry_burrows_delta (D231),
-# events_holt_forecast (D232), graph_degree_assortativity (D233),
-# events_retention_hazard (D234), embedding_sq2_codebook (D235),
-# multimodal_audio_resample (D236), t_closeness_audit (D237),
-# events_lorenz_gini (D239), abc_classification_suppliers (D240),
-# corr_spearman_price_demand (D241), assemble_behavioral_dataset
-# (D242, the events-side release flagship),
-# contingency_chi_square (D243, r×c chi-square + Cramér's V over the
-# full grid including O=0 cells), psi_value_drift (D244, reference-
-# binned Population Stability Index with micro-ln terms),
-# graph_label_propagation (D245, 4-round synchronous LPA with the
-# pinned (count DESC, label ASC) argmax), mutual_information_source_
-# lang (D246, MI + NMI in micro-nats over observed cells),
-# text_readability_scores (D247, integer-milli Flesch/FKGL with the
-# vowel-group syllable proxy), embedding_hygiene_audit (D248, the
-# vector ingest gate: null/dim/NaN/zero/norm-outlier counters per
-# label with the x8 integer Tukey fence), events_shapley_attribution
-# (D249, exact 4-channel Shapley with x24 integer weights and the
-# pinned efficiency axiom), events_holt_winters (D250, additive
-# seasonal m=7 with the floor(x/4.0) recursion and the seasonal-list
-# recursive-CTE oracle), text_kn_bigram_score (D252, interpolated
-# Kneser-Ney with the x4 integer discount and continuation-count
-# interpolation), customer_brand_hhi (D253, per-customer Herfindahl
-# concentration with the pinned champion tie-break),
-# assemble_training_set_v7 (D254, the curriculum flagship: dedup ->
-# KN p90 gate -> FKGL staging, composing the registered D252/D247
-# queries as DataFrames), graph_kcore_membership (D255, bounded
-# 6-round k=3 peel with onion-layer rounds), source_template_prefixes
-# (D256, the 16-char boilerplate-header screen), vocab_growth_curve
-# (D257, Heaps-law V(n) with first-occurrence attribution),
-# source_dup_rates (D258, internal-vs-cross dup attribution per
-# source), events_max_drawdown (D259, running-peak drawdown over the
-# daily grid), search_ndcg (D260, exact nDCG@20 with the baked
-# integer discount table), events_conversion_lag (D262, cohort
-# signup->purchase lag quartiles), events_watermark_audit (D263,
-# ingest-lateness percentiles over the new global_prefix_max — the
-# measured withWatermark parameter), simpson_paradox_audit (D264,
-# the stratified-reversal confounding screen with exact
-# cross-multiplied directions), classifier_auc_activity (D265,
-# exact Mann-Whitney AUC with doubled tie-averaged ranks),
-# classifier_lift_deciles (D266, decile gains/lift with the pinned
-# tie-straddle split and distributed global rank), events_km_survival
-# (D267, Kaplan-Meier product-limit curve with the truncating ppm
-# product and ppb Greenwood accumulator), events_tail_index_hill
-# (D268, rank-extracted-k Hill estimator over micro-ln order
-# statistics), events_cross_correlation (D269, pairwise lead-lag
-# ccf over shared zero-filled day grids), search_rm3_expansion
-# (D270, Lavrenko-Croft relevance-model expansion terms with the
-# integer feedback ranking), forecast_backtest_mase (D271,
-# walk-forward MASE scoreboard composing the registered D232/D250
-# fits against the naive baselines); streaming twin
-# watermark_stream (D272, the live watermark-sizing monitor with
-# exact integer percentiles) stays pytest-pinned + soaked;
-# calibration_isotonic (D273, minimax-form PAVA with exact rational
-# renders) completes the model-eval trio; clustering_silhouette
-# (D274, the O(N*k) simplified silhouette over the nested Lloyd
-# sub-oracle) completes the clustering family; abtest_cmh_pooled
-# (D275, the Mantel-Haenszel pooled OR that FIXES what the Simpson
-# audit detects); ivf_nprobe_recall_curve (D276, the serving-side
-# recall/cost ladder off the shared deterministic IVF build);
-# join_size_preflight (D277, exact product-sum join cardinality +
-# champion-key skew share from per-key count tables);
-# events_burst_detection (D278, exact integer Viterbi burst episodes
-# with the backward-walking backtrack recursion); abtest_bh_fdr
-# (D279, step-up FDR over the per-type z panel with the pinned
-# A&S normal-tail polynomial); abtest_report_card (D280, the
-# family flagship joining BH + Simpson + CMH into one verdict
-# table); embedding_geometric_median (D281, Weiszfeld robust
-# centroid with scaled-integer weighted sums); streaming twin
-# burst_stream (D282, the causal forward-filter burst alarm with
-# frozen batch-fitted parameters) stays pytest-pinned + soaked;
-# text_keyness_g2 (D283, per-source Dunning G2 keyness via the
-# all-integer x*ln(x) expansion); text_textrank_summary (D284,
-# per-document sentence-centrality summarization with the integer
-# PageRank discipline);
-# streaming twin psi_stream (D261,
-# frozen-reference drift monitor) stays pytest-pinned;
-# streaming twin holt_winters_stream (D251,
-# the seasonal-ring-buffer state class) stays pytest-pinned + soaked.
-# streaming twin holt_stream (D238) stays pytest-pinned + soaked.
-#
-# Round-11 additions (strict-EQUAL at sf0.001/0.01/0.1, rotation-
-# eligible for round 12+): lsh_width_ladder_sampled (D285, the
-# sampled-truth width-ladder twin — exact candidate counts at full N,
-# recall estimated over the md5-pinned 25% vector sample; carries the
-# decade row the exact D221 deliberately lacks);
-# dedup_semantic_recall_cert (D286, the oracle-audited recall
-# certificate for the D206 auto-width config — honest certified=0 at
-# the fixture's near-orthogonal regime, planted pass-path fixture);
-# assemble_training_set_v8 (D287, the first cross-modality flagship:
-# text gates x D248 vector hygiene with per-gate drop attribution);
-# join_order_advisor (D288, exact left-deep order choice for the Q3
-# 3-way join from D277 count-table product-sums, prediction==actual
-# pinned); join_preflight_sketch_audit (D289, theta-intersection
-# common-key estimate pinned to the exact count inside the 2^14
-# exactness window); partition_layout_advisor (D290, exact logical
-# row-byte mass + 128 MiB partition sizing per fact table);
-# graph_clustering_coefficient (D291, per-node cc over the co-supply
-# graph on the compact-forward triangle operator);
-# search_query_likelihood (D292, Dirichlet QL retrieval — the
-# hash-matchable lexical ranker via integer ln arguments);
-# conformal_value_intervals (D293, split-conformal +/-qhat intervals
-# with the exact ceil(0.9(n+1)) rank and measured held-out coverage);
-# source_zipf_slope (D294, per-source Zipf-Mandelbrot exponent via
-# centered integer milli-ln OLS over the pinned top-64 ranks). Round-11 retunes: text_winnow_pairs (injective base-26
-# integer hash + frame-window selection, 8.1 -> 3.7 s at sf0.1) and
-# itemcf_topk (data-dependent whale cap = 4x exact p90 basket size).
-#
-# Round-12 rotation seed (wave 2 of the round-10 backlog burn —
-# VERDICT r10 task 1 planned two waves; round 11 took D220–D258):
-# events_max_drawdown (D259), search_ndcg (D260), events_conversion_lag
-# (D262), events_watermark_audit (D263), simpson_paradox_audit (D264),
-# classifier_auc_activity (D265), classifier_lift_deciles (D266),
-# events_km_survival (D267), events_tail_index_hill (D268),
-# events_cross_correlation (D269), search_rm3_expansion (D270),
-# forecast_backtest_mase (D271), calibration_isotonic (D273),
-# clustering_silhouette (D274), abtest_cmh_pooled (D275),
-# ivf_nprobe_recall_curve (D276), join_size_preflight (D277),
-# events_burst_detection (D278), abtest_bh_fdr (D279),
-# abtest_report_card (D280), embedding_geometric_median (D281),
-# text_keyness_g2 (D283), text_textrank_summary (D284) — 23 names,
-# plus any round-11 additions; streaming twins watermark_stream
-# (D272) and burst_stream (D282) stay pytest-pinned + soaked.
-#
-# Round-12 additions (strict-EQUAL at sf0.001/0.01/0.1, holding
-# round-12 driver slots on arrival): text_tfidf_cosine_pairs_lsh
-# (D295, the scale-safe TF-IDF cosine sibling — banded MinHash
-# candidates over the df-capped shingle space with single-sourced
-# mod-2^32 hash constants replayed bit-identically by the DuckDB twin;
-# takes D226's driver slot per VERDICT r11 task 4). Round-12 re-pins:
-# lsh_width_ladder_sampled (D285) moved from the fixed 25% md5 sample
-# to the D286 auto-rate threshold (~2048 truth vectors at any N,
-# saturation ⇒ full corpus — VERDICT r11 task 3 + ADVICE r11), and
-# dedup_semantic_recall_cert (D286) derives nb by pure integer
-# bit-length on both engines. After the round-12 wave the
-# never-driver-checked backlog is EMPTY: every oracle-equipped query
-# has held a driver slot at least once.
-#
-# Further round-12 additions (strict-EQUAL at 3 SFs, driver slots on
-# arrival): graph_betweenness_sampled (D296, exact-integer sampled-pair
-# Brandes numerators over simultaneous level-synchronous BFS frontiers
-# — the bridge-centrality member of the graph family) and
-# correctness_trend_report (D298, the engine dogfooding its own
-# CORRECTNESS_r*.json round ledger: wholetext map-JSON ingestion vs
-# DuckDB json_keys walk, first-timer attribution + cumulative
-# coverage). Streaming twin conformal_stream (D297, frozen-parameter
-# conformal-coverage monitor over D293's fit) stays pytest-pinned +
-# soaked. The ann_ingest_stream IVF sink is batch-id-scoped as of
-# round 12 (VERDICT r11 task 2) with read_ivf_tree/ivf_tree_compact
-# as the read/serving path, proven by scripts/ann_kill_matrix.py.
-#
-# Late round-12 additions (strict-EQUAL at 3 SFs): similarity_topk_mips
-# (D300, exact MIPS top-k with the norm-octave Cauchy-Schwarz pruning
-# certificate — pilot k-th from the md5 auto-rate sample, lossless by
-# the subset argument; takes the 50th driver slot) and
-# graph_hits_bipartite (D301, 4-round max-milli-normalized HITS over
-# the Jan-1995 customer→supplier graph — round-13 rotation seed, no
-# slot left this round). merge_join_view_delta/read_join_view_delta
-# (D299) extend D191's IVM with counting-algebra deletes —
-# pytest-pinned sink class.
-#
-# Round-6 rotation pool (added round 5, strict-EQUAL at sf0.001/0.01/
-# 0.1): multimodal_png_roundtrip (D157, the real deflate+filters PNG
-# decoder proof), dedup_exact_substrings (D158, Lee-et-al exact-
-# substring removal), similarity_topk_ivfpq (D159, the composed
-# IVF->PQ serving path), events_twap_daily (D160, time-weighted
-# average), similarity_topk_sq8 (D161, int8 search scan),
-# train_test_split_leakage_safe (D162, cluster-keyed split),
-# doc_novelty_scores (D163, per-doc novelty). plus the rest of the never-checked backlog the
-# round-5 wave didn't fit (bm25_search stays pytest-tolerance-only).
-#
-# Round-13 additions (strict-EQUAL at 3 SFs): bench_trend_report (D302,
-# probe-normalized cross-round BENCH ledger — VERDICT r12 task 6),
-# pagerank_personalized_seeded (D303, seeded-teleport PageRank with the
-# sparse frontier carry), gdpr_delete_audit (D304, right-to-erasure
-# cascade enumeration with XOR-fold proofs; write side pinned e2e over
-# apply_changelog + D299 deltas in tests/test_round13_ops.py). The
-# round-13 wave below rotates in graph_hits_bipartite (the r12 seed)
-# plus these three; multi-green veterans hand back slots. Late
-# round-13 additions (strict-EQUAL at 3 SFs, round-14 rotation
-# seeds): lsh_param_planner (D307, exact-integer S-curve (b, r)
-# advisor) and assemble_preference_pairs (D308, mirrored-extremes
-# DPO pair assembly). erase_ids_from_tree (D306) is sink-class,
-# pytest-pinned beside D299/D305.
-
-for _out, _in in _ROTATION_WAVES:
-    for _name in _out:
-        EXTRA_QUERIES[_name] = QUERIES.pop(_name)
-        if _name in ORACLES:
-            EXTRA_ORACLES[_name] = ORACLES.pop(_name)
-    for _name in _in:
-        QUERIES[_name] = EXTRA_QUERIES.pop(_name)
-        if _name in EXTRA_ORACLES:
-            ORACLES[_name] = EXTRA_ORACLES.pop(_name)
-
-assert len(QUERIES) <= MAX_DECLARED, (
-    f"{len(QUERIES)} declared queries exceed the driver's {MAX_DECLARED}-entry "
-    "correctness window — move a near-duplicate variant to extra_query"
-)
-
-# Rotation-proof lookup (tests/tools must never depend on which side of
-# the wave table a query currently sits): the union view of both maps.
-ALL_QUERIES: dict[str, QueryFn] = {**QUERIES, **EXTRA_QUERIES}
-ALL_ORACLES: dict[str, str] = {**ORACLES, **EXTRA_ORACLES}
+# __spark_entry__ serves QUERIES/ORACLES to the driver; EXTRA_* hold the rest.
+QUERIES: dict[str, QueryFn] = {n: ALL_QUERIES[n] for n in DECLARED}
+ORACLES: dict[str, str] = {n: ALL_ORACLES[n] for n in DECLARED if n in ALL_ORACLES}
+EXTRA_QUERIES: dict[str, QueryFn] = {
+    n: f for n, f in ALL_QUERIES.items() if n not in QUERIES
+}
+EXTRA_ORACLES: dict[str, str] = {
+    n: sql for n, sql in ALL_ORACLES.items() if n not in QUERIES
+}

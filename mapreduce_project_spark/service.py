@@ -51,13 +51,12 @@ def serve(port: int = 0, state_dir: str = DEFAULT_STATE_DIR) -> None:
     """Run the service in-process (the `start` subcommand spawns this in
     a background child). Builds the SparkSession BEFORE advertising the
     port, so a successful `start` means the engine is actually warm."""
-    from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES as registry
     from mapreduce_project_spark.session import get_spark
 
     os.makedirs(state_dir, exist_ok=True)
     pid_file, port_file, _ = _paths(state_dir)
     spark = get_spark("service")
-    registry = {**QUERIES, **EXTRA_QUERIES}
     t0 = time.monotonic()
 
     class Handler(socketserver.StreamRequestHandler):

@@ -30,16 +30,10 @@ def main() -> None:
         reps = int(args[1])
         args = args[2:]
     names = args
-    import __spark_entry__ as entrymod
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES as qmap
     from mapreduce_project_spark.session import get_spark
 
     spark = get_spark("bench_reps")
-    qmap = dict(entrymod.queries())
-    from mapreduce_project_spark import queries_registry as reg
-
-    for n in names:
-        if n not in qmap and n in reg.EXTRA_QUERIES:
-            qmap[n] = lambda s, d, _f=reg.EXTRA_QUERIES[n]: _f(s, d)
 
     # short warmup (mirrors bench.py's intent, abbreviated)
     spark.range(100000).selectExpr("sum(id)", "count(distinct id)").collect()

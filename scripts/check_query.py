@@ -32,8 +32,8 @@ def main() -> int:
         return 2
     spark = get_spark("check-query")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = {**R.QUERIES, **R.EXTRA_QUERIES}
-    oracles = {**R.ORACLES, **R.EXTRA_ORACLES}
+    queries = R.ALL_QUERIES
+    oracles = R.ALL_ORACLES
     bad = 0
     for name in names:
         if name not in queries:

@@ -132,9 +132,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 def main() -> None:
     from mapreduce_project_spark.plans.inspect import formatted_plan
-    from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES as _Q
-
-    QUERIES = {**_Q, **EXTRA_QUERIES}
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES as QUERIES
     from mapreduce_project_spark.session import get_spark
 
     spark = get_spark("dump_plans")

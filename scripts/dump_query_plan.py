@@ -30,7 +30,7 @@ def main() -> int:
 
     spark = get_spark("dump-query-plan")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = {**R.QUERIES, **R.EXTRA_QUERIES}
+    queries = R.ALL_QUERIES
     os.makedirs(OUT_DIR, exist_ok=True)
     for name in names:
         if name not in queries:

@@ -5,6 +5,9 @@ scheduler-tick evidence for job-count-bound queries on high-tick hosts
 inside a job group and reports len(getJobIdsForGroup).
 
 Usage: python scripts/job_count.py name [name ...]
+
+Exits non-zero, naming them, if any name is not a registered query.
+The names are checked before Spark starts, not mid-run.
 """
 
 from __future__ import annotations
@@ -20,17 +23,19 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    import __spark_entry__ as entrymod
-    from mapreduce_project_spark import queries_registry as reg
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES as qmap
+
+    names = sys.argv[1:]
+    unknown = [n for n in names if n not in qmap]
+    if unknown:
+        sys.exit(f"job_count: unknown query names: {', '.join(unknown)}")
+
     from mapreduce_project_spark.session import get_spark
 
     spark = get_spark("job_count")
     spark.sparkContext.setLogLevel("ERROR")
-    qmap = dict(entrymod.queries())
-    for n, f in reg.EXTRA_QUERIES.items():
-        qmap.setdefault(n, f)
     out = {}
-    for name in sys.argv[1:]:
+    for name in names:
         spark.catalog.clearCache()
         sc = spark.sparkContext
         sc.setJobGroup(name, name)

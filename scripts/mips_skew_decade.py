@@ -38,9 +38,6 @@ def loadavg() -> float:
 def main() -> int:
     from pyspark.sql import functions as F
 
-    # registry first: importing a plans module directly would run the
-    # registry's rotation waves before every module has registered
-    import mapreduce_project_spark.queries_registry  # noqa: F401
     from mapreduce_project_spark.plans.similarity_queries import (
         mips_topk_certified,
     )

@@ -547,10 +547,9 @@ def render_rows(results: dict[str, dict[str, float]]) -> list[str]:
 
 
 def main() -> None:
-    from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES as DQ
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES as registry
     from mapreduce_project_spark.session import get_spark
 
-    registry = {**DQ, **EXTRA_QUERIES}
     spark = get_spark("scaling")
     spark.sparkContext.setLogLevel("ERROR")
     # generic warmup

@@ -42,8 +42,8 @@ def main() -> int:
             f"CREATE VIEW {name} AS SELECT * FROM "
             f"read_parquet('{SF_DIR}/{name}.parquet')"
         )
-    queries = {**R.QUERIES, **R.EXTRA_QUERIES}
-    oracles = {**R.ORACLES, **R.EXTRA_ORACLES}
+    queries = R.ALL_QUERIES
+    oracles = R.ALL_ORACLES
     names = sorted(n for n in queries if n in oracles)
     lo = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     hi = int(sys.argv[2]) if len(sys.argv) > 2 else len(names)

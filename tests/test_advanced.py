@@ -9,15 +9,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.join import asof_join
 from mapreduce_project_spark.operators.similarity import topk_bruteforce, topk_ivf
-from mapreduce_project_spark.queries_registry import (
-    EXTRA_ORACLES,
-    EXTRA_QUERIES,
-    ORACLES,
-    QUERIES,
-)
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
-ALL_ORACLES = {**ORACLES, **EXTRA_ORACLES}
+from mapreduce_project_spark.queries_registry import ALL_ORACLES, ALL_QUERIES
 from mapreduce_project_spark.sources import load_table
 from tests.conftest import SF_DIR, assert_matches_oracle
 
@@ -111,8 +103,6 @@ def test_multilevel_aggs_match_oracle(spark, duck):
 
 
 def test_setops_and_joins_match_oracle(spark, duck):
-    # look up through the merged inventory: slot rotation moves names
-    # between QUERIES and EXTRA_QUERIES round to round
     for name in (
         "intersect_nation_keys",
         "except_order_keys",

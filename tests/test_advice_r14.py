@@ -74,7 +74,7 @@ def test_bench_trend_ignores_planted_duplicate(spark):
 def _final_plan(spark, name, sf_dir="/root/testdata/sf0.001"):
     from mapreduce_project_spark import queries_registry as R
 
-    df = {**R.QUERIES, **R.EXTRA_QUERIES}[name](spark, sf_dir)
+    df = R.ALL_QUERIES[name](spark, sf_dir)
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )

@@ -12,9 +12,7 @@ from mapreduce_project_spark.plans.inspect import (
     pushed_filters,
     read_schemas,
 )
-from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES as _DECLARED
-
-QUERIES = {**_DECLARED, **EXTRA_QUERIES}
+from mapreduce_project_spark.queries_registry import ALL_QUERIES as QUERIES, DECLARED
 from tests.conftest import SF_DIR
 
 
@@ -226,7 +224,7 @@ def test_interval_join_is_equi_bucketized(spark):
 import pytest as _pytest
 
 
-@_pytest.mark.parametrize("qname", sorted(_DECLARED))
+@_pytest.mark.parametrize("qname", sorted(DECLARED))
 def test_no_declared_query_plans_cartesian(spark, qname):
     # blanket scale guard: a CartesianProduct (non-broadcast physical
     # cross join) in any declared query is always a bug at 100 TB —

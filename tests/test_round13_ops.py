@@ -471,13 +471,11 @@ def test_lsh_param_planner_matches_pure_python_fold(spark):
     # replay the exact truncating-ppm folds in python for the whole
     # lattice and pin the query's top-10 (twin-wrong protection: both
     # engines share the SQL shape, this does not)
-    # registry first: a direct plans import would run the rotation
-    # waves before every module has registered
-    from mapreduce_project_spark.queries_registry import ALL_QUERIES
     from mapreduce_project_spark.plans.similarity_queries import (
         _LSHP_THRESH_PCT,
         _lshp_pairs,
     )
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES
 
     def cost(b, r):
         fp = fn = 0

@@ -11,22 +11,25 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import sys
+
+import pytest
 
 
-def _load_scaling_curve():
+def _load_script(name):
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "scripts",
-        "scaling_curve.py",
+        f"{name}.py",
     )
-    spec = importlib.util.spec_from_file_location("scaling_curve", path)
+    spec = importlib.util.spec_from_file_location(name, path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
 def test_render_rows_survives_missing_sf1_measurements():
-    sc = _load_scaling_curve()
+    sc = _load_script("scaling_curve")
     # measurements exist for the regular QUERIES only — exactly the
     # state after a no-.sf1 run; SF1-only names have NO results entry
     results = {
@@ -45,7 +48,7 @@ def test_render_rows_survives_missing_sf1_measurements():
 
 
 def test_render_rows_full_results_unchanged():
-    sc = _load_scaling_curve()
+    sc = _load_script("scaling_curve")
     results = {
         name: {"0.001": 0.1, "0.01": 0.2, "0.1": 1.0}
         for name in set(sc.QUERIES) | set(sc.SF1_QUERIES)
@@ -55,3 +58,23 @@ def test_render_rows_full_results_unchanged():
     rows = sc.render_rows(results)
     (row,) = [r for r in rows if f"| {sc.SF1_QUERIES[0]} |" in r]
     assert "8.0" in row and "8.00×" in row
+
+
+def test_job_count_rejects_unknown_names_before_starting_spark(monkeypatch):
+    # an unknown name used to raise a bare KeyError mid-loop and
+    # throw away every count already taken
+    from mapreduce_project_spark import session
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("Spark started before the names were checked")
+
+    jc = _load_script("job_count")
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(
+        sys, "argv", ["job_count.py", "word_count", "no_such_query", "nor_this"]
+    )
+    with pytest.raises(SystemExit) as exc:
+        jc.main()
+    assert exc.value.code != 0
+    assert "no_such_query, nor_this" in str(exc.value.code)
+    assert "word_count" not in str(exc.value.code)

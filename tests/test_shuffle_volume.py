@@ -27,7 +27,7 @@ SF01 = "/root/testdata/sf0.01"
 def _registry():
     from mapreduce_project_spark import queries_registry as R
 
-    return {**R.QUERIES, **R.EXTRA_QUERIES}
+    return R.ALL_QUERIES
 
 
 def shuffle_write_bytes(spark, df) -> int:

@@ -154,10 +154,9 @@ def test_knn_join_ann_recall_vs_exact_graph(spark):
 
 
 def test_int8_quantization_reconstruction_bound(spark):
-    from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES
 
-    # merged lookup: slot rotation moves names between the registries
-    out = {**QUERIES, **EXTRA_QUERIES}["embedding_quantize_int8"](spark, SF_DIR)
+    out = ALL_QUERIES["embedding_quantize_int8"](spark, SF_DIR)
     emb = {
         r["vec_id"]: r["embedding"]
         for r in load_table(spark, SF_DIR, "embeddings").collect()

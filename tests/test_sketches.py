@@ -8,12 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES
+from mapreduce_project_spark.queries_registry import ALL_QUERIES as ALL
 from mapreduce_project_spark.sources import load_table
 from tests.conftest import SF_DIR
-
-# merged lookup: slot rotation moves names between registries
-ALL = {**QUERIES, **EXTRA_QUERIES}
 
 
 def test_hll_within_error_envelope_and_union_consistent(spark):

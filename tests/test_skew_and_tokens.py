@@ -234,18 +234,17 @@ def test_compression_ratio_signal_direction(spark):
 
 
 def test_bm25_scores_are_pure_function_of_integer_stats(spark):
-    # the split that makes BM25 driver-rotation-eligible: `bm25_stats`
-    # carries the hash-matchable BIGINT sufficient statistics, and the
+    # the split that makes BM25 hash-checkable: `bm25_stats` carries
+    # the hash-matchable BIGINT sufficient statistics, and the
     # rendered `bm25_search` scores must be recomputable from those
     # stats alone (k1=1.2, b=0.75) — so the only non-hashable part of
     # the operator is libm ln() on already-verified integers
     import math
 
-    from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES
     from tests.conftest import SF_DIR
 
-    reg = {**QUERIES, **EXTRA_QUERIES}
-    stats = reg["bm25_stats"](spark, SF_DIR).collect()
+    stats = ALL_QUERIES["bm25_stats"](spark, SF_DIR).collect()
     assert stats
     per_doc: dict[int, float] = {}
     for r in stats:
@@ -256,7 +255,7 @@ def test_bm25_scores_are_pure_function_of_integer_stats(spark):
     want = sorted(per_doc.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
     got = [
         (r["doc_id"], r["score"])
-        for r in reg["bm25_search"](spark, SF_DIR).collect()
+        for r in ALL_QUERIES["bm25_search"](spark, SF_DIR).collect()
     ]
     assert [g[0] for g in got] == [w[0] for w in want]
     for (gid, gs), (wid, ws) in zip(got, want):

@@ -423,13 +423,7 @@ def test_streaming_transitions_match_batch_across_batches(spark, tmp_path):
     # file per micro-batch: transitions that straddle batch boundaries
     # exist only if the operator's state carries each user's last event
     # — the total pair multiset must equal the batch lead() answer
-    from mapreduce_project_spark.queries_registry import (
-        EXTRA_QUERIES,
-        QUERIES as _DECLARED,
-    )
-
-    # rotation-proof lookup: a query may hold a driver slot this round
-    ALL_QUERIES = {**_DECLARED, **EXTRA_QUERIES}
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES
     from mapreduce_project_spark.streaming.events import transition_stream
 
     ev = load_table(spark, SF_DIR, "events")
@@ -886,10 +880,7 @@ def test_streaming_twap_matches_batch(spark, tmp_path):
     # the LOCF integral must carry (last_us, last_cents, wsum) across
     # micro-batch boundaries: 3 time-sliced batches through twap_stream,
     # final generation per (user, day) == the batch events_twap_daily
-    from mapreduce_project_spark.queries_registry import (
-        EXTRA_QUERIES,
-        QUERIES as _DECLARED,
-    )
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES
     from mapreduce_project_spark.streaming.events import twap_stream
 
     ev = load_table(spark, SF_DIR, "events").select(
@@ -937,9 +928,7 @@ def test_streaming_twap_matches_batch(spark, tmp_path):
     }
     want = {
         (r["user_id"], r["day"]): (r["n_samples"], r["span_us"], r["twap"])
-        for r in {**_DECLARED, **EXTRA_QUERIES}["events_twap_daily"](
-            spark, SF_DIR
-        ).collect()
+        for r in ALL_QUERIES["events_twap_daily"](spark, SF_DIR).collect()
     }
     assert got == want and got
 

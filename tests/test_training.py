@@ -406,7 +406,6 @@ def test_leakage_safe_split_never_straddles_clusters(spark):
 
     from mapreduce_project_spark.operators.dedup import dedup_clusters
     from mapreduce_project_spark.operators.sampling import hash_split
-    from mapreduce_project_spark.queries_registry import EXTRA_QUERIES, QUERIES
 
     def bucket(i):
         return hashlib.md5(str(i).encode()).hexdigest()[:8] < "20000000"
