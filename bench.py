@@ -58,6 +58,7 @@ PANEL = [
 
 def main() -> None:
     import __spark_entry__ as entrymod
+    from mapreduce_project_spark.plans.inspect import run_noop
     from mapreduce_project_spark.session import get_spark
 
     from pyspark.sql import functions as F
@@ -207,8 +208,7 @@ def main() -> None:
 
     first = sorted(to_time)[0]
     try:
-        spark.catalog.clearCache()
-        to_time[first](spark, SF_DIR).write.mode("overwrite").format("noop").save()
+        run_noop(lambda: to_time[first](spark, SF_DIR))
     except Exception:  # noqa: BLE001 - the timed loop will record it
         pass
 
@@ -235,16 +235,12 @@ def main() -> None:
         for rep_i in range(reps):
             if rep_i > 0 and time.perf_counter() - bench_t0 > budget_s:
                 break
-            # each execution is timed standalone: drop any DataFrame
-            # caches a previous run persisted (the dedup pipelines cache
+            # each execution is timed standalone: run_noop drops the
+            # DataFrame caches a run persisted (the dedup pipelines cache
             # their signature/sketch tables), so no run pays GC/eviction
             # pressure for another's leftovers
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
             try:
-                df = to_time[name](spark, SF_DIR)
-                df.write.mode("overwrite").format("noop").save()
-                dt = time.perf_counter() - t0
+                dt = run_noop(lambda: to_time[name](spark, SF_DIR))["sec"]
                 best = dt if best is None else min(best, dt)
             except Exception as exc:  # noqa: BLE001 - record and continue
                 err = f"{type(exc).__name__}: {exc}"[:200]

@@ -214,9 +214,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             # the plan-review loop (PLANS.md / tests/test_plans.py) as a
             # one-liner: inspect pushdown/broadcast/agg shapes without
             # running the query
-            print(df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            ))
+            from mapreduce_project_spark.plans.inspect import formatted_plan
+
+            print(formatted_plan(df))
             return 0
         if args.output:
             df.write.mode("overwrite").parquet(args.output)

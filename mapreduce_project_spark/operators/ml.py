@@ -28,7 +28,7 @@ schedule (same as Spark MLlib's own batch LBFGS/GD loop).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -109,10 +109,3 @@ def linear_predict_fixed(
 
 
 __all__ = ["linear_gd_fixed", "linear_predict_fixed"]
-
-
-def _self_test(spark: SparkSession) -> None:  # pragma: no cover
-    df = spark.range(100).select(
-        F.lit(1).alias("b"), F.col("id").alias("x"), (F.col("id") * 3).alias("y")
-    )
-    linear_gd_fixed(df, ["b", "x"], "y", n_iter=2).show()

@@ -61,32 +61,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """`dot` unrolled for a known dimension: the same left-fold sum
-    ``((0.0 + x0*y0) + x1*y1) + ...`` as a plain expression tree, which
-    whole-stage codegen compiles — bit-identical to the `F.aggregate`
-    fold (``0.0 + x == x`` exactly) but without per-element interpreted
-    lambda dispatch. Use when the embedding dimension is known (the
-    common case); `dot` remains for dynamic dims."""
-    expr = F.lit(0.0)
-    for i in range(dim):
-        expr = expr + a.getItem(i) * b.getItem(i)
-    return expr
-
-
-def norm_fixed(a: Column, dim: int) -> Column:
-    """`norm` unrolled for a known dimension (see `dot_fixed`)."""
-    expr = F.lit(0.0)
-    for i in range(dim):
-        expr = expr + a.getItem(i) * a.getItem(i)
-    return F.sqrt(expr)
-
-
-def cosine_fixed(a: Column, b: Column, dim: int) -> Column:
-    """`cosine` unrolled for a known dimension — bit-identical."""
-    return dot_fixed(a, b, dim) / (norm_fixed(a, dim) * norm_fixed(b, dim))
-
-
 def cosine_pandas(a: Column, b: Column) -> Column:
     """Arrow-vectorized cosine via a pandas UDF (numpy batch math).
 
@@ -117,14 +91,13 @@ def cosine_pandas(a: Column, b: Column) -> Column:
 
 
 def _dot_norm(dim: int | None):
-    """MEASURED (sf0.1, local[32], warm): the `dot_fixed` unrolled
-    expression tree is ~2x SLOWER than the `F.aggregate` fold (3.25 s vs
-    1.51 s for brute-force top-k) — both run interpreted (HOFs and
-    oversized expression trees alike fall out of whole-stage codegen),
-    and the fold's single pass over the array beats 64 independent
-    `getItem` probes. The fold is therefore the hot path regardless of
-    whether dim is known; the unrolled forms remain for plan-shape
-    experiments. Both are bit-identical, so oracles are unaffected."""
+    """MEASURED (sf0.1, local[32], warm): a dot product unrolled for a
+    known dim (``((0.0 + x0*y0) + x1*y1) + ...``, bit-identical) is ~2x
+    SLOWER than the `F.aggregate` fold (3.25 s vs 1.51 s for brute-force
+    top-k) — both run interpreted (HOFs and oversized expression trees
+    alike fall out of whole-stage codegen), and the fold's single pass
+    over the array beats 64 independent `getItem` probes. The fold is
+    therefore the hot path regardless of whether dim is known."""
     return dot, norm
 
 
@@ -845,44 +818,6 @@ def knn_join_ann(
 def sq_dist(a: Column, b: Column) -> Column:
     """Deterministic squared euclidean distance of two double arrays."""
     return fold_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
-
-
-def sq_dist_fixed(a: Column, b: Column, dim: int) -> Column:
-    """`sq_dist` unrolled for a known dimension (see `dot_fixed`) —
-    bit-identical left-fold order, codegen-friendly."""
-    expr = F.lit(0.0)
-    for i in range(dim):
-        d = a.getItem(i) - b.getItem(i)
-        expr = expr + d * d
-    return expr
-
-
-def ivf_assign(
-    df: DataFrame, centroids: list[list[float]], id_col: str = "id", vec_col: str = "v"
-) -> DataFrame:
-    """Assign each vector to its nearest centroid: (id, v, cid).
-
-    The quantizer is small by construction, so it is inlined as literal
-    arrays and the argmin is ``array_min`` over (dist, cid) structs —
-    a **pure projection**: zero shuffle, O(k) distance folds per row,
-    fully pipelined with the scan. Ties take the lowest cid
-    (lexicographic struct order) — deterministic. At 100 TB the IVF
-    build cost is exactly this one map-side pass over the corpus."""
-    v = F.col(vec_col)
-    dcs = F.array(
-        *[
-            F.struct(
-                sq_dist(v, F.array(*[F.lit(float(x)) for x in cv])).alias("d"),
-                F.lit(i).alias("cid"),
-            )
-            for i, cv in enumerate(centroids)
-        ]
-    )
-    return df.select(
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-        F.array_min(dcs).getField("cid").alias("cid"),
-    )
 
 
 def _nearest_cid(v: Column) -> Column:

@@ -11,8 +11,10 @@ regressions here are correctness-of-scale bugs.
 from __future__ import annotations
 
 import re
+import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -51,38 +53,45 @@ def count_node(df: DataFrame, node: str) -> int:
     return len(re.findall(rf"\(\d+\) {re.escape(node)}", formatted_plan(df)))
 
 
-def run_with_shuffle_metrics(df: DataFrame) -> dict[str, int]:
-    """Execute ``df`` to a noop sink inside a fresh job group and return
-    the engine's own byte-level task metrics summed over exactly that
-    run's stages: ``{"shuffle_write_bytes", "shuffle_read_bytes",
-    "input_bytes", "n_stages"}``.
+def run_noop(build: Callable[[], DataFrame]) -> dict:
+    """Build a query with ``build()``, run it to the noop sink, and
+    return what it cost: ``{"sec", "jobs", "n_stages",
+    "shuffle_write_bytes", "shuffle_read_bytes", "input_bytes"}``.
 
-    This is the measurement half of the explain-and-iterate loop: plan
-    SHAPE says a narrow shuffle exists, this says how many bytes it
-    actually moved (the number the Spark UI shows, read from
-    `AppStatusStore` so it works with the UI disabled).
-    `tests/test_shuffle_volume.py` pins the engine's narrow-shuffle
-    claims with it; `plans/skew diagnostics` complement it per key.
+    The one run core every timing tool shares (bench, job counts,
+    scaling curve, shuffle-volume pins). One job group opens BEFORE the
+    build, so jobs a builder launches itself (an eager
+    ``localCheckpoint``) are counted and timed with the query. Byte
+    totals are the engine's own per-stage task metrics over exactly
+    that group's stages (the numbers the Spark UI shows, read from
+    ``AppStatusStore`` so they work with the UI disabled). The cache is
+    cleared afterwards, so no run pays for another's leftovers.
     """
     import uuid
 
-    spark = df.sparkSession
+    spark = SparkSession.active()
     sc = spark.sparkContext
-    group = f"shufmetrics-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "run_with_shuffle_metrics")
+    group = f"run-noop-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "run_noop")
     try:
-        df.write.format("noop").mode("overwrite").save()
+        t0 = time.perf_counter()
+        build().write.format("noop").mode("overwrite").save()
+        sec = time.perf_counter() - t0
     finally:
-        sc.setJobGroup("shufmetrics-idle", "idle")
+        sc._jsc.clearJobGroup()  # type: ignore[attr-defined]
+        spark.catalog.clearCache()
+    jsc = sc._jsc.sc()  # type: ignore[attr-defined]
+    jsc.listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
     tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
     stage_ids: set[int] = set()
-    for jid in tracker.getJobIdsForGroup(group):
+    for jid in jobs:
         info = tracker.getJobInfo(jid)
         if info is not None:
             stage_ids.update(info.stageIds)
-    store = sc._jsc.sc().statusStore()  # type: ignore[attr-defined]
-    out = {"shuffle_write_bytes": 0, "shuffle_read_bytes": 0, "input_bytes": 0,
-           "n_stages": 0}
+    store = jsc.statusStore()
+    out = {"sec": round(sec, 3), "jobs": len(jobs), "n_stages": 0,
+           "shuffle_write_bytes": 0, "shuffle_read_bytes": 0, "input_bytes": 0}
     for sid in stage_ids:
         try:
             sd = store.lastStageAttempt(sid)

@@ -345,11 +345,6 @@ def q_source_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from mapreduce_project_spark.plans.text_queries import _LANG_CASE, _TOKS  # noqa: E402
 
-_GRAMS3 = (
-    "list_distinct(list_transform(generate_series(1, len(toks) - 2), "
-    "i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))"
-)
-
 # The assembly pipeline decontaminates on 5-grams, not 3-grams: short
 # shingles over-fire on template-generated corpora (at every fixture
 # scale EVERY train doc shares some 3-gram with the held-out split, so
@@ -1613,9 +1608,6 @@ def q_assemble_training_set_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("segment")
     )
-
-
-_V5_ORACLE = None  # assembled below from text_queries' pattern constants
 
 
 def _build_v5_oracle() -> str:

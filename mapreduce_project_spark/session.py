@@ -19,36 +19,46 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Runtime-settable SQL confs every session gets: `get_spark` builds with
+# them and `prep_session` re-applies them to a session handed in by the
+# driver. UTC pinning keeps timestamp semantics identical to the DuckDB
+# oracle (whose timestamps are UTC-naive); the rest are idempotent
+# performance knobs.
+RUNTIME_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    # size post-shuffle partitions by bytes (advisory 64 MB), not by
+    # the local parallelism floor: tiny shuffles collapse to 1 task
+    # instead of 32 near-empty ones, and at 100 TB the byte target —
+    # not a per-job floor — is what keeps reducers memory-safe
+    ("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    # tz-naive parquet timestamps read as plain TIMESTAMP (UTC session
+    # tz makes the values identical); NTZ would break epoch math like
+    # unix_millis and diverge from the DuckDB oracle's naive reading.
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+)
+
+
 def get_spark(app_name: str = "mapreduce_project_spark") -> SparkSession:
     """Build (or fetch) a local SparkSession tuned for this engine.
 
     On a real cluster, drop ``master`` and let spark-submit decide; every
     config below except the local driver memory applies unchanged.
 
-    ``SPARK_GRAFT_CPUS`` is read here at call time (not at import) so
-    both local[N] and the shuffle-partition count always agree, even
-    when the env var is set after this module is imported (as the test
-    fixtures do).
+    ``SPARK_GRAFT_CPUS`` (default: the CPUs this process may run on) is
+    read here at call time (not at import) so both local[N] and the
+    shuffle-partition count always agree, even when the env var is set
+    after this module is imported.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # size post-shuffle partitions by bytes (advisory 64 MB), not by
-        # the local parallelism floor: tiny shuffles collapse to 1 task
-        # instead of 32 near-empty ones, and at 100 TB the byte target —
-        # not a per-job floor — is what keeps reducers memory-safe
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # tz-naive parquet timestamps read as plain TIMESTAMP (UTC session
-        # tz makes the values identical); NTZ would break epoch math like
-        # unix_millis and diverge from the DuckDB oracle's naive reading.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=dict(RUNTIME_CONFS))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
@@ -87,22 +97,12 @@ def job_status(spark: SparkSession) -> dict:
 
 
 def prep_session(spark: SparkSession) -> SparkSession:
-    """Normalize runtime-settable conf on an externally-provided session.
+    """Re-apply ``RUNTIME_CONFS`` to an externally-provided session.
 
     The driver hands us its own SparkSession for ``entry``/``queries``;
-    only runtime-mutable confs may be touched here. UTC pinning keeps
-    timestamp semantics identical to the DuckDB oracle (whose timestamps
-    are UTC-naive); AQE/arrow settings are idempotent performance knobs.
+    only runtime-mutable confs may be touched here.
     """
-    for key, val in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ):
+    for key, val in RUNTIME_CONFS:
         try:
             spark.conf.set(key, val)
         except Exception:  # pragma: no cover - conf may be static in some harnesses

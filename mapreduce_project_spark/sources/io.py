@@ -181,29 +181,6 @@ def write_csv(
     df.write.mode(mode).option("header", header).option("sep", sep).csv(path)
 
 
-def read_orc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """ORC source — the second columnar format a reference user's HDFS
-    estate commonly holds (A19 widening: `map_reduce.py`'s data path is
-    format-agnostic `hdfs dfs` bytes; here each format is a real typed
-    reader). Same pushdown/pruning properties as parquet: predicate
-    pushdown and column pruning reach the ORC stripe reader."""
-    return spark.read.orc(paths)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink (interop with Hive-side consumers; parquet is the
-    engine-native sink)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def read_xml(spark: SparkSession, paths: str | list[str], row_tag: str = "row") -> DataFrame:
     """XML source (Spark 4 native, SPARK-44265) — the config/feed
     format legacy HDFS estates hold beside CSV/JSON (A19 widening).

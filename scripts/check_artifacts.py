@@ -229,8 +229,8 @@ def main() -> int:
         print(f"GATE FAIL (ROUND RULE): {len(missing)} oracle-equipped "
               f"queries missing from {os.path.basename(sweep_path)} — the "
               "registry changed after the sweep was recorded; re-run "
-              "scripts/sweep_sf01.py (SWEEP_JSON_MERGE=1) BEFORE the "
-              "snapshot commit:")
+              f"scripts/check_oracles.py --json {os.path.basename(sweep_path)} "
+              "with these names BEFORE the snapshot commit:")
         for n in missing:
             print(f"  - {n}")
     if stale_extra:

@@ -26,6 +26,7 @@ def main() -> int:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     from mapreduce_project_spark import queries_registry as R
+    from mapreduce_project_spark.plans.inspect import formatted_plan
     from mapreduce_project_spark.session import get_spark
 
     spark = get_spark("dump-query-plan")
@@ -36,10 +37,7 @@ def main() -> int:
         if name not in queries:
             print(f"?? {name}: not registered")
             continue
-        df = queries[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(queries[name](spark, SF_DIR))
         path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
         with open(path, "w", encoding="utf-8") as fh:
             fh.write(plan)

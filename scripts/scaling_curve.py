@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -503,20 +502,6 @@ FOOTNOTES = """
   capability-demo query whose scale path is the declarative
   `interval_join` twin (see SCALE.md §skew); kept as-is by design.
 """
-_OLD_FOOTNOTES = """
-## Round-4 note: the two round-3 bench upticks are host noise
-
-`events_variant_stats` (0.39 s r02 → 0.64 s r03) and
-`events_rollup_day_hour` (0.59 s r02 → 0.78 s r03) were flagged for
-confirmation. Re-timed round 4 standalone on a verified-quiet machine
-(no concurrent pytest/Spark processes), warm, min-over-3 at sf0.1 with
-the bench's noop-sink protocol: **0.566 s** and **0.634 s** — both
-back between their r02 and r03 values. `git log` shows no commit
-touching either query's plan between the rounds, and the executed
-plans are unchanged. Conclusion: scheduler-overhead variance of this
-VM (see the ~150–380 ms/job fluctuation note in the verify skill),
-not a regression; no plan change warranted.
-"""
 
 
 def render_rows(results: dict[str, dict[str, float]]) -> list[str]:
@@ -547,6 +532,7 @@ def render_rows(results: dict[str, dict[str, float]]) -> list[str]:
 
 
 def main() -> None:
+    from mapreduce_project_spark.plans.inspect import run_noop
     from mapreduce_project_spark.queries_registry import ALL_QUERIES as registry
     from mapreduce_project_spark.session import get_spark
 
@@ -556,16 +542,9 @@ def main() -> None:
     spark.range(10000).selectExpr("sum(id)").collect()
 
     def timed(name: str, sf_dir: str, reps: int) -> float:
-        best = None
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            registry[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
+        return min(
+            run_noop(lambda: registry[name](spark, sf_dir))["sec"] for _ in range(reps)
+        )
 
     # Resume cache: a multi-hour timing run must survive an interrupt
     # (round-10 lesson: one pathological sf1 query stalled the whole

@@ -34,7 +34,6 @@ TABLES = (
 def spark():
     from mapreduce_project_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("tests")
     yield spark
     spark.stop()
@@ -78,27 +77,33 @@ def rows_of(df_pandas):
     )
 
 
-def assert_matches_oracle(spark_df, duck_con, sql, approx_cols=(), allow_empty=False):
-    """Differential check ≡ the driver's: same columns, same multiset of
-    rows (after per-cell normalization).
+def oracle_mismatch(got, want, allow_empty=False):
+    """Why pandas frames ``got`` (engine) and ``want`` (oracle) differ
+    under the driver's comparison — same columns, same multiset of rows
+    after per-cell normalization — or None when they match.
 
     Guards against VACUOUS passes: an empty-vs-empty hash match proves
-    nothing about the query, so both sides being empty is a failure
-    unless the test explicitly opts in with ``allow_empty=True`` (for
+    nothing about the query, so both sides being empty is a mismatch
+    unless the caller explicitly opts in with ``allow_empty=True`` (for
     queries whose correct answer on the fixture IS the empty set)."""
-    got = spark_df.toPandas()
-    want = duck_con.sql(sql).df()
-    assert sorted(got.columns) == sorted(want.columns), (
-        f"column mismatch: spark={sorted(got.columns)} oracle={sorted(want.columns)}"
-    )
-    assert len(got) == len(want), f"row count: spark={len(got)} oracle={len(want)}"
-    if not allow_empty:
-        assert len(want) > 0, (
+    if sorted(got.columns) != sorted(want.columns):
+        return f"column mismatch: spark={sorted(got.columns)} oracle={sorted(want.columns)}"
+    if len(got) != len(want):
+        return f"row count: spark={len(got)} oracle={len(want)}"
+    if not allow_empty and len(want) == 0:
+        return (
             "vacuous oracle pass: both engines returned 0 rows — the "
             "comparison certifies nothing; recalibrate the query for the "
             "fixture scale or pass allow_empty=True if empty is the "
             "genuinely correct answer"
         )
-    g, w = rows_of(got), rows_of(want)
-    mismatches = [(a, b) for a, b in zip(g, w) if a != b]
-    assert not mismatches, f"value mismatch (first 5): {mismatches[:5]}"
+    mismatches = [(a, b) for a, b in zip(rows_of(got), rows_of(want)) if a != b]
+    return f"value mismatch (first 5): {mismatches[:5]}" if mismatches else None
+
+
+def assert_matches_oracle(spark_df, duck_con, sql, approx_cols=(), allow_empty=False):
+    """Differential check ≡ the driver's (see `oracle_mismatch`): raises
+    AssertionError naming the first difference."""
+    msg = oracle_mismatch(spark_df.toPandas(), duck_con.sql(sql).df(), allow_empty)
+    if msg is not None:
+        raise AssertionError(msg)

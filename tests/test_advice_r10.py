@@ -140,24 +140,6 @@ def test_jl_projection_emits_no_array_columns(spark, duck):
     assert isinstance(sample, str) and len(sample.split(",")) == 16
 
 
-def test_no_declared_query_returns_nested_columns(spark):
-    # Mechanical lint for the whole D194 failure class: no DRIVER-slot
-    # query may emit a top-level array/map/struct column — the driver's
-    # canonicalizer sorts cell values via pandas and cannot hash them.
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    offenders = []
-    for name, fn in R.QUERIES.items():
-        schema = fn(spark, SF_DIR).schema
-        for f in schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                offenders.append((name, f.name, f.dataType.simpleString()))
-    assert offenders == [], (
-        "driver-slot queries with nested top-level columns (render them "
-        f"as comma-joined strings — see inverted_index): {offenders}"
-    )
-
-
 def test_snm_recall_measured_with_missed_pair_diagnosis(spark, duck):
     # ADVICE low: dedup_snm_pairs is hash-gated against the exact
     # quadratic oracle, but SNM recall (every >=0.8 pair within rank

@@ -73,11 +73,9 @@ def test_bench_trend_ignores_planted_duplicate(spark):
 
 def _final_plan(spark, name, sf_dir="/root/testdata/sf0.001"):
     from mapreduce_project_spark import queries_registry as R
+    from mapreduce_project_spark.plans.inspect import formatted_plan
 
-    df = R.ALL_QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    return formatted_plan(R.ALL_QUERIES[name](spark, sf_dir))
 
 
 def test_training_set_compositions_plan_against_checkpoint_leaf(spark):

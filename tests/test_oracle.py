@@ -47,6 +47,16 @@ def test_declared_set_fits_driver_window():
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     df = QUERIES[name](spark, SF_DIR)
+    if name in R.QUERIES:
+        # the driver's canonicalizer sorts cell values with pandas and
+        # crashes on unhashable cells, which rows_of would stringify:
+        # render nested columns as comma-joined strings (inverted_index)
+        nested = [
+            f"{f.name}:{f.dataType.simpleString()}"
+            for f in df.schema.fields
+            if f.dataType.typeName() in ("array", "map", "struct")
+        ]
+        assert not nested, f"declared query returns nested top-level columns {nested}"
     if name in ORACLES:
         assert_matches_oracle(df, duck, ORACLES[name])
     elif name in R.ROWS_ONLY_RTOL:

@@ -3,10 +3,14 @@
 The driver records its correctness rows in registry order, so the
 declared slate must be exactly `DECLARED`, in order, and every other
 registered query must stay reachable through `EXTRA_*` and `ALL_*`.
+No name, registered or module-level, may be defined twice.
 """
 
 from __future__ import annotations
 
+import ast
+import collections
+import glob
 import json
 import os
 import subprocess
@@ -62,3 +66,21 @@ def test_plans_module_imports_before_the_registry():
     )
     assert proc.returncode == 0, proc.stderr
     assert proc.stdout.split() == [str(len(R.QUERIES)), str(len(R.EXTRA_QUERIES))]
+
+
+def test_no_module_defines_a_top_level_name_twice():
+    # a second module-level def/class silently replaces the first (the
+    # registry's double registration, the ORC reader pair in sources/io)
+    dupes = {}
+    for path in glob.glob(os.path.join(ROOT, "mapreduce_project_spark", "**", "*.py"),
+                          recursive=True) + glob.glob(os.path.join(ROOT, "scripts", "*.py")):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        names = collections.Counter(
+            node.name for node in tree.body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        )
+        twice = sorted(n for n, k in names.items() if k > 1)
+        if twice:
+            dupes[os.path.relpath(path, ROOT)] = twice
+    assert dupes == {}

@@ -78,3 +78,21 @@ def test_job_count_rejects_unknown_names_before_starting_spark(monkeypatch):
     assert exc.value.code != 0
     assert "no_such_query, nor_this" in str(exc.value.code)
     assert "word_count" not in str(exc.value.code)
+
+
+def test_check_oracles_json_replaces_rerun_rows_and_drops_unregistered():
+    co = _load_script("check_oracles")
+
+    def row(ok=True, vacuous=False):
+        return {"ok": ok, "vacuous": vacuous, "rows": 1, "sec": 0.1,
+                "spark_sec": 0.1, "oracle_sec": 0.0, "err": None if ok else "x"}
+
+    prior = {"sf_dir": "sf", "n_queries": 3, "bad_or_vacuous": 1,
+             "results": {"a": row(), "b": row(ok=False), "gone": row()}}
+    doc = co.merge_rows(prior, {"b": row(), "c": row(vacuous=True)}, "sf", {"a", "b", "c"})
+    assert list(doc["results"]) == ["a", "b", "c"]
+    assert doc["results"]["b"]["ok"]  # the re-run row replaced the old one
+    assert (doc["sf_dir"], doc["n_queries"], doc["bad_or_vacuous"]) == ("sf", 3, 1)
+    # rows recorded at another scale are not merged in
+    other = co.merge_rows(prior, {"c": row()}, "other", {"a", "b", "c"})
+    assert list(other["results"]) == ["c"] and other["bad_or_vacuous"] == 0

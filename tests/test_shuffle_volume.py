@@ -16,10 +16,11 @@ per-row overhead not to dominate).
 
 from __future__ import annotations
 
-
 import pytest
 
 from pyspark.sql import functions as F
+
+from mapreduce_project_spark.plans.inspect import run_noop
 
 SF01 = "/root/testdata/sf0.01"
 
@@ -31,13 +32,10 @@ def _registry():
 
 
 def shuffle_write_bytes(spark, df) -> int:
-    """Total shuffle-write bytes of running ``df`` end to end — thin
-    wrapper over the engine's own diagnostic
-    (`plans/inspect.py:run_with_shuffle_metrics`, the user-facing form
-    of this probe)."""
-    from mapreduce_project_spark.plans.inspect import run_with_shuffle_metrics
-
-    return run_with_shuffle_metrics(df)["shuffle_write_bytes"]
+    """Total shuffle-write bytes of running the already-built ``df`` end
+    to end — thin wrapper over the engine's own run core
+    (`plans/inspect.py:run_noop`, the user-facing form of this probe)."""
+    return run_noop(lambda: df)["shuffle_write_bytes"]
 
 
 @pytest.fixture(scope="module")
@@ -112,3 +110,12 @@ def test_prefix_filter_jaccard_bounded_by_shingle_volume(spark):
     assert 0 < b < 3.0 * shingle_vol, (
         f"prefix-filter Jaccard shuffled {b} bytes vs {shingle_vol} shingle bytes"
     )
+
+
+def test_run_noop_counts_jobs_launched_while_building(spark):
+    # the job group opens BEFORE build(), so an eager localCheckpoint a
+    # builder runs is counted with the query; a DataFrame checkpointed
+    # before run_noop is not
+    eager = run_noop(lambda: spark.range(10).localCheckpoint(eager=True))
+    prebuilt = spark.range(10).localCheckpoint(eager=True)
+    assert eager["jobs"] == run_noop(lambda: prebuilt)["jobs"] + 1
