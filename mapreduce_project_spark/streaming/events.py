@@ -569,8 +569,9 @@ def _crawl_dedup_batch(
     batch (replay ≡ first play, byte-for-byte).
 
     ``fault_injector(point, batch_id)`` is test instrumentation for
-    the kill-placement matrix (scripts/ann_kill_matrix.py): called at
-    the named write boundaries ('after_pairs', 'after_sig') so a crash
+    the kill-placement matrices (`scripts/stream_faults.py crawl` and
+    `ann`): called at the named write boundaries ('after_pairs',
+    'after_sig') so a crash
     can be planted DETERMINISTICALLY between any two effects instead
     of hoping a timed stop lands there. Production callers leave it
     None."""
@@ -670,7 +671,7 @@ def ann_ingest_stream(
     produced by the OFFLINE `ivf_tree_compact` maintenance job
     (derived state, rerunnable), where a driver-retried batch job is
     the right place for `ivf_index_upsert`'s MERGE. Proven by the
-    deterministic kill-placement matrix (scripts/ann_kill_matrix.py:
+    deterministic kill-placement matrix (`scripts/stream_faults.py ann`:
     a planted crash at EVERY batch index × every write boundary,
     restart, state == sequential batch reference).
 
@@ -1104,7 +1105,7 @@ def cusum_stream(daily: DataFrame, mean_fp: int, slack_fp: int) -> DataFrame:
     (series, ed, n, s_up, s_dn, changepoint) row per day; all state is
     BIGINT, so stream ≡ batch bit-exactly (pinned in
     tests/test_streaming.py and soaked with kill/restart in
-    scripts/stream_soak.py)."""
+    `scripts/stream_faults.py soak`)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -10,6 +10,7 @@ is now a pure function; plant exactly that condition against it.
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import sys
 
@@ -24,6 +25,7 @@ def _load_script(name):
     )
     spec = importlib.util.spec_from_file_location(name, path)
     mod = importlib.util.module_from_spec(spec)
+    sys.modules[name] = mod  # dataclasses resolve annotations through it
     spec.loader.exec_module(mod)
     return mod
 
@@ -96,3 +98,50 @@ def test_check_oracles_json_replaces_rerun_rows_and_drops_unregistered():
     # rows recorded at another scale are not merged in
     other = co.merge_rows(prior, {"c": row()}, "other", {"a", "b", "c"})
     assert list(other["results"]) == ["c"] and other["bad_or_vacuous"] == 0
+
+
+def _artifact(name):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, name), encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+@pytest.mark.parametrize(
+    "schedule, artifact",
+    [
+        ("ann", "KILLMATRIX_ANN.json"),
+        # the crawl proof on record predates the harness; a re-run
+        # writes KILLMATRIX_CRAWL.json, which then replaces it here
+        ("crawl", "KILLMATRIX_CRAWL_r13.json"),
+        ("state", "KILLMATRIX_STATE.json"),
+    ],
+)
+def test_stream_fault_matrix_plans_the_rows_of_its_artifact(schedule, artifact):
+    # a schedule that drifts from its committed proof must be re-run
+    sf = _load_script("stream_faults")
+    sched = sf.SCHEDULES[schedule]
+    runs = _artifact(artifact)["runs"]
+    if schedule == "state":
+        planned = [(sf.SPECS[s].label.removesuffix("_stream"), k.depth) for s, k in sched.rows]
+        committed = [(r["stream"], r["kill_depth"]) for r in runs]
+    else:
+        planned = [k.tag for _s, k in sched.rows]
+        committed = [r["tag"] for r in runs]
+    assert planned == committed
+
+
+def test_stream_fault_soak_runs_every_stream_of_its_artifact():
+    sf = _load_script("stream_faults")
+    sched = sf.SCHEDULES["soak"]
+    assert [s for s, _k in sched.rows] == list(sf.SPECS)
+    assert list(sf.SPECS) == list(_artifact(sched.artifact)["streams"])
+
+
+def test_stream_fault_row_survives_a_timed_stop(spark, tmp_path):
+    from tests.conftest import SF_DIR
+
+    sf = _load_script("stream_faults")
+    ctx = sf.Ctx(spark, SF_DIR, str(tmp_path))
+    row = sf.run_row(ctx, sf.SPECS["transitions"], sf.Kill("stop", 2, "transitions_02"))
+    assert row["green"] and row["restarted"], row
+    assert row["killed_after_batches"] >= 2 and row["rows"] > 0

@@ -1072,8 +1072,8 @@ def test_ann_ingest_kill_at_every_write_boundary(spark, tmp_path):
     # ('after_pairs' — the exact placement the judge named, between
     # the pairs write and the IVF landing — 'after_sig', 'after_ivf'),
     # let the checkpoint retry the batch, and require the final state
-    # to equal the no-crash reference EXACTLY. scripts/ann_kill_matrix
-    # .py runs the same proof at every batch index of the 20-batch
+    # to equal the no-crash reference EXACTLY. `scripts/stream_faults.py
+    # ann` runs the same proof at every batch index of the 20-batch
     # soak corpus under load; this test pins the mechanism in CI.
     import os
 
