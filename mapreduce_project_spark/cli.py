@@ -68,7 +68,9 @@ def _build_parser() -> argparse.ArgumentParser:
     runp.add_argument("--output", help="write result parquet here instead of printing")
     runp.add_argument(
         "--explain", action="store_true",
-        help="print the formatted physical plan instead of executing",
+        help="print the formatted physical plan instead of running the query "
+        "(jobs that materialize an intermediate while the query is built, "
+        "such as an eager localCheckpoint, still run)",
     )
 
     mrp = sub.add_parser("mapreduce", help="run a map/reduce job file via the facade")
@@ -213,7 +215,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         if args.explain:
             # the plan-review loop (PLANS.md / tests/test_plans.py) as a
             # one-liner: inspect pushdown/broadcast/agg shapes without
-            # running the query
+            # the final action; build-time jobs (eager localCheckpoint
+            # in the v7/v8 compositions and the iterative graph plans)
+            # have already run when the plan prints
             from mapreduce_project_spark.plans.inspect import formatted_plan
 
             print(formatted_plan(df))

@@ -1105,13 +1105,10 @@ def embedding_dedup_clusters_lsh(
     id twice; components as in every other dedup family."""
     import math
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     from mapreduce_project_spark.operators.similarity import (
         as_double,
         cosine,
+        lsh_codes_exact,
         rademacher_signs,
     )
 
@@ -1139,45 +1136,18 @@ def embedding_dedup_clusters_lsh(
         n_rows = df.count()  # metadata-scale driver action, documented
         n_bits = max(8, min(24, math.ceil(math.log2(max(n_rows, 1) / 8 or 1))))
 
-    # Bucket codes via an Arrow-batched numpy kernel that reproduces
-    # the DuckDB oracle's left-fold BIT-FOR-BIT: each plane dot is
-    # np.cumsum(v * ±1)[-1] — cumsum is a sequential C accumulation,
-    # the identical operation sequence to the SQL chain
-    # 0.0 + (±v1) + (±v2) + … (x*±1.0 is exact, 0.0+x1 ≡ x1), so a
-    # sign can never disagree between engines even at |dot| ~ ulp.
-    # Replaces 256 interpreted HOF fold expressions (measured 14.3 s
-    # at sf0.1 → sub-second).
+    # Bucket codes via the Arrow-batched numpy kernel that reproduces
+    # the DuckDB oracle's left-fold BIT-FOR-BIT (`lsh_codes_exact`: each
+    # plane dot is np.cumsum(v * ±1)[-1], the identical operation
+    # sequence to the SQL chain 0.0 + (±v1) + (±v2) + …, so a sign can
+    # never disagree between engines even at |dot| ~ ulp). Replaces 256
+    # interpreted HOF fold expressions (measured 14.3 s at sf0.1 →
+    # sub-second).
     if signs is None:
         signs = rademacher_signs(n_tables, n_bits, dim)
-    pmat = np.array(
-        [plane for table in signs for plane in table], dtype=np.float64
-    )  # (n_tables*n_bits, dim)
-    bitw = np.array(
-        [1 << b for _ in range(n_tables) for b in range(n_bits)], dtype=np.int64
-    )
-    CHUNK = 256  # rows per slab: CHUNK x planes x dim doubles
-
-    def _codes(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy()).astype(np.float64)  # (batch, dim)
-        out = np.empty((len(m), n_tables), dtype=np.int32)
-        for c0 in range(0, len(m), CHUNK):
-            mm = m[c0 : c0 + CHUNK]
-            signed = mm[:, None, :] * pmat[None, :, :]  # (chunk, planes, dim)
-            dots = np.cumsum(signed, axis=2)[:, :, -1]
-            bits = (dots > 0) * bitw
-            out[c0 : c0 + len(mm)] = (
-                bits.reshape(len(mm), n_tables, n_bits).sum(axis=2).astype(np.int32)
-            )
-        return pd.Series(list(out))
-
-    _codes.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    codes_udf = pandas_udf(_codes, "array<int>")
-
+    coded = lsh_codes_exact(df, id_col, vec_col, signs)
     base = df.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
-    )
-    coded = base.select(
-        "id", F.posexplode(codes_udf(F.col("v"))).alias("table", "code")
     )
     a = coded.alias("a")
     b = coded.alias("b")

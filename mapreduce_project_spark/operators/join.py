@@ -189,32 +189,8 @@ def asof_join(
     broken by the payload struct ordering (largest wins), so the result
     is deterministic.
     """
-    from pyspark.sql import Window
-
-    payload = F.struct(
-        F.col(right_ts).alias("_ts"), *[F.col(c) for c in value_cols]
-    )
-    right_tagged = right.select(
-        *keys,
-        F.col(right_ts).alias("_evt_ts"),
-        payload.alias("_payload"),
-        F.lit(0).alias("_side"),
-    )
-    left_cols = left.columns
-    left_tagged = left.withColumn("_evt_ts", F.col(left_ts)).withColumn(
-        "_side", F.lit(1)
-    )
-    unioned = left_tagged.unionByName(right_tagged, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("_evt_ts"), F.col("_side"), F.col("_payload"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    matched = unioned.withColumn("_m", F.last("_payload", ignorenulls=True).over(w))
-    return matched.filter(F.col("_side") == 1).select(
-        *left_cols,
-        F.col("_m._ts").alias(f"{right_ts}{suffix}"),
-        *[F.col(f"_m.{c}").alias(f"{c}{suffix}") for c in value_cols],
+    return _asof(
+        left, right, keys, left_ts, right_ts, value_cols, suffix, forward=False
     )
 
 
@@ -238,8 +214,27 @@ def asof_join_forward(
     first non-null right payload. Left rows sort before right rows at
     equal timestamps, giving inclusive ``>=``; ties among right rows at
     one ts resolve to the smallest payload struct — deterministic."""
+    return _asof(
+        left, right, keys, left_ts, right_ts, value_cols, suffix, forward=True
+    )
+
+
+def _asof(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    left_ts: str,
+    right_ts: str,
+    value_cols: list[str],
+    suffix: str,
+    forward: bool,
+) -> DataFrame:
+    """The union-sort-carry skeleton of both as-of joins. Backward: right
+    rows sort first at equal ts and the last payload is carried forward.
+    Forward: left rows sort first and the first payload is carried back."""
     from pyspark.sql import Window
 
+    right_side, left_side = (1, 0) if forward else (0, 1)
     payload = F.struct(
         F.col(right_ts).alias("_ts"), *[F.col(c) for c in value_cols]
     )
@@ -247,20 +242,26 @@ def asof_join_forward(
         *keys,
         F.col(right_ts).alias("_evt_ts"),
         payload.alias("_payload"),
-        F.lit(1).alias("_side"),
+        F.lit(right_side).alias("_side"),
     )
     left_cols = left.columns
     left_tagged = left.withColumn("_evt_ts", F.col(left_ts)).withColumn(
-        "_side", F.lit(0)
+        "_side", F.lit(left_side)
     )
     unioned = left_tagged.unionByName(right_tagged, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("_evt_ts"), F.col("_side"), F.col("_payload"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("_evt_ts"), F.col("_side"), F.col("_payload")
     )
-    matched = unioned.withColumn("_m", F.first("_payload", ignorenulls=True).over(w))
-    return matched.filter(F.col("_side") == 0).select(
+    if forward:
+        carry = F.first("_payload", ignorenulls=True).over(
+            w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        )
+    else:
+        carry = F.last("_payload", ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+    matched = unioned.withColumn("_m", carry)
+    return matched.filter(F.col("_side") == left_side).select(
         *left_cols,
         F.col("_m._ts").alias(f"{right_ts}{suffix}"),
         *[F.col(f"_m.{c}").alias(f"{c}{suffix}") for c in value_cols],

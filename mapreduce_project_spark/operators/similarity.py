@@ -495,10 +495,10 @@ def lsh_codes_exact(
     kernel (each plane dot is ``np.cumsum(v * ±1)[-1]`` — the
     identical operation sequence to the DuckDB oracle's unrolled
     ``0.0 ± v1 ± v2 …`` chain, so a sign can never disagree between
-    engines even at |dot| ~ ulp; same kernel as
-    `dedup.embedding_dedup_clusters_lsh`, factored for reuse by the
-    width-ladder audit). Map-side projection, zero shuffle; the plane
-    matrix ships once as a closure constant."""
+    engines even at |dot| ~ ulp; the one code kernel of
+    `dedup.embedding_dedup_clusters_lsh` and the width-ladder audits).
+    Map-side projection, zero shuffle; the plane matrix ships once as a
+    closure constant."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -510,7 +510,7 @@ def lsh_codes_exact(
     bitw = np.array(
         [1 << b for _ in range(n_tables) for b in range(n_bits)], dtype=np.int64
     )
-    CHUNK = 256
+    CHUNK = 256  # rows per slab: CHUNK x planes x dim doubles
 
     def _codes(vs: pd.Series) -> pd.Series:
         m = np.stack(vs.to_numpy()).astype(np.float64)

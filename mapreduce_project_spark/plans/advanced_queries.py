@@ -30,6 +30,34 @@ from mapreduce_project_spark.operators.similarity import topk_ivf
 from mapreduce_project_spark.queries_registry import query, t
 
 
+def _cosupply_edges(
+    spark: SparkSession, sf_dir: str, before: str, src: str = "a", dst: str = "b"
+) -> DataFrame:
+    """The co-supply graph's raw edge list: one ``(src, dst)`` row per
+    order placed in [1995-01-01, ``before``) and per pair of its
+    suppliers with ``src < dst`` (lineitem self-join on orderkey, not
+    deduplicated)."""
+    o = (
+        t(spark, sf_dir, "orders")
+        .filter(
+            (F.col("o_orderdate") >= F.lit("1995-01-01"))
+            & (F.col("o_orderdate") < F.lit(before))
+        )
+        .select("o_orderkey")
+    )
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    x, y = li.alias("x"), li.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
+        )
+        .join(o, F.col("x.l_orderkey") == F.col("o_orderkey"))
+        .select(F.col("x.l_suppkey").alias(src), F.col("y.l_suppkey").alias(dst))
+    )
+
+
 @query(
     "rollup_customer_balance",
     """
@@ -597,25 +625,7 @@ def q_triangle_counts_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (feasible at oracle scale, ruinous at 100 TB)."""
     from mapreduce_project_spark.operators.graph import triangle_counts
 
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01"))
-            & (F.col("o_orderdate") < F.lit("1995-04-01"))
-        )
-        .select("o_orderkey")
-    )
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    x, y = li.alias("x"), li.alias("y")
-    raw = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .join(o, F.col("x.l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("x.l_suppkey").alias("src"), F.col("y.l_suppkey").alias("dst"))
-    )
+    raw = _cosupply_edges(spark, sf_dir, "1995-04-01", "src", "dst")
     # Materialize the canonical edge set once so the triangle pipeline's
     # three `oriented` consumers replay a checkpointed edge table, not
     # the lineitem self-join (same discipline as
@@ -854,28 +864,7 @@ def q_graph_components_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     component size."""
     from mapreduce_project_spark.operators.dedup import connected_components
 
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01"))
-            & (F.col("o_orderdate") < F.lit("1995-02-01"))
-        )
-        .select("o_orderkey")
-    )
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    x, y = li.alias("x"), li.alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .join(o, F.col("x.l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.col("x.l_suppkey").alias("id_a"), F.col("y.l_suppkey").alias("id_b")
-        )
-        .distinct()
-    )
+    pairs = _cosupply_edges(spark, sf_dir, "1995-02-01", "id_a", "id_b").distinct()
     comp = connected_components(pairs)
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).cast("bigint").alias("comp_size"))
     return comp.select(F.col("id").alias("node"), "comp").join(sizes, "comp").select(
@@ -1020,26 +1009,7 @@ def q_graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-edge self-join (bounded by per-order line counts), one
     node-keyed degree partial agg, two broadcast-friendly degree
     probes, one scalar agg — output is ONE row at any scale."""
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01"))
-            & (F.col("o_orderdate") < F.lit("1995-02-01"))
-        )
-        .select("o_orderkey")
-    )
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    x, y = li.alias("x"), li.alias("y")
-    e0 = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .join(o, F.col("x.l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("x.l_suppkey").alias("a"), F.col("y.l_suppkey").alias("b"))
-        .distinct()
-    )
+    e0 = _cosupply_edges(spark, sf_dir, "1995-02-01").distinct()
     edges = e0.unionByName(
         e0.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -1144,26 +1114,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     label) partial agg + one node-partitioned top-1 window. Output is
     one row per participating supplier with its community and the
     community size (one more metadata-side partial agg)."""
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01"))
-            & (F.col("o_orderdate") < F.lit("1995-02-01"))
-        )
-        .select("o_orderkey")
-    )
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    x, y = li.alias("x"), li.alias("y")
-    e0 = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .join(o, F.col("x.l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("x.l_suppkey").alias("a"), F.col("y.l_suppkey").alias("b"))
-        .distinct()
-    )
+    e0 = _cosupply_edges(spark, sf_dir, "1995-02-01").distinct()
     edges = e0.unionByName(
         e0.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).cache()
@@ -1282,26 +1233,7 @@ def q_graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded answer THE 3-core exactly — the planted fixture pins
     both a cascade (a tail whose removal triggers the next peel) and
     convergence."""
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01"))
-            & (F.col("o_orderdate") < F.lit("1995-02-01"))
-        )
-        .select("o_orderkey")
-    )
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    x, y = li.alias("x"), li.alias("y")
-    e0 = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .join(o, F.col("x.l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("x.l_suppkey").alias("a"), F.col("y.l_suppkey").alias("b"))
-        .distinct()
-    )
+    e0 = _cosupply_edges(spark, sf_dir, "1995-02-01").distinct()
     edges = e0.unionByName(
         e0.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).cache()
@@ -1666,25 +1598,7 @@ def q_graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFram
     one node-keyed left join. One row per node at any scale."""
     from mapreduce_project_spark.operators.graph import triangle_counts
 
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01"))
-            & (F.col("o_orderdate") < F.lit("1995-04-01"))
-        )
-        .select("o_orderkey")
-    )
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    x, y = li.alias("x"), li.alias("y")
-    raw = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .join(o, F.col("x.l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("x.l_suppkey").alias("src"), F.col("y.l_suppkey").alias("dst"))
-    )
+    raw = _cosupply_edges(spark, sf_dir, "1995-04-01", "src", "dst")
     # Materialize the canonical distinct edge set ONCE: it feeds the
     # degree union (2 branches) AND the whole triangle pipeline (which
     # previously re-ran the lineitem self-join + re-deduplicated via
@@ -1845,16 +1759,6 @@ def q_graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine has no graph surface; capability class per SURVEY §2 D296
     (Brandes 2001 numerators + Brandes-Pich 2007 pair sampling, made
     bounded-round and oracle-replayable)."""
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1995-01-01"))
-            & (F.col("o_orderdate") < F.lit("1995-01-15"))
-        )
-        .select("o_orderkey")
-    )
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    x, y = li.alias("x"), li.alias("y")
     # The lineitem self-join + distinct is the expensive subtree and is
     # consumed by SEVEN separate actions (two root TakeOrdereds + four
     # per-level eager checkpoints + the final job); exchange reuse never
@@ -1863,13 +1767,7 @@ def q_graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # predated). The symmetrized adj view stays a narrow union over the
     # checkpointed edges — computed per action but shuffle-free.
     e = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .join(o, F.col("x.l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("x.l_suppkey").alias("a"), F.col("y.l_suppkey").alias("b"))
+        _cosupply_edges(spark, sf_dir, "1995-01-15")
         .distinct()
         .localCheckpoint(eager=True)
     )

@@ -403,6 +403,36 @@ def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _wav_encoder(list_chunk: bool):
+    """The ``mapInPandas`` function ``encode``: (doc_id, text) batches to
+    (doc_id, payload), each payload a RIFF/WAVE file (mono, 8 kHz,
+    16-bit PCM) whose samples are the text's UTF-8 bytes, zero-padded to
+    an even length; with ``list_chunk`` a LIST chunk precedes fmt."""
+    lst = b"LIST" + (5).to_bytes(4, "little") + b"INFOx\x00" if list_chunk else b""
+    fmt = (
+        b"fmt " + (16).to_bytes(4, "little") + (1).to_bytes(2, "little")
+        + (1).to_bytes(2, "little") + (8000).to_bytes(4, "little")
+        + (16000).to_bytes(4, "little") + (2).to_bytes(2, "little")
+        + (16).to_bytes(2, "little")
+    )
+
+    def encode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            payloads = []
+            for txt in pdf["text"]:
+                b = str(txt).encode("utf-8")
+                if len(b) % 2:
+                    b += b"\x00"
+                data = b"data" + len(b).to_bytes(4, "little") + b
+                body = b"WAVE" + lst + fmt + data
+                payloads.append(b"RIFF" + len(body).to_bytes(4, "little") + body)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "payload": payloads})
+
+    return encode
+
+
 @query(
     "multimodal_wav_roundtrip",
     """
@@ -443,25 +473,6 @@ def q_multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for txt in pdf["text"]:
-                b = str(txt).encode("utf-8")
-                if len(b) % 2:
-                    b += b"\x00"
-                fmt = (
-                    b"fmt " + (16).to_bytes(4, "little") + (1).to_bytes(2, "little")
-                    + (1).to_bytes(2, "little") + (8000).to_bytes(4, "little")
-                    + (16000).to_bytes(4, "little") + (2).to_bytes(2, "little")
-                    + (16).to_bytes(2, "little")
-                )
-                lst = b"LIST" + (5).to_bytes(4, "little") + b"INFOx" + b"\x00"
-                data = b"data" + len(b).to_bytes(4, "little") + b
-                body = b"WAVE" + lst + fmt + data
-                payloads.append(b"RIFF" + len(body).to_bytes(4, "little") + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "payload": payloads})
-
     def sample_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -481,7 +492,9 @@ def q_multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    enc = docs.mapInPandas(encode, "doc_id long, payload binary")
+    enc = docs.mapInPandas(
+        _wav_encoder(list_chunk=True), "doc_id long, payload binary"
+    )
     dec = decode_media(enc, "doc_id", "payload")
     return dec.mapInPandas(
         sample_stats,
@@ -563,38 +576,15 @@ def q_multimodal_audio_logmel(spark: SparkSession, sf_dir: str) -> DataFrame:
     check pins the whole numeric pipeline run-to-run. No SQL twin by
     nature (DuckDB cannot FFT); the planted-tone bin test in
     tests/test_multimodal.py is the semantic pin."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from mapreduce_project_spark.operators.multimodal import (
         decode_media,
         logmel_features,
     )
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for txt in pdf["text"]:
-                b = str(txt).encode("utf-8")
-                if len(b) % 2:
-                    b += b"\x00"
-                fmt = (
-                    b"fmt " + (16).to_bytes(4, "little") + (1).to_bytes(2, "little")
-                    + (1).to_bytes(2, "little") + (8000).to_bytes(4, "little")
-                    + (16000).to_bytes(4, "little") + (2).to_bytes(2, "little")
-                    + (16).to_bytes(2, "little")
-                )
-                data = b"data" + len(b).to_bytes(4, "little") + b
-                body = b"WAVE" + fmt + data
-                payloads.append(b"RIFF" + len(body).to_bytes(4, "little") + body)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "payload": payloads}
-            )
-
-    wav = docs.mapInPandas(encode, "doc_id long, payload binary")
+    wav = docs.mapInPandas(
+        _wav_encoder(list_chunk=False), "doc_id long, payload binary"
+    )
     dec = decode_media(wav, "doc_id", "payload").select(
         "doc_id", "data", "sample_rate_hz"
     )
@@ -786,27 +776,6 @@ def q_multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for txt in pdf["text"]:
-                b = str(txt).encode("utf-8")
-                if len(b) % 2:
-                    b += b"\x00"
-                fmt = (
-                    b"fmt " + (16).to_bytes(4, "little") + (1).to_bytes(2, "little")
-                    + (1).to_bytes(2, "little") + (8000).to_bytes(4, "little")
-                    + (16000).to_bytes(4, "little") + (2).to_bytes(2, "little")
-                    + (16).to_bytes(2, "little")
-                )
-                lst = b"LIST" + (5).to_bytes(4, "little") + b"INFOx" + b"\x00"
-                data = b"data" + len(b).to_bytes(4, "little") + b
-                body = b"WAVE" + lst + fmt + data
-                payloads.append(b"RIFF" + len(body).to_bytes(4, "little") + body)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "payload": payloads}
-            )
-
     def decimate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -833,7 +802,9 @@ def q_multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    enc = docs.mapInPandas(encode, "doc_id long, payload binary")
+    enc = docs.mapInPandas(
+        _wav_encoder(list_chunk=True), "doc_id long, payload binary"
+    )
     dec = decode_media(enc, "doc_id", "payload")
     return dec.mapInPandas(
         decimate,

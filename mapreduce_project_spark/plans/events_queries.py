@@ -8,7 +8,7 @@ decimals for cross-engine exactness.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.events import (
@@ -20,6 +20,97 @@ from mapreduce_project_spark.operators.events import (
 )
 from mapreduce_project_spark.operators.relational import dec, dec_sum
 from mapreduce_project_spark.queries_registry import query, t
+
+
+def _sessions_30min(ev: DataFrame, *cols: str) -> DataFrame:
+    """``(user_id, event_type, *cols, sid)``: every event with its user's
+    30-minute gap-island session number — lag plus a running sum over
+    µs-exact epochs, ``(ts, event_id)`` tie-break, first session 1."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(
+        "user_id", "event_type", "ts", "event_id",
+        F.when(
+            F.lag("ts").over(w).isNull()
+            | (
+                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
+                > 1800000000
+            ),
+            1,
+        ).otherwise(0).alias("new_s"),
+    )
+    return seq.select(
+        "user_id", "event_type", *cols,
+        F.sum("new_s").over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ).alias("sid"),
+    )
+
+
+def _daily_cents_grid(ev: DataFrame) -> DataFrame:
+    """``(event_type, d, y)``: every event type crossed with every UTC day
+    number ``d`` from the corpus's first to last event day, ``y`` the
+    day's value total in whole cents (half-up), 0 on days without events."""
+    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    daily = ev.groupBy(
+        "event_type",
+        F.expr("unix_micros(date_trunc('day', ts)) div 86400000000").alias("d"),
+    ).agg(F.sum(cents).cast("bigint").alias("y"))
+    bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
+    types = ev.select("event_type").distinct()
+    return (
+        types.crossJoin(F.broadcast(bounds))
+        .select("event_type", F.explode(F.sequence("d0", "d1")).alias("d"))
+        .join(daily, ["event_type", "d"], "left")
+        .select("event_type", "d", F.coalesce("y", F.lit(0)).alias("y"))
+    )
+
+
+def _converted() -> Column:
+    """Per-user aggregate: 1 when the user made a purchase over 250, else 0."""
+    return F.max(
+        F.when(
+            (F.col("event_type") == "purchase") & (F.col("value") > 250), 1
+        ).otherwise(0)
+    )
+
+
+def _arm_stratum_users(ev: DataFrame) -> DataFrame:
+    """``(arm, stratum, conv)`` per user: the md5-pinned A/B arm (first
+    hex digit 0-7 is A), the activity stratum (< 62 events low, < 70
+    mid, else high) and the conversion flag."""
+    return (
+        ev.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"), _converted().alias("conv"))
+        .select(
+            F.when(
+                F.substring(
+                    F.md5(F.col("user_id").cast("string").cast("binary")), 1, 1
+                ).isin(*"01234567"),
+                F.lit("A"),
+            )
+            .otherwise(F.lit("B"))
+            .alias("arm"),
+            F.expr(
+                "case when n_events < 62 then 'low'"
+                " when n_events < 70 then 'mid' else 'high' end"
+            ).alias("stratum"),
+            "conv",
+        )
+    )
+
+
+def _activity_scores(ev: DataFrame) -> DataFrame:
+    """``(score, cnt, np)``: users grouped by their event count ``score``,
+    with the number of users and of converted users at each score."""
+    u = ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("score"), _converted().alias("pos")
+    )
+    return u.groupBy("score").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt"),
+        F.sum("pos").cast("bigint").alias("np"),
+    )
 
 
 @query(
@@ -840,27 +931,8 @@ def q_session_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lag + running sum, µs-exact epochs, (ts, event_id) tie-break);
     the pair join runs WITHIN (user, session) — cost bounded by the
     session alphabet (distinct types/session), never corpus-quadratic."""
-    from pyspark.sql import Window
-
     ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id", "event_type", "ts", "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                > 1800000000
-            ),
-            1,
-        ).otherwise(0).alias("new_s"),
-    )
-    sess = seq.select(
-        "user_id", "event_type",
-        F.sum("new_s").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("sid"),
-    )
+    sess = _sessions_30min(ev)
     st = sess.select("user_id", "sid", "event_type").distinct()
     total = st.agg(
         F.countDistinct("user_id", "sid").cast("bigint").alias("total")
@@ -1794,27 +1866,8 @@ def q_session_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, session) partial agg + one path-keyed count — session
     alphabet bounds the path string, never corpus-quadratic; top-20 is
     a TakeOrdered, not a global sort."""
-    from pyspark.sql import Window
-
     ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id", "event_type", "ts", "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                > 1800000000
-            ),
-            1,
-        ).otherwise(0).alias("new_s"),
-    )
-    sess = seq.select(
-        "user_id", "event_type", "ts", "event_id",
-        F.sum("new_s").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("sid"),
-    )
+    sess = _sessions_30min(ev, "ts", "event_id")
     per = sess.groupBy("user_id", "sid").agg(
         F.concat_ws(
             ">",
@@ -2185,24 +2238,7 @@ def q_events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id", "event_type", "ts", "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                > 1800000000
-            ),
-            1,
-        ).otherwise(0).alias("new_s"),
-    )
-    sess = seq.select(
-        "user_id", "event_type", "ts", "event_id",
-        F.sum("new_s").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("sid"),
-    )
+    sess = _sessions_30min(ev, "ts", "event_id")
     ws = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
     pos = sess.select(
         "user_id", "sid", "event_type",
@@ -2415,24 +2451,7 @@ def q_events_sequential_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id", "event_type", "ts", "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                > 1800000000
-            ),
-            1,
-        ).otherwise(0).alias("new_s"),
-    )
-    sess = seq.select(
-        "user_id", "event_type", "ts", "event_id",
-        F.sum("new_s").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("sid"),
-    )
+    sess = _sessions_30min(ev, "ts", "event_id")
     ws = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
     pos = sess.select(
         "user_id", "sid", "event_type", F.row_number().over(ws).alias("pos")
@@ -3852,19 +3871,7 @@ def q_events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     ev = t(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("unix_micros(date_trunc('day', ts)) div 86400000000").alias("d"),
-    ).agg(F.sum(cents).cast("bigint").alias("y"))
-    bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    types = ev.select("event_type").distinct()
-    grid = (
-        types.crossJoin(F.broadcast(bounds))
-        .select("event_type", F.explode(F.sequence("d0", "d1")).alias("d"))
-        .join(daily, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("y", F.lit(0)).alias("y"))
-    )
+    grid = _daily_cents_grid(ev)
 
     def hw(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)
@@ -3992,19 +3999,7 @@ def q_events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = t(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("unix_micros(date_trunc('day', ts)) div 86400000000").alias("d"),
-    ).agg(F.sum(cents).cast("bigint").alias("y"))
-    bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    types = ev.select("event_type").distinct()
-    grid = (
-        types.crossJoin(F.broadcast(bounds))
-        .select("event_type", F.explode(F.sequence("d0", "d1")).alias("d"))
-        .join(daily, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("y", F.lit(0)).alias("y"))
-    )
+    grid = _daily_cents_grid(ev)
     wcum = Window.partitionBy("event_type").orderBy("d")
     dd = (
         grid.withColumn("equity", F.sum("y").over(wcum).cast("bigint"))
@@ -4321,33 +4316,7 @@ def q_simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate OF those six cells (zero extra corpus passes) and the
     agg-direction join broadcasts one row. Four rows out."""
     ev = t(spark, sf_dir, "events")
-    u = (
-        ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 250),
-                    1,
-                ).otherwise(0)
-            ).alias("conv"),
-        )
-        .select(
-            F.when(
-                F.substring(
-                    F.md5(F.col("user_id").cast("string").cast("binary")), 1, 1
-                ).isin(*"01234567"),
-                F.lit("A"),
-            )
-            .otherwise(F.lit("B"))
-            .alias("arm"),
-            F.expr(
-                "case when n_events < 62 then 'low'"
-                " when n_events < 70 then 'mid' else 'high' end"
-            ).alias("stratum"),
-            "conv",
-        )
-    )
+    u = _arm_stratum_users(ev)
     per = u.groupBy("stratum", "arm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("conv").cast("bigint").alias("c"),
@@ -4482,18 +4451,7 @@ def q_classifier_auc_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     for continuous scores swap the per-score table for the D129
     global-ranking machinery. One row out."""
     ev = t(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("score"),
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 250), 1
-            ).otherwise(0)
-        ).alias("pos"),
-    )
-    s = u.groupBy("score").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum("pos").cast("bigint").alias("np"),
-    )
+    s = _activity_scores(ev)
     r = s.withColumn(
         "cum",
         F.expr(
@@ -5343,18 +5301,7 @@ def q_calibration_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same domain-boundedness as D265). One row per distinct
     score."""
     ev = t(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("score"),
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 250), 1
-            ).otherwise(0)
-        ).alias("pos"),
-    )
-    s = u.groupBy("score").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum("pos").cast("bigint").alias("np"),
-    )
+    s = _activity_scores(ev)
     pre = s.select(
         "score", "cnt", "np",
         F.expr("cast(row_number() over (order by score) as bigint)").alias(
@@ -5501,33 +5448,7 @@ def q_abtest_cmh_pooled(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold into conditional sums — narrower than D264's (stratum, arm)
     shuffle); everything after runs on ≤4 rows. Four rows out."""
     ev = t(spark, sf_dir, "events")
-    u = (
-        ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("value") > 250),
-                    1,
-                ).otherwise(0)
-            ).alias("conv"),
-        )
-        .select(
-            F.when(
-                F.substring(
-                    F.md5(F.col("user_id").cast("string").cast("binary")), 1, 1
-                ).isin(*"01234567"),
-                F.lit("A"),
-            )
-            .otherwise(F.lit("B"))
-            .alias("arm"),
-            F.expr(
-                "case when n_events < 62 then 'low'"
-                " when n_events < 70 then 'mid' else 'high' end"
-            ).alias("stratum"),
-            "conv",
-        )
-    )
+    u = _arm_stratum_users(ev)
     cell = u.groupBy("stratum").agg(
         F.expr("cast(sum(case when arm = 'A' then conv else 0 end) as bigint)")
         .alias("a"),

@@ -1570,36 +1570,12 @@ def _width_ladder_oracle(
     """
 
 
-@query("lsh_width_ladder", _width_ladder_oracle(0.3, 16, (8, 12, 16), 64))
-def q_lsh_width_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall-vs-cost CURVE for the sign-LSH width ladder (D221) — the
-    audit that makes the D206 auto-width rule itself a measured,
-    oracle-checked artifact instead of a modeled claim: for bit widths
-    {8, 12, 16} of the SAME 16-table prefix-consistent plane family,
-    the exact candidate-pair count, the exact recall against the
-    ground-truth pair set (every pair with fold-cosine ≥ 0.3 — the
-    fixture's qualifying threshold, deliberately the documented
-    cannot-prune near-orthogonal regime, so the ladder EXHIBITS the
-    recall collapse the SCALE.md physics section derives), and the
-    candidate fraction of all N(N−1)/2 pairs. Widths are prefix-
-    consistent (`rademacher_signs_pc`), so width w's codes are width
-    16's codes masked to w low bits — ONE code computation serves the
-    whole ladder, and the DuckDB twin replays the identical bits by
-    masking its static full-width codes.
-
-    Exactness: the truth set uses the proven fold-cosine pairing
-    (bit-identical ≥-compare on both engines); every other number is
-    an integer count or a truncating ppm. Plan: codes are one
-    Arrow-batched map-side kernel; the ladder needs ONE bucket
-    self-join (at the COARSEST width — finer-width candidacy is
-    decided per matched row by masking the already-joined codes, since
-    low-w′ equality implies low-w equality for w < w′); the truth set
-    pays one exact blocked GEMM + fold verify (`cosine_pairs_gemm`).
-    Scale: the truth set is the audit's quadratic cost — at 100 TB
-    this query runs on a uniform SAMPLE (the curve is a per-pair
-    probability statement, so sampled recall is unbiased); the
-    candidate counts stay exact at any N because they ride the
-    bucketed join."""
+def _width_ladder(spark: SparkSession, sf_dir: str, sampled: bool) -> DataFrame:
+    """The sign-LSH width ladder {8, 12, 16} over the embeddings: exact
+    candidate counts per width and recall against the fold-cosine ≥ 0.3
+    truth set — all vectors, or with ``sampled`` the md5-pinned
+    auto-rate sample (output columns ``n_true_sampled`` and
+    ``n_caught_sampled``)."""
     from mapreduce_project_spark.operators.similarity import (
         cosine_pairs_gemm,
         lsh_codes_exact,
@@ -1607,6 +1583,7 @@ def q_lsh_width_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n_tables, widths, threshold = 16, (8, 12, 16), 0.3
+    suffix = "_sampled" if sampled else ""
     emb = t(spark, sf_dir, "embeddings")
     signs = rademacher_signs_pc(n_tables, max(widths), 64)
     # NOTE (r13): caching this coded table was tried (the Arrow code
@@ -1637,8 +1614,19 @@ def q_lsh_width_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = matched.groupBy("ia", "ib").agg(
         F.max("e12").alias("e12"), F.max("e16").alias("e16")
     )
+    # the sampled ladder's truth set: the auto-rate sample threshold from
+    # one driver-side COUNT — the identical integer formula to the
+    # oracle's w2 CTE; N <= 2048 saturates r at 1 (full corpus, no filter).
+    n_rows = emb.count() if sampled else 0
+    if n_rows <= 2048:
+        samp = emb
+    else:
+        thr = format(min(0xFFFFFFFF, (2048 << 32) // max(1, n_rows)), "08x")
+        samp = emb.filter(
+            F.expr(f"substr(md5(cast(vec_id as string)), 1, 8) < '{thr}'")
+        )
     truth = cosine_pairs_gemm(
-        emb.withColumn("blk", F.lit(0)),
+        samp.withColumn("blk", F.lit(0)),
         "vec_id",
         "embedding",
         threshold,
@@ -1675,14 +1663,47 @@ def q_lsh_width_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ladder.select(
         F.col("s.width").alias("width"),
         F.col("s.nc").alias("n_candidates"),
-        "n_true",
-        F.col("s.nk").alias("n_caught"),
+        F.col("n_true").alias(f"n_true{suffix}"),
+        F.col("s.nk").alias(f"n_caught{suffix}"),
         F.when(F.col("n_true") == 0, F.lit(0))
         .otherwise(F.expr("s.nk * 1000000 div n_true"))
         .cast("bigint")
         .alias("recall_ppm"),
         F.expr("s.nc * 1000000 div np").cast("bigint").alias("cand_ppm"),
     )
+
+
+@query("lsh_width_ladder", _width_ladder_oracle(0.3, 16, (8, 12, 16), 64))
+def q_lsh_width_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall-vs-cost CURVE for the sign-LSH width ladder (D221) — the
+    audit that makes the D206 auto-width rule itself a measured,
+    oracle-checked artifact instead of a modeled claim: for bit widths
+    {8, 12, 16} of the SAME 16-table prefix-consistent plane family,
+    the exact candidate-pair count, the exact recall against the
+    ground-truth pair set (every pair with fold-cosine ≥ 0.3 — the
+    fixture's qualifying threshold, deliberately the documented
+    cannot-prune near-orthogonal regime, so the ladder EXHIBITS the
+    recall collapse the SCALE.md physics section derives), and the
+    candidate fraction of all N(N−1)/2 pairs. Widths are prefix-
+    consistent (`rademacher_signs_pc`), so width w's codes are width
+    16's codes masked to w low bits — ONE code computation serves the
+    whole ladder, and the DuckDB twin replays the identical bits by
+    masking its static full-width codes.
+
+    Exactness: the truth set uses the proven fold-cosine pairing
+    (bit-identical ≥-compare on both engines); every other number is
+    an integer count or a truncating ppm. Plan: codes are one
+    Arrow-batched map-side kernel; the ladder needs ONE bucket
+    self-join (at the COARSEST width — finer-width candidacy is
+    decided per matched row by masking the already-joined codes, since
+    low-w′ equality implies low-w equality for w < w′); the truth set
+    pays one exact blocked GEMM + fold verify (`cosine_pairs_gemm`).
+    Scale: the truth set is the audit's quadratic cost — at 100 TB
+    this query runs on a uniform SAMPLE (the curve is a per-pair
+    probability statement, so sampled recall is unbiased); the
+    candidate counts stay exact at any N because they ride the
+    bucketed join."""
+    return _width_ladder(spark, sf_dir, sampled=False)
 
 
 def _width_ladder_sampled_oracle(
@@ -1796,100 +1817,7 @@ def q_lsh_width_ladder_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     width 8, finer widths by masking the joined codes); the truth GEMM
     runs over the sampled block only. D221 remains registered as the
     exact-truth small-N audit; this twin carries the decade row."""
-    from mapreduce_project_spark.operators.similarity import (
-        cosine_pairs_gemm,
-        lsh_codes_exact,
-        rademacher_signs_pc,
-    )
-
-    n_tables, widths, threshold = 16, (8, 12, 16), 0.3
-    emb = t(spark, sf_dir, "embeddings")
-    signs = rademacher_signs_pc(n_tables, max(widths), 64)
-    # NOTE (r13): caching this coded table was tried (the Arrow code
-    # kernel feeds both sides of the self-join) and measured SLOWER at
-    # bench scale in interleaved A/B reps (+52% min-of-6 on the plain
-    # ladder); the kernel is cheap relative to the cache materialization
-    # barrier it introduces. Left uncached per guide §1.1/§5.
-    coded = lsh_codes_exact(emb, "vec_id", "embedding", signs).select(
-        "id",
-        "table",
-        F.expr(f"code & {(1 << widths[0]) - 1}").alias("c_lo"),
-        "code",
-    )
-    a, b = coded.alias("a"), coded.alias("b")
-    m12 = (1 << widths[1]) - 1
-    matched = a.join(
-        b,
-        (F.col("a.table") == F.col("b.table"))
-        & (F.col("a.c_lo") == F.col("b.c_lo"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("ia"),
-        F.col("b.id").alias("ib"),
-        ((F.col("a.code").bitwiseAND(m12)) == (F.col("b.code").bitwiseAND(m12)))
-        .alias("e12"),
-        (F.col("a.code") == F.col("b.code")).alias("e16"),
-    )
-    flags = matched.groupBy("ia", "ib").agg(
-        F.max("e12").alias("e12"), F.max("e16").alias("e16")
-    )
-    # auto-rate sample threshold from one driver-side COUNT — the
-    # identical integer formula to the oracle's w2 CTE; N <= 2048
-    # saturates r at 1 (full corpus, no filter).
-    n_rows = emb.count()
-    if n_rows <= 2048:
-        samp = emb
-    else:
-        thr = format(min(0xFFFFFFFF, (2048 << 32) // max(1, n_rows)), "08x")
-        samp = emb.filter(
-            F.expr(f"substr(md5(cast(vec_id as string)), 1, 8) < '{thr}'")
-        )
-    truth = cosine_pairs_gemm(
-        samp.withColumn("blk", F.lit(0)),
-        "vec_id",
-        "embedding",
-        threshold,
-        "blk",
-    ).select(F.col("id_a").alias("ia"), F.col("id_b").alias("ib"))
-    caught = truth.join(
-        flags.withColumn("c8", F.lit(True)), ["ia", "ib"], "left"
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_true"),
-        F.sum(F.when(F.col("c8"), 1).otherwise(0)).cast("bigint").alias("k8"),
-        F.sum(F.when(F.col("e12"), 1).otherwise(0)).cast("bigint").alias("k12"),
-        F.sum(F.when(F.col("e16"), 1).otherwise(0)).cast("bigint").alias("k16"),
-    )
-    cands = flags.agg(
-        F.count(F.lit(1)).cast("bigint").alias("c8"),
-        F.sum(F.when(F.col("e12"), 1).otherwise(0)).cast("bigint").alias("c12"),
-        F.sum(F.when(F.col("e16"), 1).otherwise(0)).cast("bigint").alias("c16"),
-    )
-    npairs = emb.agg(
-        F.expr("(count(1) * (count(1) - 1)) div 2").cast("bigint").alias("np")
-    )
-    one = cands.crossJoin(caught).crossJoin(npairs)
-    ladder = one.select(
-        F.explode(
-            F.expr(
-                "array(struct(cast(8 as bigint) as width, c8 as nc, k8 as nk),"
-                " struct(cast(12 as bigint) as width, c12 as nc, k12 as nk),"
-                " struct(cast(16 as bigint) as width, c16 as nc, k16 as nk))"
-            )
-        ).alias("s"),
-        "n_true",
-        "np",
-    )
-    return ladder.select(
-        F.col("s.width").alias("width"),
-        F.col("s.nc").alias("n_candidates"),
-        F.col("n_true").alias("n_true_sampled"),
-        F.col("s.nk").alias("n_caught_sampled"),
-        F.when(F.col("n_true") == 0, F.lit(0))
-        .otherwise(F.expr("s.nk * 1000000 div n_true"))
-        .cast("bigint")
-        .alias("recall_ppm"),
-        F.expr("s.nc * 1000000 div np").cast("bigint").alias("cand_ppm"),
-    )
+    return _width_ladder(spark, sf_dir, sampled=True)
 
 
 def _semantic_recall_cert_oracle(

@@ -31,6 +31,62 @@ from mapreduce_project_spark.operators.text import (
 from mapreduce_project_spark.functions import tokens
 from mapreduce_project_spark.queries_registry import query, t
 
+
+def _tfidf_weights(docs: DataFrame) -> DataFrame:
+    """``(doc_id, term, df, w)``: the integer TF-IDF weight of every word
+    trigram of every document, ``w = tf * (n_docs div df)``, with
+    stop-shingles (``df > max(2, n_docs div 50)``) dropped."""
+    from mapreduce_project_spark.functions import token_ngrams, tokens
+
+    tf = (
+        docs.select(
+            "doc_id", F.explode(token_ngrams(tokens("text"), 3)).alias("term")
+        )
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+    )
+    nd = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+    return (
+        tf.join(dfreq, "term")
+        .crossJoin(F.broadcast(nd))
+        .filter(F.col("df") <= F.greatest(F.lit(2), F.expr("n div 50")))
+        .select(
+            "doc_id",
+            "term",
+            "df",
+            F.expr("tf * (n div df)").cast("bigint").alias("w"),
+        )
+    )
+
+
+def _tfidf_cosine_rows(dots: DataFrame, nrm: DataFrame, name: str) -> DataFrame:
+    """The document pairs of ``dots`` (doc_a, doc_b, dot, shared_terms)
+    whose cosine over the squared norms ``nrm`` (doc_id, nsq) is at least
+    0.6. The cosine is one pinned IEEE expression over exact BIGINTs; the
+    query ``name`` raises once a sum leaves the exact-double range."""
+    na = nrm.select(F.col("doc_id").alias("doc_a"), F.col("nsq").alias("norm_a_sq"))
+    nb = nrm.select(F.col("doc_id").alias("doc_b"), F.col("nsq").alias("norm_b_sq"))
+    # Headroom guard (the CUPED discipline): the pinned IEEE cosine is
+    # bit-exact only while dot/norms are exact as doubles (< 2^53).
+    cos = F.expr(
+        "if(greatest(dot, norm_a_sq, norm_b_sq) < 9007199254740992L, "
+        "cast(dot as double) / (sqrt(cast(norm_a_sq as double))"
+        " * sqrt(cast(norm_b_sq as double))), "
+        f"raise_error('{name}: sums exceed exact-double"
+        " range — rescale idf before trusting cosine'))"
+    )
+    return (
+        dots.join(na, "doc_a")
+        .join(nb, "doc_b")
+        .withColumn("cosine", cos)
+        .filter(F.col("cosine") >= 0.6)
+        .select(
+            "doc_a", "doc_b", "shared_terms", "dot",
+            "norm_a_sq", "norm_b_sq", "cosine",
+        )
+    )
+
 _TOKS = "regexp_extract_all(lower(text), '[a-z]+')"
 
 
@@ -3636,29 +3692,7 @@ def q_text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (template-heavy), the documented scale path is MinHash/sign-LSH
     candidacy (C2/D206) with this operator's exact integer dot as the
     verify stage. Non-vacuous at all three SFs (28/25/140 pairs)."""
-    from mapreduce_project_spark.functions import token_ngrams, tokens
-
-    docs = t(spark, sf_dir, "documents")
-    tf = (
-        docs.select(
-            "doc_id", F.explode(token_ngrams(tokens("text"), 3)).alias("term")
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-    nd = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    w = (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(nd))
-        .filter(F.col("df") <= F.greatest(F.lit(2), F.expr("n div 50")))
-        .select(
-            "doc_id",
-            "term",
-            "df",
-            F.expr("tf * (n div df)").cast("bigint").alias("w"),
-        )
-    )
+    w = _tfidf_weights(t(spark, sf_dir, "documents"))
     nrm = w.groupBy("doc_id").agg(F.expr("sum(w * w)").cast("bigint").alias("nsq"))
     # Shuffle-width discipline (the D109 AllPairs lesson, "hashed
     # shingles end-to-end"): the pair join's fan is Sigma df^2 rows —
@@ -3689,27 +3723,7 @@ def q_text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("shared_terms"),
         )
     )
-    na = nrm.select(F.col("doc_id").alias("doc_a"), F.col("nsq").alias("norm_a_sq"))
-    nb = nrm.select(F.col("doc_id").alias("doc_b"), F.col("nsq").alias("norm_b_sq"))
-    # Headroom guard (the CUPED discipline): the pinned IEEE cosine is
-    # bit-exact only while dot/norms are exact as doubles (< 2^53).
-    cos = F.expr(
-        "if(greatest(dot, norm_a_sq, norm_b_sq) < 9007199254740992L, "
-        "cast(dot as double) / (sqrt(cast(norm_a_sq as double))"
-        " * sqrt(cast(norm_b_sq as double))), "
-        "raise_error('text_tfidf_cosine_pairs: sums exceed exact-double"
-        " range — rescale idf before trusting cosine'))"
-    )
-    return (
-        dots.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= 0.6)
-        .select(
-            "doc_a", "doc_b", "shared_terms", "dot",
-            "norm_a_sq", "norm_b_sq", "cosine",
-        )
-    )
+    return _tfidf_cosine_rows(dots, nrm, "text_tfidf_cosine_pairs")
 
 
 # Pinned MinHash family for the LSH-candidate TF-IDF sibling (D295):
@@ -3849,18 +3863,6 @@ def q_text_tfidf_cosine_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame
     join; capability class per SURVEY §2 D295 (PPJoin D109 + sign-LSH
     D165 composition, Bayardo et al. / Broder banding made Spark- and
     oracle-replayable)."""
-    from mapreduce_project_spark.functions import token_ngrams, tokens
-
-    docs = t(spark, sf_dir, "documents")
-    tf = (
-        docs.select(
-            "doc_id", F.explode(token_ngrams(tokens("text"), 3)).alias("term")
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-    nd = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     # NOTE (r13): caching this weight table for its four consumers
     # (norms, minhash signatures, both dot-join sides) was tried and
     # measured SLOWER in interleaved A/B reps (+42% min-of-6): the
@@ -3878,19 +3880,8 @@ def q_text_tfidf_cosine_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame
     # reuse over identical tf/dfreq subtrees, so the extra
     # materialization barrier only serializes the pipeline. Both
     # materialization strategies measured; item closed permanently.
-    w = (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(nd))
-        .filter(F.col("df") <= F.greatest(F.lit(2), F.expr("n div 50")))
-        .select(
-            "doc_id",
-            "term",
-            F.expr("tf * (n div df)").cast("bigint").alias("w"),
-        )
-    )
-    nrm = w.groupBy("doc_id").agg(
-        F.expr("sum(w * w)").cast("bigint").alias("nsq")
-    )
+    w = _tfidf_weights(t(spark, sf_dir, "documents"))
+    nrm = w.groupBy("doc_id").agg(F.expr("sum(w * w)").cast("bigint").alias("nsq"))
     # 16 minhashes in ONE partial-agg groupBy (no 16x row explosion:
     # the h_k are column expressions over the same (doc, term) row)
     uu = w.select(
@@ -3949,29 +3940,7 @@ def q_text_tfidf_cosine_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame
             F.count(F.lit(1)).cast("bigint").alias("shared_terms"),
         )
     )
-    na = nrm.select(
-        F.col("doc_id").alias("doc_a"), F.col("nsq").alias("norm_a_sq")
-    )
-    nb = nrm.select(
-        F.col("doc_id").alias("doc_b"), F.col("nsq").alias("norm_b_sq")
-    )
-    cos = F.expr(
-        "if(greatest(dot, norm_a_sq, norm_b_sq) < 9007199254740992L, "
-        "cast(dot as double) / (sqrt(cast(norm_a_sq as double))"
-        " * sqrt(cast(norm_b_sq as double))), "
-        "raise_error('text_tfidf_cosine_pairs_lsh: sums exceed exact-double"
-        " range — rescale idf before trusting cosine'))"
-    )
-    return (
-        dots.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= 0.6)
-        .select(
-            "doc_a", "doc_b", "shared_terms", "dot",
-            "norm_a_sq", "norm_b_sq", "cosine",
-        )
-    )
+    return _tfidf_cosine_rows(dots, nrm, "text_tfidf_cosine_pairs_lsh")
 
 
 # DuckDB twin of the ROUGE-2 pass: identical prefix-sort adjacency

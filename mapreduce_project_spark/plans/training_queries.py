@@ -1936,6 +1936,98 @@ def _v8_oracle() -> str:
     """
 
 
+def _kn_readability_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, source, avg_nll_micro, n_words, fkgl_milli)``: the
+    digest-dedup survivors (min doc_id per md5 of the text) joined with
+    their Kneser-Ney score (`text_kn_bigram_score`) and readability
+    (`text_readability_scores`) — the shared head of the v7 and v8
+    flagship compositions."""
+    from pyspark.sql import Window
+
+    from mapreduce_project_spark.plans.text_queries import (
+        q_text_kn_bigram_score,
+        q_text_readability_scores,
+    )
+
+    docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    # digest-dedup survivors as ONE digest-keyed window instead of
+    # groupBy(min) + join-back (same rewrite as `assemble_training_set`:
+    # identical min-doc_id survivor set — doc_id unique — in one
+    # exchange/one scan, and the join on `keep` disappears because the
+    # windowed frame carries source directly).
+    keep_docs = (
+        docs.select(
+            "doc_id", "source", F.md5(F.col("text").cast("binary")).alias("dg")
+        )
+        .withColumn(
+            "_rn", F.row_number().over(Window.partitionBy("dg").orderBy("doc_id"))
+        )
+        .filter(F.col("_rn") == 1)
+        .select("doc_id", "source")
+    )
+    kn = q_text_kn_bigram_score(spark, sf_dir).select("doc_id", "avg_nll_micro")
+    rd = q_text_readability_scores(spark, sf_dir).select(
+        "doc_id", "n_words", "fkgl_milli"
+    )
+    return keep_docs.join(kn, "doc_id").join(rd, "doc_id")
+
+
+def _kn_p90_edge(pool: DataFrame) -> DataFrame:
+    """One row, ``edge_nll``: the pool's p90 Kneser-Ney score, the
+    ``avg_nll_micro`` at rank ceil(0.9 N) = (9N + 9) div 10 by
+    (avg_nll_micro, doc_id)."""
+    from mapreduce_project_spark.operators.windows import global_rank
+
+    ns = pool.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    ranked = global_rank(
+        pool.select("doc_id", "avg_nll_micro"), ["avg_nll_micro", "doc_id"], "rk"
+    )
+    return (
+        ranked.crossJoin(F.broadcast(ns))
+        .filter(F.expr("rk = (9 * n + 9) div 10"))
+        .select(F.col("avg_nll_micro").alias("edge_nll"))
+    )
+
+
+def _curriculum_stages(pool: DataFrame, edge: DataFrame) -> DataFrame:
+    """The pool's rows at or below the KN ``edge``, each with its
+    Flesch-Kincaid curriculum ``stage``: 1 below grade 5, 2 below
+    grade 9, else 3."""
+    return (
+        pool.crossJoin(F.broadcast(edge))
+        .filter(F.col("avg_nll_micro") <= F.col("edge_nll"))
+        .withColumn(
+            "stage",
+            F.expr(
+                "case when fkgl_milli < 5000 then 1"
+                " when fkgl_milli < 9000 then 2 else 3 end"
+            ).cast("bigint"),
+        )
+    )
+
+
+def _release_manifest(kept: DataFrame, pepper: str) -> DataFrame:
+    """Per (stage, source) of the staged docs: doc and token budgets,
+    the truncating sign-safe mean grade, the max KN score and the edge,
+    and the order-independent XOR checksum of the doc ids salted with
+    ``pepper``."""
+    return kept.groupBy("stage", "source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("n_words").cast("bigint").alias("n_tokens"),
+        F.expr(
+            "case when sum(fkgl_milli) >= 0"
+            " then cast(sum(fkgl_milli) div count(*) as bigint)"
+            " else -cast((-sum(fkgl_milli)) div count(*) as bigint) end"
+        ).alias("avg_fkgl_milli"),
+        F.max("avg_nll_micro").cast("bigint").alias("max_nll_micro"),
+        F.first("edge_nll").cast("bigint").alias("edge_nll_micro"),
+        F.expr(
+            f"bit_xor(cast(conv(substr(md5(cast(concat('{pepper}',"
+            " cast(doc_id as string)) as binary)), 1, 15), 16, 10) as bigint))"
+        ).alias("release_checksum"),
+    )
+
+
 @query("assemble_training_set_v8", _v8_oracle())
 def q_assemble_training_set_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP composition, generation 8 — the first CROSS-MODALITY
@@ -1966,34 +2058,6 @@ def q_assemble_training_set_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-keyed partial agg over deduped candidates. The embedding
     payload never shuffles — the gate reduces each vector to a class
     string and one BIGINT norm at the scan."""
-    from mapreduce_project_spark.operators.windows import global_rank
-    from mapreduce_project_spark.plans.text_queries import (
-        q_text_kn_bigram_score,
-        q_text_readability_scores,
-    )
-
-    docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    # digest-dedup survivors as ONE digest-keyed window instead of
-    # groupBy(min) + join-back (same rewrite as `assemble_training_set`:
-    # identical min-doc_id survivor set — doc_id unique — in one
-    # exchange/one scan, and the join on `keep` disappears because the
-    # windowed frame carries source directly).
-    from pyspark.sql import Window as _W
-
-    keep_docs = (
-        docs.select(
-            "doc_id", "source", F.md5(F.col("text").cast("binary")).alias("dg")
-        )
-        .withColumn(
-            "_rn", F.row_number().over(_W.partitionBy("dg").orderBy("doc_id"))
-        )
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "source")
-    )
-    kn = q_text_kn_bigram_score(spark, sf_dir).select("doc_id", "avg_nll_micro")
-    rd = q_text_readability_scores(spark, sf_dir).select(
-        "doc_id", "n_words", "fkgl_milli"
-    )
     # vector gate — the D248 hygiene ladder + fence, reduced to a
     # per-doc pass/invalid/outlier status (expressions cited from
     # q_embedding_hygiene_audit)
@@ -2054,9 +2118,7 @@ def q_assemble_training_set_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncates the plan). All columns are integer/string, so the
     # checkpointed rows are bit-identical to the lazy form.
     cand = (
-        keep_docs
-        .join(kn, "doc_id")
-        .join(rd, "doc_id")
+        _kn_readability_survivors(spark, sf_dir)
         .join(vec, "doc_id", "left")
         .withColumn("vstatus", F.coalesce(F.col("vstatus"), F.lit("missing")))
         .localCheckpoint(eager=True)
@@ -2073,50 +2135,16 @@ def q_assemble_training_set_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_dropped_vec_outlier"),
     )
     passed = cand.filter(F.col("vstatus") == "pass")
-    ns = passed.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    ranked = global_rank(
-        passed.select("doc_id", "avg_nll_micro"), ["avg_nll_micro", "doc_id"], "rk"
-    )
-    edge = (
-        ranked.crossJoin(F.broadcast(ns))
-        .filter(F.expr("rk = (9 * n + 9) div 10"))
-        .select(F.col("avg_nll_micro").alias("edge_nll"))
-    )
+    edge = _kn_p90_edge(passed)
     kndrops = (
         passed.crossJoin(F.broadcast(edge))
         .filter(F.col("avg_nll_micro") > F.col("edge_nll"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_dropped_kn"))
     )
-    kept = (
-        passed.crossJoin(F.broadcast(edge))
-        .filter(F.col("avg_nll_micro") <= F.col("edge_nll"))
-        .withColumn(
-            "stage",
-            F.expr(
-                "case when fkgl_milli < 5000 then 1"
-                " when fkgl_milli < 9000 then 2 else 3 end"
-            ).cast("bigint"),
-        )
-    )
+    kept = _curriculum_stages(passed, edge)
     return (
-        kept.groupBy("stage", "source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_words").cast("bigint").alias("n_tokens"),
-            F.expr(
-                "case when sum(fkgl_milli) >= 0"
-                " then cast(sum(fkgl_milli) div count(*) as bigint)"
-                " else -cast((-sum(fkgl_milli)) div count(*) as bigint) end"
-            ).alias("avg_fkgl_milli"),
-            F.max("avg_nll_micro").cast("bigint").alias("max_nll_micro"),
-            F.first("edge_nll").cast("bigint").alias("edge_nll_micro"),
-            F.expr(
-                "bit_xor(cast(conv(substr(md5(cast(concat('v8:',"
-                " cast(doc_id as string)) as binary)), 1, 15), 16, 10)"
-                " as bigint))"
-            ).alias("release_checksum"),
-        )
+        _release_manifest(kept, "v8:")
         .join(F.broadcast(drops), "source", "left")
         .join(F.broadcast(kndrops), "source", "left")
         .select(
@@ -2172,79 +2200,14 @@ def q_assemble_training_set_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg; the manifest is metadata-scale. Docs with < 2 tokens
     have no bigram stream and are excluded by the KN join — the same
     <=1-token exclusion every LM-scoring member applies."""
-    from mapreduce_project_spark.operators.windows import global_rank
-    from mapreduce_project_spark.plans.text_queries import (
-        q_text_kn_bigram_score,
-        q_text_readability_scores,
-    )
-
-    docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    # digest-dedup survivors as ONE digest-keyed window instead of
-    # groupBy(min) + join-back (same rewrite as `assemble_training_set`:
-    # identical min-doc_id survivor set — doc_id unique — in one
-    # exchange/one scan, and the join on `keep` disappears because the
-    # windowed frame carries source directly).
-    from pyspark.sql import Window as _W
-
-    keep_docs = (
-        docs.select(
-            "doc_id", "source", F.md5(F.col("text").cast("binary")).alias("dg")
-        )
-        .withColumn(
-            "_rn", F.row_number().over(_W.partitionBy("dg").orderBy("doc_id"))
-        )
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "source")
-    )
-    kn = q_text_kn_bigram_score(spark, sf_dir).select("doc_id", "avg_nll_micro")
-    rd = q_text_readability_scores(spark, sf_dir).select(
-        "doc_id", "n_words", "fkgl_milli"
-    )
     # Same composition-boundary materialization as v8: one eager
     # localCheckpoint so the three consumers (ns / ranked / kept) plan
     # against a LogicalRDD leaf instead of re-analyzing the kn+rd
     # composition subtree per action (guide §5 / §3.3).
-    surv = (
-        keep_docs
-        .join(kn, "doc_id")
-        .join(rd, "doc_id")
-        .localCheckpoint(eager=True)
-    )
-    ns = surv.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    ranked = global_rank(
-        surv.select("doc_id", "avg_nll_micro"), ["avg_nll_micro", "doc_id"], "rk"
-    )
-    edge = (
-        ranked.crossJoin(F.broadcast(ns))
-        .filter(F.expr("rk = (9 * n + 9) div 10"))
-        .select(F.col("avg_nll_micro").alias("edge_nll"))
-    )
-    kept = (
-        surv.crossJoin(F.broadcast(edge))
-        .filter(F.col("avg_nll_micro") <= F.col("edge_nll"))
-        .withColumn(
-            "stage",
-            F.expr(
-                "case when fkgl_milli < 5000 then 1"
-                " when fkgl_milli < 9000 then 2 else 3 end"
-            ).cast("bigint"),
-        )
-    )
-    return kept.groupBy("stage", "source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_words").cast("bigint").alias("n_tokens"),
-        F.expr(
-            "case when sum(fkgl_milli) >= 0"
-            " then cast(sum(fkgl_milli) div count(*) as bigint)"
-            " else -cast((-sum(fkgl_milli)) div count(*) as bigint) end"
-        ).alias("avg_fkgl_milli"),
-        F.max("avg_nll_micro").cast("bigint").alias("max_nll_micro"),
-        F.first("edge_nll").cast("bigint").alias("edge_nll_micro"),
-        F.expr(
-            "bit_xor(cast(conv(substr(md5(cast(concat('v7:',"
-            " cast(doc_id as string)) as binary)), 1, 15), 16, 10) as bigint))"
-        ).alias("release_checksum"),
-    )
+    surv = _kn_readability_survivors(spark, sf_dir).localCheckpoint(eager=True)
+    edge = _kn_p90_edge(surv)
+    kept = _curriculum_stages(surv, edge)
+    return _release_manifest(kept, "v7:")
 
 
 # D308 (round 13): preference-PAIR assembly — the reward-model /

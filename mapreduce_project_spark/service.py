@@ -47,6 +47,20 @@ def _paths(state_dir: str) -> tuple[str, str, str]:
     )
 
 
+def run_response(df, limit: int) -> dict:
+    """The ``run`` op's reply: the first ``limit`` rows of ``df`` and its
+    row count ``n``. It collects ``limit + 1`` rows, so a result that fits
+    the limit runs the query once and ``n == len(rows)``; only a longer
+    result runs ``count()`` as well."""
+    rows = [list(r) for r in df.limit(limit + 1).collect()]
+    return {
+        "ok": True,
+        "n": df.count() if len(rows) > limit else len(rows),
+        "columns": df.columns,
+        "rows": json.loads(json.dumps(rows[:limit], default=str)),
+    }
+
+
 def serve(port: int = 0, state_dir: str = DEFAULT_STATE_DIR) -> None:
     """Run the service in-process (the `start` subcommand spawns this in
     a background child). Builds the SparkSession BEFORE advertising the
@@ -86,14 +100,7 @@ def serve(port: int = 0, state_dir: str = DEFAULT_STATE_DIR) -> None:
                 if name not in registry:
                     return {"ok": False, "error": f"unknown query: {name}"}
                 df = registry[name](spark, req.get("sf_dir", "/root/testdata/sf0.001"))
-                limit = int(req.get("limit", 20))
-                rows = [list(r) for r in df.limit(limit).collect()]
-                return {
-                    "ok": True,
-                    "n": df.count(),
-                    "columns": df.columns,
-                    "rows": json.loads(json.dumps(rows, default=str)),
-                }
+                return run_response(df, int(req.get("limit", 20)))
             if op == "shutdown":
                 return {"ok": True, "_shutdown": True}
             return {"ok": False, "error": f"unknown op: {op}"}

@@ -23,9 +23,10 @@ should instead flow through the streaming/text paths.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # The driver's synthetic test tables (TESTDATA.md).
@@ -413,38 +414,18 @@ def merge_partitioned_rollup(
         for alias, src in sum_cols.items()
     ]
     group = [part_col, *key_cols]
-    fresh = batch.groupBy(*group).agg(*aggs)
-    out_cols = [*group, "n_rows", *sum_cols]
-    # First-batch detection must be EXPLICIT: a broad except here would
-    # also swallow schema drift, missing columns, or transient listing
-    # failures, silently treat them as "first batch", and then the
-    # dynamic overwrite would replace touched partitions with the new
-    # batch alone — losing accumulated history (round-2 advisor
-    # finding). Only a genuinely absent rollup may take the fresh path;
-    # every other error propagates.
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(rollup_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        parts = [r[0] for r in batch.select(part_col).distinct().collect()]
-        old = spark.read.parquet(rollup_path).filter(F.col(part_col).isin(parts))
-        merged = (
-            old.select(*out_cols)
-            .unionByName(fresh.select(*out_cols))
-            .groupBy(*group)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                *[
-                    F.sum(a).cast("decimal(18,2)").alias(a)
-                    for a in sum_cols
-                ],
-            )
-        )
-    else:  # first batch: nothing to merge yet
-        merged = fresh
-    with _dynamic_overwrite(spark):
-        merged.select(*out_cols).write.mode("overwrite").partitionBy(
-            part_col
-        ).parquet(rollup_path)
+    _merge_touched_partitions(
+        spark,
+        batch,
+        rollup_path,
+        part_col,
+        batch.groupBy(*group).agg(*aggs),
+        group,
+        [
+            F.sum("n_rows").alias("n_rows"),
+            *[F.sum(a).cast("decimal(18,2)").alias(a) for a in sum_cols],
+        ],
+    )
 
 
 def merge_sketch_rollup(
@@ -479,25 +460,15 @@ def merge_sketch_rollup(
         F.hll_sketch_agg(src, lgk).alias(alias)
         for alias, src in distinct_cols.items()
     ]
-    fresh = batch.groupBy(*group).agg(*aggs)
-    out_cols = [*group, *distinct_cols]
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(rollup_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        parts = [r[0] for r in batch.select(part_col).distinct().collect()]
-        old = spark.read.parquet(rollup_path).filter(F.col(part_col).isin(parts))
-        merged = (
-            old.select(*out_cols)
-            .unionByName(fresh.select(*out_cols))
-            .groupBy(*group)
-            .agg(*[F.hll_union_agg(a, True).alias(a) for a in distinct_cols])
-        )
-    else:  # first batch: nothing to merge yet
-        merged = fresh
-    with _dynamic_overwrite(spark):
-        merged.select(*out_cols).write.mode("overwrite").partitionBy(
-            part_col
-        ).parquet(rollup_path)
+    _merge_touched_partitions(
+        spark,
+        batch,
+        rollup_path,
+        part_col,
+        batch.groupBy(*group).agg(*aggs),
+        group,
+        [F.hll_union_agg(a, True).alias(a) for a in distinct_cols],
+    )
 
 
 def rollup_navigator(
@@ -567,23 +538,11 @@ def apply_changelog(
     moves a row between partitions must be issued as delete+upsert
     with both partitions in the batch — which this handles)."""
     out_cols = [c for c in changes.columns if c != op_col]
-    # validate ops BEFORE any effect: an unrecognized op (e.g. a
+    # validate ops BEFORE any effect: an unrecognized or NULL op (e.g. a
     # producer emitting 'update') would otherwise act as a silent
     # DELETE — its key anti-joins away and nothing re-inserts it
-    bad = (
-        changes.filter(~F.col(op_col).isin("upsert", "delete"))
-        .select(op_col)
-        .distinct()
-        .limit(5)
-        .collect()
-    )
-    if bad:
-        raise ValueError(
-            f"apply_changelog: unknown op values {[r[0] for r in bad]} — "
-            "only 'upsert' and 'delete' are defined"
-        )
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    _check_ops(changes, op_col, ("upsert", "delete"), "apply_changelog")
+    fs, jvm_path = _hadoop_fs(spark, table_path)
     upserts = changes.filter(F.col(op_col) == "upsert").select(*out_cols)
     if fs.exists(jvm_path):
         parts = [r[0] for r in changes.select(part_col).distinct().collect()]
@@ -638,6 +597,112 @@ class _dynamic_overwrite:
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.old)
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` on the session's Hadoop FS."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jvm_path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm_path
+
+
+def _merge_touched_partitions(
+    spark: SparkSession,
+    batch: DataFrame,
+    path: str,
+    part_col: str,
+    fresh: DataFrame,
+    group: list[str],
+    merge_aggs: list[Column],
+) -> None:
+    """Fold ``fresh``, the aggregate of ``batch``, into the table at
+    ``path`` partitioned by ``part_col``: read back ONLY the partitions
+    ``batch`` touches (a driver-side list of partition keys), re-aggregate
+    them with ``fresh`` by ``group`` using ``merge_aggs``, and rewrite
+    only those partitions (dynamic overwrite), so untouched partitions'
+    files are never rewritten. Without a table at ``path`` (the first
+    batch) ``fresh`` is written alone."""
+    out_cols = fresh.columns
+    # First-batch detection must be EXPLICIT: a broad except here would
+    # also swallow schema drift, missing columns, or transient listing
+    # failures, silently treat them as "first batch", and then the
+    # dynamic overwrite would replace touched partitions with the new
+    # batch alone — losing accumulated history. Only a genuinely absent
+    # table may take the fresh path; every other error propagates.
+    merged = fresh
+    fs, jvm_path = _hadoop_fs(spark, path)
+    if fs.exists(jvm_path):
+        parts = [r[0] for r in batch.select(part_col).distinct().collect()]
+        old = spark.read.parquet(path).filter(F.col(part_col).isin(parts))
+        merged = (
+            old.select(*out_cols)
+            .unionByName(fresh)
+            .groupBy(*group)
+            .agg(*merge_aggs)
+        )
+    with _dynamic_overwrite(spark):
+        merged.select(*out_cols).write.mode("overwrite").partitionBy(
+            part_col
+        ).parquet(path)
+
+
+def _check_ops(df: DataFrame, op_col: str, ops: tuple[str, str], who: str) -> None:
+    """Raise ``ValueError`` when ``op_col`` holds a value outside ``ops``,
+    NULL included (``~isin`` alone lets a NULL op through, and every
+    caller would then treat that row as a delete)."""
+    bad = (
+        df.filter(~F.col(op_col).isin(*ops) | F.col(op_col).isNull())
+        .select(op_col).distinct().limit(5).collect()
+    )
+    if bad:
+        raise ValueError(
+            f"{who}: unknown op values {[r[0] for r in bad]} — "
+            f"only '{ops[0]}' and '{ops[1]}'"
+        )
+
+
+def _prior_batches(spark: SparkSession, path: str, batch_id: int) -> DataFrame | None:
+    """The state table at ``path`` without batch ``batch_id``'s partition
+    (``None`` before its first write): the "old" side of the delta rule,
+    so a replayed batch recomputes the identical delta."""
+    fs, jvm_path = _hadoop_fs(spark, path)
+    if not fs.exists(jvm_path):
+        return None
+    return spark.read.parquet(path).filter(F.col("_b") != batch_id).drop("_b")
+
+
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write ``df`` into the ``_b=batch_id`` partition of ``path``; under
+    `_dynamic_overwrite` a replay rewrites only that partition."""
+    df.withColumn("_b", F.lit(batch_id)).write.mode("overwrite").partitionBy(
+        "_b"
+    ).parquet(path)
+
+
+def _write_view_batch(
+    spark: SparkSession,
+    state_dir: str,
+    batch_id: int,
+    a_new: DataFrame | None,
+    a_old: DataFrame | None,
+    b_new: DataFrame | None,
+    b_old: DataFrame | None,
+    join: Callable[[DataFrame, DataFrame], DataFrame],
+) -> None:
+    """Write one batch of a join view: ΔJ = ΔA ⋈ B_old ∪ A_old ⋈ ΔB ∪
+    ΔA ⋈ ΔB (the terms whose sides exist, joined by ``join``) into
+    ``j``, and each side's delta into ``a`` / ``b``."""
+    terms = [
+        join(x, y)
+        for x, y in ((a_new, b_old), (a_old, b_new), (a_new, b_new))
+        if x is not None and y is not None
+    ]
+    with _dynamic_overwrite(spark):
+        if terms:
+            delta_j = functools.reduce(DataFrame.unionByName, terms)
+            _write_batch(delta_j, batch_id, f"{state_dir}/j")
+        for delta, side in ((a_new, "a"), (b_new, "b")):
+            if delta is not None:
+                _write_batch(delta, batch_id, f"{state_dir}/{side}")
 
 
 def write_text_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -696,24 +761,10 @@ def merge_hll_register_rollup(
             ).alias("m")
         )
     )
-    out_cols = [part_col, "reg", "m"]
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(rollup_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jvm_path):
-        parts = [r[0] for r in batch.select(part_col).distinct().collect()]
-        old = spark.read.parquet(rollup_path).filter(F.col(part_col).isin(parts))
-        merged = (
-            old.select(*out_cols)
-            .unionByName(fresh.select(*out_cols))
-            .groupBy(part_col, "reg")
-            .agg(F.max("m").alias("m"))
-        )
-    else:
-        merged = fresh
-    with _dynamic_overwrite(spark):
-        merged.select(*out_cols).write.mode("overwrite").partitionBy(
-            part_col
-        ).parquet(rollup_path)
+    _merge_touched_partitions(
+        spark, batch, rollup_path, part_col, fresh, [part_col, "reg"],
+        [F.max("m").alias("m")],
+    )
 
 
 def merge_join_view(
@@ -753,8 +804,6 @@ def merge_join_view(
     delta path joins exactly those two schemas.
 
     Read the view back with ``spark.read.parquet(state_dir + "/j")``."""
-    a_dir, b_dir, j_dir = (f"{state_dir}/{s}" for s in ("a", "b", "j"))
-
     a_cols = set(a_batch.columns) if a_batch is not None else None
     b_cols = set(b_batch.columns) if b_batch is not None else None
 
@@ -772,41 +821,18 @@ def merge_join_view(
     if "_b" in (a_cols or set()) | (b_cols or set()):
         raise ValueError("merge_join_view reserves the column name '_b'")
 
-    def _old(path: str) -> DataFrame | None:
-        p = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return None
-        return spark.read.parquet(path).filter(F.col("_b") != batch_id).drop("_b")
-
-    a_old = _old(a_dir)
-    b_old = _old(b_dir)
+    a_old = _prior_batches(spark, f"{state_dir}/a", batch_id)
+    b_old = _prior_batches(spark, f"{state_dir}/b", batch_id)
     # Staggered-batch validation: each incoming batch must also be
     # disjoint from the OTHER side's persisted schema, or the
     # batch ⋈ old delta below produces the duplicate-column writer
     # failure the up-front check exists to prevent.
     _check_disjoint(a_cols, set(b_old.columns) if b_old is not None else None)
     _check_disjoint(set(a_old.columns) if a_old is not None else None, b_cols)
-    parts = []
-    if a_batch is not None and b_old is not None:
-        parts.append(a_batch.join(b_old, a_batch[a_key] == b_old[b_key]))
-    if a_old is not None and b_batch is not None:
-        parts.append(a_old.join(b_batch, a_old[a_key] == b_batch[b_key]))
-    if a_batch is not None and b_batch is not None:
-        parts.append(a_batch.join(b_batch, a_batch[a_key] == b_batch[b_key]))
-    with _dynamic_overwrite(spark):
-        if parts:
-            dj = parts[0]
-            for p in parts[1:]:
-                dj = dj.unionByName(p)
-            dj.withColumn("_b", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).partitionBy("_b").parquet(j_dir)
-        for batch, path in ((a_batch, a_dir), (b_batch, b_dir)):
-            if batch is not None:
-                batch.withColumn("_b", F.lit(batch_id)).write.mode(
-                    "overwrite"
-                ).partitionBy("_b").parquet(path)
+    _write_view_batch(
+        spark, state_dir, batch_id, a_batch, a_old, b_batch, b_old,
+        lambda x, y: x.join(y, x[a_key] == y[b_key]),
+    )
 
 
 def merge_join_view_delta(
@@ -848,26 +874,11 @@ def merge_join_view_delta(
     suppresses. Column-name constraints are D191's (disjoint sides,
     '_b' and '_m' reserved). Scale: |Δ|·selectivity per batch, never
     |A|·|B|; reading the view pays one keyed aggregate over net rows."""
-    a_dir, b_dir, j_dir = (f"{state_dir}/{s}" for s in ("a", "b", "j"))
 
     def _signed(batch: DataFrame | None) -> DataFrame | None:
         if batch is None:
             return None
-        # ADVICE r12: ~isin() is NULL-evading (NULL op rows fall out of the
-        # filter, then .otherwise(-1) silently treats them as deletes) —
-        # include NULL explicitly so unknown AND missing ops both raise.
-        bad = (
-            batch.filter(
-                ~F.col(op_col).isin("insert", "delete")
-                | F.col(op_col).isNull()
-            )
-            .select(op_col).distinct().limit(5).collect()
-        )
-        if bad:
-            raise ValueError(
-                f"merge_join_view_delta: unknown op values "
-                f"{[r[0] for r in bad]} — only 'insert' and 'delete'"
-            )
+        _check_ops(batch, op_col, ("insert", "delete"), "merge_join_view_delta")
         return batch.withColumn(
             "_m",
             F.when(F.col(op_col) == "insert", F.lit(1)).otherwise(F.lit(-1))
@@ -888,46 +899,21 @@ def merge_join_view_delta(
                 "merge_join_view_delta reserves the columns '_b' and '_m'"
             )
 
-    def _old(path: str) -> DataFrame | None:
-        p = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return None
-        return spark.read.parquet(path).filter(
-            F.col("_b") != batch_id
-        ).drop("_b")
-
-    a_old, b_old = _old(a_dir), _old(b_dir)
-
-    def _term(x: DataFrame, y: DataFrame, xk: str, yk: str) -> DataFrame:
+    def _term(x: DataFrame, y: DataFrame) -> DataFrame:
         xx = x.withColumnRenamed("_m", "_ma")
         yy = y.withColumnRenamed("_m", "_mb")
         return (
-            xx.join(yy, xx[xk] == yy[yk])
+            xx.join(yy, xx[a_key] == yy[b_key])
             .withColumn("_m", (F.col("_ma") * F.col("_mb")).cast("bigint"))
             .drop("_ma", "_mb")
         )
 
-    parts = []
-    if a_s is not None and b_old is not None:
-        parts.append(_term(a_s, b_old, a_key, b_key))
-    if a_old is not None and b_s is not None:
-        parts.append(_term(a_old, b_s, a_key, b_key))
-    if a_s is not None and b_s is not None:
-        parts.append(_term(a_s, b_s, a_key, b_key))
-    with _dynamic_overwrite(spark):
-        if parts:
-            dj = parts[0]
-            for p in parts[1:]:
-                dj = dj.unionByName(p)
-            dj.withColumn("_b", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).partitionBy("_b").parquet(j_dir)
-        for batch, path in ((a_s, a_dir), (b_s, b_dir)):
-            if batch is not None:
-                batch.withColumn("_b", F.lit(batch_id)).write.mode(
-                    "overwrite"
-                ).partitionBy("_b").parquet(path)
+    _write_view_batch(
+        spark, state_dir, batch_id,
+        a_s, _prior_batches(spark, f"{state_dir}/a", batch_id),
+        b_s, _prior_batches(spark, f"{state_dir}/b", batch_id),
+        _term,
+    )
 
 
 def merge_edge_view_delta(
@@ -955,19 +941,7 @@ def merge_edge_view_delta(
     leave net-negative rows the reader suppresses (D299 contract).
     Scale: each batch writes |Δ| rows, the view read is ONE keyed
     partial-agg over net rows — never a rebuild of the edge list."""
-    # NULL ops must raise like unknown ones (~isin is NULL-evading —
-    # the round-12 advice lesson, same guard as merge_join_view_delta)
-    bad = (
-        edges.filter(
-            ~F.col(op_col).isin("insert", "delete") | F.col(op_col).isNull()
-        )
-        .select(op_col).distinct().limit(5).collect()
-    )
-    if bad:
-        raise ValueError(
-            f"merge_edge_view_delta: unknown op values "
-            f"{[r[0] for r in bad]} — only 'insert' and 'delete'"
-        )
+    _check_ops(edges, op_col, ("insert", "delete"), "merge_edge_view_delta")
     signed = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -977,9 +951,7 @@ def merge_edge_view_delta(
         .alias("_m"),
     )
     with _dynamic_overwrite(spark):
-        signed.withColumn("_b", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).partitionBy("_b").parquet(f"{state_dir}/e")
+        _write_batch(signed, batch_id, f"{state_dir}/e")
 
 
 def read_edge_view(spark: SparkSession, state_dir: str) -> DataFrame:

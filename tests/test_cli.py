@@ -175,3 +175,38 @@ def test_service_concurrent_submissions(tmp_path):
         assert results["t1"]["n"] > 0 and results["t2"]["n"] > 0
     finally:
         assert main(["stop", "--state-dir", state]) == 0
+
+
+class _CountingFrame:
+    """DataFrame stand-in over ``n`` one-column rows; records each action."""
+
+    columns = ["x"]
+
+    def __init__(self, n, actions, taken=None):
+        self.n, self.actions, self.taken = n, actions, taken
+
+    def limit(self, k):
+        return _CountingFrame(self.n, self.actions, k)
+
+    def collect(self):
+        self.actions.append("collect")
+        return [(i,) for i in range(min(self.n, self.taken))]
+
+    def count(self):
+        self.actions.append("count")
+        return self.n
+
+
+@pytest.mark.parametrize(
+    ("n", "actions"), [(3, ["collect"]), (5, ["collect"]), (9, ["collect", "count"])]
+)
+def test_service_run_counts_only_a_result_past_the_limit(n, actions):
+    # a result that fits the limit runs the query once; n == len(rows)
+    from mapreduce_project_spark.service import run_response
+
+    done = []
+    resp = run_response(_CountingFrame(n, done), 5)
+    assert done == actions
+    assert resp == {
+        "ok": True, "n": n, "columns": ["x"], "rows": [[i] for i in range(min(n, 5))]
+    }

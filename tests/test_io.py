@@ -689,13 +689,14 @@ def test_apply_changelog_rejects_unknown_ops(spark, tmp_path):
         spark, path, base.selectExpr("id", "day", "v", "'upsert' AS op"),
         ["id"], "day",
     )
-    # a typo'd op must fail loudly BEFORE any effect, not silently
-    # delete the key
-    bad = spark.createDataFrame(
-        [(1, "d1", "a2", "update")], "id long, day string, v string, op string"
-    )
-    with _p.raises(ValueError, match="unknown op"):
-        apply_changelog(spark, path, bad, ["id"], "day")
+    # a typo'd or missing op must fail loudly BEFORE any effect, not
+    # silently delete the key
+    for op in ("update", None):
+        bad = spark.createDataFrame(
+            [(1, "d1", "a2", op)], "id long, day string, v string, op string"
+        )
+        with _p.raises(ValueError, match="unknown op"):
+            apply_changelog(spark, path, bad, ["id"], "day")
     assert {r["id"] for r in spark.read.parquet(path).collect()} == {1}
 
 

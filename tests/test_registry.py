@@ -3,7 +3,8 @@
 The driver records its correctness rows in registry order, so the
 declared slate must be exactly `DECLARED`, in order, and every other
 registered query must stay reachable through `EXTRA_*` and `ALL_*`.
-No name, registered or module-level, may be defined twice.
+No name, registered or module-level, may be defined twice, and no
+block of engine code may be pasted twice.
 """
 
 from __future__ import annotations
@@ -11,10 +12,12 @@ from __future__ import annotations
 import ast
 import collections
 import glob
+import io
 import json
 import os
 import subprocess
 import sys
+import tokenize
 
 import pytest
 
@@ -84,3 +87,63 @@ def test_no_module_defines_a_top_level_name_twice():
         if twice:
             dupes[os.path.relpath(path, ROOT)] = twice
     assert dupes == {}
+
+
+CLONE_LINES = 12
+
+
+def _code_lines(path: str) -> list[tuple[int, str, str]]:
+    """``(line number, whitespace-normalised text, top-level def)`` of every
+    code line of ``path``: no blank or comment lines, no multi-line string
+    literals, and nothing inside a def or assignment whose name contains
+    ``oracle`` (the DuckDB reference SQL mirrors the plans on purpose)."""
+    with open(path, encoding="utf-8") as fh:
+        src = fh.read()
+    skip, owner = set(), {}
+    for node in ast.walk(ast.parse(src, path)):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            names = [node.name]
+            for ln in range(node.lineno, node.end_lineno + 1):
+                owner.setdefault(ln, node.name)  # breadth-first: outermost wins
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+        else:
+            continue
+        if any("oracle" in n.lower() for n in names):
+            skip.update(range(node.lineno, node.end_lineno + 1))
+    text = collections.defaultdict(list)
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type in (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
+                        tokenize.DEDENT, tokenize.ENDMARKER):
+            continue
+        if tok.type == tokenize.STRING and tok.start[0] != tok.end[0]:
+            continue
+        text[tok.start[0]].append(tok.string)
+    return [(ln, " ".join(toks), owner.get(ln, "<module>"))
+            for ln, toks in sorted(text.items()) if ln not in skip]
+
+
+def test_no_block_of_engine_code_is_pasted_twice():
+    # a sub-plan pasted into several queries drifts apart copy by copy
+    # (the op check of `sources/io.py`, whose one copy without a NULL
+    # guard deleted rows); a shared function is written once
+    sites = collections.defaultdict(list)
+    for path in sorted(glob.glob(os.path.join(ROOT, "mapreduce_project_spark", "**", "*.py"),
+                                 recursive=True)):
+        rel = os.path.relpath(path, ROOT)
+        lines = _code_lines(path)
+        for i in range(len(lines) - CLONE_LINES + 1):
+            block = tuple(text for _, text, _ in lines[i:i + CLONE_LINES])
+            sites[block].append((f"{rel}::{lines[i][2]}", lines[i][0]))
+    families = collections.defaultdict(dict)
+    for where in sites.values():
+        if len(where) > 1:
+            family = families[" = ".join(sorted({name for name, _ in where}))]
+            for name, ln in where:
+                family[name] = min(ln, family.get(name, ln))
+    copies = sorted(
+        " = ".join(f"{name} (line {ln})" for name, ln in sorted(family.items()))
+        for family in families.values()
+    )
+    assert not copies, f"{CLONE_LINES}-line blocks written twice:\n" + "\n".join(copies)
