@@ -213,9 +213,10 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             return 2
         df = ALL[args.query](spark, args.sf_dir)
         if args.explain:
-            # the plan-review loop (PLANS.md / tests/test_plans.py) as a
-            # one-liner: inspect pushdown/broadcast/agg shapes without
-            # the final action; build-time jobs (eager localCheckpoint
+            # the plan-review loop (scripts/dump_query_plan.py /
+            # tests/test_plans.py) as a one-liner: inspect
+            # pushdown/broadcast/agg shapes without the final action;
+            # build-time jobs (eager localCheckpoint
             # in the v7/v8 compositions and the iterative graph plans)
             # have already run when the plan prints
             from mapreduce_project_spark.plans.inspect import formatted_plan

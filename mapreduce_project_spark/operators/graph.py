@@ -32,6 +32,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _PR_SCALE = 10**12
+# `pagerank_fixed` cuts the rank lineage (cache + count, then the
+# predecessor unpersisted) every this many rounds rather than every
+# round. PageRank's lineage is LINEAR (each round reads the previous
+# once), so per-round materialization buys nothing but per-job scheduler
+# overhead (measured ~35% of warm runtime at bench scale); the interval
+# bounds recovery/replan cost on task failure, the standard
+# checkpoint-interval trade in iterative Spark jobs. Values are
+# identical for any interval.
+_PR_MATERIALIZE_EVERY = 4
 
 
 def symmetrize(
@@ -171,7 +180,6 @@ def pagerank_fixed(
     damping_pct: int = 85,
     src: str = "src",
     dst: str = "dst",
-    materialize_every: int = 4,
 ) -> DataFrame:
     """(node, rank_fx, rank) after ``n_iter`` damped PageRank rounds
     over a directed edge list in which EVERY source has out-degree ≥ 1
@@ -184,16 +192,9 @@ def pagerank_fixed(
     division drops sub-unit remainders — that loss is part of the
     deterministic spec, bounded by 1 unit (10^-12) per edge per round.
 
-    ``materialize_every``: rank lineage is cut (cache + count, then the
-    predecessor unpersisted) every K rounds rather than every round —
-    PageRank's lineage is LINEAR (each round reads the previous once),
-    so per-round materialization buys nothing but per-job scheduler
-    overhead (measured ~35% of warm runtime at bench scale); what the
-    interval bounds is recovery/replan cost on task failure, the
-    standard checkpoint-interval trade in iterative Spark jobs. The
+    Rank lineage is cut every ``_PR_MATERIALIZE_EVERY`` rounds. The
     returned frame is always materialized, so results never depend on
-    the unpersisted edge/degree caches. Values are identical for any
-    interval.
+    the unpersisted edge/degree caches.
     """
     # The edge list is consumed once per round plus once for degrees;
     # without caching, an expensive upstream (e.g. the orders⋈lineitem
@@ -249,7 +250,7 @@ def pagerank_fixed(
                 ).alias("fx"),
             )
         )
-        if (i + 1) % materialize_every == 0 and i + 1 < n_iter:
+        if (i + 1) % _PR_MATERIALIZE_EVERY == 0 and i + 1 < n_iter:
             ranks = ranks.cache()
             ranks.count()
             if live is not None:

@@ -177,30 +177,27 @@ def ewma_fixed(
     return prepped.repartition(key_col).mapInPandas(smooth, out_schema)
 
 
-def global_rank(
-    df: DataFrame, order_cols: list[str], rank_col: str = "rank"
-) -> DataFrame:
-    """EXACT global row rank over a total order — without the
-    single-task trap of ``Window.orderBy`` with no partition key (the
-    one window shape this module's header forbids at scale).
+def _partition_scan(df, order_cols, out_col, part_agg, fold, scan):
+    """The distributed total-order scan shared by `global_rank`,
+    `global_prefix_sum` and `global_prefix_max`, free of the single-task
+    trap of ``Window.orderBy`` with no partition key (the one window
+    shape this module's header forbids at scale).
 
-    The classic distributed total-order construction: range-partition
-    on the order columns, sort within partitions, then
-    ``global = partition_offset + local_position`` where the offsets
-    are the exclusive prefix sums of per-partition counts — a
-    metadata-scale driver collect (one count per partition, the same
-    license as `pagerank_fixed`'s scalar). The rank values are exact
-    and deterministic for any partitioning, because the offsets adapt
-    to wherever the (sampled) range boundaries fall; ``order_cols``
-    must be a unique total order (include a tie-breaker id).
+    Range-partition on ``order_cols``, sort within partitions, tag each
+    row with its partition id ``_pid`` and cache. One ``part_agg`` value
+    per partition is collected — a metadata-scale driver collect, the
+    same license as `pagerank_fixed`'s scalar — and ``fold`` turns the
+    ``{pid: agg}`` map into each partition's carry-in. One Arrow-batched
+    ``mapInPandas`` pass then runs ``scan(pdf, carry)`` over each
+    partition's batches in order: it writes ``out_col`` into a copy of
+    the batch and returns the carry for the next batch. There is no
+    second shuffle (a window keyed on ``_pid`` would re-shuffle). The
+    results are exact for any partitioning, because the carries adapt
+    to wherever the sampled range boundaries fall; ``order_cols`` must
+    be a unique total order (include a tie-breaker id).
 
-    Per-partition positions are assigned by one Arrow-batched
-    ``mapInPandas`` pass with a counter carried across batches —
-    no second shuffle (a window keyed on partition id would re-shuffle
-    by pid). Output: input columns + ``rank_col`` (1-based BIGINT).
+    Output: input columns + ``out_col`` (BIGINT).
     """
-    import pandas as pd
-
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     rp = (
         df.repartitionByRange(n_parts, *order_cols)
@@ -208,32 +205,60 @@ def global_rank(
         .withColumn("_pid", F.spark_partition_id())
     )
     rp = rp.cache()
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in rp.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    aggs = {
+        r["_pid"]: r["a"]
+        for r in rp.groupBy("_pid").agg(part_agg.alias("a")).collect()
     }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    carry_in = fold(aggs)
 
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in rp.schema.fields
-    ) + f", {rank_col} long"
+    ) + f", {out_col} long"
 
-    def number(batches):
-        pos = 0
-        base = None
+    def scan_batches(batches):
+        started, carry = False, None
         for pdf in batches:
-            if base is None and len(pdf):
-                base = offsets[int(pdf["_pid"].iloc[0])]
+            if not len(pdf):
+                continue
+            if not started:
+                started, carry = True, carry_in.get(int(pdf["_pid"].iloc[0]))
             pdf = pdf.copy()
-            pdf[rank_col] = pd.RangeIndex(pos + 1, pos + 1 + len(pdf)) + (base or 0)
-            pos += len(pdf)
+            carry = scan(pdf, carry)
             yield pdf
 
-    return rp.mapInPandas(number, out_schema).drop("_pid")
+    return rp.mapInPandas(scan_batches, out_schema).drop("_pid")
+
+
+def _exclusive_sums(aggs: dict) -> dict:
+    """Each partition's carry-in: the sum over every EARLIER partition."""
+    offsets: dict[int, int] = {}
+    acc = 0
+    for pid in sorted(aggs):
+        offsets[pid] = acc
+        acc += int(aggs[pid])
+    return offsets
+
+
+def global_rank(
+    df: DataFrame, order_cols: list[str], rank_col: str = "rank"
+) -> DataFrame:
+    """EXACT global row rank over a total order: the classic
+    distributed construction ``global = partition_offset +
+    local_position``, where the offsets are the exclusive prefix sums
+    of per-partition counts (see `_partition_scan`). ``order_cols``
+    must be a unique total order (include a tie-breaker id).
+
+    Output: input columns + ``rank_col`` (1-based BIGINT).
+    """
+    import pandas as pd
+
+    def number(pdf, base):
+        pdf[rank_col] = pd.RangeIndex(base + 1, base + 1 + len(pdf))
+        return base + len(pdf)
+
+    return _partition_scan(
+        df, order_cols, rank_col, F.count(F.lit(1)), _exclusive_sums, number
+    )
 
 
 def global_prefix_sum(
@@ -243,55 +268,23 @@ def global_prefix_sum(
     out_col: str = "prefix_sum",
 ) -> DataFrame:
     """EXACT inclusive running sum of ``value_col`` over a global total
-    order — the prefix-sum sibling of `global_rank`, avoiding the same
-    single-task ``Window.orderBy`` trap: range-partition on the order
-    columns, per-partition local cumsum in one Arrow pass, and add the
-    exclusive prefix of PER-PARTITION TOTALS (a metadata-scale driver
-    collect — one BIGINT per partition). ``value_col`` must be integral
-    (BIGINT-safe); ``order_cols`` must be a unique total order.
+    order — the prefix-sum sibling of `global_rank`: a per-partition
+    local cumsum plus the exclusive prefix of PER-PARTITION TOTALS (see
+    `_partition_scan`). ``value_col`` must be integral (BIGINT-safe);
+    ``order_cols`` must be a unique total order.
 
     Output: input columns + ``out_col`` (BIGINT). Reference semantics:
     SUM(value) OVER (ORDER BY order_cols ROWS UNBOUNDED PRECEDING)."""
-    import pandas as pd
 
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    rp = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
+    def accumulate(pdf, run):
+        cs = pdf[value_col].astype("int64").cumsum() + run
+        pdf[out_col] = cs
+        return int(cs.iloc[-1])
+
+    return _partition_scan(
+        df, order_cols, out_col,
+        F.coalesce(F.sum(value_col), F.lit(0)), _exclusive_sums, accumulate,
     )
-    rp = rp.cache()
-    sums = {
-        r["_pid"]: int(r["s"])
-        for r in rp.groupBy("_pid")
-        .agg(F.coalesce(F.sum(value_col), F.lit(0)).alias("s"))
-        .collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(sums):
-        offsets[pid] = acc
-        acc += sums[pid]
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in rp.schema.fields
-    ) + f", {out_col} long"
-
-    def accumulate(batches):
-        run = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if run is None:
-                run = offsets[int(pdf["_pid"].iloc[0])]
-            vals = pdf[value_col].astype("int64")
-            cs = vals.cumsum() + run
-            run = int(cs.iloc[-1])
-            pdf = pdf.copy()
-            pdf[out_col] = cs
-            yield pdf
-
-    return rp.mapInPandas(accumulate, out_schema).drop("_pid")
 
 
 def global_prefix_max(
@@ -301,66 +294,41 @@ def global_prefix_max(
     out_col: str = "prefix_max",
 ) -> DataFrame:
     """EXACT inclusive running MAX of ``value_col`` over a global total
-    order — the max sibling of `global_prefix_sum`, same single-task-
-    window avoidance: range-partition on the order columns, per-
-    partition local cummax in one Arrow pass, then fold in the max of
-    every EARLIER partition's total (a metadata-scale driver collect —
-    one BIGINT per partition). ``value_col`` must be integral;
-    ``order_cols`` must be a unique total order.
+    order — the max sibling of `global_prefix_sum`: a per-partition
+    local cummax, then the max of every EARLIER partition's total folded
+    in (see `_partition_scan`). ``value_col`` must be integral and
+    non-NULL; ``order_cols`` must be a unique total order.
 
     Output: input columns + ``out_col`` (BIGINT). Reference semantics:
     MAX(value) OVER (ORDER BY order_cols ROWS UNBOUNDED PRECEDING)."""
-    import pandas as pd  # noqa: F401
 
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    rp = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    rp = rp.cache()
-    maxes = {
-        r["_pid"]: int(r["m"])
-        for r in rp.groupBy("_pid")
-        .agg(F.max(value_col).alias("m"))
-        .collect()
-        if r["m"] is not None
-    }
-    offsets: dict[int, int] = {}
-    acc = None
-    for pid in sorted(maxes):
-        offsets[pid] = acc
-        acc = maxes[pid] if acc is None else max(acc, maxes[pid])
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in rp.schema.fields
-    ) + f", {out_col} long"
-
-    def accumulate(batches):
-        run = None
-        for pdf in batches:
-            if not len(pdf):
+    def earlier_max(maxes):
+        offsets: dict[int, int | None] = {}
+        acc = None
+        for pid in sorted(maxes):
+            if maxes[pid] is None:  # an all-NULL partition
                 continue
-            # contract check BEFORE the int64 cast: nulls would
-            # otherwise surface as an obscure pandas astype error
-            # (ADVICE r10); the sum sibling tolerates nulls-as-0 but a
-            # running max has no principled null fill
-            if pdf[value_col].isna().any():
-                raise ValueError(
-                    f"global_prefix_max: {value_col!r} contains NULL —"
-                    " the running max is undefined over nulls; filter"
-                    " or coalesce upstream"
-                )
-            pid = int(pdf["_pid"].iloc[0])
-            if run is None:
-                run = offsets.get(pid)
-            vals = pdf[value_col].astype("int64")
-            cm = vals.cummax()
-            if run is not None:
-                cm = cm.clip(lower=run)
-            pdf = pdf.copy()
-            pdf[out_col] = cm
-            run = int(cm.iloc[-1])
-            yield pdf
+            offsets[pid] = acc
+            acc = int(maxes[pid]) if acc is None else max(acc, int(maxes[pid]))
+        return offsets
 
-    return rp.mapInPandas(accumulate, out_schema).drop("_pid")
+    def accumulate(pdf, run):
+        # contract check BEFORE the int64 cast: nulls would otherwise
+        # surface as an obscure pandas astype error; the sum sibling
+        # tolerates nulls-as-0 but a running max has no principled
+        # null fill
+        if pdf[value_col].isna().any():
+            raise ValueError(
+                f"global_prefix_max: {value_col!r} contains NULL —"
+                " the running max is undefined over nulls; filter"
+                " or coalesce upstream"
+            )
+        cm = pdf[value_col].astype("int64").cummax()
+        if run is not None:
+            cm = cm.clip(lower=run)
+        pdf[out_col] = cm
+        return int(cm.iloc[-1])
+
+    return _partition_scan(
+        df, order_cols, out_col, F.max(value_col), earlier_max, accumulate
+    )

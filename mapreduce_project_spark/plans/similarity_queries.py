@@ -883,8 +883,6 @@ def q_search_reciprocal_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     accept). Queries with no relevant neighbor in the top-20 drop out
     (standard MRR@k convention). The evaluation harness every
     retrieval/embedding pipeline runs after index changes."""
-    from pyspark.sql import Window
-
     from mapreduce_project_spark.operators.similarity import topk_bruteforce
 
     emb = t(spark, sf_dir, "embeddings")
@@ -946,8 +944,6 @@ def q_search_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact division per query (per-query decomposition again — no
     order-dependent float mean). Together the pair is the standard
     embedding-eval readout after any index or encoder change."""
-    from pyspark.sql import Window
-
     from mapreduce_project_spark.operators.similarity import topk_bruteforce
 
     emb = t(spark, sf_dir, "embeddings")
@@ -2378,8 +2374,6 @@ def q_search_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries broadcast against the corpus scan (the C3 serving shape),
     one per-query top-k, one label-count broadcast join; the gain
     arithmetic is per-row expressions. One row per query vector."""
-    from pyspark.sql import Window  # noqa: F401  (scaffold parity)
-
     from mapreduce_project_spark.operators.similarity import topk_bruteforce
 
     emb = t(spark, sf_dir, "embeddings")

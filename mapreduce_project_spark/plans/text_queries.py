@@ -4180,8 +4180,6 @@ def q_stylometry_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grid join (20 rows per doc, linear), two exact grouped medians
     (metadata-scale groups: 20 words), one (source, word) partial agg.
     Output 20 sources × 20 words."""
-    from pyspark.sql import Window
-
     docs = t(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "source", F.explode(tokens("text")).alias("w")

@@ -51,14 +51,18 @@ def run_response(df, limit: int) -> dict:
     """The ``run`` op's reply: the first ``limit`` rows of ``df`` and its
     row count ``n``. It collects ``limit + 1`` rows, so a result that fits
     the limit runs the query once and ``n == len(rows)``; only a longer
-    result runs ``count()`` as well."""
-    rows = [list(r) for r in df.limit(limit + 1).collect()]
-    return {
-        "ok": True,
-        "n": df.count() if len(rows) > limit else len(rows),
-        "columns": df.columns,
-        "rows": json.loads(json.dumps(rows[:limit], default=str)),
-    }
+    result runs ``count()`` as well. The session cache is cleared
+    afterwards, so the resident session keeps no request's data."""
+    try:
+        rows = [list(r) for r in df.limit(limit + 1).collect()]
+        return {
+            "ok": True,
+            "n": df.count() if len(rows) > limit else len(rows),
+            "columns": df.columns,
+            "rows": json.loads(json.dumps(rows[:limit], default=str)),
+        }
+    finally:
+        df.sparkSession.catalog.clearCache()
 
 
 def serve(port: int = 0, state_dir: str = DEFAULT_STATE_DIR) -> None:

@@ -4,6 +4,9 @@ driver's oracle setup), and the differential comparison helper.
 
 The comparison reproduces the driver contract: sort columns by name,
 compare row count, column names, and an order-insensitive value hash.
+
+The `_write*` helpers plant hand-built rows as the tables of an sf_dir
+under a test's `tmp_path`, so a query can run on exactly those rows.
 """
 
 from __future__ import annotations
@@ -107,3 +110,29 @@ def assert_matches_oracle(spark_df, duck_con, sql, approx_cols=(), allow_empty=F
     msg = oracle_mismatch(spark_df.toPandas(), duck_con.sql(sql).df(), allow_empty)
     if msg is not None:
         raise AssertionError(msg)
+
+
+EVENTS_SCHEMA = "event_id bigint, ts string, user_id bigint, event_type string, value double"
+
+
+def _write(spark, tmp_path, name, schema, rows):
+    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
+        str(tmp_path / f"{name}.parquet")
+    )
+
+
+def _write_docs(spark, tmp_path, rows):
+    _write(
+        spark, tmp_path, "documents",
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+        rows,
+    )
+
+
+def _write_events(spark, tmp_path, rows, schema=EVENTS_SCHEMA):
+    """`ts` may be planted as a string; it is cast to timestamp."""
+    from pyspark.sql import functions as F
+
+    spark.createDataFrame(rows, schema).withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))

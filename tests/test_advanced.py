@@ -1,10 +1,12 @@
 """Advanced operators: as-of join semantics on a hand-built frame,
-IVF ANN recall, multi-level aggregation oracle diffs, and set ops."""
+IVF ANN recall, multi-level aggregation oracle diffs, set ops, and the
+global rank / prefix scans over range partitions."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.join import asof_join
@@ -663,3 +665,68 @@ def test_itemcf_data_dependent_whale_cap_drops_outlier_basket(spark, tmp_path):
     assert [r["neighbor"] for r in a_rows] == [200]
     assert (a_rows[0]["n_ab"], a_rows[0]["n_a"], a_rows[0]["n_b"]) == (30, 30, 30)
     assert a_rows[0]["sim2_micro"] == 1_000_000  # perfect co-purchase
+
+
+def test_global_prefix_max_crosses_partition_boundaries(spark):
+    # 500 rows over 32 range partitions, values deliberately DECREASING
+    # so the running max is pinned early and must be carried across
+    # every partition boundary by the offset fold: max(v) over rows
+    # 0..i of v = 1000 - i is always 1000. Then a late spike re-raises
+    # it and the carry must update.
+    from mapreduce_project_spark.operators.windows import global_prefix_max
+
+    rows = [(i, 1000 - i) for i in range(400)]
+    rows += [(400, 5000)]
+    rows += [(400 + i, 100 + i) for i in range(1, 100)]
+    df = spark.createDataFrame(rows, "k long, v long")
+    got = {
+        (r["k"], r["pm"])
+        for r in global_prefix_max(df, ["k"], "v", "pm").collect()
+    }
+    want = set()
+    run = None
+    for k, v in sorted(rows):
+        run = v if run is None else max(run, v)
+        want.add((k, run))
+    assert got == want
+
+
+def test_global_prefix_max_rejects_nulls_with_contract_error(spark):
+    # ADVICE low: an all-NULL partition skipped the offsets fold, then
+    # crashed in astype('int64') with an obscure pandas error. The
+    # Arrow pass now raises the contract violation by name.
+    from mapreduce_project_spark.operators.windows import global_prefix_max
+
+    df = spark.createDataFrame(
+        [(1, 10), (2, None), (3, 30)], "k bigint, v bigint"
+    )
+    with pytest.raises(Exception, match="global_prefix_max.*NULL"):
+        global_prefix_max(df, ["k"], "v", "pm").collect()
+
+
+def test_global_prefix_max_copies_batch_and_matches_window(spark):
+    # ADVICE low: global_prefix_max mutated the incoming Arrow batch in
+    # place while its sum sibling copies first. Behavioral pin: results
+    # equal the single-task window MAX ... ROWS UNBOUNDED PRECEDING on
+    # a multi-partition input, and the input DataFrame re-collects
+    # unchanged afterwards (no visible side effect).
+    from pyspark.sql import functions as F
+
+    from mapreduce_project_spark.operators.windows import global_prefix_max
+
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("k"),
+        ((F.col("id") * 37) % 101).cast("bigint").alias("v"),
+    )
+    got = {
+        r["k"]: r["pm"]
+        for r in global_prefix_max(df, ["k"], "v", "pm").collect()
+    }
+    want = {
+        r["k"]: r["pm"]
+        for r in df.selectExpr(
+            "k", "v", "max(v) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING) pm"
+        ).collect()
+    }
+    assert got == want
+    assert df.count() == 1000 and "pm" not in df.columns

@@ -5,6 +5,7 @@ files loaded by function name, including the wrong-name negative case
 from __future__ import annotations
 
 import time
+from types import SimpleNamespace
 
 import pytest
 
@@ -196,6 +197,10 @@ class _CountingFrame:
         self.actions.append("count")
         return self.n
 
+    @property
+    def sparkSession(self):
+        return SimpleNamespace(catalog=SimpleNamespace(clearCache=lambda: None))
+
 
 @pytest.mark.parametrize(
     ("n", "actions"), [(3, ["collect"]), (5, ["collect"]), (9, ["collect", "count"])]
@@ -210,3 +215,16 @@ def test_service_run_counts_only_a_result_past_the_limit(n, actions):
     assert resp == {
         "ok": True, "n": n, "columns": ["x"], "rows": [[i] for i in range(min(n, 5))]
     }
+
+
+def test_service_run_leaves_the_session_cache_empty(spark):
+    # a query that caches while it is built must not leave its blocks
+    # in the resident session once the reply is sent
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES
+    from mapreduce_project_spark.service import run_response
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    df = ALL_QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+    assert not cache.isEmpty(), "precondition: the query caches"
+    assert run_response(df, 5)["ok"]
+    assert cache.isEmpty()

@@ -5,6 +5,8 @@ Jaccard join — subset + recall on the fixture's planted near-dups.
 
 from __future__ import annotations
 
+import pytest
+
 from mapreduce_project_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_pairs,
@@ -468,3 +470,48 @@ def test_winnowing_finds_shared_paragraph_across_positions(spark, tmp_path):
     )
     want = con.sql(R.ALL_ORACLES["text_winnow_pairs"]).df()
     assert rows_of(got) == rows_of(want)
+
+
+def test_lsh_signs_validated_and_auto_count_skipped(spark, tmp_path):
+    # ADVICE low: signs=[] used to IndexError at signs[0]; ragged or
+    # wrong-dim planes surfaced as opaque numpy broadcast errors inside
+    # the executor UDF; and n_bits='auto' ran a df.count() whose result
+    # was discarded when signs was provided.
+    from mapreduce_project_spark.operators.dedup import (
+        embedding_dedup_clusters_lsh,
+    )
+    from mapreduce_project_spark.operators.similarity import rademacher_signs_pc
+
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [0.99, 0.1, 0.0, 0.0]),
+        (2, [0.0, 1.0, 0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+
+    with pytest.raises(ValueError, match="non-empty"):
+        embedding_dedup_clusters_lsh(df, "vec_id", "embedding", 0.9, signs=[])
+    with pytest.raises(ValueError, match="non-empty"):
+        embedding_dedup_clusters_lsh(df, "vec_id", "embedding", 0.9, signs=[[]])
+    ragged = [[[1, -1, 1, -1]] * 4, [[1, -1, 1, -1]] * 3]
+    with pytest.raises(ValueError, match="bit width"):
+        embedding_dedup_clusters_lsh(df, "vec_id", "embedding", 0.9, signs=ragged)
+    wrong_dim = [[[1, -1, 1]] * 4]  # planes of length 3, dim=4 vectors
+    with pytest.raises(ValueError, match="plane length"):
+        embedding_dedup_clusters_lsh(
+            df, "vec_id", "embedding", 0.9, dim=4, signs=wrong_dim
+        )
+
+    # explicit signs + n_bits='auto' must NOT run the auto-width COUNT
+    df.count = lambda: (_ for _ in ()).throw(
+        AssertionError("auto-width count must be skipped when signs is given")
+    )
+    out = embedding_dedup_clusters_lsh(
+        df, "vec_id", "embedding", 0.9, n_bits="auto",
+        dim=4, signs=rademacher_signs_pc(8, 4, 4),
+    ).collect()
+    # vectors 0 and 1 are near-identical -> one 2-cluster
+    assert {(r["vec_id"], r["rep_id"], r["cluster_size"]) for r in out} == {
+        (0, 0, 2),
+        (1, 0, 2),
+    }

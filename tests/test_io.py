@@ -1,8 +1,11 @@
 """Source/sink roundtrips: text, JSON lines, CSV, parquet, binaryFile —
-the A1/A10/A19 surface generalized to the formats a pipeline ingests."""
+the A1/A10/A19 surface generalized to the formats a pipeline ingests —
+plus the incremental sinks: changelog merges, join views and edge views
+with their op checks, and the GDPR erasure cascade through them."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.sources import (
@@ -850,3 +853,352 @@ def test_merge_join_view_incremental_equals_full_join(spark, tmp_path):
         spark, state, 2, odf(orders[6:12]), cdf(cust[3:]), "o_custkey", "c_custkey"
     )
     assert view_rows() == want
+
+
+def test_merge_join_view_rejects_overlapping_columns(spark, tmp_path):
+    # ADVICE low: overlapping column names (incl. a_key == b_key) used
+    # to surface as a deep parquet-writer duplicate-column failure.
+    from mapreduce_project_spark.sources.io import merge_join_view
+
+    a = spark.createDataFrame([(1, "x")], "k bigint, v string")
+    b = spark.createDataFrame([(1, "y")], "k bigint, w string")
+    with pytest.raises(ValueError, match="disjoint.*'?k'?"):
+        merge_join_view(spark, str(tmp_path / "s"), 0, a, b, "k", "k")
+    b2 = spark.createDataFrame([(1, "y")], "bk bigint, _b string")
+    with pytest.raises(ValueError, match="_b"):
+        merge_join_view(spark, str(tmp_path / "s2"), 0, a, b2, "k", "bk")
+    # disjoint names still work end-to-end
+    b3 = spark.createDataFrame([(1, "y")], "bk bigint, w string")
+    merge_join_view(spark, str(tmp_path / "s3"), 0, a, b3, "k", "bk")
+    out = spark.read.parquet(str(tmp_path / "s3/j")).collect()
+    assert len(out) == 1 and out[0]["v"] == "x" and out[0]["w"] == "y"
+
+
+def test_merge_join_view_validates_staggered_batches(spark, tmp_path):
+    # ADVICE low: the disjoint-column guard only ran when BOTH batches
+    # arrived in the same call; an a-only (or b-only) call joined the
+    # incoming batch against the on-disk other side unvalidated and
+    # still hit the duplicate-column parquet-writer failure. Plant it:
+    # batch 0 establishes disjoint state, batch 1 arrives one-sided
+    # with a column that collides with the persisted other side.
+    from mapreduce_project_spark.sources.io import merge_join_view
+
+    a = spark.createDataFrame([(1, "x")], "k bigint, v string")
+    b = spark.createDataFrame([(1, "y")], "bk bigint, w string")
+    merge_join_view(spark, str(tmp_path / "s"), 0, a, b, "k", "bk")
+
+    # b-only batch carrying 'v' collides with persisted A(k, v)
+    b_bad = spark.createDataFrame([(1, "z")], "bk bigint, v string")
+    with pytest.raises(ValueError, match="disjoint.*'?v'?"):
+        merge_join_view(spark, str(tmp_path / "s"), 1, None, b_bad, "k", "bk")
+    # a-only batch carrying 'w' collides with persisted B(bk, w)
+    a_bad = spark.createDataFrame([(2, "q")], "k bigint, w string")
+    with pytest.raises(ValueError, match="disjoint.*'?w'?"):
+        merge_join_view(spark, str(tmp_path / "s"), 1, a_bad, None, "k", "bk")
+    # clean staggered batches still work end-to-end
+    a2 = spark.createDataFrame([(2, "x2")], "k bigint, v string")
+    merge_join_view(spark, str(tmp_path / "s"), 1, a2, None, "k", "bk")
+    b2 = spark.createDataFrame([(2, "y2")], "bk bigint, w string")
+    merge_join_view(spark, str(tmp_path / "s"), 2, None, b2, "k", "bk")
+    out = {
+        (r["k"], r["v"], r["w"])
+        for r in spark.read.parquet(str(tmp_path / "s/j")).collect()
+    }
+    assert out == {(1, "x", "y"), (2, "x2", "y2")}
+
+
+# ---------------------------------------------------------------- D299
+
+
+def test_delta_ivm_with_deletes_matches_full_recompute(spark, tmp_path):
+    # Counting-algebra IVM: after every batch (inserts AND deletes on
+    # both sides, staggered), the materialized view must equal the
+    # from-scratch net(A) ⋈ net(B); a replayed batch is a no-op; a
+    # delete meeting a delete exercises the +1 inclusion-exclusion
+    # term insert-only IVM lacks.
+    from mapreduce_project_spark.sources.io import (
+        merge_join_view_delta,
+        read_join_view_delta,
+    )
+
+    state = str(tmp_path / "ivm")
+
+    def adf(rows):
+        return spark.createDataFrame(rows, "ak bigint, av string, op string")
+
+    def bdf(rows):
+        return spark.createDataFrame(rows, "bk bigint, bv string, op string")
+
+    a_net: dict = {}
+    b_net: dict = {}
+
+    def apply_net(net, rows):
+        for k, v, op in rows:
+            net[(k, v)] = net.get((k, v), 0) + (1 if op == "insert" else -1)
+
+    def expect():
+        want = {}
+        for (ak, av), ma in a_net.items():
+            for (bk, bv), mb in b_net.items():
+                if ak == bk:
+                    key = (ak, av, bk, bv)
+                    want[key] = want.get(key, 0) + ma * mb
+        return {k + (m,) for k, m in want.items() if m > 0}
+
+    def got():
+        return {
+            (r["ak"], r["av"], r["bk"], r["bv"], r["_m"])
+            for r in read_join_view_delta(spark, state).collect()
+        }
+
+    batches = [
+        # batch 0: seed both sides
+        ([(1, "a1", "insert"), (2, "a2", "insert")],
+         [(1, "b1", "insert"), (2, "b2", "insert"), (2, "b2x", "insert")]),
+        # batch 1: a-only (staggered) — new A row joins old B
+        ([(2, "a2b", "insert")], None),
+        # batch 2: delete an A row -> retracts its join rows
+        ([(2, "a2", "delete")], None),
+        # batch 3: delete on BOTH sides of the same key — the ΔA⋈ΔB
+        # (-1)·(-1) term must add back what the two old-side terms
+        # double-retracted
+        ([(1, "a1", "delete")], [(1, "b1", "delete")]),
+        # batch 4: re-insert after delete — the row must reappear
+        ([(1, "a1", "insert")], [(1, "b1", "insert")]),
+    ]
+    for i, (ab, bb) in enumerate(batches):
+        merge_join_view_delta(
+            spark, state, i,
+            adf(ab) if ab is not None else None,
+            bdf(bb) if bb is not None else None,
+            "ak", "bk",
+        )
+        if ab:
+            apply_net(a_net, ab)
+        if bb:
+            apply_net(b_net, bb)
+        assert got() == expect(), f"divergence after batch {i}"
+
+    final = got()
+    assert final, "vacuous: empty final view"
+    # the net-zero key-1 pair existed, vanished at batch 3, and is back
+    assert (1, "a1", 1, "b1", 1) in final
+    # replaying batches 2 and 4 (post-crash retries) changes nothing
+    merge_join_view_delta(spark, state, 2, adf(batches[2][0]), None, "ak", "bk")
+    merge_join_view_delta(
+        spark, state, 4, adf(batches[4][0]), bdf(batches[4][1]), "ak", "bk"
+    )
+    assert got() == final
+
+
+def test_delta_ivm_rejects_bad_ops_and_overlap(spark, tmp_path):
+    import pytest as _pytest
+
+    from mapreduce_project_spark.sources.io import merge_join_view_delta
+
+    a = spark.createDataFrame([(1, "x", "upsert")], "ak bigint, av string, op string")
+    with _pytest.raises(ValueError, match="unknown op"):
+        merge_join_view_delta(spark, str(tmp_path / "s1"), 0, a, None, "ak", "bk")
+    a2 = spark.createDataFrame([(1, "x", "insert")], "k bigint, v string, op string")
+    b2 = spark.createDataFrame([(1, "y", "insert")], "k bigint, v string, op string")
+    with _pytest.raises(ValueError, match="disjoint"):
+        merge_join_view_delta(spark, str(tmp_path / "s2"), 0, a2, b2, "k", "k")
+
+
+# --- merge_join_view_delta — a NULL op evaded the ~isin()
+# validator (NULL falls out of the filter) and .otherwise(-1) then
+# silently treated the row as a delete.
+
+
+def test_delta_ivm_rejects_null_op(spark, tmp_path):
+    from mapreduce_project_spark.sources.io import merge_join_view_delta
+
+    a = spark.createDataFrame(
+        [(1, "x", "insert"), (2, "y", None)],
+        "ak bigint, av string, op string",
+    )
+    with pytest.raises(ValueError, match="unknown op"):
+        merge_join_view_delta(spark, str(tmp_path / "s"), 0, a, None, "ak", "bk")
+
+
+def test_delta_ivm_null_op_never_lands_as_delete(spark, tmp_path):
+    # Before the fix the NULL-op batch WROTE a retraction; now the whole
+    # batch must be refused, leaving the state dir untouched.
+    import os
+
+    from mapreduce_project_spark.sources.io import merge_join_view_delta
+
+    state = str(tmp_path / "s2")
+    a0 = spark.createDataFrame([(1, "x", "insert")], "ak bigint, av string, op string")
+    b0 = spark.createDataFrame([(1, "y", "insert")], "bk bigint, bv string, op string")
+    merge_join_view_delta(spark, state, 0, a0, b0, "ak", "bk")
+    a1 = spark.createDataFrame([(1, "x", None)], "ak bigint, av string, op string")
+    with pytest.raises(ValueError):
+        merge_join_view_delta(spark, state, 1, a1, None, "ak", "bk")
+    from mapreduce_project_spark.sources.io import read_join_view_delta
+
+    rows = {
+        (r["ak"], r["av"], r["bk"], r["bv"], r["_m"])
+        for r in read_join_view_delta(spark, state).collect()
+    }
+    assert rows == {(1, "x", 1, "y", 1)}  # the join row was NOT retracted
+    # and no batch-1 partition ever landed on the a side
+    assert not any("_b=1" in d for d in os.listdir(os.path.join(state, "a")))
+
+
+# ---------------------------------------------------------------- D305
+
+
+def test_edge_view_delta_centrality_tracks_full_recompute(spark, tmp_path):
+    # incremental centrality over a delete-capable graph view: after
+    # every batch of edge inserts/deletes (including delete-then-
+    # reinsert), PageRank over the maintained view must equal PageRank
+    # over the from-scratch edge set; a replayed batch is a no-op.
+    from mapreduce_project_spark.operators.graph import (
+        pagerank_fixed,
+        symmetrize,
+    )
+    from mapreduce_project_spark.sources.io import (
+        merge_edge_view_delta,
+        read_edge_view,
+    )
+
+    state = str(tmp_path / "g")
+    net: dict = {}
+
+    def apply_net(rows):
+        for s, d, op in rows:
+            net[(s, d)] = net.get((s, d), 0) + (1 if op == "insert" else -1)
+
+    def want_edges():
+        return {k for k, m in net.items() if m > 0}
+
+    def pr(edges_set):
+        if not edges_set:
+            return {}
+        df = spark.createDataFrame(
+            sorted(edges_set), "src bigint, dst bigint"
+        )
+        return {
+            r["node"]: r["rank_fx"]
+            for r in pagerank_fixed(symmetrize(df), n_iter=2).collect()
+        }
+
+    batches = [
+        [(1, 2, "insert"), (2, 3, "insert"), (3, 1, "insert")],
+        [(3, 4, "insert"), (1, 2, "insert")],   # duplicate insert (m=2)
+        [(2, 3, "delete")],                      # edge leaves the view
+        [(1, 2, "delete")],                      # m 2 -> 1: edge STAYS
+        [(2, 3, "insert")],                      # delete-then-reinsert
+    ]
+    for i, rows in enumerate(batches):
+        merge_edge_view_delta(
+            spark, state, i,
+            spark.createDataFrame(rows, "src bigint, dst bigint, op string"),
+        )
+        apply_net(rows)
+        got = {
+            (r["src"], r["dst"]) for r in read_edge_view(spark, state).collect()
+        }
+        assert got == want_edges(), f"edge view diverged after batch {i}"
+        assert pr(got) == pr(want_edges())
+    # the m=2 edge survived one delete
+    assert (1, 2) in want_edges()
+    # replay batch 2 (post-crash retry): identical final state
+    final = {(r["src"], r["dst"]) for r in read_edge_view(spark, state).collect()}
+    merge_edge_view_delta(
+        spark, state, 2,
+        spark.createDataFrame(batches[2], "src bigint, dst bigint, op string"),
+    )
+    assert {
+        (r["src"], r["dst"]) for r in read_edge_view(spark, state).collect()
+    } == final
+
+
+def test_edge_view_delta_rejects_bad_and_null_ops(spark, tmp_path):
+    from mapreduce_project_spark.sources.io import merge_edge_view_delta
+
+    bad = spark.createDataFrame(
+        [(1, 2, "upsert")], "src bigint, dst bigint, op string"
+    )
+    with pytest.raises(ValueError, match="unknown op"):
+        merge_edge_view_delta(spark, str(tmp_path / "a"), 0, bad)
+    nul = spark.createDataFrame(
+        [(1, 2, None)], "src bigint, dst bigint, op string"
+    )
+    with pytest.raises(ValueError, match="unknown op"):
+        merge_edge_view_delta(spark, str(tmp_path / "b"), 0, nul)
+
+
+# ---------------------------------------------------------------- D304
+
+
+def test_gdpr_cascade_delete_end_to_end(spark, tmp_path):
+    # the WRITE side of gdpr_delete_audit: erase subject ck=1 from a
+    # partitioned base table (apply_changelog delete) AND a derived
+    # incremental join view (D299 signed deltas); prove absence by
+    # value, survivors intact, and retry idempotence.
+    from mapreduce_project_spark.sources.io import (
+        apply_changelog,
+        merge_join_view_delta,
+        read_join_view_delta,
+    )
+
+    base = str(tmp_path / "cust")
+    seed = spark.createDataFrame(
+        [(1, "n1", "alice", "upsert"), (2, "n1", "bob", "upsert"),
+         (3, "n2", "carol", "upsert")],
+        "ck bigint, nat string, name string, op string",
+    )
+    apply_changelog(spark, base, seed, ["ck"], "nat")
+
+    view = str(tmp_path / "view")
+    a0 = spark.createDataFrame(
+        [(1, "alice", "insert"), (2, "bob", "insert")],
+        "ack bigint, aname string, op string",
+    )
+    b0 = spark.createDataFrame(
+        [(1, 100, "insert"), (1, 101, "insert"), (2, 200, "insert")],
+        "bck bigint, oid bigint, op string",
+    )
+    merge_join_view_delta(spark, view, 0, a0, b0, "ack", "bck")
+    assert read_join_view_delta(spark, view).count() == 3
+
+    # --- the erasure cascade for subject ck = 1 ---
+    apply_changelog(
+        spark, base,
+        spark.createDataFrame(
+            [(1, "n1", "alice", "delete")],
+            "ck bigint, nat string, name string, op string",
+        ),
+        ["ck"], "nat",
+    )
+    a_del = spark.createDataFrame(
+        [(1, "alice", "delete")], "ack bigint, aname string, op string"
+    )
+    merge_join_view_delta(spark, view, 1, a_del, None, "ack", "bck")
+
+    rows = {(r["ck"], r["name"]) for r in spark.read.parquet(base).collect()}
+    assert rows == {(2, "bob"), (3, "carol")}
+    vrows = {
+        (r["ack"], r["oid"]) for r in read_join_view_delta(spark, view).collect()
+    }
+    assert vrows == {(2, 200)}
+
+    # retry idempotence: replaying the view-delete batch and re-issuing
+    # the (now no-op) base delete changes nothing
+    merge_join_view_delta(spark, view, 1, a_del, None, "ack", "bck")
+    apply_changelog(
+        spark, base,
+        spark.createDataFrame(
+            [(1, "n1", "alice", "delete")],
+            "ck bigint, nat string, name string, op string",
+        ),
+        ["ck"], "nat",
+    )
+    assert {
+        (r["ck"], r["name"]) for r in spark.read.parquet(base).collect()
+    } == rows
+    assert {
+        (r["ack"], r["oid"]) for r in read_join_view_delta(spark, view).collect()
+    } == vrows

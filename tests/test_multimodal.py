@@ -1,17 +1,20 @@
 """Multimodal plumbing tests: byte features recomputed in pure Python,
-and the decode stub's contract."""
+the decode stub's contract, and the audio log-mel and resample
+operators."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
+import mapreduce_project_spark.queries_registry as R
 from mapreduce_project_spark.operators.multimodal import (
     attach_payload,
     byte_features,
     decode_media,
 )
 from mapreduce_project_spark.sources import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _write_docs
 
 
 def test_byte_features_match_python(spark):
@@ -662,3 +665,75 @@ def test_phash_dedup_planted_perturbation(spark, tmp_path):
     assert bin((ref[1] ^ ref[2]) & ((1 << 64) - 1)).count("1") == nears[
         (1, 2)
     ]["hamming"]
+
+
+def test_logmel_rate_is_read_positionally(spark):
+    # ADVICE low: the old per-row rate lookup scanned the batch by id
+    # (O(n^2)) and took the FIRST match — wrong rate when a batch holds
+    # duplicate ids. Plant two rows with the SAME id and different
+    # sample rates; each row's features must match the independent
+    # reference computed with ITS OWN rate.
+    from mapreduce_project_spark.operators.multimodal import (
+        _mel_filterbank,
+        logmel_features,
+    )
+
+    n_fft, hop, n_mels = 256, 128, 16
+
+    def ref_energy_q(x16, sr):
+        x = x16.astype(np.float64) / 32768.0
+        win = 0.5 - 0.5 * np.cos(2 * np.pi * np.arange(n_fft) / n_fft)
+        frames = np.stack(
+            [x[s : s + n_fft] * win for s in range(0, len(x) - n_fft + 1, hop)]
+        )
+        power = np.abs(np.fft.rfft(frames, axis=1)) ** 2
+        ref = np.log10(power @ _mel_filterbank(n_mels, n_fft, sr).T + 1e-10)
+        return int(round(float(ref.sum()) * 1e6))
+
+    t = np.arange(4000)
+    tone = (0.5 * np.sin(2 * np.pi * 1000.0 * t / 8000.0) * 32767).astype("<i2")
+    df = spark.createDataFrame(
+        [
+            (7, bytearray(tone.tobytes()), 8000),
+            (7, bytearray(tone.tobytes()), 16000),
+        ],
+        "id long, data binary, sample_rate_hz long",
+    ).coalesce(1)  # one batch => both duplicate-id rows seen together
+    got = sorted(
+        r["energy_q"]
+        for r in logmel_features(
+            df, "id", "data", "sample_rate_hz", n_fft, hop, n_mels
+        ).collect()
+    )
+    want = sorted([ref_energy_q(tone, 8000), ref_energy_q(tone, 16000)])
+    assert want[0] != want[1], "fixture must distinguish the two rates"
+    assert got == want
+
+
+# ---------------------------------------------------------------- D236
+
+
+def test_audio_resample_pins_block_mean_framing_and_tail_drop(spark, tmp_path):
+    # "abcdefgh" -> int16LE samples (25185, 25699, 26213, 26727) ->
+    # one 4-sample block, boxcar mean 25956. "abcdefghi" gains a
+    # zero-padded 5th sample, which the full-block rule must DROP.
+    rows = [
+        (1, "abcdefgh", "en", "s", 8),
+        (2, "abcdefghi", "en", "s", 9),
+        (3, "ab", "en", "s", 2),
+    ]
+    _write_docs(spark, tmp_path, rows)
+    got = (
+        R.ALL_QUERIES["multimodal_audio_resample"](spark, str(tmp_path))
+        .toPandas()
+        .set_index("doc_id")
+    )
+    d1 = got.loc[1]
+    assert d1.n_in_samples == 4 and d1.n_out_samples == 1
+    assert d1.out_sum == 25956 and d1.out_wsum == 25956 and d1.peak_out == 25956
+    d2 = got.loc[2]
+    assert d2.n_in_samples == 5 and d2.n_out_samples == 1
+    assert d2.out_sum == 25956  # identical first block; padded tail dropped
+    d3 = got.loc[3]
+    assert d3.n_in_samples == 1 and d3.n_out_samples == 0
+    assert d3.out_sum == 0 and d3.peak_out == 0

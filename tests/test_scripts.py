@@ -145,3 +145,36 @@ def test_stream_fault_row_survives_a_timed_stop(spark, tmp_path):
     row = sf.run_row(ctx, sf.SPECS["transitions"], sf.Kill("stop", 2, "transitions_02"))
     assert row["green"] and row["restarted"], row
     assert row["killed_after_batches"] >= 2 and row["rows"] > 0
+
+
+def test_bench_relative_gate_separates_host_speed_from_regression(tmp_path):
+    # VERDICT r11 task 6: panel_total judged RELATIVE to the pinned
+    # CPU/shuffle probes. A 2x-slower host with a 2x panel passes; the
+    # same panel growth on an UNCHANGED host fails.
+    mod = _load_script("check_artifacts")
+
+    prev = {
+        "panel_total": 15.0, "cpu_probe_sec": 1.0, "shuffle_probe_sec": 0.2,
+        "loadavg_1m_start": 0.1,
+    }
+    (tmp_path / "BENCH_r12.json").write_text(json.dumps(prev))
+
+    def check(cur):
+        p = tmp_path / "BENCH_r13.json"
+        p.write_text(json.dumps(cur))
+        return mod.check_bench_relative(
+            str(tmp_path), str(p), 13, cur
+        )
+
+    slow_host = dict(prev, panel_total=30.0, cpu_probe_sec=2.0,
+                     shuffle_probe_sec=0.4)
+    assert check(slow_host) is True
+    regression = dict(prev, panel_total=30.0)  # probes unchanged
+    assert check(regression) is False
+    within_margin = dict(prev, panel_total=19.0)  # +27% < 30% margin
+    assert check(within_margin) is True
+    # a probe-less BENCH at round >= 12 fails the gate outright
+    assert check({"panel_total": 15.0}) is False
+    # and the first probed BENCH (no probed predecessor) just records
+    (tmp_path / "BENCH_r12.json").write_text(json.dumps({"panel_total": 14.0}))
+    assert check(slow_host) is True

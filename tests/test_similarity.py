@@ -1,13 +1,22 @@
-"""Similarity operator properties beyond the oracle diff: ANN recall
-vs the exact brute-force top-k."""
+"""Similarity and embedding properties beyond the oracle diff: ANN
+recall vs the exact brute-force top-k, the LSH width ladders, recall
+certificates and parameter planner, and the embedding statistics and
+retrieval metrics pinned on planted vectors."""
 
 from __future__ import annotations
 
+import hashlib
+from pathlib import Path
+
+import duckdb
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+import mapreduce_project_spark.queries_registry as R
 from mapreduce_project_spark.operators.similarity import topk_ann_lsh, topk_bruteforce
 from mapreduce_project_spark.sources import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _write, rows_of
 
 
 def test_ann_recall_vs_bruteforce(spark):
@@ -646,3 +655,721 @@ def test_top_pc_planted_dominant_axis(spark, tmp_path):
     assert abs(l1) >= 900 and abs(l2) >= 900
     assert (l1 > 0) == (l2 > 0)
     assert max(abs(got[d]) for d in range(3, 65)) <= 100
+
+
+# ---------------------------------------------------------------- D221
+
+
+def test_width_ladder_is_nested_and_monotone(spark):
+    got = (
+        R.ALL_QUERIES["lsh_width_ladder"](spark, SF_DIR)
+        .toPandas()
+        .sort_values("width")
+        .reset_index(drop=True)
+    )
+    assert list(got.width) == [8, 12, 16]
+    # one truth set serves every rung
+    assert got.n_true.nunique() == 1 and got.n_true.iloc[0] > 0
+    # prefix-consistent masking ⇒ candidate sets are NESTED: counts and
+    # catches can only shrink as the width grows
+    assert list(got.n_candidates) == sorted(got.n_candidates, reverse=True)
+    assert list(got.n_caught) == sorted(got.n_caught, reverse=True)
+    assert (got.n_caught <= got.n_candidates).all()
+    assert (got.n_caught <= got.n_true).all()
+    # the audited story: recall COLLAPSES with width at the
+    # near-orthogonal threshold (strict on the fixtures)
+    assert got.recall_ppm.iloc[0] > got.recall_ppm.iloc[2]
+    assert got.cand_ppm.iloc[0] > got.cand_ppm.iloc[2]
+
+
+# ---------------------------------------------------------------- D285
+
+
+def _auto_thr(n: int, target: int = 2048) -> str:
+    # the round-12 auto-rate predicate (D286 convention): r=min(1,
+    # target/N) rendered as floor(r*2^32) hex; N <= target saturates
+    return format(min(0xFFFFFFFF, (target << 32) // max(1, n)), "08x")
+
+
+def _in_auto_sample(i: int, n: int) -> bool:
+    return n <= 2048 or (
+        hashlib.md5(str(i).encode()).hexdigest()[:8] < _auto_thr(n)
+    )
+
+
+def test_sampled_ladder_candidates_equal_exact_twin(spark):
+    # Candidate machinery is shared with D221 verbatim: on the real
+    # fixture the per-width candidate counts and fractions must be
+    # IDENTICAL. Round-12 re-pin: the truth sample is AUTO-RATE
+    # (r = min(1, 2048/N)); the sf0.001 fixture is far below 2048
+    # vectors, so r saturates at 1 and the truth columns must equal
+    # the exact twin EXACTLY (full-corpus sample, no md5 filter).
+    exact = (
+        R.ALL_QUERIES["lsh_width_ladder"](spark, SF_DIR)
+        .toPandas().sort_values("width").reset_index(drop=True)
+    )
+    samp = (
+        R.ALL_QUERIES["lsh_width_ladder_sampled"](spark, SF_DIR)
+        .toPandas().sort_values("width").reset_index(drop=True)
+    )
+    assert list(samp.width) == [8, 12, 16]
+    assert list(samp.n_candidates) == list(exact.n_candidates)
+    assert list(samp.cand_ppm) == list(exact.cand_ppm)
+    assert samp.n_true_sampled.iloc[0] > 0
+    assert list(samp.n_true_sampled) == list(exact.n_true)
+    assert list(samp.n_caught_sampled) == list(exact.n_caught)
+
+
+def test_sampled_ladder_truth_gated_by_auto_rate_sample(spark, tmp_path):
+    # Above saturation the md5 gate must cut the truth denominator.
+    # 2400 deterministic ±1 vectors (> 2048 ⇒ r = 2048/2400 < 1): ±1
+    # components make every dot an exact small integer in float32/64
+    # (any summation order), norms are exactly 64, and cos ≥ 0.3 ⟺
+    # dot ≥ 20 (19.2 is not an integer — no boundary ambiguity), so a
+    # numpy twin predicts the engine's sampled truth count EXACTLY.
+    import numpy as np
+
+    n = 2400
+    thr = _auto_thr(n)
+    ids = list(range(100, 100 + n))
+    rng = np.random.default_rng(7)
+    mat = (rng.integers(0, 2, size=(n, 64)) * 2 - 1).astype(np.float64)
+    # plant one identical pair INSIDE the sample (cos = 1 ⇒ truth) and
+    # one pair straddling the gate (must NOT reach the truth set)
+    in_ids = [i for i in ids if _in_auto_sample(i, n)]
+    out_ids = [i for i in ids if not _in_auto_sample(i, n)]
+    assert len(out_ids) > 0, "auto-rate gate vacuous at n=2400"
+    pos = {v: k for k, v in enumerate(ids)}
+    a1, a2 = in_ids[0], in_ids[1]
+    b1, b2 = in_ids[2], out_ids[0]
+    mat[pos[a2]] = mat[pos[a1]]
+    mat[pos[b2]] = mat[pos[b1]]
+
+    spark.createDataFrame(
+        [(i, [float(x) for x in mat[pos[i]]], 0) for i in ids],
+        "vec_id bigint, embedding array<float>, label int",
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+
+    # numpy twin of the sampled truth set
+    s_idx = [pos[i] for i in sorted(in_ids)]
+    sub = mat[s_idx]
+    dots = sub @ sub.T
+    want_true = int((np.triu(dots, 1) >= 19.2).sum())
+    full = mat @ mat.T
+    full_true = int((np.triu(full, 1) >= 19.2).sum())
+
+    samp = (
+        R.ALL_QUERIES["lsh_width_ladder_sampled"](spark, str(tmp_path))
+        .toPandas().sort_values("width").reset_index(drop=True)
+    )
+    assert list(samp.n_true_sampled) == [want_true] * 3
+    # the gate genuinely cut the denominator (pair b1-b2 among others)
+    assert want_true < full_true
+    assert (samp.n_caught_sampled <= samp.n_true_sampled).all()
+    # recall arithmetic is the pinned truncating ppm
+    for _, r in samp.iterrows():
+        assert r.recall_ppm == r.n_caught_sampled * 1000000 // want_true
+
+
+# ---------------------------------------------------------------- D286
+
+
+def _in_half_sample(i: int) -> bool:
+    return hashlib.md5(str(i).encode()).hexdigest()[:8] < "80000000"
+
+
+def test_recall_cert_certifies_planted_high_cosine_corpus(spark, tmp_path):
+    # On a TRUE near-dup corpus the certificate must pass: plant two
+    # identical-vector pairs with all four ids inside the 50% md5
+    # sample (6, 9) and (11, 17) — identical vectors share every LSH
+    # code, so both pairs are caught at any width -> recall 1e6,
+    # certified = 1. Background = disjoint one-hots (pairwise cos 0).
+    for i in (6, 9, 11, 17):
+        assert _in_half_sample(i)
+    vec_a = [1.0 if d < 4 else 0.0 for d in range(64)]
+    vec_b = [1.0 if 4 <= d < 8 else 0.0 for d in range(64)]
+    rows = [(6, vec_a, 0), (9, vec_a, 0), (11, vec_b, 0), (17, vec_b, 0)]
+    for k, i in enumerate([0, 1, 2, 3, 4, 5, 7, 8, 10, 12]):
+        rows.append((i, [1.0 if d == 8 + k else 0.0 for d in range(64)], 1))
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    got = R.ALL_QUERIES["dedup_semantic_recall_cert"](
+        spark, str(tmp_path)
+    ).collect()[0]
+    assert got["n_true_sampled"] == 2
+    assert got["n_caught_sampled"] == 2
+    assert got["recall_ppm"] == 1000000
+    assert got["certified"] == 1
+    assert got["nb"] == 8  # clamp floor at this corpus size
+
+
+def test_recall_cert_honestly_fails_near_orthogonal_fixture(spark, duck):
+    # The fixture's qualifying regime (cos >= 0.3, max pair ~0.51) is
+    # the documented cannot-prune zone for sign-LSH: the certificate
+    # must be NON-vacuous and must NOT certify — the pre-release
+    # answer that stops a lossy-config ship.
+    got = R.ALL_QUERIES["dedup_semantic_recall_cert"](spark, SF_DIR).collect()[0]
+    assert got["n_true_sampled"] > 0, "vacuous certificate"
+    assert 0 < got["n_caught_sampled"] < got["n_true_sampled"]
+    assert got["certified"] == 0
+
+
+def test_recall_cert_saturated_fixture_samples_everything(spark):
+    # sf0.001 has far fewer than 2048 vectors — r saturates at 1 and the
+    # certificate must report n_sampled == n_vectors exactly.
+    row = (
+        R.ALL_QUERIES["dedup_semantic_recall_cert"](spark, SF_DIR)
+        .collect()[0]
+    )
+    assert row.n_vectors <= 2048
+    assert row.n_sampled == row.n_vectors
+
+
+_SIM_SRC = (
+    Path(__file__).resolve().parents[1]
+    / "mapreduce_project_spark"
+    / "plans"
+    / "similarity_queries.py"
+).read_text()
+
+
+# --- nb derived from float log2 on both engines — a 1-ulp
+# disagreement near a 2^k boundary could flip nb on one engine only.
+
+
+def test_nb_integer_formula_matches_ceil_log2_everywhere():
+    import math
+
+    for n in list(range(1, 70000)) + [
+        2**k + d for k in range(10, 40) for d in (-1, 0, 1)
+    ]:
+        old = max(8, min(24, math.ceil(math.log2(max(n, 1) / 8 or 1))))
+        new = max(8, min(24, ((max(1, n) + 7) // 8 - 1).bit_length()))
+        assert old == new, (n, old, new)
+
+
+def test_nb_duckdb_bin_trick_matches_python(duck):
+    # the oracle's length(bin(ceil(N/8) - 1)) IS bit_length for m-1 >= 1,
+    # and the m-1 = 0 edge renders '0' (length 1) which clamps to 8
+    for n in (1, 7, 8, 9, 2047, 2048, 2049, 65535, 65536, 10**6, 10**9):
+        got = duck.sql(
+            f"SELECT GREATEST(8, LEAST(24, CAST(length(bin("
+            f"(GREATEST(1, {n}) + 7) // 8 - 1)) AS INT)))"
+        ).fetchone()[0]
+        want = max(8, min(24, ((max(1, n) + 7) // 8 - 1).bit_length()))
+        assert got == want, (n, got, want)
+    assert "length(bin(" in R.ALL_ORACLES["dedup_semantic_recall_cert"]
+    assert "log2" not in R.ALL_ORACLES["dedup_semantic_recall_cert"]
+    assert "math.log2" not in _SIM_SRC.split("def q_dedup_semantic_recall_cert")[1].split("def ")[1]
+
+
+# --- at N <= 2048 the auto-rate threshold saturates at
+# 'ffffffff' and the < compare excluded md5 prefixes equal to it.
+
+
+def test_saturated_sample_takes_full_corpus_semantics(duck):
+    # planted 'ffffffff' prefix: the saturated branch must include it
+    n_kept = duck.sql(
+        """
+        WITH c AS (SELECT * FROM (VALUES (1, 'ffffffff'), (2, '00000001'))
+                   AS t(vec_id, h)),
+        w2 AS (SELECT COUNT(*) <= 2048 AS sat, 'ffffffff' AS thr FROM c)
+        SELECT COUNT(*) FROM c, w2 WHERE w2.sat OR c.h < w2.thr
+        """
+    ).fetchone()[0]
+    assert n_kept == 2  # without the sat branch the planted row is dropped
+    # both registered auto-rate samplers carry the saturated branch
+    for name in ("dedup_semantic_recall_cert", "lsh_width_ladder_sampled"):
+        oracle = R.ALL_ORACLES[name]
+        assert "<= 2048 AS sat" in oracle and "w2.sat OR" in oracle
+    assert _SIM_SRC.count("if n_rows <= 2048:") == 2
+
+
+def test_rademacher_pc_prefix_consistency():
+    # ADVICE low (part a): the K-bit family must be EXACTLY the first K
+    # planes per table of the 24-bit family, across widths and tables —
+    # the property the auto-width oracle masking depends on.
+    from mapreduce_project_spark.operators.similarity import rademacher_signs_pc
+
+    full = rademacher_signs_pc(5, 24, 16)
+    for k in (1, 4, 8, 12, 24):
+        narrow = rademacher_signs_pc(5, k, 16)
+        assert narrow == [table[:k] for table in full]
+    # distinct tables / bits actually decorrelate (not one repeated plane)
+    flat = [tuple(p) for tab in full for p in tab]
+    assert len(set(flat)) > 100
+
+
+def test_duck_code_exprs_match_spark_cumsum_kernel():
+    # ADVICE low (part b): the DuckDB unrolled signed-addition chain
+    # must be bit-exact to the Spark-side numpy cumsum kernel on random
+    # vectors (including components near zero where an ulp flips a bit).
+    from mapreduce_project_spark.operators.similarity import (
+        duck_code_exprs_for_signs,
+        rademacher_signs_pc,
+    )
+
+    rng = np.random.default_rng(7)
+    dim, n_tables, n_bits = 16, 3, 24
+    vecs = rng.normal(scale=1e-3, size=(64, dim))  # tiny scale -> dots near 0
+    signs = rademacher_signs_pc(n_tables, n_bits, dim)
+
+    # the exact operation sequence of the executor UDF in
+    # dedup.embedding_dedup_clusters_lsh: cumsum of v * (+/-1) planes
+    pmat = np.array(
+        [plane for table in signs for plane in table], dtype=np.float64
+    )
+    bitw = np.array(
+        [1 << b for _ in range(n_tables) for b in range(n_bits)], dtype=np.int64
+    )
+    signed = vecs[:, None, :] * pmat[None, :, :]
+    dots = np.cumsum(signed, axis=2)[:, :, -1]
+    want = (
+        ((dots > 0) * bitw).reshape(len(vecs), n_tables, n_bits).sum(axis=2)
+    ).astype(np.int64)
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE vecs(i INT, v DOUBLE[])")
+    for i, v in enumerate(vecs):
+        con.execute("INSERT INTO vecs VALUES (?, ?)", [i, list(map(float, v))])
+    exprs = ", ".join(duck_code_exprs_for_signs(signs))
+    got = con.sql(f"SELECT {exprs} FROM vecs ORDER BY i").fetchnumpy()
+    got_m = np.stack([got[c] for c in got], axis=1).astype(np.int64)
+    assert (got_m == want).all()
+
+
+# ---------------------------------------------------------------- D307
+
+
+def test_lsh_param_planner_matches_pure_python_fold(spark):
+    # replay the exact truncating-ppm folds in python for the whole
+    # lattice and pin the query's top-10 (twin-wrong protection: both
+    # engines share the SQL shape, this does not)
+    from mapreduce_project_spark.plans.similarity_queries import (
+        _LSHP_THRESH_PCT,
+        _lshp_pairs,
+    )
+    from mapreduce_project_spark.queries_registry import ALL_QUERIES
+
+    def cost(b, r):
+        fp = fn = 0
+        for i in range(1, 100):
+            sr = 1_000_000
+            for _ in range(r):
+                sr = sr * i // 100
+            q = 1_000_000
+            for _ in range(b):
+                q = q * (1_000_000 - sr) // 1_000_000
+            p = 1_000_000 - q
+            if i < _LSHP_THRESH_PCT:
+                fp += p
+            else:
+                fn += 1_000_000 - p
+        return fp, fn
+
+    lattice = sorted(
+        ((b, r, *cost(b, r)) for b, r in _lshp_pairs()),
+        key=lambda t: (t[2] + t[3], t[0], t[1]),
+    )
+    want = {
+        (i + 1, b, r, b * r, fp, fn, fp + fn)
+        for i, (b, r, fp, fn) in enumerate(lattice[:10])
+    }
+    got = {
+        tuple(row)
+        for row in ALL_QUERIES["lsh_param_planner"](spark, "unused").collect()
+    }
+    assert got == want
+    # the winner uses (nearly) the full permutation budget and its
+    # S-curve midpoint sits near the 0.8 threshold
+    rank1 = lattice[0]
+    b1, r1 = rank1[0], rank1[1]
+    assert b1 * r1 >= 48
+    mid = (1 / b1) ** (1 / r1)  # s where collision prob = ~0.5
+    assert 0.7 < mid < 0.9
+
+
+# ---------------------------------------------------------------- D235
+
+
+def test_sq2_codebook_floor_reconstruction_on_negative_bin(spark, tmp_path):
+    # dim 1 carries {-9,-8,1,2,3,4,5,6} milli: bin 0 holds {-9,-8},
+    # whose mean -8.5 must FLOOR to -9 (toward-zero truncation would
+    # say -8 — the shift-then-divide trick is what this pins), with
+    # SSE (0^2 + 1^2) = 1.
+    vals = [-0.009, -0.008, 0.001, 0.002, 0.003, 0.004, 0.005, 0.006]
+    rows = []
+    for i, v in enumerate(vals):
+        emb = [0.0] * 64
+        emb[0] = v
+        rows.append((i, emb, "x"))
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label string"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    got = R.ALL_QUERIES["embedding_sq2_codebook"](spark, str(tmp_path)).toPandas()
+    d1 = got[got.dim == 1].set_index("code")
+    assert d1.loc[0].n_vecs == 2
+    assert d1.loc[0].recon_milli == -9
+    assert d1.loc[0].sse_milli2 == 1
+    # an all-constant dimension collapses into the single >= -all code
+    d2 = got[got.dim == 2]
+    assert len(d2) == 1 and d2.iloc[0].code == 3 and d2.iloc[0].sse_milli2 == 0
+
+
+# ---------------------------------------------------------------- D248
+
+
+def test_embedding_hygiene_flags_every_poison_class(spark, tmp_path):
+    # One label, every poison class planted exactly once: NULL column,
+    # wrong dim (3), NaN component, +Inf component, exact-zero vector,
+    # one low-norm and one high-norm outlier among 12 identical valid
+    # vectors (degenerate IQR=0 fence -> any deviating norm flags).
+    valid = [0.1] * 64
+    rows = [(i, valid, 7) for i in range(12)]
+    rows += [
+        (100, None, 7),
+        (101, [0.1, 0.2, 0.3], 7),
+        (102, [float("nan")] + [0.1] * 63, 7),
+        (103, [float("inf")] + [0.1] * 63, 7),
+        (104, [0.0] * 64, 7),
+        (105, [0.01] * 64, 7),   # norm2q 6400  << 640000
+        (106, [0.2] * 64, 7),    # norm2q 2560000 >> 640000
+    ]
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    got = R.ALL_QUERIES["embedding_hygiene_audit"](spark, str(tmp_path)).toPandas()
+    assert len(got) == 1
+    r = got.iloc[0]
+    assert int(r.n_vecs) == 19
+    assert int(r.n_null) == 1
+    assert int(r.n_wrong_dim) == 1
+    assert int(r.n_nonfinite) == 2
+    assert int(r.n_zero) == 1
+    assert int(r.n_valid) == 14
+    assert int(r.n_low_outlier) == 1
+    assert int(r.n_high_outlier) == 1
+    assert int(r.q1_4) == 4 * 640000 and int(r.q3_4) == 4 * 640000
+
+
+def test_top_pc_ignores_null_and_short_embeddings(spark, tmp_path):
+    # ADVICE low: q_embedding_top_pc used docs.count() for n while the
+    # oracle counted DISTINCT vec_id over the exploded components — a
+    # NULL or short embedding row diverged the two scatters. Plant one
+    # NULL row and one 3-component row among clean 64-dim vectors: both
+    # engines must agree (they now count the SAME filtered population).
+    rows = []
+    for i in range(12):
+        vec = [((i * 37 + j * 11) % 19 - 9) / 10.0 for j in range(64)]
+        rows.append((i, vec, i % 3))
+    rows.append((100, None, 0))
+    rows.append((101, [1.0, 2.0, 3.0], 1))
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+
+    got = R.ALL_QUERIES["embedding_top_pc"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/embeddings.parquet/*.parquet')"
+    )
+    want = con.sql(R.ALL_ORACLES["embedding_top_pc"]).df()
+    assert rows_of(got) == rows_of(want)
+    assert len(got) == 64
+
+
+def test_top_pc_asserts_matvec_overflow_bound(spark, tmp_path):
+    # ADVICE low: the documented matvec bound 64·|S|·10³ < 2^63 grows
+    # ~n² and silently breaks around n≈2e4 — DuckDB errors there but
+    # the collected-driver iteration (Python bigints) kept "working" on
+    # an unreplayable premise. Plant large-magnitude components whose
+    # scatter breaches the bound and pin the explicit ValueError.
+    rows = []
+    for i in range(100):
+        vec = [300.0 if (i * 31 + j * 7) % 2 == 0 else -300.0 for j in range(64)]
+        rows.append((i, vec, 0))
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(ValueError, match="matvec bound"):
+        R.ALL_QUERIES["embedding_top_pc"](spark, str(tmp_path)).collect()
+
+
+# ---------------------------------------------------------------- D274
+
+
+def _write_embeddings(spark, tmp_path, rows):
+    _write(
+        spark, tmp_path, "embeddings",
+        "vec_id bigint, embedding array<float>, label int",
+        rows,
+    )
+
+
+def test_silhouette_perfect_separation_scores_one(spark, tmp_path):
+    # 8 scaled one-hot seed vectors, each duplicated: Lloyd's seeds ARE
+    # the 8 cluster modes, every point sits ON its centroid (a = 0)
+    # with the nearest other centroid at sqrt(200) => s = 1 exactly
+    # for all 16 points.
+    rows = []
+    for i in range(8):
+        v = [0.0] * 64
+        v[i] = 10.0
+        rows.append((i, list(v), i))
+        rows.append((100 + i, list(v), i))
+    _write_embeddings(spark, tmp_path, rows)
+    got = (
+        R.ALL_QUERIES["clustering_silhouette"](spark, str(tmp_path))
+        .orderBy("cid")
+        .toPandas()
+    )
+    assert list(got.cid) == list(range(8))
+    assert (got.n_points == 2).all()
+    assert (got.mean_s_ppm == 1000000).all()
+    assert (got.min_s_ppm == 1000000).all()
+
+
+def test_silhouette_collapsed_fit_pins_zero(spark, tmp_path):
+    # 10 identical vectors: every seed centroid coincides, the fit
+    # collapses to one populated cluster, and the undefined
+    # second-nearest distance is pinned to s = 0 (not NULL, not a
+    # zero division).
+    v = [1.0] * 64
+    rows = [(i, list(v), 0) for i in range(10)]
+    _write_embeddings(spark, tmp_path, rows)
+    got = R.ALL_QUERIES["clustering_silhouette"](
+        spark, str(tmp_path)
+    ).toPandas()
+    assert got.n_points.sum() == 10
+    assert (got.mean_s_ppm == 0).all() and (got.max_s_ppm == 0).all()
+
+
+# ---------------------------------------------------------------- D281
+
+
+def test_geometric_median_resists_the_outlier(spark, tmp_path):
+    # 9 copies of e0 plus one outlier at 100*e1: the mean lands at
+    # (0.9, 10.0, ...) — dragged 10 units up dim 1 by one point —
+    # while two Weiszfeld steps pull the robust center back to the
+    # cluster (dim-1 coordinate collapses by >10x, dim 0 approaches 1).
+    rows = []
+    v = [0.0] * 64
+    v[0] = 1.0
+    for i in range(9):
+        rows.append((i, list(v), 0))
+    o = [0.0] * 64
+    o[1] = 100.0
+    rows.append((9, list(o), 0))
+    # a degenerate label: all points coincident => estimate stays put
+    u = [0.5] * 64
+    for i in range(5):
+        rows.append((100 + i, list(u), 1))
+    _write_embeddings(spark, tmp_path, rows)
+    got = (
+        R.ALL_QUERIES["embedding_geometric_median"](spark, str(tmp_path))
+        .toPandas()
+    )
+    g0 = got[got.label == 0].set_index("dim")
+    assert abs(g0.loc[0].mean_val - 0.9) < 1e-9
+    assert abs(g0.loc[1].mean_val - 10.0) < 1e-9
+    assert g0.loc[1].gmedian_val < 1.0          # outlier influence collapsed
+    assert g0.loc[0].gmedian_val > 0.95         # pulled back to the cluster
+    assert g0.loc[1].shift_micro > 9000000      # the influence signal
+    g1 = got[got.label == 1]
+    assert (g1.shift_micro == 0).all()          # degenerate label pinned
+
+
+# ---------------------------------------------------------------- D276
+
+
+def test_nprobe_ladder_knee_closed_form(spark, tmp_path):
+    # 16 orthogonal cells (seeds = one-hot ids 0..15), an exact-copy
+    # anchor (id 20+10j, sampled so every cell survives the Lloyd
+    # step) and a near-dup (id 1001+2i) per queried cell. Exact top-5
+    # per query = [anchor, near-dup, three cos-0 fillers by id ASC].
+    # Probe ties at d2=2 break by cid ASC, so the rungs pin EXACTLY:
+    # nprobe=1 finds anchor+near-dup (recall 0.4), nprobe=2 adds one
+    # filler (0.6), nprobe=4 probes cells {0..3} and saturates (1.0).
+    rows = []
+    for i in range(16):
+        v = [0.0] * 64
+        v[i] = 1.0
+        rows.append((i, list(v), i))            # one-hot / seed / query
+        rows.append((20 + 10 * i, list(v), i))  # sampled anchor copy
+    for i in range(10):
+        v = [0.0] * 64
+        v[i] = 1.0
+        v[i + 10] = 0.1
+        rows.append((1001 + 2 * i, list(v), i))  # near-dup, never sampled
+    _write_embeddings(spark, tmp_path, rows)
+    got = (
+        R.ALL_QUERIES["ivf_nprobe_recall_curve"](spark, str(tmp_path))
+        .orderBy("nprobe")
+        .toPandas()
+    )
+    assert list(got.nprobe) == [1, 2, 4, 8]
+    assert (got.n_exact == 50).all()
+    assert list(got.recall_ppm) == [400000, 600000, 1000000, 1000000]
+    # nested probe sets => strictly more candidates per rung
+    assert list(got.candidates_scanned) == sorted(
+        got.candidates_scanned
+    ) and got.candidates_scanned.is_unique
+
+
+# ---------------------------------------------------------------- D300
+
+
+def test_mips_prunes_low_norm_octaves_and_stays_exact(spark, tmp_path):
+    # Skewed-norm corpus (the regime norm pruning exists for): 8 unit
+    # one-hot queries, per query ≥10 "heavy" half-norm vectors on its
+    # dim GUARANTEED inside the md5 pilot sample (ids chosen by
+    # hashing, the D285 discipline), and a sea of low-norm noise on
+    # disjoint dims. The pilot k-th is then 500·1000 per query, so the
+    # noise octave is provably prunable — and the exact top-10 is the
+    # 10 smallest heavy ids of the query's dim at dot 500000.
+    import hashlib
+
+    n = 400
+    thr = format(min(0xFFFFFFFF, (256 << 32) // n), "08x")
+
+    def sampled(i):
+        return hashlib.md5(str(i).encode()).hexdigest()[:8] < thr
+
+    rows = []
+    for qd in range(8):  # queries: ids 1..8, one-hot dims 0..7
+        v = [0.0] * 64
+        v[qd] = 1.0
+        rows.append((qd + 1, v, 0))
+    # heavies: for each query dim, 10 in-sample ids + 5 out-of-sample
+    pool_in = [i for i in range(100, 5000) if sampled(i)]
+    pool_out = [i for i in range(100, 5000) if not sampled(i)]
+    heavy = {}
+    ii = oo = 0
+    for qd in range(8):
+        ids = pool_in[ii : ii + 10] + pool_out[oo : oo + 5]
+        ii += 10
+        oo += 5
+        heavy[qd] = sorted(ids)
+        for k, i in enumerate(ids):
+            v = [0.0] * 64
+            v[qd] = 0.5
+            v[8 + (k % 8)] = 0.25
+            rows.append((i, v, 1))
+    used = {r[0] for r in rows}
+    noise_ids = [i for i in range(10000, 20000) if i not in used]
+    k = 0
+    while len(rows) < n:
+        v = [0.0] * 64
+        v[16 + (k % 48)] = 0.25
+        rows.append((noise_ids[k], v, 2))
+        k += 1
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+
+    got = R.ALL_QUERIES["similarity_topk_mips"](spark, str(tmp_path)).toPandas()
+    assert len(got) == 80  # 8 queries x top-10
+    # buckets: noise vn2=62500 (bitlen 16), heavy 312500 (19),
+    # query 1e6 (20) — exactly the noise octave is prunable
+    assert set(got.n_buckets_total) == {3}
+    assert set(got.n_buckets_pruned) == {1}
+    # scanned = heavies (120) + queries (8) - self
+    assert set(got.n_scanned) == {127}
+    for qd in range(8):
+        sub = got[got.query_id == qd + 1].sort_values("rank")
+        assert list(sub.vec_id) == heavy[qd][:10]
+        assert set(sub.dot_milli2) == {1000 * 500}
+
+
+def test_mips_real_fixture_matches_brute_force(spark):
+    # On the ~equal-norm fixture pruning honestly does nothing — and
+    # the result must still equal the brute-force integer-dot top-10
+    # (exactness is unconditional, not a pruning side-effect).
+    got = R.ALL_QUERIES["similarity_topk_mips"](spark, SF_DIR).toPandas()
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/embeddings.parquet')"
+    )
+    brute = con.sql("""
+        WITH e AS (SELECT vec_id, list_transform(embedding::DOUBLE[],
+                     x -> CAST(floor(x * 1000 + 0.5) AS BIGINT)) AS vm
+                   FROM embeddings),
+        q AS (SELECT vec_id AS qid, vm AS qm FROM e ORDER BY vec_id LIMIT 8)
+        SELECT qid, vec_id, dot FROM (
+          SELECT q.qid, e.vec_id,
+                 list_reduce(list_transform(generate_series(1, 64),
+                   i -> q.qm[i] * e.vm[i]), (x, y) -> x + y) AS dot,
+                 row_number() OVER (PARTITION BY q.qid ORDER BY
+                   list_reduce(list_transform(generate_series(1, 64),
+                     i -> q.qm[i] * e.vm[i]), (x, y) -> x + y) DESC,
+                   e.vec_id) AS rk
+          FROM q JOIN e ON e.vec_id <> q.qid
+        ) WHERE rk <= 10
+    """).fetchall()
+    want = {(r[0], r[1], r[2]) for r in brute}
+    assert {
+        (r["query_id"], r["vec_id"], r["dot_milli2"])
+        for _, r in got.iterrows()
+    } == want
+
+
+def test_mmr_rerank_tiny_corpus_returns_short_ranking(spark, tmp_path):
+    # ADVICE low: < 10 non-query candidates used to KeyError on
+    # rel_map[None] once `remaining` drained. Plant 3 vectors: the
+    # query + 2 candidates -> exactly 2 ranked rows, ordered.
+    rows = [
+        (0, [1.0, 0.0], 0),
+        (1, [0.9, 0.1], 0),
+        (2, [0.0, 1.0], 0),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    out = R.ALL_QUERIES["similarity_mmr_rerank"](spark, str(tmp_path)).collect()
+    ranks = sorted((r["rank"], r["vec_id"]) for r in out)
+    assert ranks == [(1, 1), (2, 2)]
+
+
+# ---------------------------------------------------------------- D260
+
+
+def test_ndcg_discount_and_corpus_ideal(spark, tmp_path):
+    # One query (vec 0, label 1). Corpus: relevant A at cos 1 (rank
+    # 1), irrelevant C at cos 0.894 (rank 2), relevant B at cos 0.707
+    # (rank 3), three orthogonal fillers. Closed form with the baked
+    # discount table: DCG = t[1] + t[3]; the IDEAL uses the
+    # CORPUS-wide relevant count (2), not the top-k hit count, so
+    # IDCG = t[1] + t[2] and nDCG < 1e6 exactly because the miss at
+    # rank 2 costs the t[2]-t[3] discount gap.
+    import math
+
+    def vec(*head):
+        v = list(head) + [0.0] * (64 - len(head))
+        return [float(x) for x in v]
+
+    rows = [
+        (0, vec(1.0), 1),                       # the query
+        (20, vec(1.0), 1),                      # A: relevant, cos 1
+        (21, vec(2.0, 1.0), 9),                 # C: irrelevant, cos .894
+        (22, vec(1.0, 1.0), 1),                 # B: relevant, cos .707
+        (23, vec(0.0, 0.0, 1.0), 8),
+        (24, vec(0.0, 0.0, 2.0), 8),
+        (25, vec(0.0, 0.0, 3.0), 8),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    got = R.ALL_QUERIES["search_ndcg"](spark, str(tmp_path)).toPandas()
+    assert len(got) == 1
+    r = got.iloc[0]
+    t = [None] + [10**12 // round(math.log2(i + 1) * 10**6) for i in range(1, 21)]
+    assert int(r.n_rel_corpus) == 2 and int(r.n_rel_topk) == 2
+    assert int(r.dcg_micro) == t[1] + t[3]
+    assert int(r.idcg_micro) == t[1] + t[2]
+    assert int(r.ndcg_ppm) == (t[1] + t[3]) * 10**6 // (t[1] + t[2])
+    assert int(r.ndcg_ppm) < 1000000

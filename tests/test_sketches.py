@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import mapreduce_project_spark.queries_registry as R
 from mapreduce_project_spark.queries_registry import ALL_QUERIES as ALL
 from mapreduce_project_spark.sources import load_table
 from tests.conftest import SF_DIR
@@ -59,3 +60,28 @@ def test_theta_exact_at_fixture_cardinality(spark):
         f"{n} distinct users approaches the theta nominal capacity — "
         "the exact oracle for sketch_theta_distinct_users no longer holds"
     )
+
+
+# ---------------------------------------------------------------- D289
+
+
+def test_sketch_preflight_planted_overlap(spark, tmp_path):
+    # suppliers {1..5}, lineitem suppkeys {3..8}: common = {3,4,5};
+    # lineitem has 2 rows per suppkey -> predicted = 3 keys * 2 * 1.
+    # Inside theta's exactness window the sketch MUST equal exact.
+    sup = [(k, f"s{k}") for k in range(1, 6)]
+    li = [(i, k) for i, k in enumerate([3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8])]
+    spark.createDataFrame(sup, "s_suppkey long, s_name string").write.mode(
+        "overwrite"
+    ).parquet(str(tmp_path / "supplier.parquet"))
+    spark.createDataFrame(li, "l_orderkey long, l_suppkey long").write.mode(
+        "overwrite"
+    ).parquet(str(tmp_path / "lineitem.parquet"))
+    got = R.ALL_QUERIES["join_preflight_sketch_audit"](
+        spark, str(tmp_path)
+    ).collect()[0]
+    assert got["n_keys_left"] == 6 and got["n_keys_right"] == 5
+    assert got["n_keys_common"] == 3
+    assert got["n_common_sketch"] == 3
+    assert got["sketch_err_ppm"] == 0
+    assert got["predicted_rows"] == 6

@@ -1,10 +1,14 @@
 """Structured Streaming tests: each streaming query is driven to
 completion (availableNow + memory sink) and compared against its batch
 twin on the same fixture — the stream/batch-parity property Spark's
-unified model promises.
+unified model promises. Also: the write fence against zombie
+micro-batch attempts, tree readers' last-writer-wins order, and
+erasure from the streaming trees.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import functions as F
 
@@ -1679,3 +1683,271 @@ def test_streaming_conformal_coverage_prefix_exact(spark, tmp_path):
     # the guarantee-validity semantics: drift alarms, ok never does
     assert any(r[0] == "drift" and r[4] == 1 for r in got)
     assert all(r[4] == 0 for r in got if r[0] == "ok")
+
+
+# --- read_ivf_tree last-writer-wins ordered only by
+# src_batch desc — duplicate ids within one micro-batch tied and
+# row_number picked a partition-order-dependent row.
+
+
+def test_read_ivf_tree_intra_batch_tie_is_deterministic(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from mapreduce_project_spark.streaming.events import read_ivf_tree
+
+    tree = str(tmp_path / "tree")
+    dup = spark.createDataFrame(
+        [(1, [1.0, 0.0], 3, 5), (1, [2.0, 0.0], 7, 5), (2, [9.0, 1.0], 0, 5)],
+        "id bigint, v array<double>, cell int, src_batch bigint",
+    )
+    dup.write.parquet(f"{tree}/batch-5")
+    expected_cell = (
+        dup.filter("id = 1")
+        .orderBy(F.xxhash64("v").desc(), F.col("cell").desc())
+        .collect()[0]["cell"]
+    )
+    picks = set()
+    for parts in (1, 8):
+        got = {
+            r["id"]: (r["v"], r["cell"])
+            for r in read_ivf_tree(spark, tree)
+            .repartition(parts)
+            .collect()
+        }
+        assert set(got) == {1, 2}
+        picks.add(got[1][1])
+    assert picks == {expected_cell}  # same winner at every partitioning
+
+
+def test_read_ivf_tree_cross_batch_lww_still_wins(spark, tmp_path):
+    # the secondary key must never outrank src_batch: a newer batch's
+    # row wins even when the older row hashes higher.
+    from mapreduce_project_spark.streaming.events import read_ivf_tree
+
+    tree = str(tmp_path / "tree2")
+    spark.createDataFrame(
+        [(1, [5.0], 2, 3)], "id bigint, v array<double>, cell int, src_batch bigint"
+    ).write.parquet(f"{tree}/batch-3")
+    spark.createDataFrame(
+        [(1, [6.0], 9, 4)], "id bigint, v array<double>, cell int, src_batch bigint"
+    ).write.parquet(f"{tree}/batch-4")
+    rows = read_ivf_tree(spark, tree).collect()
+    assert len(rows) == 1 and rows[0]["cell"] == 9 and rows[0]["v"] == [6.0]
+
+
+# --- the zombie-attempt write fence. `StreamingQuery.stop()` interrupts
+# the JVM micro-batch thread, but a Python foreachBatch callback already
+# executing keeps running on the Py4J callback-server thread, so a
+# same-process restart can re-run a batch (possibly with re-grouped
+# source files) while the superseded attempt's late writes clobber the
+# live run's directories. These tests reproduce that interleaving
+# DETERMINISTICALLY (a blocking injector stands in for the
+# load-dependent scheduling a soak run hit once in ~20 runs) and pin
+# both halves: the unfenced choreography corrupts the state, the fenced
+# one refuses the stale write and stays consistent.
+
+
+def _mk_batches(spark):
+    from mapreduce_project_spark.sources import load_table
+
+    docs = (
+        load_table(spark, SF_DIR, "documents")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .limit(12)
+        .collect()
+    )
+    corpus = [(r["doc_id"], r["text"]) for r in docs[:4]]
+    f0 = [(1_000_000 + r["doc_id"], r["text"]) for r in docs[4:6]]
+    # f1 contains a copy of a corpus doc (a cross-index pair must exist)
+    f1 = [(2_000_000 + r["doc_id"], r["text"]) for r in docs[6:8]]
+    f1.append((3_000_000, corpus[0][1]))
+    f2 = [(4_000_000 + r["doc_id"], r["text"]) for r in docs[8:10]]
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    return mk(corpus), mk(f0), mk(f1), mk(f2)
+
+
+def _tree_state(spark, idx, pairs):
+    from mapreduce_project_spark.streaming.events import read_signature_tree
+
+    ps = {
+        (r["new_id"], r["index_id"], round(r["jac"], 9))
+        for r in read_signature_tree(spark, pairs).collect()
+    }
+    ids = {r["id"] for r in read_signature_tree(spark, idx).collect()}
+    return ps, ids
+
+
+def _zombie_choreography(spark, tmp_path, fenced: bool):
+    """batch 0 commits; a gen-1 attempt of batch 1 (file f1 only) writes
+    its pairs then stalls before the signature write; the 'restarted'
+    gen-2 query re-runs batch 1 with COALESCED files {f1, f2}; the
+    zombie then wakes and tries its stale signature write."""
+    from mapreduce_project_spark.operators.dedup import minhash_index_build
+    from mapreduce_project_spark.streaming.events import (
+        StaleAttemptError,
+        _crawl_dedup_batch,
+        _fence_register,
+    )
+
+    corpus, f0, f1, f2 = _mk_batches(spark)
+    base = str(tmp_path / ("fenced" if fenced else "raw"))
+    idx, pairs, ck = f"{base}/idx", f"{base}/pairs", f"{base}/ck"
+    minhash_index_build(corpus, "doc_id", "text", 3, 64).write.parquet(idx)
+
+    gen1 = _fence_register(ck) if fenced else None
+    _crawl_dedup_batch(spark, f0, 0, idx, pairs, fence_token=gen1)
+
+    stall = threading.Event()
+    release = threading.Event()
+    zombie_err: list = []
+
+    def injector(point, batch_id):
+        if point == "after_pairs" and batch_id == 1:
+            stall.set()
+            assert release.wait(120), "choreography deadlock"
+
+    def zombie():
+        try:
+            _crawl_dedup_batch(
+                spark, f1, 1, idx, pairs,
+                fault_injector=injector, fence_token=gen1,
+            )
+        except BaseException as e:  # noqa: BLE001 — recorded for assertion
+            zombie_err.append(e)
+
+    zt = threading.Thread(target=zombie)
+    zt.start()
+    assert stall.wait(120), "zombie never reached after_pairs"
+
+    # the "restart": a new query generation re-runs batch 1, and the
+    # file source legally coalesced f1+f2 into the one trigger
+    gen2 = _fence_register(ck) if fenced else None
+    coalesced = f1.unionAll(f2)
+    _crawl_dedup_batch(spark, coalesced, 1, idx, pairs, fence_token=gen2)
+
+    release.set()
+    zt.join(120)
+    assert not zt.is_alive()
+
+    # the consistent reference: same boundaries, no zombie
+    ref = str(tmp_path / ("ref_f" if fenced else "ref_r"))
+    ridx, rpairs = f"{ref}/idx", f"{ref}/pairs"
+    minhash_index_build(corpus, "doc_id", "text", 3, 64).write.parquet(ridx)
+    _crawl_dedup_batch(spark, f0, 0, ridx, rpairs)
+    _crawl_dedup_batch(spark, coalesced, 1, ridx, rpairs)
+
+    got = _tree_state(spark, idx, pairs)
+    want = _tree_state(spark, ridx, rpairs)
+    return got, want, zombie_err, StaleAttemptError
+
+
+def test_unfenced_zombie_write_corrupts_state(spark, tmp_path):
+    # the planted bug: without fencing, the stale signature write lands
+    # AFTER the restarted run's and the trees go inconsistent (f2's
+    # signatures vanish from the index) — this is the r12 soak failure,
+    # reproduced deterministically.
+    got, want, zombie_err, _ = _zombie_choreography(spark, tmp_path, fenced=False)
+    assert not zombie_err  # unfenced zombie completes "successfully"
+    assert got != want
+    assert not {i for i in want[1] if i >= 4_000_000} <= got[1]
+
+
+def test_fence_refuses_stale_write_and_state_stays_consistent(spark, tmp_path):
+    got, want, zombie_err, StaleAttemptError = _zombie_choreography(
+        spark, tmp_path, fenced=True
+    )
+    assert len(zombie_err) == 1 and isinstance(zombie_err[0], StaleAttemptError)
+    assert got == want
+    assert got[0], "vacuous: no pairs found"
+
+
+def test_fence_generations_are_monotonic_per_checkpoint(tmp_path):
+    from mapreduce_project_spark.streaming.events import _fence_register
+
+    ck_a, ck_b = str(tmp_path / "a"), str(tmp_path / "b")
+    k1, g1 = _fence_register(ck_a)
+    k2, g2 = _fence_register(ck_a)
+    k3, g3 = _fence_register(ck_b)
+    assert k1 == k2 and g2 == g1 + 1
+    assert k3 != k1 and g3 >= 1
+
+
+def test_fenced_write_noop_without_token(spark, tmp_path):
+    # production path (no same-process restarts): token None must be a
+    # pass-through, not a hidden global lock
+    from mapreduce_project_spark.streaming.events import _fenced_write
+
+    hit = []
+    _fenced_write(None, "x", lambda: hit.append(1))
+    assert hit == [1]
+
+
+# ---------------------------------------------------------------- D306
+
+
+def test_erase_ids_from_streaming_trees(spark, tmp_path):
+    # GDPR erasure through the STREAMING artifacts: a subject's rows
+    # must leave the signature index AND the IVF tree; untouched batch
+    # dirs are never rewritten; a retried erasure is a no-op.
+    from mapreduce_project_spark.operators.dedup import minhash_index_build
+    from mapreduce_project_spark.streaming.events import (
+        _crawl_dedup_batch,
+        erase_ids_from_tree,
+        read_ivf_tree,
+        read_signature_tree,
+    )
+
+    corpus, f0, f1, f2 = _mk_batches(spark)
+    base = str(tmp_path / "er")
+    idx, pairs = f"{base}/idx", f"{base}/pairs"
+    minhash_index_build(corpus, "doc_id", "text", 3, 64).write.parquet(idx)
+    for i, b in enumerate((f0, f1, f2)):
+        _crawl_dedup_batch(spark, b, i, idx, pairs)
+    subject = f0.limit(1).collect()[0]["doc_id"]
+    before_ids = {r["id"] for r in read_signature_tree(spark, idx).collect()}
+    assert subject in before_ids
+
+    import os
+
+    other_dir = f"{idx}/batch-2"
+    mt_before = {
+        f: os.stat(os.path.join(other_dir, f)).st_mtime_ns
+        for f in os.listdir(other_dir)
+    }
+    ids = spark.createDataFrame([(subject,)], "doc_id bigint")
+    n = erase_ids_from_tree(spark, idx, ids, id_col="id")
+    assert n >= 1
+    after_ids = {r["id"] for r in read_signature_tree(spark, idx).collect()}
+    assert subject not in after_ids
+    assert after_ids == before_ids - {subject}
+    # batch-2 (no subject rows) was never rewritten
+    assert {
+        f: os.stat(os.path.join(other_dir, f)).st_mtime_ns
+        for f in os.listdir(other_dir)
+    } == mt_before
+    # retry is a no-op
+    assert erase_ids_from_tree(spark, idx, ids, id_col="id") == 0
+    assert {
+        r["id"] for r in read_signature_tree(spark, idx).collect()
+    } == after_ids
+
+
+def test_erase_ids_from_ivf_tree(spark, tmp_path):
+    from mapreduce_project_spark.streaming.events import (
+        erase_ids_from_tree,
+        read_ivf_tree,
+    )
+
+    tree = str(tmp_path / "ivf")
+    spark.createDataFrame(
+        [(1, [1.0], 0, 0), (2, [2.0], 1, 0)],
+        "id bigint, v array<double>, cell int, src_batch bigint",
+    ).write.parquet(f"{tree}/batch-0")
+    spark.createDataFrame(
+        [(3, [3.0], 0, 1)],
+        "id bigint, v array<double>, cell int, src_batch bigint",
+    ).write.parquet(f"{tree}/batch-1")
+    ids = spark.createDataFrame([(2,), (99,)], "id bigint")
+    assert erase_ids_from_tree(spark, tree, ids) == 1
+    assert {r["id"] for r in read_ivf_tree(spark, tree).collect()} == {1, 3}
