@@ -5,122 +5,8 @@ against closed forms on planted graphs."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 import mapreduce_project_spark.queries_registry as R
-from tests.conftest import _write
-
-
-# ---------------------------------------------------------------- D233
-
-
-def test_assortativity_star_graph_is_exactly_minus_one(spark, tmp_path):
-    # hub supplier 1 co-supplies with leaves 2..5 (one 2-line order per
-    # pair, all in Jan-1995): a star's degree assortativity is -1.
-    def w(name, schema, rows):
-        spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-            str(tmp_path / f"{name}.parquet")
-        )
-
-    spark.createDataFrame(
-        [(k, "1995-01-15 00:00:00") for k in (1, 2, 3, 4)],
-        "o_orderkey bigint, o_orderdate string",
-    ).withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp")).write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "orders.parquet"))
-    li = []
-    for k, leaf in zip((1, 2, 3, 4), (2, 3, 4, 5)):
-        li.append((k, 1))
-        li.append((k, leaf))
-    w("lineitem", "l_orderkey bigint, l_suppkey bigint", li)
-    got = R.ALL_QUERIES["graph_degree_assortativity"](spark, str(tmp_path)).toPandas()
-    row = got.iloc[0]
-    assert row.n_nodes == 5 and row.n_edges == 4
-    assert row.assortativity == -1.0
-
-
-# ---------------------------------------------------------------- D245
-
-
-def test_label_propagation_separates_bridged_cliques(spark, tmp_path):
-    # Two K4 cliques (suppliers 1-4 and 10-13, each clique = one
-    # shared order) joined by ONE bridge order {4, 10}: four sync
-    # rounds must converge each clique to its min supplier id and the
-    # single bridge edge must NOT merge them (simulated closed form:
-    # communities {1,2,3,4}->1 and {10,11,12,13}->10, both size 4).
-    _write(
-        spark, tmp_path, "orders",
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-        "o_totalprice double, o_orderdate string, o_orderpriority string",
-        [(1, 1, "O", 1.0, "1995-01-10", "1-URGENT"),
-         (2, 1, "O", 1.0, "1995-01-11", "1-URGENT"),
-         (3, 1, "O", 1.0, "1995-01-12", "1-URGENT")],
-    )
-    li = []
-    ln = 1
-    for sk in (1, 2, 3, 4):
-        li.append((1, 1, sk, ln)); ln += 1
-    for sk in (10, 11, 12, 13):
-        li.append((2, 1, sk, ln)); ln += 1
-    for sk in (4, 10):
-        li.append((3, 1, sk, ln)); ln += 1
-    _write(
-        spark, tmp_path, "lineitem",
-        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
-        "l_linenumber int",
-        li,
-    )
-    got = R.ALL_QUERIES["graph_label_propagation"](spark, str(tmp_path)).toPandas()
-    lbl = dict(zip(got.supplier, got.community))
-    assert lbl == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 13: 10}
-    assert set(got.community_size) == {4}
-
-
-# ---------------------------------------------------------------- D255
-
-
-def test_kcore_peel_cascades_and_converges(spark, tmp_path):
-    # K4 clique {1,2,3,4} + node 5 hanging off {1,2,6} + leaf 6:
-    # round 1 peels 6 (degree 1), which drops 5 to degree 2 so round
-    # 2 peels 5 (the CASCADE), and the K4 survives as the exact
-    # 3-core with within-core degree 3 — converged well inside the
-    # 6-round bound.
-    _write(
-        spark, tmp_path, "orders",
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-        "o_totalprice double, o_orderdate string, o_orderpriority string",
-        [(1, 1, "O", 1.0, "1995-01-10", "1-URGENT"),
-         (2, 1, "O", 1.0, "1995-01-11", "1-URGENT"),
-         (3, 1, "O", 1.0, "1995-01-12", "1-URGENT"),
-         (4, 1, "O", 1.0, "1995-01-13", "1-URGENT")],
-    )
-    li = []
-    ln = 1
-    for sk in (1, 2, 3, 4):
-        li.append((1, 1, sk, ln)); ln += 1
-    for sk in (5, 1):
-        li.append((2, 1, sk, ln)); ln += 1
-    for sk in (5, 2):
-        li.append((3, 1, sk, ln)); ln += 1
-    for sk in (5, 6):
-        li.append((4, 1, sk, ln)); ln += 1
-    _write(
-        spark, tmp_path, "lineitem",
-        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
-        "l_linenumber int",
-        li,
-    )
-    got = (
-        R.ALL_QUERIES["graph_kcore_membership"](spark, str(tmp_path))
-        .orderBy("supplier")
-        .toPandas()
-    )
-    rr = dict(zip(got.supplier, got.removed_round))
-    assert rr == {1: 0, 2: 0, 3: 0, 4: 0, 5: 2, 6: 1}
-    core = got[got.in_core == 1]
-    assert set(core.supplier) == {1, 2, 3, 4}
-    assert set(core.core_degree) == {3}
-    assert set(got[got.in_core == 0].core_degree) == {0}
 
 
 # ---------------------------------------------------------------- D291

@@ -1,6 +1,5 @@
 """Multimodal plumbing tests: byte features recomputed in pure Python,
-the decode stub's contract, and the audio log-mel and resample
-operators."""
+the decode stub's contract, and the audio log-mel operator."""
 
 from __future__ import annotations
 
@@ -14,7 +13,7 @@ from mapreduce_project_spark.operators.multimodal import (
     decode_media,
 )
 from mapreduce_project_spark.sources import load_table
-from tests.conftest import SF_DIR, _write_docs
+from tests.conftest import SF_DIR
 
 
 def test_byte_features_match_python(spark):
@@ -708,32 +707,3 @@ def test_logmel_rate_is_read_positionally(spark):
     want = sorted([ref_energy_q(tone, 8000), ref_energy_q(tone, 16000)])
     assert want[0] != want[1], "fixture must distinguish the two rates"
     assert got == want
-
-
-# ---------------------------------------------------------------- D236
-
-
-def test_audio_resample_pins_block_mean_framing_and_tail_drop(spark, tmp_path):
-    # "abcdefgh" -> int16LE samples (25185, 25699, 26213, 26727) ->
-    # one 4-sample block, boxcar mean 25956. "abcdefghi" gains a
-    # zero-padded 5th sample, which the full-block rule must DROP.
-    rows = [
-        (1, "abcdefgh", "en", "s", 8),
-        (2, "abcdefghi", "en", "s", 9),
-        (3, "ab", "en", "s", 2),
-    ]
-    _write_docs(spark, tmp_path, rows)
-    got = (
-        R.ALL_QUERIES["multimodal_audio_resample"](spark, str(tmp_path))
-        .toPandas()
-        .set_index("doc_id")
-    )
-    d1 = got.loc[1]
-    assert d1.n_in_samples == 4 and d1.n_out_samples == 1
-    assert d1.out_sum == 25956 and d1.out_wsum == 25956 and d1.peak_out == 25956
-    d2 = got.loc[2]
-    assert d2.n_in_samples == 5 and d2.n_out_samples == 1
-    assert d2.out_sum == 25956  # identical first block; padded tail dropped
-    d3 = got.loc[3]
-    assert d3.n_in_samples == 1 and d3.n_out_samples == 0
-    assert d3.out_sum == 0 and d3.peak_out == 0

@@ -11,21 +11,7 @@ import hashlib
 import pyspark.sql.functions as F
 
 import mapreduce_project_spark.queries_registry as R
-
-
-def _write_docs(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows, "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-
-
-def _write_events(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows,
-        "event_id bigint, ts string, user_id bigint, event_type string, value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp")).write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "events.parquet"))
+from tests.conftest import _write_docs, _write_events
 
 
 # ---------------------------------------------------------------- D226

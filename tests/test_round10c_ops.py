@@ -6,25 +6,8 @@ mismatch."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 import mapreduce_project_spark.queries_registry as R
-
-
-def _write(spark, tmp_path, name, schema, rows):
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-        str(tmp_path / f"{name}.parquet")
-    )
-
-
-def _write_events(spark, tmp_path, rows):
-    spark.createDataFrame(
-        rows,
-        "event_id bigint, ts string, user_id bigint, event_type string, "
-        "value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp")).write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "events.parquet"))
+from tests.conftest import _write, _write_events
 
 
 # ---------------------------------------------------------------- D243

@@ -1,7 +1,7 @@
 """Similarity and embedding properties beyond the oracle diff: ANN
-recall vs the exact brute-force top-k, the LSH width ladders, recall
-certificates and parameter planner, and the embedding statistics and
-retrieval metrics pinned on planted vectors."""
+recall vs the exact brute-force top-k, the sampled LSH ladders, recall
+certificates and parameter planner, and the top-PC, MIPS and MMR
+queries pinned on planted vectors."""
 
 from __future__ import annotations
 
@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 import mapreduce_project_spark.queries_registry as R
 from mapreduce_project_spark.operators.similarity import topk_ann_lsh, topk_bruteforce
 from mapreduce_project_spark.sources import load_table
-from tests.conftest import SF_DIR, _write, rows_of
+from tests.conftest import SF_DIR, rows_of
 
 
 def test_ann_recall_vs_bruteforce(spark):
@@ -657,31 +657,6 @@ def test_top_pc_planted_dominant_axis(spark, tmp_path):
     assert max(abs(got[d]) for d in range(3, 65)) <= 100
 
 
-# ---------------------------------------------------------------- D221
-
-
-def test_width_ladder_is_nested_and_monotone(spark):
-    got = (
-        R.ALL_QUERIES["lsh_width_ladder"](spark, SF_DIR)
-        .toPandas()
-        .sort_values("width")
-        .reset_index(drop=True)
-    )
-    assert list(got.width) == [8, 12, 16]
-    # one truth set serves every rung
-    assert got.n_true.nunique() == 1 and got.n_true.iloc[0] > 0
-    # prefix-consistent masking ⇒ candidate sets are NESTED: counts and
-    # catches can only shrink as the width grows
-    assert list(got.n_candidates) == sorted(got.n_candidates, reverse=True)
-    assert list(got.n_caught) == sorted(got.n_caught, reverse=True)
-    assert (got.n_caught <= got.n_candidates).all()
-    assert (got.n_caught <= got.n_true).all()
-    # the audited story: recall COLLAPSES with width at the
-    # near-orthogonal threshold (strict on the fixtures)
-    assert got.recall_ppm.iloc[0] > got.recall_ppm.iloc[2]
-    assert got.cand_ppm.iloc[0] > got.cand_ppm.iloc[2]
-
-
 # ---------------------------------------------------------------- D285
 
 
@@ -990,67 +965,7 @@ def test_lsh_param_planner_matches_pure_python_fold(spark):
     assert 0.7 < mid < 0.9
 
 
-# ---------------------------------------------------------------- D235
-
-
-def test_sq2_codebook_floor_reconstruction_on_negative_bin(spark, tmp_path):
-    # dim 1 carries {-9,-8,1,2,3,4,5,6} milli: bin 0 holds {-9,-8},
-    # whose mean -8.5 must FLOOR to -9 (toward-zero truncation would
-    # say -8 — the shift-then-divide trick is what this pins), with
-    # SSE (0^2 + 1^2) = 1.
-    vals = [-0.009, -0.008, 0.001, 0.002, 0.003, 0.004, 0.005, 0.006]
-    rows = []
-    for i, v in enumerate(vals):
-        emb = [0.0] * 64
-        emb[0] = v
-        rows.append((i, emb, "x"))
-    spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<float>, label string"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    got = R.ALL_QUERIES["embedding_sq2_codebook"](spark, str(tmp_path)).toPandas()
-    d1 = got[got.dim == 1].set_index("code")
-    assert d1.loc[0].n_vecs == 2
-    assert d1.loc[0].recon_milli == -9
-    assert d1.loc[0].sse_milli2 == 1
-    # an all-constant dimension collapses into the single >= -all code
-    d2 = got[got.dim == 2]
-    assert len(d2) == 1 and d2.iloc[0].code == 3 and d2.iloc[0].sse_milli2 == 0
-
-
 # ---------------------------------------------------------------- D248
-
-
-def test_embedding_hygiene_flags_every_poison_class(spark, tmp_path):
-    # One label, every poison class planted exactly once: NULL column,
-    # wrong dim (3), NaN component, +Inf component, exact-zero vector,
-    # one low-norm and one high-norm outlier among 12 identical valid
-    # vectors (degenerate IQR=0 fence -> any deviating norm flags).
-    valid = [0.1] * 64
-    rows = [(i, valid, 7) for i in range(12)]
-    rows += [
-        (100, None, 7),
-        (101, [0.1, 0.2, 0.3], 7),
-        (102, [float("nan")] + [0.1] * 63, 7),
-        (103, [float("inf")] + [0.1] * 63, 7),
-        (104, [0.0] * 64, 7),
-        (105, [0.01] * 64, 7),   # norm2q 6400  << 640000
-        (106, [0.2] * 64, 7),    # norm2q 2560000 >> 640000
-    ]
-    spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    got = R.ALL_QUERIES["embedding_hygiene_audit"](spark, str(tmp_path)).toPandas()
-    assert len(got) == 1
-    r = got.iloc[0]
-    assert int(r.n_vecs) == 19
-    assert int(r.n_null) == 1
-    assert int(r.n_wrong_dim) == 1
-    assert int(r.n_nonfinite) == 2
-    assert int(r.n_zero) == 1
-    assert int(r.n_valid) == 14
-    assert int(r.n_low_outlier) == 1
-    assert int(r.n_high_outlier) == 1
-    assert int(r.q1_4) == 4 * 640000 and int(r.q3_4) == 4 * 640000
 
 
 def test_top_pc_ignores_null_and_short_embeddings(spark, tmp_path):
@@ -1095,127 +1010,6 @@ def test_top_pc_asserts_matvec_overflow_bound(spark, tmp_path):
     ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
     with pytest.raises(ValueError, match="matvec bound"):
         R.ALL_QUERIES["embedding_top_pc"](spark, str(tmp_path)).collect()
-
-
-# ---------------------------------------------------------------- D274
-
-
-def _write_embeddings(spark, tmp_path, rows):
-    _write(
-        spark, tmp_path, "embeddings",
-        "vec_id bigint, embedding array<float>, label int",
-        rows,
-    )
-
-
-def test_silhouette_perfect_separation_scores_one(spark, tmp_path):
-    # 8 scaled one-hot seed vectors, each duplicated: Lloyd's seeds ARE
-    # the 8 cluster modes, every point sits ON its centroid (a = 0)
-    # with the nearest other centroid at sqrt(200) => s = 1 exactly
-    # for all 16 points.
-    rows = []
-    for i in range(8):
-        v = [0.0] * 64
-        v[i] = 10.0
-        rows.append((i, list(v), i))
-        rows.append((100 + i, list(v), i))
-    _write_embeddings(spark, tmp_path, rows)
-    got = (
-        R.ALL_QUERIES["clustering_silhouette"](spark, str(tmp_path))
-        .orderBy("cid")
-        .toPandas()
-    )
-    assert list(got.cid) == list(range(8))
-    assert (got.n_points == 2).all()
-    assert (got.mean_s_ppm == 1000000).all()
-    assert (got.min_s_ppm == 1000000).all()
-
-
-def test_silhouette_collapsed_fit_pins_zero(spark, tmp_path):
-    # 10 identical vectors: every seed centroid coincides, the fit
-    # collapses to one populated cluster, and the undefined
-    # second-nearest distance is pinned to s = 0 (not NULL, not a
-    # zero division).
-    v = [1.0] * 64
-    rows = [(i, list(v), 0) for i in range(10)]
-    _write_embeddings(spark, tmp_path, rows)
-    got = R.ALL_QUERIES["clustering_silhouette"](
-        spark, str(tmp_path)
-    ).toPandas()
-    assert got.n_points.sum() == 10
-    assert (got.mean_s_ppm == 0).all() and (got.max_s_ppm == 0).all()
-
-
-# ---------------------------------------------------------------- D281
-
-
-def test_geometric_median_resists_the_outlier(spark, tmp_path):
-    # 9 copies of e0 plus one outlier at 100*e1: the mean lands at
-    # (0.9, 10.0, ...) — dragged 10 units up dim 1 by one point —
-    # while two Weiszfeld steps pull the robust center back to the
-    # cluster (dim-1 coordinate collapses by >10x, dim 0 approaches 1).
-    rows = []
-    v = [0.0] * 64
-    v[0] = 1.0
-    for i in range(9):
-        rows.append((i, list(v), 0))
-    o = [0.0] * 64
-    o[1] = 100.0
-    rows.append((9, list(o), 0))
-    # a degenerate label: all points coincident => estimate stays put
-    u = [0.5] * 64
-    for i in range(5):
-        rows.append((100 + i, list(u), 1))
-    _write_embeddings(spark, tmp_path, rows)
-    got = (
-        R.ALL_QUERIES["embedding_geometric_median"](spark, str(tmp_path))
-        .toPandas()
-    )
-    g0 = got[got.label == 0].set_index("dim")
-    assert abs(g0.loc[0].mean_val - 0.9) < 1e-9
-    assert abs(g0.loc[1].mean_val - 10.0) < 1e-9
-    assert g0.loc[1].gmedian_val < 1.0          # outlier influence collapsed
-    assert g0.loc[0].gmedian_val > 0.95         # pulled back to the cluster
-    assert g0.loc[1].shift_micro > 9000000      # the influence signal
-    g1 = got[got.label == 1]
-    assert (g1.shift_micro == 0).all()          # degenerate label pinned
-
-
-# ---------------------------------------------------------------- D276
-
-
-def test_nprobe_ladder_knee_closed_form(spark, tmp_path):
-    # 16 orthogonal cells (seeds = one-hot ids 0..15), an exact-copy
-    # anchor (id 20+10j, sampled so every cell survives the Lloyd
-    # step) and a near-dup (id 1001+2i) per queried cell. Exact top-5
-    # per query = [anchor, near-dup, three cos-0 fillers by id ASC].
-    # Probe ties at d2=2 break by cid ASC, so the rungs pin EXACTLY:
-    # nprobe=1 finds anchor+near-dup (recall 0.4), nprobe=2 adds one
-    # filler (0.6), nprobe=4 probes cells {0..3} and saturates (1.0).
-    rows = []
-    for i in range(16):
-        v = [0.0] * 64
-        v[i] = 1.0
-        rows.append((i, list(v), i))            # one-hot / seed / query
-        rows.append((20 + 10 * i, list(v), i))  # sampled anchor copy
-    for i in range(10):
-        v = [0.0] * 64
-        v[i] = 1.0
-        v[i + 10] = 0.1
-        rows.append((1001 + 2 * i, list(v), i))  # near-dup, never sampled
-    _write_embeddings(spark, tmp_path, rows)
-    got = (
-        R.ALL_QUERIES["ivf_nprobe_recall_curve"](spark, str(tmp_path))
-        .orderBy("nprobe")
-        .toPandas()
-    )
-    assert list(got.nprobe) == [1, 2, 4, 8]
-    assert (got.n_exact == 50).all()
-    assert list(got.recall_ppm) == [400000, 600000, 1000000, 1000000]
-    # nested probe sets => strictly more candidates per rung
-    assert list(got.candidates_scanned) == sorted(
-        got.candidates_scanned
-    ) and got.candidates_scanned.is_unique
 
 
 # ---------------------------------------------------------------- D300
@@ -1333,43 +1127,3 @@ def test_mmr_rerank_tiny_corpus_returns_short_ranking(spark, tmp_path):
     out = R.ALL_QUERIES["similarity_mmr_rerank"](spark, str(tmp_path)).collect()
     ranks = sorted((r["rank"], r["vec_id"]) for r in out)
     assert ranks == [(1, 1), (2, 2)]
-
-
-# ---------------------------------------------------------------- D260
-
-
-def test_ndcg_discount_and_corpus_ideal(spark, tmp_path):
-    # One query (vec 0, label 1). Corpus: relevant A at cos 1 (rank
-    # 1), irrelevant C at cos 0.894 (rank 2), relevant B at cos 0.707
-    # (rank 3), three orthogonal fillers. Closed form with the baked
-    # discount table: DCG = t[1] + t[3]; the IDEAL uses the
-    # CORPUS-wide relevant count (2), not the top-k hit count, so
-    # IDCG = t[1] + t[2] and nDCG < 1e6 exactly because the miss at
-    # rank 2 costs the t[2]-t[3] discount gap.
-    import math
-
-    def vec(*head):
-        v = list(head) + [0.0] * (64 - len(head))
-        return [float(x) for x in v]
-
-    rows = [
-        (0, vec(1.0), 1),                       # the query
-        (20, vec(1.0), 1),                      # A: relevant, cos 1
-        (21, vec(2.0, 1.0), 9),                 # C: irrelevant, cos .894
-        (22, vec(1.0, 1.0), 1),                 # B: relevant, cos .707
-        (23, vec(0.0, 0.0, 1.0), 8),
-        (24, vec(0.0, 0.0, 2.0), 8),
-        (25, vec(0.0, 0.0, 3.0), 8),
-    ]
-    spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    got = R.ALL_QUERIES["search_ndcg"](spark, str(tmp_path)).toPandas()
-    assert len(got) == 1
-    r = got.iloc[0]
-    t = [None] + [10**12 // round(math.log2(i + 1) * 10**6) for i in range(1, 21)]
-    assert int(r.n_rel_corpus) == 2 and int(r.n_rel_topk) == 2
-    assert int(r.dcg_micro) == t[1] + t[3]
-    assert int(r.idcg_micro) == t[1] + t[2]
-    assert int(r.ndcg_ppm) == (t[1] + t[3]) * 10**6 // (t[1] + t[2])
-    assert int(r.ndcg_ppm) < 1000000
