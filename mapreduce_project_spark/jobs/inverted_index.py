@@ -17,18 +17,17 @@ oracle hashes (stable cross-engine representation).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.functions import tokens
 
 
-def inverted_index(
-    df: DataFrame, doc_col: str = "doc_id", text_col: str | Column = "text"
-) -> DataFrame:
-    """(word, postings_arr array<bigint>, postings string) per word."""
+def inverted_index(df: DataFrame) -> DataFrame:
+    """(word, postings_arr array<bigint>, postings string) per word of
+    the ``text`` column, posting the ``doc_id`` column."""
     return (
-        df.select(F.col(doc_col).alias("doc_id"), F.explode(F.array_distinct(tokens(text_col))).alias("word"))
+        df.select("doc_id", F.explode(F.array_distinct(tokens("text"))).alias("word"))
         .groupBy("word")
         .agg(F.array_sort(F.collect_set("doc_id")).alias("postings_arr"))
         .select(

@@ -18,13 +18,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.functions import tokens
-from mapreduce_project_spark.operators.relational import explode_col
 
 
 def word_count(df: DataFrame, text_col: str | Column = "text") -> DataFrame:
     """(word, cnt) over the text column of ``df``."""
     return (
-        explode_col(df, tokens(text_col), "word")
+        df.select(F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )

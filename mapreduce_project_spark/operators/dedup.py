@@ -41,12 +41,12 @@ _MH_SEED = 42
 _CC_EDGES_PER_PARTITION = 1_000_000
 
 
-def _mh_params(n_perm: int, seed: int = _MH_SEED) -> list[tuple[int, int]]:
+def _mh_params(n_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the min-hash permutation family
     h_i(x) = (a_i * x + b_i) mod p — generated by a fixed LCG so both
     runs and engines agree."""
     params = []
-    state = seed
+    state = _MH_SEED
     for _ in range(n_perm):
         state = (state * 6364136223846793005 + 1442695040888963407) % (2**63)
         a = state % (_MH_PRIME - 1) + 1
@@ -892,9 +892,7 @@ def _local_components(edges: DataFrame) -> DataFrame:
     return edges.mapInPandas(part, schema)
 
 
-def connected_components(
-    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 25
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(id, comp) for every node appearing in ``pairs``; ``comp`` is the
     minimum node id of the node's connected component — the canonical
     "collapse near-dup pairs into clusters" step after any pairwise
@@ -925,8 +923,8 @@ def connected_components(
     edges_raw = pairs.select(
         F.explode(
             F.array(
-                F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+                F.struct(F.col("id_a").alias("a"), F.col("id_b").alias("b")),
+                F.struct(F.col("id_b").alias("a"), F.col("id_a").alias("b")),
             )
         ).alias("e")
     ).select("e.a", "e.b").cache()
@@ -966,7 +964,7 @@ def connected_components(
     labels = local.groupBy("id").agg(F.min("comp").alias("comp")).cache()
     labels.count()
     edges_raw.unpersist()
-    for _ in range(max_iter):
+    for _ in range(25):
         # one round = one join + one union + one grouped min — the
         # neighbor-propagated labels and the node's own label meet in a
         # single aggregation (2 shuffles/round, vs 3 for the textbook
@@ -996,15 +994,12 @@ def connected_components(
     return labels
 
 
-def dedup_clusters(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, n_perm: int = 64,
-    bands: int = 16, threshold: float = 0.8,
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, rep_id, cluster_size) — near-dup CLUSTERS from the
     MinHash+LSH pair stream: connected components over the verified
     pairs, representative = min doc id, one row per clustered doc.
     Docs with no near-dup partner don't appear (their cluster is {self})."""
-    prs = minhash_lsh_pairs(df, id_col, text_col, n, n_perm, bands, threshold)
+    prs = minhash_lsh_pairs(df, id_col, text_col)
     cc = connected_components(prs.select("id_a", "id_b"))
     sizes = cc.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return cc.join(sizes, "comp").select(
@@ -1223,9 +1218,7 @@ def simhash_chunks(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Dat
     return agg.select("id", *chunks)
 
 
-def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, max_hamming: int = 3
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """C2 SimHash near-dup pairs: Hamming(sketch_a, sketch_b) <= k found
     via the pigeonhole chunk join (k=3 with 4 chunks ⇒ some chunk is
     equal), then exact Hamming verification with bit_count(xor)."""
@@ -1264,7 +1257,7 @@ def simhash_pairs(
         cand.join(aj, F.col("id_a") == F.col("sa.id"))
         .join(bj, F.col("id_b") == F.col("sb.id"))
         .select("id_a", "id_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_project_spark.operators.relational import dec
-
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
@@ -173,11 +171,7 @@ def funnel_counts(events: DataFrame, steps: list[str], **kw) -> DataFrame:
     return per_user.agg(*counts, *rates)
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Cohort retention matrix: users are cohorted by their first
     active day; output is ``(cohort_day, day_offset, n_users)`` =
     how many of each cohort's users were active ``day_offset`` days
@@ -188,11 +182,11 @@ def cohort_retention(
     after the first shuffle — then a (cohort, offset) count-distinct.
     Day truncation collapses the stream BEFORE any shuffle: the
     distinct activity set is bounded by users × days, not by events."""
-    u, day = F.col(user_col), F.to_date(F.col(ts_col)).alias("_day")
-    first = events.groupBy(user_col).agg(F.min(F.to_date(F.col(ts_col))).alias("_cohort"))
+    u, day = F.col("user_id"), F.to_date(F.col("ts")).alias("_day")
+    first = events.groupBy("user_id").agg(F.min(F.to_date(F.col("ts"))).alias("_cohort"))
     activity = events.select(u, day).distinct()
     return (
-        activity.join(first, user_col)
+        activity.join(first, "user_id")
         .groupBy(
             F.col("_cohort").alias("cohort_day"),
             F.datediff(F.col("_day"), F.col("_cohort")).alias("day_offset"),

@@ -41,14 +41,10 @@ _PR_SCALE = 10**12
 # checkpoint-interval trade in iterative Spark jobs. Values are
 # identical for any interval.
 _PR_MATERIALIZE_EVERY = 4
+_PR_DAMPING_PCT = 85
 
 
-def symmetrize(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    disjoint_reverse: bool = False,
-) -> DataFrame:
+def symmetrize(edges: DataFrame, disjoint_reverse: bool = False) -> DataFrame:
     """Distinct undirected edge list (both directions present) — the
     usual preconditioning so PageRank has no dangling nodes (every
     node then has out-degree ≥ 1). One explode, then one distinct.
@@ -65,7 +61,7 @@ def symmetrize(
     counter-lesson)."""
     if disjoint_reverse:
         return (
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+            edges.select("src", "dst")
             .distinct()
             .select(
                 F.explode(
@@ -83,8 +79,8 @@ def symmetrize(
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src).alias("src"), F.col(dst).alias("dst")),
-                    F.struct(F.col(dst).alias("src"), F.col(src).alias("dst")),
+                    F.struct("src", "dst"),
+                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
                 )
             ).alias("e")
         )
@@ -174,13 +170,7 @@ def triangle_counts(
     return corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_tri"))
 
 
-def pagerank_fixed(
-    edges: DataFrame,
-    n_iter: int = 2,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def pagerank_fixed(edges: DataFrame, n_iter: int = 2) -> DataFrame:
     """(node, rank_fx, rank) after ``n_iter`` damped PageRank rounds
     over a directed edge list in which EVERY source has out-degree ≥ 1
     (run `symmetrize` first if the graph is undirected / has dangling
@@ -208,7 +198,7 @@ def pagerank_fixed(
     # (guide §2.4 — two operations keyed the same way share one
     # exchange).
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .repartition("src")
         .cache()
     )
@@ -220,7 +210,7 @@ def pagerank_fixed(
     )
     n_nodes = deg.count()  # scalar only — sizes the init literal
     r0 = _PR_SCALE // n_nodes
-    base = (100 - damping_pct) * r0 // 100
+    base = (100 - _PR_DAMPING_PCT) * r0 // 100
     # ranks carry the node's out-degree alongside fx: the contribution
     # projection then needs NO ranks⋈deg join (one join per round
     # removed outright — guide §2.4); the post-inflow deg join both
@@ -245,7 +235,7 @@ def pagerank_fixed(
                 (
                     F.lit(base)
                     + F.expr(
-                        f"({damping_pct} * coalesce(inflow, 0L)) div 100"
+                        f"({_PR_DAMPING_PCT} * coalesce(inflow, 0L)) div 100"
                     )
                 ).alias("fx"),
             )
@@ -269,14 +259,7 @@ def pagerank_fixed(
     return out
 
 
-def pagerank_personalized(
-    edges: DataFrame,
-    seeds: DataFrame,
-    n_iter: int = 2,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def pagerank_personalized(edges: DataFrame, seeds: DataFrame, n_iter: int = 2) -> DataFrame:
     """(node, rank_fx, rank) after ``n_iter`` damped PERSONALIZED
     PageRank rounds: the teleport mass restarts at the SEED node set
     instead of uniformly — the recommender-graph form ("rank the graph
@@ -312,7 +295,7 @@ def pagerank_personalized(
     # row-based RDD leaf — plan mass was not this query's bottleneck.
     # Checkpoint wins only where planning dominates re-scan cost
     # (assemble_training_set_v7/v8); kept as cache here.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
+    e = edges.select("src", "dst").cache()
     deg = (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -324,7 +307,7 @@ def pagerank_personalized(
     if ns == 0:
         raise ValueError("pagerank_personalized: no seed appears in the graph")
     r0 = _PR_SCALE // ns
-    base = (100 - damping_pct) * r0 // 100
+    base = (100 - _PR_DAMPING_PCT) * r0 // 100
     ranks = s.select("node", F.lit(r0).cast("bigint").alias("fx"))
     for _ in range(n_iter):
         rd = ranks.join(deg, "node").select(
@@ -344,7 +327,7 @@ def pagerank_personalized(
                     F.when(F.col("_seed").isNotNull(), F.lit(base)).otherwise(
                         F.lit(0)
                     )
-                    + F.expr(f"({damping_pct} * coalesce(inflow, 0L)) div 100")
+                    + F.expr(f"({_PR_DAMPING_PCT} * coalesce(inflow, 0L)) div 100")
                 )
                 .cast("bigint")
                 .alias("fx"),
@@ -363,14 +346,7 @@ def pagerank_personalized(
     return out
 
 
-def bounded_shortest_paths(
-    edges: DataFrame,
-    sources: DataFrame,
-    rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-    w: str = "w",
-) -> DataFrame:
+def bounded_shortest_paths(edges: DataFrame, sources: DataFrame, rounds: int) -> DataFrame:
     """(node, dist) — cheapest path cost from any source node within
     ``rounds`` edge relaxations (Bellman-Ford with a hop bound): the
     weighted companion of `connected_components`' reachability. Each
@@ -384,7 +360,7 @@ def bounded_shortest_paths(
     distance (convergence read as one scalar count, like
     `connected_components`); the bounded form IS the right query shape
     for "within k hops" analyses and for an unrolled SQL oracle."""
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"), F.col(w).alias("_w"))
+    e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"), F.col("w").alias("_w"))
     dist = sources.select(F.col("node"), F.lit(0).cast("bigint").alias("dist"))
     for _ in range(rounds):
         relaxed = e.join(dist, e["_s"] == dist["node"]).select(

@@ -2,8 +2,10 @@
 
 The reference expresses joins as the classic MR idiom (map tags records
 by source table, reduce pairs them per key — mechanism ``design.md:48-49``
-over ``worker.py:134-207``); here they are native ``df.join`` and
-Catalyst picks broadcast-hash / sort-merge / shuffle-hash.
+over ``worker.py:134-207``); here plain equi, semi and anti joins are
+direct ``df.join`` calls at each query and Catalyst picks
+broadcast-hash / sort-merge / shuffle-hash. This module holds the joins
+that need an algorithm: salting, range, interval, as-of and radius.
 
 Scale notes:
 - dimension tables (region/nation/supplier and any side < ~32 MB after
@@ -21,29 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | list[str] | Column,
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Generic join; ``broadcast_right`` hints a map-side (broadcast)
-    join for small dimensions."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on, how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on: str | list[str] | Column) -> DataFrame:
-    """B9 EXISTS — rows of ``left`` with a match in ``right``."""
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: str | list[str] | Column) -> DataFrame:
-    """B9 NOT EXISTS — rows of ``left`` without a match in ``right``."""
-    return left.join(right, on, "left_anti")
 
 
 def salted_join(
@@ -81,12 +60,7 @@ def salted_join(
     return salted_left.join(replicated_right, [key, "_salt"], how).drop("_salt")
 
 
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    *conds: Column,
-    broadcast_right: bool = True,
-) -> DataFrame:
+def range_join(left: DataFrame, right: DataFrame, *conds: Column) -> DataFrame:
     """Non-equi (interval/band) join: match rows on inequality predicates
     (e.g. ``lo <= x < hi``). With no equi-key Catalyst would plan a
     cartesian product; broadcasting the small side (the band/dimension
@@ -100,8 +74,7 @@ def range_join(
     cond = conds[0]
     for c in conds[1:]:
         cond = cond & c
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, cond)
+    return left.join(F.broadcast(right), cond)
 
 
 def interval_join(
@@ -167,7 +140,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    suffix: str = "_matched",
 ) -> DataFrame:
     """Backward as-of join: for each left row, the right row with the
     greatest ``right_ts <= left_ts`` within the same key group (or nulls
@@ -189,9 +161,7 @@ def asof_join(
     broken by the payload struct ordering (largest wins), so the result
     is deterministic.
     """
-    return _asof(
-        left, right, keys, left_ts, right_ts, value_cols, suffix, forward=False
-    )
+    return _asof(left, right, keys, left_ts, right_ts, value_cols, forward=False)
 
 
 def asof_join_forward(
@@ -201,7 +171,6 @@ def asof_join_forward(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    suffix: str = "_matched",
 ) -> DataFrame:
     """Forward as-of join — `asof_join`'s mirror: for each left row,
     the right row with the SMALLEST ``right_ts >= left_ts`` in the key
@@ -214,9 +183,7 @@ def asof_join_forward(
     first non-null right payload. Left rows sort before right rows at
     equal timestamps, giving inclusive ``>=``; ties among right rows at
     one ts resolve to the smallest payload struct — deterministic."""
-    return _asof(
-        left, right, keys, left_ts, right_ts, value_cols, suffix, forward=True
-    )
+    return _asof(left, right, keys, left_ts, right_ts, value_cols, forward=True)
 
 
 def _asof(
@@ -226,12 +193,12 @@ def _asof(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    suffix: str,
     forward: bool,
 ) -> DataFrame:
     """The union-sort-carry skeleton of both as-of joins. Backward: right
     rows sort first at equal ts and the last payload is carried forward.
-    Forward: left rows sort first and the first payload is carried back."""
+    Forward: left rows sort first and the first payload is carried back.
+    The matched right columns come out as ``<name>_matched``."""
     from pyspark.sql import Window
 
     right_side, left_side = (1, 0) if forward else (0, 1)
@@ -263,8 +230,8 @@ def _asof(
     matched = unioned.withColumn("_m", carry)
     return matched.filter(F.col("_side") == left_side).select(
         *left_cols,
-        F.col("_m._ts").alias(f"{right_ts}{suffix}"),
-        *[F.col(f"_m.{c}").alias(f"{c}{suffix}") for c in value_cols],
+        F.col("_m._ts").alias(f"{right_ts}_matched"),
+        *[F.col(f"_m.{c}").alias(f"{c}_matched") for c in value_cols],
     )
 
 
@@ -273,7 +240,6 @@ def radius_join(
     right: DataFrame,
     coords: tuple[str, str],
     radius: int,
-    suffixes: tuple[str, str] = ("_l", "_r"),
 ) -> DataFrame:
     """Spatial radius join via grid blocking: all (left, right) pairs
     with squared euclidean distance < radius² on integer coordinates —
@@ -292,8 +258,7 @@ def radius_join(
     Skewed cells (urban hotspots) split under AQE like any hot key.
     """
     x, y = coords
-    lx, ly = x + suffixes[0], y + suffixes[0]
-    rx, ry = x + suffixes[1], y + suffixes[1]
+    lx, ly, rx, ry = x + "_l", y + "_l", x + "_r", y + "_r"
     l = left.select(
         *left.columns,
         F.expr(f"{x} div {radius}").alias("_cx"),

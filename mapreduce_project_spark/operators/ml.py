@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+Q = 10**6  # the fixed-point scale: weights and scores are BIGINT 1/Q units
+
 
 def _tdiv(a: int, b: int) -> int:
     """Integral division truncating toward zero — Python's // floors,
@@ -46,24 +48,23 @@ def linear_gd_fixed(
     n_iter: int = 2,
     lr_num: int = 1,
     lr_den: int = 1000,
-    q: int = 10**6,
 ) -> DataFrame:
     """Train ``label ≈ Σ w_j · x_j`` by ``n_iter`` exact fixed-point
     batch-GD rounds from w = 0; returns (feature, w_fx, w) — one row
-    per feature, ``w_fx`` the BIGINT weight in ``1/q`` units, ``w``
+    per feature, ``w_fx`` the BIGINT weight in ``1/Q`` units, ``w``
     its double rendering.
 
     Per round (all-integer):
-      pred_i = Σ_j w_j · x_ij               (label·q units)
-      e_i    = (pred_i − y_i · q) div q     (label units, truncated)
+      pred_i = Σ_j w_j · x_ij               (label·Q units)
+      e_i    = (pred_i − y_i · Q) div Q     (label units, truncated)
       g_j    = Σ_i x_ij · e_i               (exact BIGINT sum)
-      w_j   ← w_j − (q · lr_num · g_j) div (n · lr_den)
+      w_j   ← w_j − (Q · lr_num · g_j) div (n · lr_den)
 
-    The step carries the factor ``q`` because ``w_j`` is stored in 1/q
+    The step carries the factor ``Q`` because ``w_j`` is stored in 1/Q
     units while ``g_j`` is the real-unit gradient — without it the
-    effective learning rate would be lr/q. Oracles replaying this in
+    effective learning rate would be lr/Q. Oracles replaying this in
     BIGINT SQL should use the gcd-reduced ratio (for the defaults
-    q·lr_num/lr_den = 1000, so the step is ``(1000·g) div n``) to stay
+    Q·lr_num/lr_den = 1000, so the step is ``(1000·g) div n``) to stay
     inside 64-bit headroom; the truncated quotient of the same rational
     is identical either way.
 
@@ -78,15 +79,15 @@ def linear_gd_fixed(
     w = [0] * k
     for _ in range(n_iter):
         pred = " + ".join(f"({w[j]}L * x{j})" for j in range(k))
-        e = F.expr(f"(({pred}) - _y * {q}L) div {q}L")
+        e = F.expr(f"(({pred}) - _y * {Q}L) div {Q}L")
         row = d.agg(
             *[F.sum(F.col(f"x{j}") * e).alias(f"g{j}") for j in range(k)]
         ).collect()[0]
-        w = [w[j] - _tdiv(q * lr_num * int(row[f"g{j}"]), n * lr_den) for j in range(k)]
+        w = [w[j] - _tdiv(Q * lr_num * int(row[f"g{j}"]), n * lr_den) for j in range(k)]
     d.unpersist()
     spark = data.sparkSession
     return spark.createDataFrame(
-        [(feature_cols[j], w[j], w[j] / q) for j in range(k)],
+        [(feature_cols[j], w[j], w[j] / Q) for j in range(k)],
         "feature string, w_fx bigint, w double",
     )
 
@@ -95,16 +96,15 @@ def linear_predict_fixed(
     data: DataFrame,
     weights: DataFrame,
     feature_cols: list[str],
-    q: int = 10**6,
 ) -> DataFrame:
     """Score rows with a trained weight table: adds ``score_fx``
-    (BIGINT, label·q units — exact) and ``score`` (double rendering).
+    (BIGINT, label·Q units — exact) and ``score`` (double rendering).
     The weight table is k rows — collected to literals so scoring is a
     zero-join codegen projection (the serving-side shape)."""
     wmap = {r["feature"]: int(r["w_fx"]) for r in weights.collect()}
     pred = " + ".join(f"({wmap[c]}L * cast({c} as bigint))" for c in feature_cols)
     return data.withColumn("score_fx", F.expr(f"{pred}")).withColumn(
-        "score", F.col("score_fx").cast("double") / F.lit(float(q))
+        "score", F.col("score_fx").cast("double") / F.lit(float(Q))
     )
 
 

@@ -55,7 +55,7 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def byte_features(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def byte_features(df: DataFrame) -> DataFrame:
     """Deterministic per-payload byte statistics via ``mapInPandas``
     (the feature-extraction stage shape: binary in → small typed
     features out, Arrow-batched, no shuffle).
@@ -63,15 +63,13 @@ def byte_features(df: DataFrame, id_col: str = "doc_id", payload_col: str = "pay
     Output: (id, n_bytes, byte_sum, mean_byte, n_frames) where frames
     are fixed 256-byte chunks (the frame-sampling analog for video).
     """
-    out_schema = (
-        f"{id_col} long, n_bytes long, byte_sum long, mean_byte double, n_frames long"
-    )
+    out_schema = "doc_id long, n_bytes long, byte_sum long, mean_byte double, n_frames long"
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in batches:
-            payloads = [bytes(p) for p in pdf[payload_col]]
+            payloads = [bytes(p) for p in pdf["payload"]]
             n = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=len(payloads))
             # one contiguous buffer + prefix sums: per-payload byte sums
             # without any per-byte Python (robust to empty payloads,
@@ -83,7 +81,7 @@ def byte_features(df: DataFrame, id_col: str = "doc_id", payload_col: str = "pay
             mean = np.where(n > 0, sums / np.maximum(n, 1), 0.0)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "doc_id": pdf["doc_id"].to_numpy(),
                     "n_bytes": n,
                     "byte_sum": sums,
                     "mean_byte": mean,
@@ -91,28 +89,22 @@ def byte_features(df: DataFrame, id_col: str = "doc_id", payload_col: str = "pay
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(extract, out_schema)
+    return df.select("doc_id", "payload").mapInPandas(extract, out_schema)
 
 
-def frame_sample(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    frame_size: int = 256,
-    every: int = 4,
-) -> DataFrame:
+def frame_sample(df: DataFrame, frame_size: int = 256, every: int = 4) -> DataFrame:
     """Deterministic frame sampling (the video keyframe-extraction
     shape): emit every ``every``-th fixed-size frame of each payload as
     its own row — binary in, (id, frame_idx, frame) rows out, Arrow-
     batched ``mapInPandas``, no shuffle. Downstream per-frame feature
     UDFs consume these rows without ever reshuffling full payloads."""
-    out_schema = f"{id_col} long, frame_idx long, frame binary"
+    out_schema = "doc_id long, frame_idx long, frame binary"
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in batches:
-            payloads = [bytes(p) for p in pdf[payload_col]]
+            payloads = [bytes(p) for p in pdf["payload"]]
             n = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=len(payloads))
             n_sampled = (((n + frame_size - 1) // frame_size) + every - 1) // every
             # all (row, frame_idx, start, end) coordinates computed
@@ -129,24 +121,19 @@ def frame_sample(
             ]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy()[row_idx],
+                    "doc_id": pdf["doc_id"].to_numpy()[row_idx],
                     "frame_idx": frame_idx,
                     "frame": frames,
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(sample, out_schema)
+    return df.select("doc_id", "payload").mapInPandas(sample, out_schema)
 
 
-def downsample_bytes(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    out_len: int = 32,
-) -> DataFrame:
+def downsample_bytes(df: DataFrame) -> DataFrame:
     """Deterministic resize/downsample (the image-thumbnail / audio-
     resample shape): each payload's byte stream is block-averaged down
-    to ``out_len`` values — (id, block, val) rows, val = mean of bytes
+    to 32 values — (id, block, val) rows, val = mean of bytes
     in [block*n//L, (block+1)*n//L). Binary in, small typed signal out,
     Arrow-batched ``mapInPandas``, no shuffle; blocks emptied by short
     payloads (n < L) are omitted.
@@ -156,14 +143,14 @@ def downsample_bytes(
     Python. A real image resize swaps this body for PIL/cv2 inside the
     same signature; the Spark-side contract is identical.
     """
-    out_schema = f"{id_col} long, block long, val double"
-    L = out_len
+    out_schema = "doc_id long, block long, val double"
+    L = 32
 
     def resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in batches:
-            payloads = [bytes(p) for p in pdf[payload_col]]
+            payloads = [bytes(p) for p in pdf["payload"]]
             n = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=len(payloads))
             buf = np.frombuffer(b"".join(payloads), dtype=np.uint8)
             csum = np.concatenate(([0], np.cumsum(buf, dtype=np.int64)))
@@ -179,13 +166,13 @@ def downsample_bytes(
             val = np.where(mask, sums / np.maximum(e - s, 1), 0.0)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy()[row_idx[mask]],
+                    "doc_id": pdf["doc_id"].to_numpy()[row_idx[mask]],
                     "block": j[mask],
                     "val": val[mask],
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(resample, out_schema)
+    return df.select("doc_id", "payload").mapInPandas(resample, out_schema)
 
 
 def patchify(
@@ -281,7 +268,7 @@ def patchify(
     ).mapInPandas(cut, out_schema)
 
 
-def png_dims(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def png_dims(df: DataFrame) -> DataFrame:
     """REAL PNG dimension decode, entirely JVM-side: the IHDR chunk is
     at a fixed offset, so width/height are two big-endian u32s at bytes
     17-24 — extracted with ``substring``+``hex``+``conv`` Column
@@ -289,9 +276,9 @@ def png_dims(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     Non-PNG payloads (magic mismatch) get NULL dims. The existence
     proof that typed metadata extraction from binary media columns
     needs no UDF at all when the format has fixed-offset headers."""
-    magic = F.hex(F.substring(F.col(payload_col), 1, 8)) == "89504E470D0A1A0A"
-    w = F.expr(f"cast(conv(hex(substring({payload_col}, 17, 4)), 16, 10) AS bigint)")
-    h = F.expr(f"cast(conv(hex(substring({payload_col}, 21, 4)), 16, 10) AS bigint)")
+    magic = F.hex(F.substring(F.col("payload"), 1, 8)) == "89504E470D0A1A0A"
+    w = F.expr("cast(conv(hex(substring(payload, 17, 4)), 16, 10) AS bigint)")
+    h = F.expr("cast(conv(hex(substring(payload, 21, 4)), 16, 10) AS bigint)")
     return df.withColumn("png_width", F.when(magic, w)).withColumn(
         "png_height", F.when(magic, h)
     )
@@ -878,13 +865,7 @@ def logmel_features(
     return df.select(id_col, data_col, rate_col).mapInPandas(compute, out_schema)
 
 
-def phash64(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    data_col: str = "data",
-    width_col: str = "width",
-    height_col: str = "height",
-) -> DataFrame:
+def phash64(df: DataFrame) -> DataFrame:
     """64-bit DCT perceptual hash over decoded RGB rasters — the image
     near-duplicate signature (pHash family): two images that differ by
     small pixel perturbations, brightness dither or padding land within
@@ -916,7 +897,7 @@ def phash64(
     import numpy as np
     import pandas as pd
 
-    out_schema = f"{id_col} long, phash long"
+    out_schema = "doc_id long, phash long"
     n = 32
     k = np.arange(n)[:, None]
     m = np.arange(n)[None, :]
@@ -927,9 +908,7 @@ def phash64(
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, hashes = [], []
-            for i, b, w, h in zip(
-                pdf[id_col], pdf[data_col], pdf[width_col], pdf[height_col]
-            ):
+            for i, b, w, h in zip(pdf["doc_id"], pdf["data"], pdf["width"], pdf["height"]):
                 w, h = int(w), int(h)
                 a = np.frombuffer(bytes(b), np.uint8).astype(np.float64)
                 gray = a.reshape(h, w, -1).mean(axis=2)
@@ -946,8 +925,6 @@ def phash64(
                     val -= 1 << 64
                 ids.append(int(i))
                 hashes.append(val)
-            yield pd.DataFrame({id_col: ids, "phash": hashes})
+            yield pd.DataFrame({"doc_id": ids, "phash": hashes})
 
-    return df.select(id_col, data_col, width_col, height_col).mapInPandas(
-        compute, out_schema
-    )
+    return df.select("doc_id", "data", "width", "height").mapInPandas(compute, out_schema)

@@ -2,9 +2,12 @@
 write as map/reduce functions (SURVEY.md §2.B, mechanism
 ``worker.py:134-145`` + ``worker.py:193-207``), exposed natively.
 
-Every helper is a thin, composable wrapper over DataFrame ops so
-Catalyst sees the declarative plan (predicate pushdown, column pruning,
-partial aggregation are free). No Python UDFs here.
+Projections, filters, grouped aggregations and set operations are
+direct DataFrame calls at each query; the helpers here fix a format
+(exact decimal money math, sorted sets) or an algorithm (sketches,
+audits, diffs). All are built of DataFrame ops, so Catalyst sees the
+declarative plan (predicate pushdown, column pruning, partial
+aggregation are free). No Python UDFs here.
 
 Cross-engine determinism conventions (shared with the DuckDB oracle):
 
@@ -55,102 +58,16 @@ def dec_avg(col: Column | str) -> Column:
     return F.sum(dec(c)).cast("double") / F.count(c)
 
 
-def sorted_set_str(col: Column | str, sep: str = ",") -> Column:
+def sorted_set_str(col: Column | str) -> Column:
     """``collect_set`` → sorted → comma-joined string (deterministic
     representation of a per-group set; ≡ the reference's
     ``sorted(set(values))``, ``inverted_index.py:61``).
 
-    ≡ oracle ``array_to_string(list_sort(list(DISTINCT x)), sep)``.
+    ≡ oracle ``array_to_string(list_sort(list(DISTINCT x)), ',')``.
     """
     return F.array_join(
-        F.transform(F.array_sort(F.collect_set(col)), lambda x: x.cast("string")), sep
+        F.transform(F.array_sort(F.collect_set(col)), lambda x: x.cast("string")), ","
     )
-
-
-def project(df: DataFrame, cols: Iterable[Column | str]) -> DataFrame:
-    """B4 projection — ``df.select``; Catalyst prunes the parquet scan
-    to exactly these columns (check ``ReadSchema`` in explain)."""
-    return df.select(*cols)
-
-
-def filter_rows(df: DataFrame, *conds: Column) -> DataFrame:
-    """B4 filter — conjunctive predicates; pushed into the parquet scan
-    (check ``PushedFilters`` in explain)."""
-    out = df
-    for c in conds:
-        out = out.filter(c)
-    return out
-
-
-def explode_col(df: DataFrame, arr: Column, alias: str, keep: Iterable[str] = ()) -> DataFrame:
-    """B5 flatMap/explode — one output row per array element."""
-    return df.select(*keep, F.explode(arr).alias(alias))
-
-
-def grouped_agg(df: DataFrame, keys: Iterable[str], **aggs: Column) -> DataFrame:
-    """B6 grouped aggregation; aliases from kwarg names."""
-    return df.groupBy(*keys).agg(*[v.alias(k) for k, v in aggs.items()])
-
-
-def distinct_rows(df: DataFrame, cols: Iterable[str] | None = None) -> DataFrame:
-    """B3 distinct / dropDuplicates. With ``cols``, keeps the distinct
-    key combinations only (projection first, so the shuffle carries just
-    the key columns)."""
-    return (df.select(*cols) if cols else df).distinct()
-
-
-def top_k(df: DataFrame, k: int, *order: Column) -> DataFrame:
-    """B10 global top-k. ``order`` must be a total order (include a
-    unique tie-breaker column) for deterministic results.
-
-    At scale this is a TakeOrderedAndProject — each partition keeps k
-    rows, the driver merges; no full sort."""
-    return df.orderBy(*order).limit(k)
-
-
-def union_all(*dfs: DataFrame) -> DataFrame:
-    """B11 union by name."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def rollup_agg(df: DataFrame, keys: Iterable[str], **aggs: Column) -> DataFrame:
-    """Hierarchical subtotals: one result row per key prefix plus the
-    grand total (nulls mark the rolled-up levels). Executes as a single
-    Expand + partial/final HashAggregate — one shuffle for all levels,
-    not one aggregation per level."""
-    return df.rollup(*keys).agg(*[v.alias(k) for k, v in aggs.items()])
-
-
-def cube_agg(df: DataFrame, keys: Iterable[str], **aggs: Column) -> DataFrame:
-    """All 2^k key-subset subtotals in one pass (Expand multiplies each
-    input row by 2^k — keep k small at scale)."""
-    return df.cube(*keys).agg(*[v.alias(k) for k, v in aggs.items()])
-
-
-def grouping_sets_agg(
-    df: DataFrame, sets: list[list[str]], keys: Iterable[str], **aggs: Column
-) -> DataFrame:
-    """Explicit GROUPING SETS — only the requested key subsets, cheaper
-    than cube when few subtotal combinations are needed."""
-    return df.groupingSets(sets, *keys).agg(*[v.alias(k) for k, v in aggs.items()])
-
-
-def intersect_rows(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Set intersection (distinct) — plans as a left-semi join + distinct."""
-    return a.intersect(b)
-
-
-def except_rows(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Set difference (distinct) — plans as a left-anti join + distinct.
-
-    ``subtract`` IS SQL ``EXCEPT (DISTINCT)``: no row of ``b`` survives.
-    (``exceptAll().distinct()`` is NOT equivalent — it keeps rows whose
-    multiplicity in ``a`` exceeds that in ``b``, which diverges from the
-    SQL semantics as soon as inputs carry duplicates.)"""
-    return a.subtract(b)
 
 
 def pivot_count(
@@ -310,12 +227,7 @@ def dq_audit(
     return out
 
 
-def table_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: list[str],
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
+def table_diff(old: DataFrame, new: DataFrame, key_cols: list[str]) -> DataFrame:
     """Snapshot diff — classify every key as ``added`` / ``removed`` /
     ``changed`` between two versions of a table (the change-data feed a
     lakehouse table format derives from its log, computed directly when
@@ -324,11 +236,10 @@ def table_diff(
     Plan: each side reduces to (keys, 64-bit content hash) BEFORE the
     full-outer join, so the shuffle carries keys + 8 bytes regardless of
     row width — at 100 TB this is the difference between joining two
-    fact tables and joining two key columns. ``compare_cols`` defaults
-    to all non-key columns (which must then match between snapshots).
+    fact tables and joining two key columns. The hash covers every
+    non-key column of ``new``; ``old`` must carry the same columns.
     """
-    if compare_cols is None:
-        compare_cols = [c for c in new.columns if c not in key_cols]
+    compare_cols = [c for c in new.columns if c not in key_cols]
     o = old.select(
         *key_cols, F.xxhash64(F.struct(*compare_cols)).alias("_h_old")
     )

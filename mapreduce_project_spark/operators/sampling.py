@@ -39,10 +39,8 @@ def _frac_threshold_hex(frac: float) -> str:
     return format(int(frac * (1 << 32)), "08x")
 
 
-def hash_split(
-    df: DataFrame, key_col: str, test_frac: float = 0.125, split_col: str = "split"
-) -> DataFrame:
-    """Deterministic train/test assignment: ``split_col`` ∈
+def hash_split(df: DataFrame, key_col: str, test_frac: float = 0.125) -> DataFrame:
+    """Deterministic train/test assignment: ``split`` ∈
     {'test','train'} by md5-bucket of ``key_col``. Properties that
     matter for training pipelines: (1) reproducible — the split is a
     pure function of the key, not of run order, partitioning, or
@@ -51,7 +49,7 @@ def hash_split(
     the optimizer pushes alongside the scan."""
     thr = _frac_threshold_hex(test_frac)
     return df.withColumn(
-        split_col,
+        "split",
         F.when(_hash_hex8(F.col(key_col)) < thr, F.lit("test")).otherwise(
             F.lit("train")
         ),
@@ -85,7 +83,6 @@ def pack_sequences(
     order_col: str,
     size_col: Column,
     budget: int,
-    bin_col: str = "bin",
 ) -> DataFrame:
     """Assign each document a pack ``bin`` so consecutive documents
     (by ``order_col``, within ``part_col``) fill a ``budget``-token
@@ -107,7 +104,7 @@ def pack_sequences(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cum_before = F.coalesce(F.sum(size_col).over(w), F.lit(0))
-    return df.withColumn(bin_col, F.floor(cum_before / budget))
+    return df.withColumn("bin", F.floor(cum_before / budget))
 
 
 def repeat_sources(
@@ -116,12 +113,11 @@ def repeat_sources(
     source_col: str,
     rates: dict[str, float],
     default_rate: float = 1.0,
-    epoch_col: str = "epoch",
 ) -> DataFrame:
     """Deterministic replication/epochs — the rate>1 counterpart of
     `mix_sources`: each row appears ``floor(rate)`` times plus one more
     when its md5 bucket falls under ``frac(rate)``, tagged with a
-    1-based ``epoch_col``. Rate 2.5 on a source means every row twice
+    1-based ``epoch``. Rate 2.5 on a source means every row twice
     and a deterministic half of them a third time — the "2.5 epochs of
     curated data" upsampling step of training-mixture assembly.
 
@@ -158,8 +154,8 @@ def repeat_sources(
     return (
         df.withColumn("_n", n)
         .filter(F.col("_n") >= 1)
-        .withColumn(epoch_col, F.explode(F.sequence(F.lit(1), F.col("_n"))))
-        .withColumn(epoch_col, F.col(epoch_col).cast("bigint"))
+        .withColumn("epoch", F.explode(F.sequence(F.lit(1), F.col("_n"))))
+        .withColumn("epoch", F.col("epoch").cast("bigint"))
         .drop("_n")
     )
 
@@ -200,8 +196,6 @@ def shuffle_shards(
     key_col: str,
     n_shards: int = 16,
     seed: str = "seed42",
-    shard_col: str = "shard",
-    pos_col: str = "pos",
 ) -> DataFrame:
     """Deterministic global training shuffle into shards: every row gets
     a ``(shard, pos)`` address that is a pure function of
@@ -231,10 +225,10 @@ def shuffle_shards(
     shard = F.pmod(
         F.expr("cast(conv(substr(_k, 1, 8), 16, 10) AS bigint)"), F.lit(n_shards)
     ).cast("int")
-    w = Window.partitionBy(shard_col).orderBy("_k", key_col)
+    w = Window.partitionBy("shard").orderBy("_k", key_col)
     return (
-        keyed.withColumn(shard_col, shard)
-        .withColumn(pos_col, F.row_number().over(w).cast("bigint"))
+        keyed.withColumn("shard", shard)
+        .withColumn("pos", F.row_number().over(w).cast("bigint"))
         .drop("_k")
     )
 

@@ -31,6 +31,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _LSH_SEED = 42
+# dimension of the `embeddings` fixture vectors, which the LSH and IVF
+# searches size their planes and centroids by
+_DIM = 64
+# sub-buckets per block of the GEMM pair and kNN joins: each unordered
+# pair of buckets is one pandas group, grid·(grid+1)/2 groups a block
+_GEMM_GRID = 4
 
 
 def as_double(arr: Column) -> Column:
@@ -46,7 +52,15 @@ def fold_sum(arr: Column) -> Column:
 
 
 def dot(a: Column, b: Column) -> Column:
-    """Deterministic dot product of two double arrays."""
+    """Deterministic dot product of two double arrays.
+
+    MEASURED (sf0.1, local[32], warm): a dot product unrolled for a
+    known dim (``((0.0 + x0*y0) + x1*y1) + ...``, bit-identical) is ~2x
+    SLOWER than this `F.aggregate` fold (3.25 s vs 1.51 s for brute-force
+    top-k) — both run interpreted (HOFs and oversized expression trees
+    alike fall out of whole-stage codegen), and the fold's single pass
+    over the array beats 64 independent `getItem` probes. The fold is
+    therefore the hot path even when the dim is known."""
     return fold_sum(F.zip_with(a, b, lambda x, y: x * y))
 
 
@@ -90,24 +104,12 @@ def cosine_pandas(a: Column, b: Column) -> Column:
     return pandas_udf(_cos, "double")(a, b)
 
 
-def _dot_norm(dim: int | None):
-    """MEASURED (sf0.1, local[32], warm): a dot product unrolled for a
-    known dim (``((0.0 + x0*y0) + x1*y1) + ...``, bit-identical) is ~2x
-    SLOWER than the `F.aggregate` fold (3.25 s vs 1.51 s for brute-force
-    top-k) — both run interpreted (HOFs and oversized expression trees
-    alike fall out of whole-stage codegen), and the fold's single pass
-    over the array beats 64 independent `getItem` probes. The fold is
-    therefore the hot path regardless of whether dim is known."""
-    return dot, norm
-
-
 def cosine_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float,
     block_col: str | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine similarity join: (id_a, id_b, cos) with
     cos >= threshold. Optional ``block_col`` restricts pairs to equal
@@ -125,12 +127,11 @@ def cosine_pairs(
     side broadcasts (measured 3x the wall time at sf0.1). At 100 TB
     the scan has thousands of splits and this round-robin exchange is
     cheap relative to the pair work it parallelizes."""
-    _dot, _norm = _dot_norm(dim)
     base = df.select(
         F.col(id_col).alias("id"),
         as_double(F.col(vec_col)).alias("v"),
         *([F.col(block_col).alias("blk")] if block_col else []),
-    ).withColumn("nrm", _norm(F.col("v")))
+    ).withColumn("nrm", norm(F.col("v")))
     probe = base.repartition(df.sparkSession.sparkContext.defaultParallelism)
     a, b = probe.alias("a"), base.alias("b")
     cond = F.col("a.id") < F.col("b.id")
@@ -141,7 +142,7 @@ def cosine_pairs(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            (_dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))).alias("cos"),
+            (dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -153,8 +154,6 @@ def cosine_pairs_gemm(
     vec_col: str,
     threshold: float,
     block_col: str,
-    margin: float | None = None,
-    grid: int = 4,
 ) -> DataFrame:
     """Exact blocked cosine pairs with the quadratic CONSTANT paid in
     BLAS, not in interpreted fold-joins: (id_a, id_b, cos), cos >=
@@ -172,7 +171,7 @@ def cosine_pairs_gemm(
 
     1. GEMM PREFILTER — one `applyInPandas` per block computes the
        whole block's cosine matrix as a single numpy matmul and emits
-       only pairs with gemm_cos >= threshold - ``margin``. BLAS
+       only pairs with gemm_cos >= threshold - margin. BLAS
        accumulation order differs from the engines' sequential fold in
        the last ulp, so the prefilter keeps an epsilon margin and
        decides NOTHING.
@@ -198,17 +197,17 @@ def cosine_pairs_gemm(
     within a block — inherent to exactness at this threshold — but the
     decomposition makes both MEMORY and PARALLELISM block-size-free.
     Each vector lands in a deterministic sub-bucket b = xxhash64(id)
-    mod ``grid``; every unordered sub-bucket pair (i <= j) becomes one
+    mod ``_GEMM_GRID``; every unordered sub-bucket pair (i <= j) becomes one
     pandas group holding only those two buckets' rows, so (a) a row is
-    shuffled ``grid`` times (linear, tunable), (b) per-group memory is
+    shuffled ``_GEMM_GRID`` times (linear), (b) per-group memory is
     ~2·(block/grid) rows whatever the block size (no "block must fit
     one pandas group" constraint), and (c) a giant block parallelizes
     across grid·(grid+1)/2 tasks instead of one — the round-6 sf≈1
     decade measured the un-gridded form at 42x/decade purely because
     10 label blocks left 22 of 32 cores idle. The prefilter GEMM runs
     in float32 (2x BLAS rate, half the traffic); worst-case float32
-    dot error on unit vectors grows ~dim*2^-24, so the default
-    ``margin`` scales with the OBSERVED dimension per group:
+    dot error on unit vectors grows ~dim*2^-24, so the margin scales
+    with the OBSERVED dimension per group:
     max(1e-4, dim * 2e-7) — 1e-4 alone covers dim <~ 500, the scaled
     term keeps the over-collection guarantee for wide embeddings
     (dim 4096 => margin 8.2e-4). The prefilter strictly
@@ -219,8 +218,6 @@ def cosine_pairs_gemm(
     import numpy as np
     import pandas as pd
 
-    if grid < 1:
-        raise ValueError("grid must be >= 1")
     base = df.select(
         F.col(block_col).alias("blk"),
         F.col(id_col).alias("id"),
@@ -229,18 +226,17 @@ def cosine_pairs_gemm(
 
     def _cut(dim: int) -> np.float32:
         # margin scales with observed dim (float32 GEMM error ~ dim*2^-24)
-        m = margin if margin is not None else max(1e-4, dim * 2e-7)
-        return np.float32(threshold - m)
+        return np.float32(threshold - max(1e-4, dim * 2e-7))
 
     # replicate each row into every sub-bucket pair it participates in:
     # row with bucket b joins groups (min(b,o), max(b,o)) for o in
     # 0..grid-1 — each unordered pair of rows meets in EXACTLY one group
-    bucket = F.pmod(F.xxhash64(F.col("id")), F.lit(grid))
+    bucket = F.pmod(F.xxhash64(F.col("id")), F.lit(_GEMM_GRID))
     memb = base.withColumn("sb", bucket).select(
         "blk", "id", "v", "sb",
         F.explode(
             F.expr(
-                f"transform(sequence(0, {grid - 1}), "
+                f"transform(sequence(0, {_GEMM_GRID - 1}), "
                 "o -> struct(least(sb, o) AS gi, greatest(sb, o) AS gj))"
             )
         ).alias("g"),
@@ -336,7 +332,6 @@ def topk_bruteforce(
     id_col: str,
     vec_col: str,
     k: int,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors for each query vector (excluding self):
     (query_id, neighbor_id, rk, cos). ``queries`` is broadcast — the
@@ -344,19 +339,18 @@ def topk_bruteforce(
     for ranking partitions by query_id (small)."""
     from pyspark.sql import Window
 
-    _dot, _norm = _dot_norm(dim)
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qnrm", _norm(F.col("qv")))
+    ).withColumn("qnrm", norm(F.col("qv")))
     c = df.select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv")
-    ).withColumn("nnrm", _norm(F.col("nv")))
+    ).withColumn("nnrm", norm(F.col("nv")))
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            (_dot(F.col("qv"), F.col("nv")) / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
+            (dot(F.col("qv"), F.col("nv")) / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
@@ -374,7 +368,6 @@ def hard_negatives(
     vec_col: str,
     label_col: str,
     k: int,
-    dim: int | None = None,
 ) -> DataFrame:
     """Hard-negative MINING for contrastive training: for each anchor,
     the ``k`` most-similar corpus vectors with a DIFFERENT label — the
@@ -390,17 +383,16 @@ def hard_negatives(
     Output: (query_id, neighbor_id, rk, cos)."""
     from pyspark.sql import Window
 
-    _dot, _norm = _dot_norm(dim)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).alias("qlabel"),
         as_double(F.col(vec_col)).alias("qv"),
-    ).withColumn("qnrm", _norm(F.col("qv")))
+    ).withColumn("qnrm", norm(F.col("qv")))
     c = df.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(label_col).alias("nlabel"),
         as_double(F.col(vec_col)).alias("nv"),
-    ).withColumn("nnrm", _norm(F.col("nv")))
+    ).withColumn("nnrm", norm(F.col("nv")))
     scored = c.join(
         F.broadcast(q),
         (F.col("query_id") != F.col("neighbor_id"))
@@ -408,7 +400,7 @@ def hard_negatives(
     ).select(
         "query_id",
         "neighbor_id",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
+        (dot(F.col("qv"), F.col("nv")) / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -444,9 +436,7 @@ def _hyperplanes(n_tables: int, n_bits: int, dim: int, seed: int = _LSH_SEED) ->
     return planes
 
 
-def rademacher_signs_pc(
-    n_tables: int, n_bits: int, dim: int, seed: int = _LSH_SEED
-) -> list[list[list[int]]]:
+def rademacher_signs_pc(n_tables: int, n_bits: int, dim: int) -> list[list[list[int]]]:
     """PREFIX-CONSISTENT ±1 plane family: plane (t, b) is generated
     from its own mixed seed, independent of ``n_bits`` — so the K-bit
     family is EXACTLY the first K planes per table of the 24-bit
@@ -464,7 +454,7 @@ def rademacher_signs_pc(
         for b in range(n_bits):
             # splitmix-style per-plane seed decorrelation
             s = (
-                seed
+                _LSH_SEED
                 ^ (t * 0x9E3779B97F4A7C15 + b * 0xBF58476D1CE4E5B9 + 0x632BE59BD9B4E019)
             ) % (2**63)
             state = s
@@ -566,9 +556,7 @@ def rademacher_signs(
     ]
 
 
-def lsh_code_exprs(
-    n_tables: int, n_bits: int, dim: int, seed: int = _LSH_SEED
-) -> tuple[list[str], list[str]]:
+def lsh_code_exprs(n_tables: int, n_bits: int, dim: int) -> tuple[list[str], list[str]]:
     """(spark_exprs, duck_exprs) — per-table sign-LSH bucket codes as
     SQL expression strings over a DOUBLE-array column ``v``, one pair
     per table, BIT-IDENTICAL across engines: both compute each plane
@@ -579,7 +567,7 @@ def lsh_code_exprs(
     lands within an ulp of zero (numpy-matmul code paths cannot make
     that promise, which is fine for top-k reranks but not for outputs
     that expose the candidate set)."""
-    signs = rademacher_signs(n_tables, n_bits, dim, seed)
+    signs = rademacher_signs(n_tables, n_bits, dim, _LSH_SEED)
     spark_codes, duck_codes = [], []
     for table in signs:
         s_bits, d_bits = [], []
@@ -673,7 +661,6 @@ def topk_ann_lsh(
     k: int,
     n_tables: int = 12,
     n_bits: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket with the query
     in >=1 of ``n_tables`` tables; exact cosine re-rank on candidates.
@@ -681,8 +668,8 @@ def topk_ann_lsh(
     12x4 measured ~0.94 recall@5 on the sf0.1 fixture)."""
     from pyspark.sql import Window
 
-    corpus_b = lsh_buckets(df, id_col, vec_col, n_tables, n_bits, dim)
-    query_b = lsh_buckets(queries, id_col, vec_col, n_tables, n_bits, dim).select(
+    corpus_b = lsh_buckets(df, id_col, vec_col, n_tables, n_bits, _DIM)
+    query_b = lsh_buckets(queries, id_col, vec_col, n_tables, n_bits, _DIM).select(
         F.col("table").alias("qtable"),
         F.col("bucket").alias("qbucket"),
         F.col("id").alias("query_id"),
@@ -749,7 +736,6 @@ def knn_join(
     vec_col: str,
     k: int,
     block_col: str | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact k-nearest-neighbor SELF-join: every vector's k most-cosine-
     similar neighbors, (id, neighbor_id, rk, cos). The batch kNN-graph
@@ -770,7 +756,7 @@ def knn_join(
     the join does half the fold work of the naive a.id != b.id form;
     the per-id ranking window partitions on id with bounded fan-in
     (block size, not corpus size)."""
-    pairs = cosine_pairs(df, id_col, vec_col, -2.0, block_col, dim)
+    pairs = cosine_pairs(df, id_col, vec_col, -2.0, block_col)
     return _mirror_topk(pairs, k)
 
 
@@ -781,7 +767,6 @@ def knn_join_ann(
     k: int,
     n_tables: int = 32,
     n_bits: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate kNN self-join at scale: candidate pairs share an LSH
     bucket in ≥1 of ``n_tables`` hyperplane tables, each candidate is
@@ -792,7 +777,7 @@ def knn_join_ann(
     the bucket join shuffles on (table, bucket) — uniform keys by
     construction. Vectors ride through the candidate dedup so the
     re-rank needs no second join against the corpus."""
-    b = lsh_buckets(df, id_col, vec_col, n_tables, n_bits, dim)
+    b = lsh_buckets(df, id_col, vec_col, n_tables, n_bits, _DIM)
     x, y = b.alias("x"), b.alias("y")
     cand = (
         x.join(
@@ -886,7 +871,6 @@ def topk_ivf(
     k: int,
     n_clusters: int = 16,
     n_probe: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """C3 IVF ANN: coarse-quantize the corpus into ``n_clusters`` cells,
     probe the ``n_probe`` nearest cells per query, exact cosine re-rank
@@ -929,7 +913,7 @@ def topk_ivf(
     # n_clusters rows, consumed by BOTH the final assignment and the
     # probe selection — cache so the sample Lloyd pass runs once, not
     # once per consumer (tiny table, evicted with the session/cache)
-    cents1 = cluster_centroid_means(assign0, dim).cache()
+    cents1 = cluster_centroid_means(assign0, _DIM).cache()
 
     # 3. final cells against the Lloyd-updated quantizer
     cells = base.crossJoin(F.broadcast(_cents_row(cents1))).select(
@@ -1284,19 +1268,7 @@ def topk_sq8(
     )
 
 
-def topk_ivf_pq(
-    df: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    dim: int = 64,
-    m: int = 4,
-    n_cents: int = 16,
-    iters: int = 1,
-) -> DataFrame:
+def topk_ivf_pq(df: DataFrame, queries: DataFrame, id_col: str, vec_col: str, k: int) -> DataFrame:
     """The FULL production ANN serving composition — IVF coarse routing
     THEN PQ/ADC scoring within the probed cells — that `topk_ivf` and
     `topk_pq_adc` each document as "composes with the other at scale":
@@ -1321,7 +1293,10 @@ def topk_ivf_pq(
     (cell miss + quantization error); recall floor pinned in tests."""
     from pyspark.sql import Window
 
-    sub = dim // m
+    # 16 coarse cells, 4 probed per query; PQ codes over 4 subspaces of
+    # 16 centroids each, trained in one Lloyd round
+    n_clusters, n_probe, m, n_cents, iters = 16, 4, 4, 16, 1
+    sub = _DIM // m
     base = df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
 
     # coarse quantizer — identical build to topk_ivf
@@ -1335,13 +1310,13 @@ def topk_ivf_pq(
     assign0 = sample.crossJoin(F.broadcast(_cents_row(seed_cents))).select(
         "id", "v", _nearest_cid(F.col("v")).alias("cid")
     )
-    cents1 = cluster_centroid_means(assign0, dim).cache()
+    cents1 = cluster_centroid_means(assign0, _DIM).cache()
     cells = base.crossJoin(F.broadcast(_cents_row(cents1))).select(
         "id", "v", _nearest_cid(F.col("v")).alias("cell")
     )
 
     # PQ codes (2 B/vector) + cell id, one zero-shuffle projection
-    books = pq_train(df, id_col, vec_col, dim, m, n_cents, iters)
+    books = pq_train(df, id_col, vec_col, _DIM, m, n_cents, iters)
     wide = _with_codebooks(cells, books).select(
         "id", "cell", *[_pq_code(s, sub).alias(f"c{s}") for s in range(m)]
     )
@@ -1448,7 +1423,6 @@ def knn_join_gemm(
     vec_col: str,
     k: int,
     block_col: str,
-    grid: int = 4,
 ) -> DataFrame:
     """`knn_join` with the quadratic constant paid in BLAS and the
     round-6 grid decomposition — same output contract, bit-identical
@@ -1472,7 +1446,7 @@ def knn_join_gemm(
     that also beat it globally.
 
     Memory is slab-bounded by row tiles exactly like
-    `cosine_pairs_gemm`; a row shuffles ``grid`` times; a giant block
+    `cosine_pairs_gemm`; a row shuffles ``_GEMM_GRID`` times; a giant block
     parallelizes across grid·(grid+1)/2 tasks. ID contract: integer,
     unique (the int64 emit)."""
     import numpy as np
@@ -1480,19 +1454,17 @@ def knn_join_gemm(
 
     from pyspark.sql import Window
 
-    if grid < 1:
-        raise ValueError("grid must be >= 1")
     base = df.select(
         F.col(block_col).alias("blk"),
         F.col(id_col).alias("id"),
         as_double(F.col(vec_col)).alias("v"),
     )
-    bucket = F.pmod(F.xxhash64(F.col("id")), F.lit(grid))
+    bucket = F.pmod(F.xxhash64(F.col("id")), F.lit(_GEMM_GRID))
     memb = base.withColumn("sb", bucket).select(
         "blk", "id", "v", "sb",
         F.explode(
             F.expr(
-                f"transform(sequence(0, {grid - 1}), "
+                f"transform(sequence(0, {_GEMM_GRID - 1}), "
                 "o -> struct(least(sb, o) AS gi, greatest(sb, o) AS gj))"
             )
         ).alias("g"),

@@ -39,17 +39,17 @@ BPE_PATTERN = "([a-z]{1,4}|[0-9]|[^a-z0-9\\s])"
 DSIR_LOG_SCALE = 1_000_000
 
 
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_stats(df: DataFrame) -> DataFrame:
     """Add n_tokens / n_distinct_tokens / n_chars_measured / avg_token_len
     / type-token-ratio columns."""
-    tok = tokens(text_col)
+    tok = tokens("text")
     n_tok = F.size(tok)
     n_dis = F.size(F.array_distinct(tok))
     total_len = F.aggregate(tok, F.lit(0), lambda acc, x: acc + F.length(x))
     return (
         df.withColumn("n_tokens", n_tok)
         .withColumn("n_distinct_tokens", n_dis)
-        .withColumn("n_chars_measured", F.length(text_col))
+        .withColumn("n_chars_measured", F.length("text"))
         .withColumn("avg_token_len", total_len.cast("double") / n_tok)
         .withColumn("ttr", n_dis.cast("double") / n_tok)
     )
@@ -143,9 +143,7 @@ def pii_counts(text_col: str | Column) -> dict[str, Column]:
     return {name: F.regexp_count(c, F.lit(pat)) for name, pat, _ in PII_PATTERNS}
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1, Table A1),
     adapted to token n-grams: per document,
 
@@ -188,9 +186,9 @@ def repetition_stats(
     # reference (the bpe_merge_pairs lesson, same round)
     tk = F.col("tk")
     grams = (
-        df.select(F.col(id_col), tokens(text_col).alias("tk"))
+        df.select(F.col("doc_id"), tokens("text").alias("tk"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.concat(
                     tagged(1, tk),
@@ -199,13 +197,13 @@ def repetition_stats(
                 )
             ).alias("e"),
         )
-        .select(id_col, "e.n", "e.gh", "e.glen")
+        .select("doc_id", "e.n", "e.gh", "e.glen")
     )
-    counts = grams.groupBy(id_col, "n", "gh").agg(
+    counts = grams.groupBy("doc_id", "n", "gh").agg(
         F.count(F.lit(1)).alias("c"), F.any_value("glen").alias("glen")
     )
     char_mass = F.col("c") * F.col("glen")
-    per_n = counts.groupBy(id_col, "n").agg(
+    per_n = counts.groupBy("doc_id", "n").agg(
         F.sum("c").alias("total"),
         F.coalesce(
             F.sum(F.when(F.col("c") > 1, F.col("c"))), F.lit(0)
@@ -218,7 +216,7 @@ def repetition_stats(
     def at(n: int, expr: Column) -> Column:
         return F.max(F.when(F.col("n") == n, expr))
 
-    return per_n.groupBy(id_col).agg(
+    return per_n.groupBy("doc_id").agg(
         at(1, F.col("n_distinct").cast("double") / F.col("total")).alias(
             "distinct_token_frac"
         ),
@@ -229,9 +227,7 @@ def repetition_stats(
     )
 
 
-def compression_ratio(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def compression_ratio(df: DataFrame) -> DataFrame:
     """Per-document zlib compression ratio — the model-free redundancy
     signal (Gopher-style filters drop documents that compress too well:
     boilerplate/template spam, or too poorly: binary junk). Arrow-
@@ -239,25 +235,25 @@ def compression_ratio(
     shuffle; output (id, n_bytes, n_compressed, ratio)."""
     import pandas as pd
 
-    out_schema = f"{id_col} long, n_bytes long, n_compressed long, ratio double"
+    out_schema = "doc_id long, n_bytes long, n_compressed long, ratio double"
 
     def comp(batches):
         import zlib
 
         for pdf in batches:
-            raw = [t.encode("utf-8") if t is not None else b"" for t in pdf[text_col]]
+            raw = [t.encode("utf-8") if t is not None else b"" for t in pdf["text"]]
             n = [len(b) for b in raw]
             nc = [len(zlib.compress(b, 6)) for b in raw]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "doc_id": pdf["doc_id"].to_numpy(),
                     "n_bytes": n,
                     "n_compressed": nc,
                     "ratio": [c / b if b else 1.0 for c, b in zip(nc, n)],
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(comp, out_schema)
+    return df.select("doc_id", "text").mapInPandas(comp, out_schema)
 
 
 def normalize_nfc(col: Column) -> Column:

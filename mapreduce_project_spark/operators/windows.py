@@ -6,7 +6,7 @@ reference user would emulate with a single-reducer sort
 Scale notes: a window partitioned by a key shuffles once on that key
 and sorts within partitions — same cost shape as a groupBy on the key.
 Never use a global (unpartitioned) window at scale; for global top-k use
-``relational.top_k`` (TakeOrderedAndProject) instead.
+``orderBy(...).limit(k)`` (TakeOrderedAndProject) instead.
 """
 
 from __future__ import annotations
@@ -18,15 +18,12 @@ from mapreduce_project_spark.operators.relational import dec
 
 
 def top_k_per_group(
-    df: DataFrame, partition_by: list[str], order: list[Column], k: int, rank_col: str = "rk"
+    df: DataFrame, partition_by: list[str], order: list[Column], k: int
 ) -> DataFrame:
-    """Top-k rows per group via ``row_number``. ``order`` must include a
-    unique tie-breaker for determinism."""
+    """Top-k rows per group via ``row_number``, numbered in ``rk``.
+    ``order`` must include a unique tie-breaker for determinism."""
     w = Window.partitionBy(*partition_by).orderBy(*order)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )
+    return df.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
 def running_dec_sum(
@@ -41,17 +38,6 @@ def running_dec_sum(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(alias, F.sum(dec(value_col)).over(w).cast("double"))
-
-
-def lag_gap_ms(
-    df: DataFrame, partition_by: list[str], ts_col: str, alias: str = "gap_ms"
-) -> DataFrame:
-    """Milliseconds since the previous row in event-time order (null for
-    the first row per partition). Uses ``unix_millis`` ≡ oracle
-    ``epoch_ms`` — integer math, no float drift."""
-    w = Window.partitionBy(*partition_by).orderBy(F.col(ts_col))
-    ms = F.unix_millis(F.col(ts_col))
-    return df.withColumn(alias, ms - F.lag(ms).over(w))
 
 
 def trailing_time_agg(

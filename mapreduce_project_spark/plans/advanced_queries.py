@@ -16,16 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.join import asof_join, range_join
-from mapreduce_project_spark.operators.relational import (
-    cube_agg,
-    dec_sum,
-    except_rows,
-    grouping_sets_agg,
-    intersect_rows,
-    percentiles,
-    pivot_count,
-    rollup_agg,
-)
+from mapreduce_project_spark.operators.relational import dec_sum, percentiles, pivot_count
 from mapreduce_project_spark.operators.similarity import topk_ivf
 from mapreduce_project_spark.queries_registry import query, t
 
@@ -74,11 +65,8 @@ def q_rollup_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     case of grouping sets — `cube_order_stats` and
     `grouping_sets_lineitem` carry the driver signal for the same
     Expand-based multi-level aggregation machinery."""
-    return rollup_agg(
-        t(spark, sf_dir, "customer"),
-        ["c_mktsegment", "c_nationkey"],
-        n_customers=F.count(F.lit(1)),
-        total_bal=dec_sum("c_acctbal"),
+    return t(spark, sf_dir, "customer").rollup("c_mktsegment", "c_nationkey").agg(
+        F.count(F.lit(1)).alias("n_customers"), dec_sum("c_acctbal").alias("total_bal")
     )
 
 
@@ -94,11 +82,8 @@ def q_rollup_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All 2^2 subtotal combinations in one pass."""
-    return cube_agg(
-        t(spark, sf_dir, "orders"),
-        ["o_orderstatus", "o_orderpriority"],
-        n_orders=F.count(F.lit(1)),
-        revenue=dec_sum("o_totalprice"),
+    return t(spark, sf_dir, "orders").cube("o_orderstatus", "o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"), dec_sum("o_totalprice").alias("revenue")
     )
 
 
@@ -114,12 +99,10 @@ def q_cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_grouping_sets_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets — only the requested subtotals."""
-    return grouping_sets_agg(
-        t(spark, sf_dir, "lineitem"),
-        [["l_returnflag"], ["l_linestatus"], []],
-        ["l_returnflag", "l_linestatus"],
-        n_rows=F.count(F.lit(1)),
-        sum_qty=dec_sum("l_quantity"),
+    return (
+        t(spark, sf_dir, "lineitem")
+        .groupingSets([["l_returnflag"], ["l_linestatus"], []], "l_returnflag", "l_linestatus")
+        .agg(F.count(F.lit(1)).alias("n_rows"), dec_sum("l_quantity").alias("sum_qty"))
     )
 
 
@@ -135,7 +118,7 @@ def q_intersect_nation_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set intersection: nations with both customers and suppliers."""
     c = t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return intersect_rows(c, s)
+    return c.intersect(s)
 
 
 @query(
@@ -151,7 +134,10 @@ def q_except_order_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     hi = orders.filter(F.col("o_totalprice") > 300000).select("o_orderkey")
     fin = orders.filter(F.col("o_orderstatus") == "F").select("o_orderkey")
-    return except_rows(hi, fin)
+    # `subtract` is SQL EXCEPT (DISTINCT): no row of `fin` survives.
+    # `exceptAll().distinct()` is not the same: it keeps a row whose
+    # multiplicity in `hi` exceeds that in `fin`.
+    return hi.subtract(fin)
 
 
 @query(

@@ -11,23 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_project_spark.operators.join import anti_join, join, semi_join
-from mapreduce_project_spark.operators.relational import (
-    dec,
-    dec_avg,
-    dec_sum,
-    distinct_rows,
-    filter_rows,
-    grouped_agg,
-    sorted_set_str,
-    top_k,
-    union_all,
-)
-from mapreduce_project_spark.operators.windows import (
-    lag_gap_ms,
-    running_dec_sum,
-    top_k_per_group,
-)
+from mapreduce_project_spark.operators.relational import dec, dec_avg, dec_sum, sorted_set_str
+from mapreduce_project_spark.operators.windows import running_dec_sum, top_k_per_group
 from mapreduce_project_spark.queries_registry import query, t
 
 
@@ -43,13 +28,13 @@ from mapreduce_project_spark.queries_registry import query, t
 )
 def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B4: predicate + projection; both push into the parquet scan."""
-    li = t(spark, sf_dir, "lineitem")
-    return filter_rows(
-        li,
-        F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-01-01")),
-        F.col("l_shipdate") < F.to_timestamp(F.lit("1998-01-01")),
-        F.col("l_discount") <= 0.05,
-    ).select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
+    return (
+        t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-01-01")))
+        .filter(F.col("l_shipdate") < F.to_timestamp(F.lit("1998-01-01")))
+        .filter(F.col("l_discount") <= 0.05)
+        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
+    )
 
 
 @query(
@@ -69,17 +54,14 @@ def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B6 (TPC-H Q1 analog): multi-agg groupBy; Catalyst plans partial +
     final HashAggregate (the map-side combiner the reference lacks)."""
-    li = t(spark, sf_dir, "lineitem")
-    return grouped_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        sum_qty=dec_sum("l_quantity"),
-        sum_base_price=dec_sum("l_extendedprice"),
-        sum_disc_price=F.sum(dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))).cast(
-            "double"
-        ),
-        avg_qty=dec_avg("l_quantity"),
-        count_order=F.count(F.lit(1)),
+    return t(spark, sf_dir, "lineitem").groupBy("l_returnflag", "l_linestatus").agg(
+        dec_sum("l_quantity").alias("sum_qty"),
+        dec_sum("l_extendedprice").alias("sum_base_price"),
+        F.sum(dec("l_extendedprice") * (F.lit(1) - dec("l_discount")))
+        .cast("double")
+        .alias("sum_disc_price"),
+        dec_avg("l_quantity").alias("avg_qty"),
+        F.count(F.lit(1)).alias("count_order"),
     )
 
 
@@ -95,18 +77,16 @@ def q_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_group_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B7: per-key set collection, deterministically serialized."""
-    return grouped_agg(
-        t(spark, sf_dir, "orders"),
-        ["o_custkey"],
-        priorities=sorted_set_str("o_orderpriority"),
-        n_orders=F.count(F.lit(1)),
+    return t(spark, sf_dir, "orders").groupBy("o_custkey").agg(
+        sorted_set_str("o_orderpriority").alias("priorities"),
+        F.count(F.lit(1)).alias("n_orders"),
     )
 
 
 @query("distinct_segments", "SELECT DISTINCT c_mktsegment FROM customer")
 def q_distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B3: distinct (projection first, so only the key column shuffles)."""
-    return distinct_rows(t(spark, sf_dir, "customer"), ["c_mktsegment"])
+    return t(spark, sf_dir, "customer").select("c_mktsegment").distinct()
 
 
 @query(
@@ -123,12 +103,10 @@ def q_distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_count_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B14: exact distinct counts (expand + two-phase agg in Spark). At
     100 TB prefer approx_count_distinct (see rows-only query)."""
-    return grouped_agg(
-        t(spark, sf_dir, "lineitem"),
-        ["l_returnflag"],
-        n_parts=F.countDistinct("l_partkey"),
-        n_supps=F.countDistinct("l_suppkey"),
-        n_rows=F.count(F.lit(1)),
+    return t(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
+        F.countDistinct("l_partkey").alias("n_parts"),
+        F.countDistinct("l_suppkey").alias("n_supps"),
+        F.count(F.lit(1)).alias("n_rows"),
     )
 
 
@@ -152,16 +130,12 @@ def q_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = t(spark, sf_dir, "customer")
     nation = t(spark, sf_dir, "nation")
     region = t(spark, sf_dir, "region")
-    joined = (
-        join(orders, customer, orders.o_custkey == customer.c_custkey)
+    return (
+        orders.join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey)
         .join(F.broadcast(region), F.col("n_regionkey") == region.r_regionkey)
-    )
-    return grouped_agg(
-        joined,
-        ["r_name", "n_name"],
-        revenue=dec_sum("o_totalprice"),
-        n_orders=F.count(F.lit(1)),
+        .groupBy("r_name", "n_name")
+        .agg(dec_sum("o_totalprice").alias("revenue"), F.count(F.lit(1)).alias("n_orders"))
     )
 
 
@@ -178,9 +152,9 @@ def q_join_semi_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9 left-semi (EXISTS): only the key column of orders shuffles."""
     customer = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    return semi_join(
-        customer, orders, customer.c_custkey == orders.o_custkey
-    ).select("c_custkey", "c_name", "c_acctbal")
+    return customer.join(orders, customer.c_custkey == orders.o_custkey, "left_semi").select(
+        "c_custkey", "c_name", "c_acctbal"
+    )
 
 
 @query(
@@ -198,9 +172,9 @@ def q_join_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer has orders — so the filter keeps the check non-trivial.)"""
     customer = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
-    return anti_join(
-        customer, orders, customer.c_custkey == orders.o_custkey
-    ).select("c_custkey", "c_name")
+    return customer.join(orders, customer.c_custkey == orders.o_custkey, "left_anti").select(
+        "c_custkey", "c_name"
+    )
 
 
 @query(
@@ -215,10 +189,10 @@ def q_outer_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9 outer join: zero-order customers kept with count 0."""
     customer = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders")
-    return grouped_agg(
-        join(customer, orders, customer.c_custkey == orders.o_custkey, "left"),
-        ["c_custkey"],
-        n_orders=F.count("o_orderkey"),
+    return (
+        customer.join(orders, customer.c_custkey == orders.o_custkey, "left")
+        .groupBy("c_custkey")
+        .agg(F.count("o_orderkey").alias("n_orders"))
     )
 
 
@@ -234,11 +208,13 @@ def q_outer_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B10 global top-k: TakeOrderedAndProject (per-partition k + driver
     merge, never a full sort). Tie-break on the unique key."""
-    return top_k(
-        t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
-        10,
-        F.col("o_totalprice").desc(),
-        F.col("o_orderkey").asc(),
+    # the order must be total, or which rows of a tie survive the limit
+    # depends on the partitioning
+    return (
+        t(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
+        .limit(10)
     )
 
 
@@ -287,7 +263,7 @@ def q_union_party_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("party_key"), F.lit("supplier").alias("src")
     )
-    return union_all(c, s)
+    return c.unionByName(s)
 
 
 @query(
@@ -1408,14 +1384,12 @@ def q_dp_noisy_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dp_noisy_source_counts(spark, sf_dir, epsilon=1.0)
 
 
-def dp_noisy_source_counts(
-    spark: SparkSession, sf_dir: str, epsilon: float = 1.0, seed: str = "dp1"
-) -> DataFrame:
+def dp_noisy_source_counts(spark: SparkSession, sf_dir: str, epsilon: float = 1.0) -> DataFrame:
     """Parameterized Laplace mechanism over the (source, lang) counts —
     scale b = sensitivity/epsilon = 1/epsilon. Same seeded-uniform
     caveats as the registered query (see q_dp_noisy_source_counts);
     epsilon is exposed so the scale calibration is testable: with the
-    same seed, noise(2*eps) is exactly noise(eps)/2 pre-quantization."""
+    one seed 'dp1', noise(2*eps) is exactly noise(eps)/2 pre-quantization."""
     g = (
         t(spark, sf_dir, "documents")
         .groupBy("source", "lang")
@@ -1423,7 +1397,7 @@ def dp_noisy_source_counts(
     )
     uu = (
         F.expr(
-            f"cast(conv(substr(md5(cast(concat('{seed}:', source, ':', lang)"
+            "cast(conv(substr(md5(cast(concat('dp1:', source, ':', lang)"
             " AS binary)), 1, 8), 16, 10) AS bigint)"
         ).cast("double")
         + F.lit(0.5)

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.similarity import (
     cosine_pairs,
-    knn_join,
     knn_join_ann,
     label_centroids,
     topk_ann_lsh,
@@ -90,7 +89,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for both paths; the brute-force twin stays oracle-checked in
     tests. Queries broadcast; corpus scanned once. Cosine is
     the `F.aggregate` left fold — measured FASTER than the unrolled
-    dim=64 expression tree (see `similarity._dot_norm`)."""
+    dim=64 expression tree (see `similarity.dot`)."""
     emb = t(spark, sf_dir, "embeddings")
     out = topk_bruteforce(
         emb, emb.filter(F.col("vec_id") < 10), "vec_id", "embedding", 5
@@ -979,11 +978,13 @@ def q_search_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mrl_oracle(dims=(8, 16, 32, 64), k=5, nq=10) -> str:
+def _mrl_oracle() -> str:
     """DuckDB twin of `matryoshka_recall_curve`: one ranked CTE per
     truncated dimensionality (fold cosine over the array PREFIX, the
     same operand order as Spark's slice+fold), hits counted against
     the full-dim exact top-k."""
+    dims, k, nq = (8, 16, 32, 64), 5, 10  # prefix widths, top-k, queries
+
     def cos(d: int) -> str:
         return (
             f"list_reduce(list_transform(generate_series(1, {d}),"
@@ -1144,13 +1145,13 @@ def q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _jl_exprs(k: int = 16, dim: int = 64):
-    """(spark_proj_exprs, duck_proj_exprs) — k oracle-replayable ±1
+def _jl_exprs():
+    """(spark_proj_exprs, duck_proj_exprs) — 16 oracle-replayable ±1
     Rademacher projection dots over a double-array column ``v``,
     micro-quantized to BIGINT (the D165 fold↔chain IEEE-equivalence)."""
     from mapreduce_project_spark.operators.similarity import rademacher_signs
 
-    planes = rademacher_signs(1, k, dim, seed=771)[0]
+    planes = rademacher_signs(1, 16, 64, seed=771)[0]
     sp, du = [], []
     for plane in planes:
         s_arr = ",".join("1.0D" if c > 0 else "-1.0D" for c in plane)

@@ -1811,16 +1811,15 @@ def q_doc_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_novelty_frame(t(spark, sf_dir, "documents"))
 
 
-def doc_novelty_frame(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", K: int = 8
-) -> DataFrame:
+def doc_novelty_frame(docs: DataFrame) -> DataFrame:
     """Core of ``doc_novelty_scores``, factored out so the integer
     first-occurrence key guard (id < 9e12, pos < 1e6 — hard error, not
     silent collision) is testable on planted out-of-bounds fixtures."""
     from mapreduce_project_spark.functions import tokens
 
+    K = 8  # tokens per window
     base = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk")
+        F.col("doc_id").alias("id"), tokens(F.col("text")).alias("tk")
     ).filter(F.size("tk") >= K)
     wins = base.select(
         "id",

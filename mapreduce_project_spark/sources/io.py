@@ -61,9 +61,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES) -> dict[str, DataFrame]:
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load several tables at once as a dict name → DataFrame."""
-    return {name: load_table(spark, sf_dir, name) for name in names}
+    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_tables(
@@ -78,23 +78,17 @@ def register_tables(
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def read_text_lines(
-    spark: SparkSession, paths: str | list[str], with_file: bool = False
-) -> DataFrame:
+def read_text_lines(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """One row per text line (≡ the reference's default iterator,
     ``worker.py:141-145``), column ``value: string``.
 
-    ``with_file=True`` adds the originating path (≡ the reference's
-    ``metadata["file_path"]``). The reference keys each line by its line
-    number; Spark has no stable global line index without a sort, so
-    callers that need it should derive one per-file downstream — the
-    shipped jobs never use the line-number key (both override
-    ``iterator_fn`` to whole-file mode).
+    The reference keys each line by its line number; Spark has no
+    stable global line index without a sort, so callers that need it
+    should derive one per-file downstream — the shipped jobs never use
+    the line-number key (both override ``iterator_fn`` to whole-file
+    mode).
     """
-    df = spark.read.text(paths)
-    if with_file:
-        df = df.withColumn("file_path", F.input_file_name())
-    return df
+    return spark.read.text(paths)
 
 
 def read_whole_text_files(spark: SparkSession, paths: str | list[str]) -> DataFrame:
@@ -151,17 +145,11 @@ def read_json_lines(
     return reader.json(paths)
 
 
-def read_csv(
-    spark: SparkSession,
-    paths: str | list[str],
-    schema: str | None = None,
-    header: bool = True,
-    sep: str = ",",
-) -> DataFrame:
+def read_csv(spark: SparkSession, paths: str | list[str], schema: str | None = None) -> DataFrame:
     """CSV source. Same schema guidance as JSON; additionally CSV files
     are only splittable when uncompressed or bzip2 — at scale prefer
     converting to parquet at the ingest boundary (`write_parquet`)."""
-    reader = spark.read.option("header", header).option("sep", sep)
+    reader = spark.read.option("header", True)
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -169,34 +157,30 @@ def read_csv(
     return reader.csv(paths)
 
 
-def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_json_lines(df: DataFrame, path: str) -> None:
     """Newline-delimited JSON sink (interchange/debug; parquet is the
     engine-native sink)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
-def write_csv(
-    df: DataFrame, path: str, mode: str = "overwrite", header: bool = True, sep: str = ","
-) -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """CSV sink (interchange/debug; parquet is the engine-native sink)."""
-    df.write.mode(mode).option("header", header).option("sep", sep).csv(path)
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def read_xml(spark: SparkSession, paths: str | list[str], row_tag: str = "row") -> DataFrame:
+def read_xml(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """XML source (Spark 4 native, SPARK-44265) — the config/feed
     format legacy HDFS estates hold beside CSV/JSON (A19 widening).
-    Schema is inferred from elements under ``row_tag``; pass an
+    Schema is inferred from the ``<row>`` elements; pass an
     explicit schema via ``spark.read.format('xml').schema(...)`` for
     production stability. Column-level twin: ``F.from_xml`` (used by
     the `orders_xml_roundtrip` query)."""
-    return spark.read.format("xml").option("rowTag", row_tag).load(paths)
+    return spark.read.format("xml").option("rowTag", "row").load(paths)
 
 
-def write_xml(
-    df: DataFrame, path: str, mode: str = "overwrite", row_tag: str = "row"
-) -> None:
-    """XML sink (row-per-record under ``row_tag``)."""
-    df.write.format("xml").option("rowTag", row_tag).mode(mode).save(path)
+def write_xml(df: DataFrame, path: str) -> None:
+    """XML sink (one ``<row>`` element per record)."""
+    df.write.format("xml").option("rowTag", "row").mode("overwrite").save(path)
 
 
 def read_orc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
@@ -207,22 +191,19 @@ def read_orc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     return spark.read.orc(paths)
 
 
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
+def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """ORC sink (Spark-native, zlib-striped)."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
+def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """Engine-native sink. ``partition_by`` enables partition pruning for
     downstream readers — at 100 TB, partition on coarse query keys
     (date, source) but never on high-cardinality keys."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -232,7 +213,6 @@ def write_sorted_parquet(
     df: DataFrame,
     path: str,
     sort_cols: list[str],
-    mode: str = "overwrite",
     max_records_per_file: int | None = None,
 ) -> None:
     """Layout-optimized sink: range-partition + sort rows by
@@ -243,24 +223,29 @@ def write_sorted_parquet(
     ``max_records_per_file`` caps file size for parallel downstream
     reads."""
     out = df.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
-    writer = out.write.mode(mode)
+    writer = out.write.mode("overwrite")
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(path)
 
 
-def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
-    """Morton (Z-order) key: interleave the low ``bits`` bits of each
-    column — rows close in EVERY dimension get close keys, so a
+# bits per column of the Morton key; `write_zorder_parquet` scales each
+# column into this many bits
+_ZORDER_BITS = 16
+
+
+def zorder_key(cols: list[Column | str]) -> Column:
+    """Morton (Z-order) key: interleave the low ``_ZORDER_BITS`` bits of
+    each column — rows close in EVERY dimension get close keys, so a
     range-partition + sort on this one key clusters the file layout in
     all dimensions at once (single-column sort clusters only the first;
     filters on the second then hit every file). Pure bit arithmetic, no
-    UDF. Inputs must be non-negative ints < 2**bits — scale first (see
-    `write_zorder_parquet`)."""
+    UDF. Inputs must be non-negative ints < 2**_ZORDER_BITS — scale
+    first (see `write_zorder_parquet`)."""
     terms = []
     for d, c in enumerate(cols):
         col = F.col(c) if isinstance(c, str) else c
-        for b in range(bits):
+        for b in range(_ZORDER_BITS):
             # bit b of dim d lands at interleaved position b*ndims + d
             terms.append(
                 F.shiftleft(F.shiftright(col, b).bitwiseAND(F.lit(1)), b * len(cols) + d)
@@ -275,12 +260,10 @@ def write_zorder_parquet(
     df: DataFrame,
     path: str,
     cols: list[str],
-    mode: str = "overwrite",
     n_files: int | None = None,
-    bits: int = 16,
 ) -> None:
     """Multi-dimensional clustered sink: scale ``cols`` to
-    ``bits``-bit non-negative ints (global min/max — a 2-row metadata
+    ``_ZORDER_BITS``-bit non-negative ints (global min/max — a 2-row metadata
     aggregate, the only driver-side value; data never moves through the
     driver), compute the Morton key, range-partition + sort on it, and
     write parquet. Row-group/file min-max stats then prune scans
@@ -292,7 +275,7 @@ def write_zorder_parquet(
         *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
         *[F.max(c).cast("double").alias(f"mx_{c}") for c in cols],
     ).collect()[0]
-    scale = (1 << bits) - 1
+    scale = (1 << _ZORDER_BITS) - 1
     scaled = []
     for c in cols:
         mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
@@ -303,14 +286,14 @@ def write_zorder_parquet(
             .alias(f"_z_{c}")
         )
     keyed = df.select("*", *scaled).withColumn(
-        "_zkey", zorder_key([f"_z_{c}" for c in cols], bits)
+        "_zkey", zorder_key([f"_z_{c}" for c in cols])
     )
     out = (
         keyed.repartitionByRange(*([n_files] if n_files else []), "_zkey")
         .sortWithinPartitions("_zkey")
         .drop("_zkey", *[f"_z_{c}" for c in cols])
     )
-    out.write.mode(mode).parquet(path)
+    out.write.mode("overwrite").parquet(path)
 
 
 def compact_parquet(
@@ -435,7 +418,6 @@ def merge_sketch_rollup(
     part_col: str,
     key_cols: list[str],
     distinct_cols: dict[str, str],
-    lgk: int = 14,
 ) -> None:
     """`merge_partitioned_rollup`'s DISTINCT-COUNT sibling: incremental
     maintenance of per-(part, keys) HLL sketches. Plain partial sums
@@ -457,7 +439,7 @@ def merge_sketch_rollup(
     the sum rollup: untouched partitions' files are never rewritten."""
     group = [part_col, *key_cols]
     aggs = [
-        F.hll_sketch_agg(src, lgk).alias(alias)
+        F.hll_sketch_agg(src, 14).alias(alias)
         for alias, src in distinct_cols.items()
     ]
     _merge_touched_partitions(
@@ -516,14 +498,13 @@ def apply_changelog(
     changes: DataFrame,
     key_cols: list[str],
     part_col: str,
-    op_col: str = "op",
 ) -> None:
     """MERGE-style changelog apply onto a partitioned parquet table —
     the "apply" step downstream of CDC capture (`table_diff` /
     `operators/events.cdc_compact` produce change feeds; this lands
     them) when no transactional table format is available.
 
-    ``changes`` carries the table's columns plus ``op_col`` ∈
+    ``changes`` carries the table's columns plus ``op`` ∈
     {'upsert', 'delete'}. Semantics per key: delete removes it,
     upsert replaces-or-inserts its row. Exactly the
     `merge_partitioned_rollup` discipline: the batch's distinct
@@ -537,13 +518,13 @@ def apply_changelog(
     partition value must not change across versions (an upsert that
     moves a row between partitions must be issued as delete+upsert
     with both partitions in the batch — which this handles)."""
-    out_cols = [c for c in changes.columns if c != op_col]
+    out_cols = [c for c in changes.columns if c != "op"]
     # validate ops BEFORE any effect: an unrecognized or NULL op (e.g. a
     # producer emitting 'update') would otherwise act as a silent
     # DELETE — its key anti-joins away and nothing re-inserts it
-    _check_ops(changes, op_col, ("upsert", "delete"), "apply_changelog")
+    _check_ops(changes, ("upsert", "delete"), "apply_changelog")
     fs, jvm_path = _hadoop_fs(spark, table_path)
-    upserts = changes.filter(F.col(op_col) == "upsert").select(*out_cols)
+    upserts = changes.filter(F.col("op") == "upsert").select(*out_cols)
     if fs.exists(jvm_path):
         parts = [r[0] for r in changes.select(part_col).distinct().collect()]
         old = spark.read.parquet(table_path).filter(F.col(part_col).isin(parts))
@@ -645,13 +626,13 @@ def _merge_touched_partitions(
         ).parquet(path)
 
 
-def _check_ops(df: DataFrame, op_col: str, ops: tuple[str, str], who: str) -> None:
-    """Raise ``ValueError`` when ``op_col`` holds a value outside ``ops``,
+def _check_ops(df: DataFrame, ops: tuple[str, str], who: str) -> None:
+    """Raise ``ValueError`` when ``op`` holds a value outside ``ops``,
     NULL included (``~isin`` alone lets a NULL op through, and every
     caller would then treat that row as a delete)."""
     bad = (
-        df.filter(~F.col(op_col).isin(*ops) | F.col(op_col).isNull())
-        .select(op_col).distinct().limit(5).collect()
+        df.filter(~F.col("op").isin(*ops) | F.col("op").isNull())
+        .select("op").distinct().limit(5).collect()
     )
     if bad:
         raise ValueError(
@@ -705,7 +686,7 @@ def _write_view_batch(
                 _write_batch(delta, batch_id, f"{state_dir}/{side}")
 
 
-def write_text_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_text_lines(df: DataFrame, path: str) -> None:
     """Byte-compat demo sink (≡ A10 ``worker.py:52-58``): one line per
     row. The DataFrame must have a single string column; callers wanting
     the reference's ``key\\tvalue`` line format should
@@ -717,7 +698,8 @@ def write_text_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """
     if len(df.columns) != 1:
         raise ValueError("write_text_lines expects a single-column DataFrame")
-    df.select(F.col(df.columns[0]).cast("string").alias("value")).write.mode(mode).text(path)
+    value = F.col(df.columns[0]).cast("string").alias("value")
+    df.select(value).write.mode("overwrite").text(path)
 
 
 def merge_hll_register_rollup(
@@ -843,11 +825,10 @@ def merge_join_view_delta(
     b_batch: DataFrame | None,
     a_key: str,
     b_key: str,
-    op_col: str = "op",
 ) -> None:
     """DELETE-capable incremental equi-join view maintenance (D299) —
     the counting-algebra completion of `merge_join_view` (D191,
-    insert-only): each side's delta rows carry ``op_col`` ∈
+    insert-only): each side's delta rows carry ``op`` ∈
     {'insert', 'delete'}, stored as a signed multiplicity m = ±1, and
     the view is maintained under the SIGNED delta rule
 
@@ -878,12 +859,12 @@ def merge_join_view_delta(
     def _signed(batch: DataFrame | None) -> DataFrame | None:
         if batch is None:
             return None
-        _check_ops(batch, op_col, ("insert", "delete"), "merge_join_view_delta")
+        _check_ops(batch, ("insert", "delete"), "merge_join_view_delta")
         return batch.withColumn(
             "_m",
-            F.when(F.col(op_col) == "insert", F.lit(1)).otherwise(F.lit(-1))
+            F.when(F.col("op") == "insert", F.lit(1)).otherwise(F.lit(-1))
             .cast("bigint"),
-        ).drop(op_col)
+        ).drop("op")
 
     a_s, b_s = _signed(a_batch), _signed(b_batch)
     a_cols = set(a_s.columns) - {"_m"} if a_s is not None else None
@@ -921,14 +902,11 @@ def merge_edge_view_delta(
     state_dir: str,
     batch_id: int,
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    op_col: str = "op",
 ) -> None:
     """Delete-capable incremental EDGE-SET maintenance (D305) — the
     single-relation member of the D299 counting algebra, sized for
     graph analytics over a MUTATING graph: each batch's edge rows
-    carry ``op_col`` ∈ {'insert', 'delete'}, stored as signed
+    carry ``op`` ∈ {'insert', 'delete'}, stored as signed
     multiplicity m = ±1 in the batch's OWN ``_b=batch_id`` partition
     (dynamic overwrite — D191/D299's exactly-once discipline: a
     crashed batch's retry rewrites its own partition and nothing
@@ -941,11 +919,11 @@ def merge_edge_view_delta(
     leave net-negative rows the reader suppresses (D299 contract).
     Scale: each batch writes |Δ| rows, the view read is ONE keyed
     partial-agg over net rows — never a rebuild of the edge list."""
-    _check_ops(edges, op_col, ("insert", "delete"), "merge_edge_view_delta")
+    _check_ops(edges, ("insert", "delete"), "merge_edge_view_delta")
     signed = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.when(F.col(op_col) == "insert", F.lit(1))
+        "src",
+        "dst",
+        F.when(F.col("op") == "insert", F.lit(1))
         .otherwise(F.lit(-1))
         .cast("bigint")
         .alias("_m"),

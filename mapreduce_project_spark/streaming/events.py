@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# the event-time watermark delay of the windowed, joined and deduped
+# streams: late data up to this far behind the newest event is admitted
+_WATERMARK = "2 hours"
 
 # ------------------------------------------------------------------
 # Zombie-attempt write fencing (round 13, VERDICT r12 task 1).
@@ -119,12 +122,12 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def tumbling_counts_stream(events: DataFrame, duration: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Streaming tumbling-window counts/sums per event type; watermark
-    bounds state and admits late data up to ``watermark``."""
+def tumbling_counts_stream(events: DataFrame) -> DataFrame:
+    """Streaming hourly tumbling-window counts/sums per event type; the
+    watermark bounds state and admits late data up to ``_WATERMARK``."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration).alias("w"), "event_type")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -135,11 +138,12 @@ def tumbling_counts_stream(events: DataFrame, duration: str = "1 hour", watermar
     )
 
 
-def session_stream(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Streaming session windows per user (same expression as batch)."""
+def session_stream(events: DataFrame) -> DataFrame:
+    """Streaming 30-minute-gap session windows per user (same expression
+    as batch)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -183,7 +187,7 @@ def running_user_totals_stream(events: DataFrame) -> DataFrame:
 
 
 def dedup_stream(
-    events: DataFrame, keys: list[str], watermark: str = "2 hours"
+    events: DataFrame, keys: list[str], watermark: str = _WATERMARK
 ) -> DataFrame:
     """Streaming deduplication: first occurrence per key wins; the
     watermark bounds the dedup state (keys older than the watermark are
@@ -193,7 +197,7 @@ def dedup_stream(
 
 
 def dedup_within_watermark_stream(
-    events: DataFrame, keys: list[str], watermark: str = "2 hours"
+    events: DataFrame, keys: list[str], watermark: str = _WATERMARK
 ) -> DataFrame:
     """Streaming dedup via ``dropDuplicatesWithinWatermark``: two
     records with equal ``keys`` are duplicates if they arrive within
@@ -218,17 +222,12 @@ def stream_static_join(events: DataFrame, dim: DataFrame, on: str) -> DataFrame:
 
 
 def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    lookback: str = "1 hour",
-    watermark: str = "2 hours",
-    how: str = "inner",
+    left: DataFrame, right: DataFrame, how: str = "inner"
 ) -> DataFrame:
     """Stream-stream interval join: each left event pairs with the same
-    key's right events from the preceding ``lookback`` (inclusive ends).
+    user's right events from the preceding hour (inclusive ends).
     Both sides carry watermarks so Spark can bound the join state — the
-    buffered range per key is lookback + watermark, evicted as event
+    buffered range per user is an hour plus the watermark, evicted as event
     time advances. This is the streaming form of a time-bounded
     fact-fact join (batch twin: plain join + interval predicate).
 
@@ -244,27 +243,27 @@ def stream_stream_interval_join(
     the watermark past every real event (the soak's pattern) — on a
     true continuous stream the next arrivals play that role.
 
-    Output: (key, l_ts, r_ts) plus the sides' id columns renamed
+    Output: (user_id, l_ts, r_ts) plus the sides' id columns renamed
     ``l_event_id`` / ``r_event_id``."""
     l = (
-        left.withWatermark("ts", watermark)
-        .select(key, F.col("event_id").alias("l_event_id"), F.col("ts").alias("l_ts"))
+        left.withWatermark("ts", _WATERMARK)
+        .select("user_id", F.col("event_id").alias("l_event_id"), F.col("ts").alias("l_ts"))
     )
     r = (
-        right.withWatermark("ts", watermark)
+        right.withWatermark("ts", _WATERMARK)
         .select(
-            F.col(key).alias("r_key"),
+            F.col("user_id").alias("r_key"),
             F.col("event_id").alias("r_event_id"),
             F.col("ts").alias("r_ts"),
         )
     )
     return l.join(
         r,
-        (F.col(key) == F.col("r_key"))
-        & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"INTERVAL {lookback}"))
+        (F.col("user_id") == F.col("r_key"))
+        & (F.col("r_ts") >= F.col("l_ts") - F.expr("INTERVAL 1 hour"))
         & (F.col("r_ts") <= F.col("l_ts")),
         how,
-    ).select(key, "l_event_id", "l_ts", "r_event_id", "r_ts")
+    ).select("user_id", "l_event_id", "l_ts", "r_event_id", "r_ts")
 
 
 def run_to_memory(stream_df: DataFrame, name: str, mode: str = "update") -> None:
@@ -485,12 +484,6 @@ def crawl_dedup_stream(
     index_path: str,
     pairs_path: str,
     checkpoint_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    n_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
     fault_injector=None,
 ):
     """GROWING-corpus near-dup dedup as a stream — the streaming twin
@@ -525,7 +518,6 @@ def crawl_dedup_stream(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         _crawl_dedup_batch(
             spark, batch_df, batch_id, index_path, pairs_path,
-            id_col, text_col, n, n_perm, bands, threshold,
             fault_injector=fault_injector, fence_token=fence_token,
         )
 
@@ -552,12 +544,6 @@ def _crawl_dedup_batch(
     batch_id: int,
     index_path: str,
     pairs_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    n_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
     fault_injector=None,
     fence_token: tuple[str, int] | None = None,
 ) -> None:
@@ -602,11 +588,9 @@ def _crawl_dedup_batch(
     # cached signature table, and it is unpersisted when the batch ends
     # (a long-running stream must not accumulate one pinned cache per
     # micro-batch for the life of the app)
-    sig = minhash_index_build(batch_df, id_col, text_col, n, n_perm).cache()
+    sig = minhash_index_build(batch_df, "doc_id", "text").cache()
     try:
-        pairs = minhash_probe_pairs(
-            index, None, id_col, text_col, n, n_perm, bands, threshold, new_sigs=sig
-        )
+        pairs = minhash_probe_pairs(index, None, "doc_id", "text", new_sigs=sig)
         _fenced_write(
             fence_token,
             f"crawl_dedup pairs batch-{batch_id}",
@@ -635,13 +619,7 @@ def ann_ingest_stream(
     ivf_index_path: str,
     checkpoint_path: str,
     cents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     dim: int = 32,
-    n: int = 3,
-    n_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
     fault_injector=None,
 ):
     """The composed streaming ANN ingestion pipeline (round-6 VERDICT
@@ -686,8 +664,7 @@ def ann_ingest_stream(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         _ann_ingest_batch(
             spark, batch_df, batch_id, dedup_index_path, pairs_path,
-            ivf_index_path, cents, id_col, text_col, dim, n, n_perm,
-            bands, threshold, fault_injector=fault_injector,
+            ivf_index_path, cents, dim, fault_injector=fault_injector,
             fence_token=fence_token,
         )
 
@@ -707,13 +684,7 @@ def _ann_ingest_batch(
     pairs_path: str,
     ivf_index_path: str,
     cents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     dim: int = 32,
-    n: int = 3,
-    n_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
     fault_injector=None,
     fence_token: tuple[str, int] | None = None,
 ) -> None:
@@ -729,22 +700,21 @@ def _ann_ingest_batch(
     try:
         _crawl_dedup_batch(
             spark, batch_df, batch_id, dedup_index_path, pairs_path,
-            id_col, text_col, n, n_perm, bands, threshold,
             fault_injector=fault_injector, fence_token=fence_token,
         )
         pairs = spark.read.parquet(_os.path.join(pairs_path, f"batch-{batch_id}"))
-        dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct()
-        survivors = batch_df.join(dup_ids, id_col, "left_anti")
-        sparse = hashed_doc_vectors(survivors, id_col, text_col, dim)
+        dup_ids = pairs.select(F.col("new_id").alias("doc_id")).distinct()
+        survivors = batch_df.join(dup_ids, "doc_id", "left_anti")
+        sparse = hashed_doc_vectors(survivors, "doc_id", "text", dim)
         dense = (
-            sparse.groupBy(id_col)
+            sparse.groupBy("doc_id")
             .agg(
                 F.map_from_arrays(
                     F.collect_list("dim"), F.collect_list("val")
                 ).alias("m")
             )
             .select(
-                id_col,
+                "doc_id",
                 F.expr(
                     f"transform(sequence(0, {dim - 1}), "
                     "d -> coalesce(element_at(m, cast(d as bigint)), cast(0.0 as double)))"
@@ -756,7 +726,7 @@ def _ann_ingest_batch(
         # the write is an overwrite of THIS batch's own subdirectory —
         # never an in-place merge of shared state, so a crashed
         # batch's retry is a content-identical no-op at any placement.
-        assigned = ivf_assign_cells(dense, id_col, "embedding", cents)
+        assigned = ivf_assign_cells(dense, "doc_id", "embedding", cents)
         landed = assigned.withColumn(
             "src_batch", F.lit(batch_id).cast("bigint")
         )

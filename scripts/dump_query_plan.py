@@ -6,9 +6,10 @@ Usage: python scripts/dump_query_plan.py OUT_DIR [NAME ...]
 
 Writes OUT_DIR/<name>.txt for each NAME (every registered query when
 none is given): the `.explain("formatted")` text with expression ids
-(`#<n>`), `plan_id=<n>`, RDD ids and lambda variable suffixes masked,
-so two checkouts' dumps differ only where a query's plan does. The
-data directory is `SPARK_GRAFT_SF_DIR` (default: the sf0.1 tables).
+(`#<n>`), `plan_id=<n>`, RDD ids, lambda variable suffixes, codegen ids
+and AQE query-stage ids masked, so two checkouts' dumps differ only
+where a query's plan does. The data directory is `SPARK_GRAFT_SF_DIR`
+(default: the sf0.1 tables).
 Unknown names exit non-zero before Spark starts.
 """
 
@@ -28,15 +29,20 @@ _IDS = (
     (r"plan_id=\d+", "plan_id=N"),
     (r"RDD\[\d+\]", "RDD[N]"),
     (r"(lambda \w+?)_\d+\b", r"\1_N"),
+    (r"\[codegen id : \d+\]", "[codegen id : N]"),
+    # a stage's `Arguments:` line is its id, numbered in the order AQE
+    # happened to materialize the stages
+    (r"((?:Shuffle|Broadcast|Result)QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+$", r"\1N"),
 )
 
 
 def mask_ids(plan: str) -> str:
     """The plan with the ids that count what the process made before it
-    masked: expression ids, plan ids, RDD ids and lambda variable
-    suffixes become `#N`, `plan_id=N`, `RDD[N]` and `lambda x_N`."""
+    masked: expression ids, plan ids, RDD ids, lambda variable suffixes,
+    codegen ids and query-stage ids become `#N`, `plan_id=N`, `RDD[N]`,
+    `lambda x_N`, `[codegen id : N]` and `Arguments: N`."""
     for pattern, mask in _IDS:
-        plan = re.sub(pattern, mask, plan)
+        plan = re.sub(pattern, mask, plan, flags=re.M)
     return plan
 
 

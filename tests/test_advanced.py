@@ -667,6 +667,30 @@ def test_itemcf_data_dependent_whale_cap_drops_outlier_basket(spark, tmp_path):
     assert a_rows[0]["sim2_micro"] == 1_000_000  # perfect co-purchase
 
 
+def test_global_prefix_max_crosses_partition_boundaries(spark):
+    # 500 rows over 32 range partitions, values deliberately DECREASING
+    # so the running max is pinned early and must be carried across
+    # every partition boundary by the offset fold: max(v) over rows
+    # 0..i of v = 1000 - i is always 1000. Then a late spike re-raises
+    # it and the carry must update.
+    from mapreduce_project_spark.operators.windows import global_prefix_max
+
+    rows = [(i, 1000 - i) for i in range(400)]
+    rows += [(400, 5000)]
+    rows += [(400 + i, 100 + i) for i in range(1, 100)]
+    df = spark.createDataFrame(rows, "k long, v long")
+    got = {
+        (r["k"], r["pm"])
+        for r in global_prefix_max(df, ["k"], "v", "pm").collect()
+    }
+    want = set()
+    run = None
+    for k, v in sorted(rows):
+        run = v if run is None else max(run, v)
+        want.add((k, run))
+    assert got == want
+
+
 def test_global_prefix_max_rejects_nulls_with_contract_error(spark):
     # ADVICE low: an all-NULL partition skipped the offsets fold, then
     # crashed in astype('int64') with an obscure pandas error. The

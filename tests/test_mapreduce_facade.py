@@ -7,7 +7,6 @@ cases (test.py:238-310), file-input mode, and concurrent submissions
 
 from __future__ import annotations
 
-import re
 import threading
 
 import pytest

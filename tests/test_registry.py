@@ -3,8 +3,9 @@
 The driver records its correctness rows in registry order, so the
 declared slate must be exactly `DECLARED`, in order, and every other
 registered query must stay reachable through `EXTRA_*` and `ALL_*`.
-No name, registered or module-level, may be defined twice, and no
-block of engine code may be pasted twice.
+No name, registered or module-level, may be defined twice, no block
+of engine code may be pasted twice, and no engine parameter may keep a
+default that every call leaves as it is.
 """
 
 from __future__ import annotations
@@ -147,3 +148,91 @@ def test_no_block_of_engine_code_is_pasted_twice():
         for family in families.values()
     )
     assert not copies, f"{CLONE_LINES}-line blocks written twice:\n" + "\n".join(copies)
+
+
+# Defaulted engine parameters that every call may leave at the default.
+# Each one is a real option of the interface it belongs to.
+OPTION_EXEMPT = {
+    "mapreduce.py::run_job(num_input_partitions)":
+        "the reference job's `num_maps` field, part of the facade's contract",
+}
+
+
+def _engine_options() -> list[tuple[str, str, list[tuple[str, int | None]]]]:
+    """``(where, called name, [(defaulted param, its position or None
+    when keyword-only)])`` of every engine def; methods drop ``self``/
+    ``cls`` and a class's ``__init__`` is called by the class name."""
+    out = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "mapreduce_project_spark", "**", "*.py"),
+                                 recursive=True)):
+        rel = os.path.relpath(path, os.path.join(ROOT, "mapreduce_project_spark"))
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        owner = {id(m): c for c in ast.walk(tree) if isinstance(c, ast.ClassDef) for m in c.body}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a, name = node.args, node.name
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            if id(node) in owner and not any(
+                getattr(d, "id", "") == "staticmethod" for d in node.decorator_list
+            ):
+                pos = pos[1:]
+                name = owner[id(node)].name if name == "__init__" else name
+            defaulted = [(p, pos.index(p)) for p in pos[len(pos) - len(a.defaults):]]
+            defaulted += [
+                (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            if defaulted:
+                out.append((f"{rel}::{node.name}", name, defaulted))
+    return out
+
+
+def _set_by_some_call() -> dict[str, set]:
+    """Called name → what the checkout's calls pass: keyword names,
+    ``("#", n)`` for n positional arguments, or ``"*"`` when the callee
+    is referenced as a value or called with ``*args``/``**kwargs``
+    (every parameter then counts as set)."""
+    passed = collections.defaultdict(set)
+    for path in glob.glob(os.path.join(ROOT, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        callees = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            callees.add(id(node.func))
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            if any(isinstance(x, ast.Starred) for x in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                passed[name].add("*")
+            else:
+                passed[name].update({("#", len(node.args))} | {k.arg for k in node.keywords})
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load) \
+                    and id(node) not in callees:
+                passed[node.id].add("*")
+            elif isinstance(node, ast.Attribute) and id(node) not in callees:
+                passed[node.attr].add("*")
+    return passed
+
+
+def test_no_engine_option_is_left_at_its_default_by_every_call():
+    # a parameter no caller sets is a setting with one value in use:
+    # tests and benchmarks would have to cover the values nobody runs
+    passed = _set_by_some_call()
+    unset = set()
+    for where, name, defaulted in _engine_options():
+        got = passed.get(name, set())
+        if "*" in got:
+            continue
+        n_pos = max((x[1] for x in got if isinstance(x, tuple)), default=0)
+        unset.update(
+            f"{where}({p})" for p, i in defaulted
+            if p not in got and (i is None or i >= n_pos)
+        )
+    options = sorted(unset - set(OPTION_EXEMPT))
+    assert not options, "parameters no call sets (make them constants):\n" + "\n".join(options)
+    stale = sorted(set(OPTION_EXEMPT) - unset)
+    assert not stale, "OPTION_EXEMPT entries some call now sets:\n" + "\n".join(stale)

@@ -82,6 +82,49 @@ def test_job_count_rejects_unknown_names_before_starting_spark(monkeypatch):
     assert "word_count" not in str(exc.value.code)
 
 
+_PLAN = """\
+(15) BroadcastHashJoin [codegen id : {a}]
+Left keys [1]: [o_orderkey#{x}L]
+
+(19) ShuffleQueryStage
+Output [2]: [src#{x}L, dst#{x}L]
+Arguments: {a}
+
+(20) BroadcastQueryStage
+Output [1]: [node#{x}L]
+Arguments: {b}
+
+(26) ResultQueryStage
+Output [2]: [src#{x}L, dst#{x}L]
+Arguments: {c}
+
+(27) AQEShuffleRead
+Input [2]: [src#{x}L, dst#{x}L]
+Arguments: coalesced
+
+(39) TableCacheQueryStage
+Output [1]: [src#{x}L]
+Arguments: 0
+"""
+
+
+def test_plan_dump_masks_codegen_and_query_stage_ids():
+    # AQE numbers codegen stages and query stages in the order it
+    # happens to materialize them, so two dumps of one tree swapped
+    # them (pagerank_trade_graph's cached plan)
+    mask_ids = _load_script("dump_query_plan").mask_ids
+    one = _PLAN.format(a=1, b=5, c=3, x=17)
+    two = _PLAN.format(a=2, b=6, c=4, x=912)
+    assert one != two
+    assert mask_ids(one) == mask_ids(two)
+    masked = mask_ids(one)
+    assert "[codegen id : N]" in masked
+    assert masked.count("Arguments: N") == 3
+    assert "Arguments: coalesced" in masked
+    # a table-cache stage's argument is not one of the masked stage ids
+    assert masked.endswith("TableCacheQueryStage\nOutput [1]: [src#NL]\nArguments: 0\n")
+
+
 def test_check_oracles_json_replaces_rerun_rows_and_drops_unregistered():
     co = _load_script("check_oracles")
 

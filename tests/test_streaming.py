@@ -13,7 +13,6 @@ import threading
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.events import tumbling_window_agg
-from mapreduce_project_spark.operators.relational import dec_sum
 from mapreduce_project_spark.sources import load_table
 from mapreduce_project_spark.streaming.events import (
     read_event_stream,

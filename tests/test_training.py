@@ -1,6 +1,6 @@
 """Training-data assembly operators (D27-D30): connected-component
 cluster formation, deterministic splits, stratified sampling, sequence
-packing; and the flagship v8 composition and preference pairs
+packing; and the flagship compositions (v7, v8) and preference pairs
 on planted corpora. The oracle equality of the registered queries is
 covered by tests/test_oracle.py; these tests pin the operator-level
 contracts on hand-built inputs."""
@@ -17,7 +17,7 @@ from mapreduce_project_spark.operators.sampling import (
     stratified_sample_exact,
 )
 from mapreduce_project_spark.sources import load_table
-from tests.conftest import SF_DIR, rows_of
+from tests.conftest import SF_DIR, _write, rows_of
 
 
 def test_connected_components_chain_triangle_and_pair(spark):
@@ -528,6 +528,39 @@ def test_assemble_v6_governance_gates_planted(spark, tmp_path):
     )
     want = con.sql(R.ALL_ORACLES["assemble_training_set_v6"]).df()
     assert rows_of(got) == rows_of(want)
+
+
+# ---------------------------------------------------------------- D254
+
+
+def test_v7_flagship_gates_dup_and_lm_outlier(spark, tmp_path):
+    # 9 near-identical easy docs + 1 gibberish doc (every bigram a
+    # singleton -> worst KN NLL) + 1 EXACT duplicate of doc 1.
+    # Chain must: drop the duplicate (digest dedup), set the p90 edge
+    # at rank ceil(0.9*10) = 9 over the 10 unique docs, drop ONLY the
+    # gibberish doc at rank 10, and stage all 9 released docs as
+    # curriculum stage 1 (monosyllabic short sentences).
+    base = "the cat sat. the cat sat. the cat ran"
+    rows = [(i, f"{base} w{c}", "en", "s", 1)
+            for i, c in zip(range(1, 10), "abcdefghi")]
+    rows.append((10, "zyx qwv plk mnb vcx", "en", "s", 1))
+    rows.append((11, rows[0][1], "en", "s", 1))  # exact dup of doc 1
+    _write(
+        spark, tmp_path, "documents",
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+        rows,
+    )
+    got = R.ALL_QUERIES["assemble_training_set_v7"](spark, str(tmp_path)).toPandas()
+    assert int(got.n_docs.sum()) == 9
+    assert set(got.stage) == {1}
+    assert (got.max_nll_micro <= got.edge_nll_micro).all()
+    # the checksum pins the released SET: recompute from doc ids 1-9
+    import hashlib
+
+    want = 0
+    for i in range(1, 10):
+        want ^= int(hashlib.md5(f"v7:{i}".encode()).hexdigest()[:15], 16)
+    assert int(got.release_checksum.iloc[0]) == want
 
 
 # ---------------------------------------------------------------- D287
