@@ -1,8 +1,7 @@
 from mapreduce_project_spark.functions.textfns import (
     TOKEN_PATTERN,
-    char_ngrams,
     token_ngrams,
     tokens,
 )
 
-__all__ = ["TOKEN_PATTERN", "tokens", "token_ngrams", "char_ngrams"]
+__all__ = ["TOKEN_PATTERN", "tokens", "token_ngrams"]

@@ -41,15 +41,3 @@ def token_ngrams(tok: Column, n: int) -> Column:
             lambda i: F.concat_ws(" ", F.slice(tok, i + 1, n)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def char_ngrams(col: Column, n: int) -> Column:
-    """Character n-gram shingles of a string column (for SimHash /
-    fingerprinting). ``transform(sequence(1, length-n+1), i -> substring)``."""
-    return F.when(
-        F.length(col) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(col) - n + 1),
-            lambda i: F.substring(col, i, n),
-        ),
-    ).otherwise(F.array().cast("array<string>"))

@@ -14,16 +14,16 @@ word per partition, not one per token.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.functions import tokens
 
 
-def word_count(df: DataFrame, text_col: str | Column = "text") -> DataFrame:
-    """(word, cnt) over the text column of ``df``."""
+def word_count(df: DataFrame) -> DataFrame:
+    """(word, cnt) over the ``text`` column of ``df``."""
     return (
-        df.select(F.explode(tokens(text_col)).alias("word"))
+        df.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )

@@ -44,14 +44,12 @@ def _distinct_doc_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> Da
     )
 
 
-def benchmark_ngrams(
-    benchmark: DataFrame, text_col: str = "text", n: int = 3
-) -> DataFrame:
+def benchmark_ngrams(benchmark: DataFrame, n: int = 3) -> DataFrame:
     """The benchmark's global distinct n-gram set (single column
     ``_gram``). One shuffle over the (small) benchmark side only."""
     return (
         benchmark.select(
-            F.explode(F.array_distinct(token_ngrams(tokens(text_col), n))).alias(
+            F.explode(F.array_distinct(token_ngrams(tokens("text"), n))).alias(
                 "_gram"
             )
         )
@@ -62,11 +60,9 @@ def benchmark_ngrams(
 def contamination_hits(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
 ) -> DataFrame:
-    """Per-document contamination evidence: ``(id_col, n_hit_ngrams)``
+    """Per-document contamination evidence: ``(doc_id, n_hit_ngrams)``
     for every corpus document sharing at least one token n-gram with
     the benchmark; ``n_hit_ngrams`` counts the document's DISTINCT
     overlapping n-grams.
@@ -75,26 +71,24 @@ def contamination_hits(
     no corpus shuffle) → groupBy(id) count. Grams are distinct per doc
     before the join, so a plain COUNT(*) after it equals the distinct
     hit count — no count_distinct shuffle-dedup needed."""
-    hits = _distinct_doc_grams(corpus, id_col, text_col, n).join(
-        F.broadcast(benchmark_ngrams(benchmark, text_col, n)), "_gram"
+    hits = _distinct_doc_grams(corpus, "doc_id", "text", n).join(
+        F.broadcast(benchmark_ngrams(benchmark, n)), "_gram"
     )
-    return hits.groupBy(id_col).agg(F.count("*").cast("bigint").alias("n_hit_ngrams"))
+    return hits.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n_hit_ngrams"))
 
 
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
 ) -> DataFrame:
     """The clean corpus: drop every document with any n-gram overlap
     with the benchmark (left-anti against the hit ids). Schema is the
     corpus schema, unchanged."""
-    contaminated = contamination_hits(corpus, benchmark, id_col, text_col, n).select(
-        id_col
+    contaminated = contamination_hits(corpus, benchmark, n).select(
+        "doc_id"
     )
-    return corpus.join(contaminated, id_col, "left_anti")
+    return corpus.join(contaminated, "doc_id", "left_anti")
 
 
 def semantic_contamination_pairs(
@@ -157,11 +151,6 @@ def _bloom_pos(gram_col: str, k: int, m: int):
 def bloom_contamination_audit(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    k: int = 3,
-    m: int = 262144,
 ) -> DataFrame:
     """Bloom-filter decontamination probe: per corpus document,
     ``(id, n_grams, n_flagged, n_true_hits)`` where ``n_flagged``
@@ -182,34 +171,35 @@ def bloom_contamination_audit(
     count; a gram is flagged iff all k of its j-rows matched, which
     handles duplicate positions within a gram correctly (hits = k ⟺
     every position present)."""
+    n, k, m = 3, 3, 262144  # 3-grams, k hashes into an m-bit filter
     bench_bits = (
-        benchmark_ngrams(benchmark, text_col, n)
+        benchmark_ngrams(benchmark, n)
         .select(F.explode(F.array(*_bloom_pos("_gram", k, m))).alias("pos"))
         .distinct()
     )
-    grams = _distinct_doc_grams(corpus, id_col, text_col, n)
+    grams = _distinct_doc_grams(corpus, "doc_id", "text", n)
     probe = grams.select(
-        F.col(id_col), "_gram", F.explode(F.array(*_bloom_pos("_gram", k, m))).alias("pos")
+        F.col("doc_id"), "_gram", F.explode(F.array(*_bloom_pos("_gram", k, m))).alias("pos")
     )
     flagged = (
         probe.join(F.broadcast(bench_bits), "pos")
-        .groupBy(id_col, "_gram")
+        .groupBy("doc_id", "_gram")
         .agg(F.count(F.lit(1)).alias("hits"))
         .filter(F.col("hits") == k)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_flagged"))
     )
-    totals = grams.groupBy(id_col).agg(
+    totals = grams.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams")
     )
-    truth = contamination_hits(corpus, benchmark, id_col, text_col, n).select(
-        F.col(id_col), F.col("n_hit_ngrams").alias("n_true_hits")
+    truth = contamination_hits(corpus, benchmark, n).select(
+        F.col("doc_id"), F.col("n_hit_ngrams").alias("n_true_hits")
     )
     return (
-        totals.join(flagged, id_col, "left")
-        .join(truth, id_col, "left")
+        totals.join(flagged, "doc_id", "left")
+        .join(truth, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             F.coalesce("n_flagged", F.lit(0)).cast("bigint").alias("n_flagged"),
             F.coalesce("n_true_hits", F.lit(0)).cast("bigint").alias("n_true_hits"),

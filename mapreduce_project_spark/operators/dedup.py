@@ -34,6 +34,14 @@ from mapreduce_project_spark.functions import token_ngrams, tokens
 _MH_PRIME = 2147483647
 _MH_SEED = 42
 
+# documents are compared as sets of token 3-grams (shingles)
+_SHINGLE_N = 3
+# MinHash signature length, and the LSH bands it is cut into
+_N_PERM = 64
+_BANDS = 16
+# the Jaccard similarity at which two documents count as near-duplicates
+_JACCARD_T = 0.8
+
 # Edges per partition for connected_components' union-find contraction:
 # bounds the per-task dict to tens of MB. Module-level so tests can
 # shrink it to force the multi-partition propagation phase on small
@@ -145,7 +153,7 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
 
 
 def jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
 ) -> DataFrame:
     """C2 exact n-gram Jaccard similarity join: (id_a, id_b, jac) for all
     pairs with Jaccard(shingles_a, shingles_b) >= threshold.
@@ -155,7 +163,7 @@ def jaccard_pairs(
     from the inclusion-exclusion sizes. Quadratic in per-shingle doc
     frequency — the scalable variant is `minhash_lsh_pairs`.
     """
-    sh = shingle_sets(df, id_col, text_col, n).cache()
+    sh = shingle_sets(df, id_col, text_col, _SHINGLE_N).cache()
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -185,12 +193,9 @@ def prefix_filter_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    t_num: int = 4,
-    t_den: int = 5,
 ) -> DataFrame:
     """C2 exact n-gram Jaccard join at scale: the SAME pair set as
-    `jaccard_pairs` (threshold t = t_num/t_den, default 0.8) via the
+    `jaccard_pairs` (threshold t = t_num/t_den = 4/5) via the
     AllPairs/PPJoin prefix filter instead of the full shingle
     self-join — the standard MapReduce set-similarity-join design
     (Vernica et al., SIGMOD'10; reference users would chain it as
@@ -220,6 +225,7 @@ def prefix_filter_jaccard_pairs(
     The prefix length uses exact integer ceil:
     ``sz - ceil(t_num·sz / t_den) + 1``.
     """
+    t_num, t_den = 4, 5  # the Jaccard threshold t = 4/5
     from pyspark.sql import Window
 
     # shuffle accounting: the shingle table crosses the wire exactly
@@ -237,7 +243,7 @@ def prefix_filter_jaccard_pairs(
     # documented argument the MinHash family's verification uses); the
     # canonical prefix order is (docfreq, h), any corpus-wide total
     # order being valid for AllPairs.
-    sh = shingle_sets(df, id_col, text_col, n).select(
+    sh = shingle_sets(df, id_col, text_col, _SHINGLE_N).select(
         "id", F.xxhash64("shingle").alias("h")
     )
     with_df = sh.withColumn(
@@ -336,27 +342,23 @@ def _min_exprs(n_perm: int) -> list[Column]:
 
 
 def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, n_perm: int = 64
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """(id, sig array<bigint>[n_perm]) MinHash signatures over token
-    n-gram shingles. Shingles are first hashed to [0, p) with xxhash64
+    """(id, sig array<bigint>[64]) MinHash signatures over token
+    3-gram shingles. Shingles are first hashed to [0, p) with xxhash64
     (seeded, engine-deterministic), then each permutation takes a min —
-    one groupBy, n_perm algebraic min aggregates, no Python."""
-    sh = shingle_sets(df, id_col, text_col, n).select(
+    one groupBy, 64 algebraic min aggregates, no Python."""
+    sh = shingle_sets(df, id_col, text_col, _SHINGLE_N).select(
         "id", F.expr(f"pmod(xxhash64(shingle, {_MH_SEED}), {_MH_PRIME}L)").alias("h")
     )
-    agg = sh.groupBy("id").agg(*_min_exprs(n_perm))
-    return agg.select("id", F.expr(f"array({','.join(f'm{i}' for i in range(n_perm))})").alias("sig"))
+    agg = sh.groupBy("id").agg(*_min_exprs(_N_PERM))
+    return agg.select("id", F.expr(f"array({','.join(f'm{i}' for i in range(_N_PERM))})").alias("sig"))
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    n_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
 ) -> DataFrame:
     """C2 MinHash+LSH near-dup pairs, verified with exact Jaccard.
 
@@ -365,7 +367,7 @@ def minhash_lsh_pairs(
     candidates only. Output (id_a, id_b, jac) — a high-recall subset of
     `jaccard_pairs` at a fraction of the join cost.
     """
-    rows = n_perm // bands
+    rows = _N_PERM // _BANDS
     # ONE signature build for the whole pipeline: a single groupBy
     # computes both the n_perm signature mins (algebraic — vectorized
     # partial+final agg) and the per-doc shingle set (for candidate
@@ -387,11 +389,11 @@ def minhash_lsh_pairs(
     # signature materialization at sf0.1; at 100 TB the verify-side
     # shuffle volume drops ~3×). The signature mins reduce the same
     # hash mod p, so one xxhash64 evaluation feeds both.
-    sh = shingle_sets(df, id_col, text_col, n).select(
+    sh = shingle_sets(df, id_col, text_col, _SHINGLE_N).select(
         "id", F.expr(f"xxhash64(shingle, {_MH_SEED})").alias("h64")
     ).withColumn("h", F.expr(f"pmod(h64, {_MH_PRIME}L)"))
     docs = sh.groupBy("id").agg(
-        *_min_exprs(n_perm), F.collect_set("h64").alias("shingles")
+        *_min_exprs(_N_PERM), F.collect_set("h64").alias("shingles")
     ).cache()
     # all band hashes in one projection + explode (not a union of
     # `bands` recomputations of the signature aggregation); one parsed
@@ -401,7 +403,7 @@ def minhash_lsh_pairs(
             j=j,
             cols=", ".join(f"cast(m{j * rows + r} AS STRING)" for r in range(rows)),
         )
-        for j in range(bands)
+        for j in range(_BANDS)
     )
     bands_df = docs.selectExpr("id", f"explode(array({band_structs})) AS b").select(
         "id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
@@ -430,7 +432,7 @@ def minhash_lsh_pairs(
         candidates.join(a, F.col("id_a") == F.col("sa.id"))
         .join(b, F.col("id_b") == F.col("sb.id"))
         .select("id_a", "id_b", jac.alias("jac"))
-        .filter(F.col("jac") >= threshold)
+        .filter(F.col("jac") >= _JACCARD_T)
     )
 
 
@@ -438,10 +440,6 @@ def sorted_neighborhood_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    key_chars: int = 24,
-    window: int = 4,
-    threshold: float = 0.8,
 ) -> DataFrame:
     """Sorted-neighborhood near-dup pairs (Hernández & Stolfo's SNM,
     SIGMOD'95) — the third candidate-generation family next to LSH
@@ -462,6 +460,7 @@ def sorted_neighborhood_pairs(
     same 8-byte xxhash64 sets and jac expression as
     `minhash_lsh_pairs`, same collision argument). Output
     (id_a, id_b, jac) with id_a < id_b."""
+    key_chars, window = 24, 4  # sort-key length; ranks compared per doc + 1
     from mapreduce_project_spark.operators.windows import global_rank
 
     norm = df.select(
@@ -486,7 +485,7 @@ def sorted_neighborhood_pairs(
         F.greatest("ida", "idb").alias("id_b"),
     )
     sets = (
-        shingle_sets(df, id_col, text_col, n)
+        shingle_sets(df, id_col, text_col, _SHINGLE_N)
         .select("id", F.xxhash64("shingle").alias("h64"))
         .groupBy("id")
         .agg(F.collect_set("h64").alias("shingles"))
@@ -503,7 +502,7 @@ def sorted_neighborhood_pairs(
         cand.join(a, F.col("id_a") == F.col("sa.id"))
         .join(b, F.col("id_b") == F.col("sb.id"))
         .select("id_a", "id_b", jac.alias("jac"))
-        .filter(F.col("jac") >= threshold)
+        .filter(F.col("jac") >= _JACCARD_T)
     )
 
 
@@ -511,15 +510,13 @@ def duplicate_spans(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    span_tokens: int = 16,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Repeated-span DETECTION — the diagnostic half of exact substring
     dedup (the training-data-dedup finding that boilerplate repeats at
-    sub-document granularity): every OVERLAPPING ``span_tokens``-token
+    sub-document granularity): every OVERLAPPING 16-token
     window (stride 1 — unlike `passage_dedup`'s disjoint stride-K
     passages, which can miss a duplicated run that straddles passage
-    boundaries) is fingerprinted, and spans seen in ≥ ``min_docs``
+    boundaries) is fingerprinted, and spans seen in ≥ 2
     distinct documents are reported with occurrence counts and the
     first (doc, pos) occurrence.
 
@@ -536,7 +533,7 @@ def duplicate_spans(
 
     Output: (digest, span, n_docs, n_occ, first_doc, first_pos).
     """
-    K = span_tokens
+    K = 16
     base = df.select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("tk")
     ).filter(F.size("tk") >= K)
@@ -575,7 +572,7 @@ def duplicate_spans(
             F.count(F.lit(1)).cast("bigint").alias("n_occ"),
             F.min(first_key).alias("_first"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
     )
     return agg.select(
         "digest",
@@ -762,10 +759,7 @@ def minhash_probe_pairs(
     new_docs: DataFrame | None,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    n_perm: int = 64,
     bands: int = 16,
-    threshold: float = 0.8,
     new_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental cross-corpus near-dup join — dedup a NEW crawl
@@ -803,10 +797,10 @@ def minhash_probe_pairs(
     newsig = (
         new_sigs
         if new_sigs is not None
-        else minhash_index_build(new_docs, id_col, text_col, n, n_perm).cache()
+        else minhash_index_build(new_docs, id_col, text_col, _SHINGLE_N, _N_PERM).cache()
     )
-    bx = _band_rows(newsig, n_perm, bands).alias("x")
-    by = _band_rows(index, n_perm, bands).alias("y")
+    bx = _band_rows(newsig, _N_PERM, bands).alias("x")
+    by = _band_rows(index, _N_PERM, bands).alias("y")
     candidates = (
         by.join(
             F.broadcast(bx),
@@ -834,7 +828,7 @@ def minhash_probe_pairs(
     return (
         cand_idx.join(F.broadcast(a), F.col("new_id") == F.col("sa.id"))
         .select("new_id", "index_id", jac.alias("jac"))
-        .filter(F.col("jac") >= threshold)
+        .filter(F.col("jac") >= _JACCARD_T)
     )
 
 
@@ -1055,7 +1049,6 @@ def embedding_dedup_clusters_lsh(
     id_col: str,
     vec_col: str,
     threshold: float,
-    n_tables: int = 32,
     n_bits: int | str = 8,
     dim: int = 64,
     signs: list[list[list[int]]] | None = None,
@@ -1063,7 +1056,7 @@ def embedding_dedup_clusters_lsh(
     """(vec_id, rep_id, cluster_size) — embedding near-dup clusters
     with sign-LSH CANDIDATE GENERATION instead of a blocking key: the
     no-block-key scale path the round-5 VERDICT asked to be wired.
-    Candidates = pairs sharing a bucket code in >= 1 of ``n_tables``
+    Candidates = pairs sharing a bucket code in >= 1 of 32
     tables (seeded Rademacher hyperplanes, `similarity.lsh_code_exprs`
     — codes are the SAME operand-ordered fold expression the DuckDB
     oracle runs, so the candidate set is bit-reproducible and the
@@ -1082,7 +1075,7 @@ def embedding_dedup_clusters_lsh(
     32x8 family recalls 1-(1-0.857^8)^32 ≈ 0.996 while random pairs
     collide at 0.5^8/table — and at 100 TB, ``n_bits`` grows with
     log(N) to hold bucket sizes constant (candidates ∝ N per decade)
-    while ``n_tables`` restores recall. Pass ``n_bits="auto"`` to
+    while the 32 tables restore recall. Pass ``n_bits="auto"`` to
     apply exactly that rule: bits = clamp(ceil(log2(N / 8)), 8, 24)
     (target ~8 rows/bucket/table; one metadata-scale COUNT on the
     driver). MEASURED at sf≈1 (20k vectors, threshold 0.9): fixed
@@ -1124,7 +1117,6 @@ def embedding_dedup_clusters_lsh(
             raise ValueError(
                 f"signs plane length must equal dim={dim}; got {sorted(plane_lens)}"
             )
-        n_tables, n_bits = len(signs), len(signs[0])
     elif n_bits == "auto":
         # bits grow with log(N) to hold per-table bucket sizes (~8 rows)
         # constant — candidates then scale ∝ N per decade, not N².
@@ -1139,7 +1131,7 @@ def embedding_dedup_clusters_lsh(
     # interpreted HOF fold expressions (measured 14.3 s at sf0.1 →
     # sub-second).
     if signs is None:
-        signs = rademacher_signs(n_tables, n_bits, dim)
+        signs = rademacher_signs(32, n_bits, dim)
     coded = lsh_codes_exact(df, id_col, vec_col, signs)
     base = df.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
@@ -1218,14 +1210,14 @@ def simhash_chunks(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Dat
     return agg.select("id", *chunks)
 
 
-def simhash_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+def simhash_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """C2 SimHash near-dup pairs: Hamming(sketch_a, sketch_b) <= k found
     via the pigeonhole chunk join (k=3 with 4 chunks ⇒ some chunk is
     equal), then exact Hamming verification with bit_count(xor)."""
     # cached: the 64-sum sketch aggregate feeds four consumers (both
     # candidate sides + both verification sides) and is tiny (one row
     # per doc); recomputing it per consumer costs more than the cache
-    sk = simhash_chunks(df, id_col, text_col, n).cache()
+    sk = simhash_chunks(df, id_col, text_col, _SHINGLE_N).cache()
     # one (chunk_idx, chunk_val) explode + one equi-join replaces the
     # 4-way union of self-joins: same candidates (some chunk equal),
     # uniform join keys, single shuffle
@@ -1265,10 +1257,6 @@ def containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    t_num: int = 7,
-    t_den: int = 10,
-    min_sz: int = 5,
 ) -> DataFrame:
     """Exact set-CONTAINMENT join (PPJoin-C / Vernica et al.'s R-S
     asymmetric variant): directional pairs (contained_id,
@@ -1297,9 +1285,11 @@ def containment_pairs(
     (id-keyed) → prefix⋈postings equi-join with the positional
     predicate → distinct directional id pairs → one verify join.
     Shingles travel as 8-byte xxhash64 end to end."""
+    # containment threshold t = 7/10; smaller docs are never the contained side
+    t_num, t_den, min_sz = 7, 10, 5
     from pyspark.sql import Window
 
-    sh = shingle_sets(df, id_col, text_col, n).select(
+    sh = shingle_sets(df, id_col, text_col, _SHINGLE_N).select(
         "id", F.xxhash64("shingle").alias("h")
     )
     with_df = sh.withColumn(

@@ -46,7 +46,6 @@ def linear_gd_fixed(
     feature_cols: list[str],
     label_col: str,
     n_iter: int = 2,
-    lr_num: int = 1,
     lr_den: int = 1000,
 ) -> DataFrame:
     """Train ``label ≈ Σ w_j · x_j`` by ``n_iter`` exact fixed-point
@@ -58,13 +57,13 @@ def linear_gd_fixed(
       pred_i = Σ_j w_j · x_ij               (label·Q units)
       e_i    = (pred_i − y_i · Q) div Q     (label units, truncated)
       g_j    = Σ_i x_ij · e_i               (exact BIGINT sum)
-      w_j   ← w_j − (Q · lr_num · g_j) div (n · lr_den)
+      w_j   ← w_j − (Q · g_j) div (n · lr_den)
 
     The step carries the factor ``Q`` because ``w_j`` is stored in 1/Q
     units while ``g_j`` is the real-unit gradient — without it the
     effective learning rate would be lr/Q. Oracles replaying this in
-    BIGINT SQL should use the gcd-reduced ratio (for the defaults
-    Q·lr_num/lr_den = 1000, so the step is ``(1000·g) div n``) to stay
+    BIGINT SQL should use the gcd-reduced ratio (for the default
+    Q/lr_den = 1000, so the step is ``(1000·g) div n``) to stay
     inside 64-bit headroom; the truncated quotient of the same rational
     is identical either way.
 
@@ -83,7 +82,7 @@ def linear_gd_fixed(
         row = d.agg(
             *[F.sum(F.col(f"x{j}") * e).alias(f"g{j}") for j in range(k)]
         ).collect()[0]
-        w = [w[j] - _tdiv(Q * lr_num * int(row[f"g{j}"]), n * lr_den) for j in range(k)]
+        w = [w[j] - _tdiv(Q * int(row[f"g{j}"]), n * lr_den) for j in range(k)]
     d.unpersist()
     spark = data.sparkSession
     return spark.createDataFrame(

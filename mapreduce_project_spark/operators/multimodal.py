@@ -92,12 +92,13 @@ def byte_features(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "payload").mapInPandas(extract, out_schema)
 
 
-def frame_sample(df: DataFrame, frame_size: int = 256, every: int = 4) -> DataFrame:
+def frame_sample(df: DataFrame) -> DataFrame:
     """Deterministic frame sampling (the video keyframe-extraction
     shape): emit every ``every``-th fixed-size frame of each payload as
     its own row — binary in, (id, frame_idx, frame) rows out, Arrow-
     batched ``mapInPandas``, no shuffle. Downstream per-frame feature
     UDFs consume these rows without ever reshuffling full payloads."""
+    frame_size, every = 256, 4
     out_schema = "doc_id long, frame_idx long, frame binary"
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -177,10 +178,7 @@ def downsample_bytes(df: DataFrame) -> DataFrame:
 
 def patchify(
     df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
     width_col: str = "media.width",
-    patch: int = 16,
 ) -> DataFrame:
     """ViT-style patch extraction: interpret each payload as a
     row-major byte image of the given width (height = ceil(n_bytes /
@@ -201,8 +199,9 @@ def patchify(
     pad/reshape/sum per payload; Python touches one bytes-slice per
     OUTPUT row only.
     """
+    patch = 16  # patch side in pixels
     out_schema = (
-        f"{id_col} long, patch_row long, patch_col long, "
+        "doc_id long, patch_row long, patch_col long, "
         "n_real long, byte_sum long, patch binary"
     )
     wcol = width_col.replace(".", "_")
@@ -213,7 +212,7 @@ def patchify(
         for pdf in batches:
             ids, prs, pcs, nreals, sums, blobs = [], [], [], [], [], []
             for rid, w, payload in zip(
-                pdf[id_col], pdf[wcol], (bytes(p) for p in pdf[payload_col])
+                pdf["doc_id"], pdf[wcol], (bytes(p) for p in pdf["payload"])
             ):
                 w = int(w)
                 n = len(payload)
@@ -254,7 +253,7 @@ def patchify(
                         blobs.append(tiles[i, j].tobytes())
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
                     "patch_row": pd.Series(prs, dtype="int64"),
                     "patch_col": pd.Series(pcs, dtype="int64"),
                     "n_real": pd.Series(nreals, dtype="int64"),
@@ -264,7 +263,7 @@ def patchify(
             )
 
     return df.select(
-        id_col, payload_col, F.col(width_col).alias(wcol)
+        "doc_id", "payload", F.col(width_col).alias(wcol)
     ).mapInPandas(cut, out_schema)
 
 
@@ -285,7 +284,7 @@ def png_dims(df: DataFrame) -> DataFrame:
 
 
 def media_header_probe(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
+    df: DataFrame
 ) -> DataFrame:
     """REAL container-header parsing for the three shipped formats — no
     media libraries, just bytes: PNG IHDR (big-endian dims at fixed
@@ -300,7 +299,7 @@ def media_header_probe(
     pixel/sample decode, and it is fully real in this container (the
     pixel decode itself remains `decode_media`'s documented stub)."""
     out_schema = (
-        f"{id_col} long, format string, width long, height long, "
+        "doc_id long, format string, width long, height long, "
         "channels long, sample_rate_hz long"
     )
 
@@ -339,10 +338,10 @@ def media_header_probe(
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            parsed = [probe_one(bytes(p)) for p in pdf[payload_col]]
+            parsed = [probe_one(bytes(p)) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "doc_id": pdf["doc_id"].to_numpy(),
                     "format": [p[0] for p in parsed],
                     "width": pd.array([p[1] for p in parsed], dtype="Int64"),
                     "height": pd.array([p[2] for p in parsed], dtype="Int64"),
@@ -351,7 +350,7 @@ def media_header_probe(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(probe, out_schema)
+    return df.select("doc_id", "payload").mapInPandas(probe, out_schema)
 
 
 def _decode_ppm(b: bytes):
@@ -702,7 +701,7 @@ def _decode_wav(b: bytes):
 
 
 def decode_media(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
+    df: DataFrame
 ) -> DataFrame:
     """REAL pixel/sample decode for the uncompressed container formats —
     pure numpy + stdlib, no media libraries: P6 PPM (RGB raster), 24-bit
@@ -731,7 +730,7 @@ def decode_media(
     `worker.py:131-138` whole-file splits → typed media columns).
     """
     out_schema = (
-        f"{id_col} long, format string, width long, height long, "
+        "doc_id long, format string, width long, height long, "
         "channels long, sample_rate_hz long, bits_per_value long, "
         "n_values long, data binary"
     )
@@ -758,10 +757,10 @@ def decode_media(
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            parsed = [decode_one(bytes(p)) for p in pdf[payload_col]]
+            parsed = [decode_one(bytes(p)) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "doc_id": pdf["doc_id"].to_numpy(),
                     "format": [p[0] for p in parsed],
                     "width": pd.array([p[1] for p in parsed], dtype="Int64"),
                     "height": pd.array([p[2] for p in parsed], dtype="Int64"),
@@ -773,7 +772,7 @@ def decode_media(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(decode, out_schema)
+    return df.select("doc_id", "payload").mapInPandas(decode, out_schema)
 
 
 def _mel_filterbank(n_mels: int, n_fft: int, rate: int):
@@ -805,8 +804,6 @@ def _mel_filterbank(n_mels: int, n_fft: int, rate: int):
 def logmel_features(
     df: DataFrame,
     id_col: str = "id",
-    data_col: str = "data",
-    rate_col: str = "sample_rate_hz",
     n_fft: int = 256,
     hop: int = 128,
     n_mels: int = 16,
@@ -840,7 +837,7 @@ def logmel_features(
         win = 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(n_fft) / n_fft)
         for pdf in batches:
             ids, nfr, nme, feats, eq = [], [], [], [], []
-            for i, d, r in zip(pdf[id_col], pdf[data_col], pdf[rate_col]):
+            for i, d, r in zip(pdf[id_col], pdf["data"], pdf["sample_rate_hz"]):
                 x = np.frombuffer(bytes(d), dtype="<i2").astype(np.float64) / 32768.0
                 rate = int(r)
                 if rate not in fbs:
@@ -862,7 +859,7 @@ def logmel_features(
                  "feats": feats, "energy_q": eq}
             )
 
-    return df.select(id_col, data_col, rate_col).mapInPandas(compute, out_schema)
+    return df.select(id_col, "data", "sample_rate_hz").mapInPandas(compute, out_schema)
 
 
 def phash64(df: DataFrame) -> DataFrame:

@@ -238,7 +238,6 @@ def length_bucketed_batches(
     id_col: str,
     len_col: str,
     batch_size: int,
-    bucket_width: int = 64,
 ) -> DataFrame:
     """Dynamic-batching layout: assemble fixed-count training batches
     of similar-length sequences so padding waste stays low — the data
@@ -246,7 +245,7 @@ def length_bucketed_batches(
     alternative when examples must stay whole).
 
     Two-level and fully parallel: a DATA-INDEPENDENT length bucket
-    (``len div bucket_width``) first, then deterministic batch
+    (``len div 64``) first, then deterministic batch
     assembly within each bucket by (len, id) rank — every window
     partitions on the bucket key, so no global sort exists anywhere
     and buckets scale out independently (the reason this is not one
@@ -266,7 +265,7 @@ def length_bucketed_batches(
         df.select(
             F.col(id_col).alias("_id"),
             F.col(len_col).cast("bigint").alias("_len"),
-            F.expr(f"cast({len_col} AS bigint) div {bucket_width}").alias("_bkt"),
+            F.expr(f"cast({len_col} AS bigint) div 64").alias("_bkt"),
         )
         .withColumn("_rn", F.row_number().over(w).cast("bigint"))
         .withColumn("batch_id", F.expr(f"(_rn - 1) div {batch_size}"))
@@ -295,19 +294,18 @@ def negative_samples(
     id_col: str,
     anchors: DataFrame,
     k: int,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Deterministic negative sampling for contrastive training: for
     every anchor, ``k`` pseudo-random negatives drawn uniformly from
     the corpus — without ever joining anchors against the full corpus.
 
     Design (the scalable shape): each corpus row hashes into one of
-    ``n_buckets`` md5 buckets (one corpus pass); each anchor derives k
+    64 md5 buckets (one corpus pass); each anchor derives k
     probe buckets from md5(anchor:j); the equi-join on bucket meets
-    ~corpus/n_buckets candidates per probe, and the winner is the
+    ~corpus/64 candidates per probe, and the winner is the
     candidate minimizing md5(anchor:j:cand) — a uniform, reproducible
     pick keyed on (anchor, draw). Work is anchors × k × bucket-size;
-    size n_buckets to keep buckets ~constant. The probe side is tiny
+    the bucket count sets the bucket size. The probe side is tiny
     and broadcasts, so the corpus is scanned once with its only
     shuffle being the (anchor, j)-keyed argmin.
 
@@ -317,7 +315,7 @@ def negative_samples(
     pick the same negative (birthday-bounded) — downstream dedup is
     the caller's choice. Pure md5 arithmetic ⇒ SQL-oracle-exact.
     """
-    b = n_buckets
+    b = 64
     cand = df.select(F.col(id_col).alias("_cand")).withColumn(
         "_bkt",
         F.expr(

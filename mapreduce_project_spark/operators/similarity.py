@@ -660,16 +660,15 @@ def topk_ann_lsh(
     vec_col: str,
     k: int,
     n_tables: int = 12,
-    n_bits: int = 4,
 ) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket with the query
-    in >=1 of ``n_tables`` tables; exact cosine re-rank on candidates.
+    in >=1 of ``n_tables`` four-bit tables; exact cosine re-rank on candidates.
     Same output shape as `topk_bruteforce` (recall measured in tests;
     12x4 measured ~0.94 recall@5 on the sf0.1 fixture)."""
     from pyspark.sql import Window
 
-    corpus_b = lsh_buckets(df, id_col, vec_col, n_tables, n_bits, _DIM)
-    query_b = lsh_buckets(queries, id_col, vec_col, n_tables, n_bits, _DIM).select(
+    corpus_b = lsh_buckets(df, id_col, vec_col, n_tables, 4, _DIM)
+    query_b = lsh_buckets(queries, id_col, vec_col, n_tables, 4, _DIM).select(
         F.col("table").alias("qtable"),
         F.col("bucket").alias("qbucket"),
         F.col("id").alias("query_id"),
@@ -765,11 +764,9 @@ def knn_join_ann(
     id_col: str,
     vec_col: str,
     k: int,
-    n_tables: int = 32,
-    n_bits: int = 4,
 ) -> DataFrame:
     """Approximate kNN self-join at scale: candidate pairs share an LSH
-    bucket in ≥1 of ``n_tables`` hyperplane tables, each candidate is
+    bucket in ≥1 of 32 four-bit hyperplane tables, each candidate is
     exactly re-ranked, top-k per id. Output contract identical to
     `knn_join` (recall measured in tests/test_similarity.py).
 
@@ -777,7 +774,7 @@ def knn_join_ann(
     the bucket join shuffles on (table, bucket) — uniform keys by
     construction. Vectors ride through the candidate dedup so the
     re-rank needs no second join against the corpus."""
-    b = lsh_buckets(df, id_col, vec_col, n_tables, n_bits, _DIM)
+    b = lsh_buckets(df, id_col, vec_col, 32, 4, _DIM)
     x, y = b.alias("x"), b.alias("y")
     cand = (
         x.join(
@@ -1074,7 +1071,6 @@ def pq_encode(
     dim: int,
     m: int = 4,
     k: int = 16,
-    iters: int = 1,
 ) -> DataFrame:
     """(id, subspace, code) product-quantization codes — the m·log2(k)
     bits/vector representation (m=4, k=16 → 16 bits vs 256 bytes: the
@@ -1086,7 +1082,7 @@ def pq_encode(
     (ties → lowest cid), so the full train+encode pipeline is
     hash-matched by an unrolled-per-subspace SQL oracle."""
     sub = dim // m
-    books = pq_train(df, id_col, vec_col, dim, m, k, iters)
+    books = pq_train(df, id_col, vec_col, dim, m, k, 1)
     base = df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
     enc = _with_codebooks(base, books)
     codes = [_pq_code(s, sub) for s in range(m)]
@@ -1130,7 +1126,6 @@ def topk_pq_adc(
     dim: int,
     m: int = 4,
     n_cents: int = 16,
-    iters: int = 1,
 ) -> DataFrame:
     """PQ serving path — asymmetric distance computation (ADC): exact
     query subvectors against the corpus's 16-bit PQ codes.
@@ -1151,7 +1146,7 @@ def topk_pq_adc(
     At full scale this scan composes with IVF routing (probe cells
     first, ADC within cells)."""
     sub = dim // m
-    books = pq_train(df, id_col, vec_col, dim, m, n_cents, iters)
+    books = pq_train(df, id_col, vec_col, dim, m, n_cents, 1)
     base = df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
     wide = _with_codebooks(base, books).select(
         "id", *[_pq_code(s, sub).alias(f"c{s}") for s in range(m)]

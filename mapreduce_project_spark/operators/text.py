@@ -37,6 +37,8 @@ BPE_PATTERN = "([a-z]{1,4}|[0-9]|[^a-z0-9\\s])"
 # quantized to round(ln(n)*1e6) BIGINT before combination, so ranking
 # keys are integer-exact (see dsir_select_topk).
 DSIR_LOG_SCALE = 1_000_000
+# DSIR hashes each doc's bigrams into this many buckets
+_DSIR_DIM = 256
 
 
 def with_token_stats(df: DataFrame) -> DataFrame:
@@ -55,13 +57,13 @@ def with_token_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def quality_score(text_col: str = "text") -> Column:
+def quality_score() -> Column:
     """Deterministic [0,1] quality score:
     ``0.5*least(n_tokens/100, 1) + 0.3*ttr + 0.2*least(avg_len/8, 1)``
     (length, lexical diversity, word-length components — the shape of
     C4/Gopher-style quality heuristics, reduced to SQL-mirrorable form).
     """
-    tok = tokens(text_col)
+    tok = tokens("text")
     n_tok = F.size(tok)
     ttr = F.size(F.array_distinct(tok)).cast("double") / n_tok
     total_len = F.aggregate(tok, F.lit(0), lambda acc, x: acc + F.length(x))
@@ -73,10 +75,10 @@ def quality_score(text_col: str = "text") -> Column:
     )
 
 
-def lang_scores(text_col: str = "text") -> dict[str, Column]:
+def lang_scores() -> dict[str, Column]:
     """Marker-hit counts per language (count of tokens in each marker
     set)."""
-    tok = tokens(text_col)
+    tok = tokens("text")
     out = {}
     for lang, markers in LANG_MARKERS.items():
         arr = F.array(*[F.lit(m) for m in markers])
@@ -84,10 +86,10 @@ def lang_scores(text_col: str = "text") -> dict[str, Column]:
     return out
 
 
-def predicted_lang(text_col: str = "text") -> Column:
+def predicted_lang() -> Column:
     """Argmax language with deterministic tie-break (en > de > fr > es;
     'und' when no marker hits)."""
-    s = lang_scores(text_col)
+    s = lang_scores()
     best = F.greatest(*s.values())
     expr = F.lit("und")
     # reversed so earlier languages win ties (last WHEN built = first checked)
@@ -96,19 +98,19 @@ def predicted_lang(text_col: str = "text") -> Column:
     return expr
 
 
-def bpe_token_count(text_col: str = "text") -> Column:
+def bpe_token_count() -> Column:
     """Deterministic BPE-ish token count (regex chunks, see BPE_PATTERN)."""
     return F.size(
-        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(BPE_PATTERN), F.lit(1))
+        F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_PATTERN), F.lit(1))
     )
 
 
-def doc_fingerprint(text_col: str = "text") -> Column:
+def doc_fingerprint() -> Column:
     """Canonical content fingerprint: md5 over the normalized token
     stream (whitespace/punctuation-insensitive — two docs with the same
     token sequence collide by design). Engine-portable: DuckDB
     ``md5(array_to_string(tokens, ' '))`` is identical."""
-    return F.md5(F.encode(F.array_join(tokens(text_col), " "), "UTF-8"))
+    return F.md5(F.encode(F.array_join(tokens("text"), " "), "UTF-8"))
 
 
 # PII redaction — patterns restricted to the RE2 ∩ java.util.regex
@@ -379,21 +381,20 @@ def dsir_bucket_stats(
     id_col: str,
     text_col: str,
     target_pred,
-    dim: int = 256,
 ) -> "DataFrame":
     """The INTEGER sufficient statistics of DSIR-style importance
     reweighting (Data Selection via Importance Resampling, Xie et al.
     2023): hashed-bigram counts of a small TARGET slice (what the
     selected data should look like) vs the RAW corpus, per bucket.
 
-    Output: (bucket, target_cnt, raw_cnt) — ``dim`` rows of BIGINTs,
+    Output: (bucket, target_cnt, raw_cnt) — 256 rows of BIGINTs,
     the entire model the selection step needs. One corpus pass (the
     side flag is computed in the tokenizing projection — no join back
     to the corpus), one bucket-keyed partial-agg shuffle of integers;
     the table is broadcast-sized by construction whatever the corpus
     size, which is the reason hashed features (not a vocabulary) are
     the 100 TB featurizer. Float-free ⇒ hash-matchable."""
-    buckets = _bigram_buckets(df, id_col, text_col, dim, target_pred)
+    buckets = _bigram_buckets(df, id_col, text_col, _DSIR_DIM, target_pred)
     return (
         buckets.groupBy("bucket")
         .agg(
@@ -408,7 +409,6 @@ def dsir_select_topk(
     id_col: str,
     text_col: str,
     target_pred: str,
-    dim: int = 256,
     k: int = 50,
 ) -> "DataFrame":
     """DSIR selection render: per raw-corpus document the importance
@@ -421,7 +421,7 @@ def dsir_select_topk(
     Plan: ONE corpus scan produces the per-(doc, bucket) count table
     (`_dsir_doc_bucket_counts`, cached — the model aggregation and the
     scoring pass both read it, so the text is tokenized exactly once);
-    the ``dim``-row model + its two scalar totals broadcast; per-doc
+    the 256-row model + its two scalar totals broadcast; per-doc
     scores reduce map-side and rank via TakeOrdered(k). The corpus
     text is never shuffled.
 
@@ -435,7 +435,7 @@ def dsir_select_topk(
     of magnitude above double ulp for these magnitudes, so Spark and
     DuckDB round identically. The rendered ``logw`` is one division
     per output cell (logw_fp/1e6 — bit-identical across engines)."""
-    grouped = _dsir_doc_bucket_counts(df, id_col, text_col, target_pred, dim).cache()
+    grouped = _dsir_doc_bucket_counts(df, id_col, text_col, target_pred, _DSIR_DIM).cache()
     stats = grouped.groupBy("bucket").agg(
         F.sum(F.when(F.col("is_t"), F.col("cnt")).otherwise(0))
         .cast("bigint")
@@ -458,9 +458,9 @@ def dsir_select_topk(
         "bucket",
         (
             _ilog(F.col("target_cnt") + 1)
-            - _ilog(F.col("t_tot") + dim)
+            - _ilog(F.col("t_tot") + _DSIR_DIM)
             - _ilog(F.col("raw_cnt") + 1)
-            + _ilog(F.col("r_tot") + dim)
+            + _ilog(F.col("r_tot") + _DSIR_DIM)
         ).alias("lr_fp"),
     )
     per_doc = grouped.filter(~F.col("is_t"))

@@ -76,19 +76,122 @@ def trailing_time_agg(
     return out
 
 
+# ------------------------------------------------------------------
+# Previous-OUTPUT recursions, written once. Each fold is Spark-free:
+# ``fold(state, values) -> (state, outputs)`` runs the recursion over
+# one key's values in order, starting from the carried ``state`` (None
+# for a fresh key) and returning the state to carry on plus one output
+# per value. The batch queries fold a whole sorted group from None; the
+# streaming twins (`streaming/events.py`) fold each micro-batch from the
+# checkpointed state, so folding a series in one call or cut anywhere
+# gives the same outputs — stream ≡ batch by construction.
+# ------------------------------------------------------------------
+
+
+def _half_trunc(v: int) -> int:
+    """``v div 2`` truncating toward zero, as SQL ``div`` does; Python's
+    ``//`` floors, which differs on negative values."""
+    q = abs(v) // 2
+    return q if v >= 0 else -q
+
+
+def ewma_fold(state: int | None, xs) -> tuple[int | None, list[int]]:
+    """Fixed-point EWMA with α = 1/2: ``s_1 = x_1``, ``s_i = (x_i +
+    s_{i−1}) div 2`` truncating toward zero. State: the last smoothed
+    value. Outputs: each step's smoothed value."""
+    s, out = state, []
+    for x in xs:
+        x = int(x)
+        s = x if s is None else _half_trunc(x + s)
+        out.append(s)
+    return s, out
+
+
+def cusum_fold(
+    state: tuple[int, int] | None, ns, mean_fp: int, slack_fp: int
+) -> tuple[tuple[int, int], list[tuple[int, int]]]:
+    """Page's one-sided CUSUM over milli-unit counts: ``S⁺_i = max(0,
+    S⁺_{i−1} + n_i·1000 − mean_fp − slack_fp)`` and ``S⁻_i = max(0,
+    S⁻_{i−1} + mean_fp − n_i·1000 − slack_fp)`` from (0, 0). State and
+    outputs: the ``(S⁺, S⁻)`` pair."""
+    s_up, s_dn = state or (0, 0)
+    out = []
+    for n in ns:
+        n = int(n)
+        s_up = max(0, s_up + n * 1000 - mean_fp - slack_fp)
+        s_dn = max(0, s_dn + mean_fp - n * 1000 - slack_fp)
+        out.append((s_up, s_dn))
+    return (s_up, s_dn), out
+
+
+def holt_fold(
+    state: tuple[int, int, int] | None, ys
+) -> tuple[tuple[int, int, int], list[tuple[int, int, int]]]:
+    """Holt linear-trend smoothing with α = β = 1/4 and FLOOR division
+    (``//``, the batch SQL's ``floor(x/4.0)``): ``l_1 = y_1, b_1 = 0``;
+    then ``l_i = (y_i + 3(l + b)) // 4`` and ``b_i = (l_i − l + 3b) //
+    4``. State: ``(l, b, started)``. Outputs: ``(l, b, resid)`` per day,
+    ``resid = y_i − (l + b)`` the one-step error (0 on the first day)."""
+    l, b, started = state or (0, 0, 0)
+    out = []
+    for y in ys:
+        y = int(y)
+        if not started:
+            l, b, r, started = y, 0, 0, 1
+        else:
+            lp, bp = l, b
+            r = y - (lp + bp)
+            l = (y + 3 * (lp + bp)) // 4
+            b = (l - lp + 3 * bp) // 4
+        out.append((l, b, r))
+    return (l, b, started), out
+
+
+def holt_winters_fold(state: tuple | None, ys) -> tuple[tuple, list]:
+    """Holt-Winters additive seasonal smoothing, m = 7, α = β = γ = 1/4,
+    FLOOR division. The first 7 values are buffered; then ``l = sum //
+    7``, ``b = 0`` and the seasonals are the buffer's deviations from
+    ``l``. Each later value updates ``l = (y − s_old + 3(l + b)) // 4``,
+    ``b = (l_new − l + 3b) // 4``, ``s = (y − l_new + 3 s_old) // 4``,
+    where ``s_old`` is the seasonal 7 steps back. State: ``(l, b, buffer,
+    last-7 seasonals)``. Outputs: None during the warm-up, else ``(l, b,
+    s, resid, fc)`` with ``resid = y − (l + b + s_old)`` and the next-day
+    forecast ``fc = l + b + s_{t−6}``."""
+    l, b, buf, slist = state or (0, 0, [], [])
+    buf, slist = list(buf), list(slist)
+    out = []
+    for y in ys:
+        y = int(y)
+        if len(slist) < 7:
+            buf.append(y)
+            if len(buf) == 7:
+                l = sum(buf) // 7
+                b = 0
+                slist = [v - l for v in buf]
+            out.append(None)
+            continue
+        s_old = slist[0]
+        resid = y - (l + b + s_old)
+        l_new = (y - s_old + 3 * (l + b)) // 4
+        b_new = (l_new - l + 3 * b) // 4
+        s_new = (y - l_new + 3 * s_old) // 4
+        slist = slist[1:] + [s_new]
+        l, b = l_new, b_new
+        out.append((l, b, s_new, resid, l + b + slist[0]))
+    return (l, b, buf, slist), out
+
+
 def ewma_fixed(
     df: DataFrame,
     key_col: str,
     order_cols: list[str],
     value_col: str,
-    alpha_num: int = 1,
-    alpha_den: int = 2,
 ) -> DataFrame:
-    """Exact fixed-point exponentially-weighted moving average per key:
-    ``s_1 = x_1;  s_i = (alpha_num·x_i + (alpha_den−alpha_num)·s_{i−1})
-    div alpha_den`` (truncating integral division each step — the
-    truncation IS the spec, making this order-dependent RECURSION
-    hash-matchable by a recursive-CTE oracle).
+    """Exact fixed-point exponentially-weighted moving average (α = 1/2)
+    per key: `ewma_fold` over each key's rows in ``order_cols`` order,
+    ``s_1 = x_1;  s_i = (x_i + s_{i−1}) div 2`` (truncating integral
+    division each step — the truncation IS the spec, making this
+    order-dependent RECURSION hash-matchable by a recursive-CTE oracle).
 
     EWMA is the one windowed statistic a frame cannot express: each
     output depends on the previous OUTPUT, not on a frame of inputs
@@ -98,20 +201,16 @@ def ewma_fixed(
     a partition-wise ``mapInPandas``, the recursion running
     sequentially within each key — exactly how a reference user's
     reduce-side loop would compute it (reduce(fn) over the sorted
-    group), and the batch twin of `streaming/events.py:ewma_stream`'s
-    carried state.
+    group), and the batch twin of `streaming/events.py:ewma_stream`,
+    which folds the same `ewma_fold` from its carried state.
 
-    ``value_col`` must be integral (BIGINT-safe) and the recursion
-    assumes it non-negative OR callers accept truncation-toward-zero
-    semantics (matched by SQL ``//`` in both engines). ``order_cols``
-    must be a deterministic total order within each key.
+    ``value_col`` must be integral (BIGINT-safe); negative values
+    truncate toward zero, as SQL ``div`` does in both engines.
+    ``order_cols`` must be a deterministic total order within each key.
 
     Output: (key, *order_cols, x, ewma_fx) — one row per input row.
     """
     import pandas as pd
-
-    a_n, a_d = alpha_num, alpha_den
-    carry = a_d - a_n
 
     _types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = (
@@ -122,10 +221,11 @@ def ewma_fixed(
 
     # PARTITION-WISE, not per-group (the `events_sessions_pandas`
     # discipline): hash-repartition on the key so each key's rows land
-    # whole in one partition, then ONE mapInPandas pass runs the
-    # recursion over the partition with state resets at key boundaries.
-    # A per-group applyInPandas pays pandas-frame overhead per key —
-    # measured ~6x slower on 10k small keys at sf0.1.
+    # whole in one partition, then ONE mapInPandas pass sorts the
+    # partition and folds each key's slice of the sorted arrays. A
+    # per-group applyInPandas, or a frame built per key, pays
+    # pandas-frame overhead per key — measured ~6x slower on 10k small
+    # keys at sf0.1.
     def smooth(batches):
         import numpy as np
 
@@ -138,18 +238,9 @@ def ewma_fixed(
         keys = pdf[key_col].to_numpy()
         xs = pdf["_x"].to_numpy()
         out = np.empty_like(xs)
-        prev_key = None
-        s = 0
-        for i in range(len(xs)):
-            x = int(xs[i])
-            if keys[i] != prev_key:
-                s = x
-                prev_key = keys[i]
-            else:
-                v = a_n * x + carry * s
-                q = abs(v) // a_d
-                s = q if v >= 0 else -q
-            out[i] = s
+        cuts = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1), len(xs)]
+        for lo, hi in zip(cuts, cuts[1:]):
+            out[lo:hi] = ewma_fold(None, xs[lo:hi].tolist())[1]
         res = pdf[[key_col, *order_cols]].copy()
         res["x"] = xs
         res["ewma_fx"] = out

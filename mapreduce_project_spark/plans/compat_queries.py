@@ -186,7 +186,7 @@ def q_multimodal_header_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unhex(F.lit("0802000000")),                 # bit depth etc.
     )
     probed = media_header_probe(
-        docs.select("doc_id", png.alias("payload")), "doc_id", "payload"
+        docs.select("doc_id", png.alias("payload"))
     )
     return probed.select("doc_id", "format", "width", "height")
 
@@ -333,7 +333,7 @@ def q_multimodal_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
             yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(), "payload": payloads})
 
     enc = docs.mapInPandas(encode, "doc_id long, payload binary")
-    dec = decode_media(enc, "doc_id", "payload")
+    dec = decode_media(enc)
     stats = byte_features(dec.select("doc_id", F.col("data").alias("payload")))
     return dec.select("doc_id", "width", "height", "n_values").join(
         stats.select("doc_id", "byte_sum"), "doc_id"
@@ -396,7 +396,7 @@ def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     enc = docs.mapInPandas(encode, "doc_id long, payload binary")
-    dec = decode_media(enc, "doc_id", "payload")
+    dec = decode_media(enc)
     stats = byte_features(dec.select("doc_id", F.col("data").alias("payload")))
     return dec.select("doc_id", "width", "height", "n_values").join(
         stats.select("doc_id", "byte_sum"), "doc_id"
@@ -495,7 +495,7 @@ def q_multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = docs.mapInPandas(
         _wav_encoder(list_chunk=True), "doc_id long, payload binary"
     )
-    dec = decode_media(enc, "doc_id", "payload")
+    dec = decode_media(enc)
     return dec.mapInPandas(
         sample_stats,
         "doc_id long, channels long, sample_rate_hz long, "
@@ -585,12 +585,12 @@ def q_multimodal_audio_logmel(spark: SparkSession, sf_dir: str) -> DataFrame:
     wav = docs.mapInPandas(
         _wav_encoder(list_chunk=False), "doc_id long, payload binary"
     )
-    dec = decode_media(wav, "doc_id", "payload").select(
+    dec = decode_media(wav).select(
         "doc_id", "data", "sample_rate_hz"
     )
     # n_fft=64/hop=32 so even short documents produce several frames
     lm = logmel_features(
-        dec, "doc_id", "data", "sample_rate_hz", n_fft=64, hop=32, n_mels=8
+        dec, "doc_id", n_fft=64, hop=32, n_mels=8
     )
     # argmax mel band of the summed spectrum: a compact integer signature
     nm = 8
@@ -663,7 +663,7 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     enc = docs.mapInPandas(encode, "doc_id long, payload binary")
-    hashes = phash64(decode_media(enc, "doc_id", "payload"))
+    hashes = phash64(decode_media(enc))
     # stage 1: exact perceptual clusters — linear groupBy, no pairs
     clusters = hashes.groupBy("phash").agg(
         F.min("doc_id").cast("bigint").alias("rep"),
@@ -805,7 +805,7 @@ def q_multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = docs.mapInPandas(
         _wav_encoder(list_chunk=True), "doc_id long, payload binary"
     )
-    dec = decode_media(enc, "doc_id", "payload")
+    dec = decode_media(enc)
     return dec.mapInPandas(
         decimate,
         "doc_id long, n_in_samples long, n_out_samples long, "

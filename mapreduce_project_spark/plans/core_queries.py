@@ -35,7 +35,7 @@ GROUP BY word
 @query("word_count", WORD_COUNT_ORACLE)
 def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B1 (word_count.py:23-56): tokenize + count per word."""
-    return word_count(t(spark, sf_dir, "documents"), "text")
+    return word_count(t(spark, sf_dir, "documents"))
 
 
 @query("inverted_index", INVERTED_INDEX_ORACLE)

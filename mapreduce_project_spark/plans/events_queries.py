@@ -1007,7 +1007,7 @@ def q_events_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("x_cents"),
     )
-    out = ewma_fixed(ev, "user_id", ["ts"], "x_cents", 1, 2)
+    out = ewma_fixed(ev, "user_id", ["ts"], "x_cents")
     return out.select(
         "user_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
@@ -1138,7 +1138,7 @@ def q_events_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("x_cents"),
     )
-    sm = ewma_fixed(ev, "user_id", ["ts"], "x_cents", 1, 2)
+    sm = ewma_fixed(ev, "user_id", ["ts"], "x_cents")
     w = Window.partitionBy("user_id").orderBy("ts")
     resid = sm.withColumn("r", F.col("x") - F.lag("ewma_fx").over(w)).filter(
         F.col("r").isNotNull()
@@ -1764,13 +1764,17 @@ def q_events_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion is engine-exact — each output depends on the previous
     OUTPUT, the D112 recursion class no window frame expresses, so the
     oracle replays it as a recursive CTE over the day index. Plan: one
-    partial-agg shuffle to ~#days rows, then the recursion runs in ONE
-    pandas group — state is calendar-bounded (≤365·years rows), which
-    is the honest scale story for a GLOBAL series; per-key series
-    would reuse the D112 keyed shape unchanged."""
+    partial-agg shuffle to ~#days rows, then the recursion
+    (`operators/windows.py:cusum_fold`, which `cusum_stream` folds per
+    micro-batch) runs in ONE pandas group — state is calendar-bounded
+    (≤365·years rows), which is the honest scale story for a GLOBAL
+    series; per-key series would reuse the D112 keyed shape
+    unchanged."""
     from collections.abc import Iterator
 
     import pandas as pd
+
+    from mapreduce_project_spark.operators.windows import cusum_fold
 
     daily = (
         t(spark, sf_dir, "events")
@@ -1789,15 +1793,11 @@ def q_events_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def cusum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pdf = pd.concat(list(batches)).sort_values("ed").reset_index(drop=True)
-        s_up = s_dn = 0
-        ups, dns = [], []
-        for n, mean_fp, slack_fp in zip(pdf["n"], pdf["mean_fp"], pdf["slack_fp"]):
-            s_up = max(0, s_up + int(n) * 1000 - int(mean_fp) - int(slack_fp))
-            s_dn = max(0, s_dn + int(mean_fp) - int(n) * 1000 - int(slack_fp))
-            ups.append(s_up)
-            dns.append(s_dn)
-        pdf["s_up"] = ups
-        pdf["s_dn"] = dns
+        # every row carries the same broadcast (mean_fp, slack_fp) pair
+        mean_fp, slack_fp = (int(pdf[c].iloc[0]) for c in ("mean_fp", "slack_fp"))
+        out = cusum_fold(None, pdf["n"], mean_fp, slack_fp)[1]
+        pdf["s_up"] = [u for u, _ in out]
+        pdf["s_dn"] = [d for _, d in out]
         yield pdf
 
     out = base.repartition(1).mapInPandas(
@@ -2114,7 +2114,7 @@ def q_trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _markov_oracle(k_iters: int = 12) -> str:
+def _markov_oracle() -> str:
     """DuckDB twin of `events_markov_attribution`: identical
     sessionization (the D199 window), identical transition extraction,
     and the absorption solve UNROLLED as ``k_iters`` CTE iterations of
@@ -2122,6 +2122,7 @@ def _markov_oracle(k_iters: int = 12) -> str:
     driver Python — v_{k+1}(s) = (Σ_t p_micro(s,t)·v_k(t)) // 10⁶ with
     v(CONV) ≡ 10⁹, v(NULL) ≡ 0, transitions into the removed channel
     zeroed. Integer end-to-end, so every cell hash-matches."""
+    k_iters = 12
     # AS MATERIALIZED on every iteration is load-bearing (the MMR/D165
     # lesson): inlined, v12's reference chain re-expands the whole
     # upstream pipeline per step — measured 90 s at sf0.1 vs ~2 s
@@ -2209,7 +2210,7 @@ def _markov_oracle(k_iters: int = 12) -> str:
     """
 
 
-@query("events_markov_attribution", _markov_oracle(12))
+@query("events_markov_attribution", _markov_oracle())
 def q_events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov REMOVAL-EFFECT attribution (D211, Anderl et al. 2014) —
     the data-driven counterpart of D181's heuristic U-shaped credits:
@@ -3330,45 +3331,20 @@ def q_events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE (the D112 discipline). Plan: corpus-scale work is
     ONE (type, day)-keyed partial agg; the recursion runs per type
     over the ≤#days grid (a century < 40k rows/key) inside one
-    applyInPandas with Python ints — sequential because each output
-    depends on the previous OUTPUT, the one shape no window frame
-    expresses."""
+    applyInPandas with Python ints (`operators/windows.py:holt_fold`,
+    which `holt_stream` folds per micro-batch) — sequential because
+    each output depends on the previous OUTPUT, the one shape no
+    window frame expresses."""
     import pandas as pd
 
-    ev = t(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("unix_micros(date_trunc('day', ts)) div 86400000000").alias("d"),
-    ).agg(F.sum(cents).cast("bigint").alias("y"))
-    bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    types = ev.select("event_type").distinct()
-    grid = (
-        types.crossJoin(F.broadcast(bounds))
-        .select(
-            "event_type", F.explode(F.sequence("d0", "d1")).alias("d")
-        )
-        .join(daily, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("y", F.lit(0)).alias("y"))
-    )
+    from mapreduce_project_spark.operators.windows import holt_fold
+
+    grid = _daily_cents_grid(t(spark, sf_dir, "events"))
 
     def holt(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)
-        ys = [int(v) for v in pdf["y"]]
-        ls, bs, rs = [], [], []
-        l = b = 0
-        for i, y in enumerate(ys):
-            if i == 0:
-                l, b, r = y, 0, 0
-            else:
-                lp, bp = l, b
-                r = y - (lp + bp)
-                l = (y + 3 * (lp + bp)) // 4
-                b = (l - lp + 3 * bp) // 4
-            ls.append(l)
-            bs.append(b)
-            rs.append(r)
-        pdf["l"], pdf["b"], pdf["resid"] = ls, bs, rs
+        out = holt_fold(None, pdf["y"])[1]
+        pdf["l"], pdf["b"], pdf["resid"] = (list(c) for c in zip(*out))
         return pdf
 
     fit = grid.groupBy("event_type").applyInPandas(
@@ -3864,43 +3840,29 @@ def q_events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-7 seasonals as a LIST through a recursive CTE, so the whole
     fit is replayable in SQL. Plan: corpus-scale work is ONE (type,
     day)-keyed partial agg; the recursion runs per type over the
-    <=#days grid inside one applyInPandas with Python ints (each
+    <=#days grid inside one applyInPandas with Python ints
+    (`operators/windows.py:holt_winters_fold`, which
+    `holt_winters_stream` folds per micro-batch; each
     output depends on the previous OUTPUT and the output 7 steps back
     — the doubly-stateful shape no window frame expresses). Rows:
     (#days - 7) per type."""
     import pandas as pd
+
+    from mapreduce_project_spark.operators.windows import holt_winters_fold
 
     ev = t(spark, sf_dir, "events")
     grid = _daily_cents_grid(ev)
 
     def hw(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)
-        ys = [int(v) for v in pdf["y"]]
-        if len(ys) < 8:
-            return pdf.iloc[0:0].assign(
-                l=0, b=0, s=0, resid=0, fc=0
-            )[["event_type", "d", "y", "l", "b", "s", "resid", "fc"]]
-        l = sum(ys[:7]) // 7
-        b = 0
-        slist = [y - l for y in ys[:7]]
-        rows = []
-        for i in range(7, len(ys)):
-            y = ys[i]
-            s_old = slist[0]
-            resid = y - (l + b + s_old)
-            l_new = (y - s_old + 3 * (l + b)) // 4
-            b_new = (l_new - l + 3 * b) // 4
-            s_new = (y - l_new + 3 * s_old) // 4
-            slist = slist[1:] + [s_new]
-            l, b = l_new, b_new
-            rows.append(
-                (
-                    pdf["event_type"].iloc[0], int(pdf["d"].iloc[i]), y,
-                    l, b, s_new, resid, l + b + slist[0],
-                )
-            )
+        out = holt_winters_fold(None, pdf["y"])[1]
         return pd.DataFrame(
-            rows, columns=["event_type", "d", "y", "l", "b", "s", "resid", "fc"]
+            [
+                (et, int(d), int(y), *o)
+                for et, d, y, o in zip(pdf["event_type"], pdf["d"], pdf["y"], out)
+                if o is not None
+            ],
+            columns=["event_type", "d", "y", "l", "b", "s", "resid", "fc"],
         )
 
     fit = grid.groupBy("event_type").applyInPandas(
@@ -5149,20 +5111,7 @@ def q_forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: sub-model cost dominates (ONE (type,day) partial agg each +
     metadata-scale recursions); the backtest itself is four
     metadata-scale grid joins + ONE type agg. Four rows per type."""
-    ev = t(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("unix_micros(date_trunc('day', ts)) div 86400000000").alias("d"),
-    ).agg(F.sum(cents).cast("bigint").alias("y"))
-    bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    types = ev.select("event_type").distinct()
-    ag = (
-        types.crossJoin(F.broadcast(bounds))
-        .select("event_type", F.explode(F.sequence("d0", "d1")).alias("d"))
-        .join(daily, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("y", F.lit(0)).alias("y"))
-    )
+    ag = _daily_cents_grid(t(spark, sf_dir, "events"))
     naive = ag.select(
         "event_type", (F.col("d") + 1).alias("td"), F.col("y").alias("fc_naive")
     )

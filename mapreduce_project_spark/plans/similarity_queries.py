@@ -131,7 +131,7 @@ def q_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     out = topk_ann_lsh(
         emb, emb.filter(F.col("vec_id") < 10), "vec_id", "embedding", 5,
-        n_tables=32, n_bits=4,
+        n_tables=32,
     )
     return out.withColumn("rk", F.col("rk").cast("bigint"))
 
@@ -179,10 +179,7 @@ def q_knn_join_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage is probabilistic (recall vs the exact graph is pinned in
     tests/test_similarity.py), while the blocked-exact twin
     `knn_join_label` hash-matches its full SQL oracle."""
-    out = knn_join_ann(
-        t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 3,
-        n_tables=32, n_bits=4,
-    )
+    out = knn_join_ann(t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 3)
     return out.withColumn("rk", F.col("rk").cast("bigint"))
 
 
@@ -285,8 +282,7 @@ def q_dedup_embedding_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     return embedding_dedup_clusters_lsh(
-        t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 0.3,
-        n_tables=32, n_bits=8, dim=64,
+        t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 0.3, n_bits=8, dim=64,
     )
 
 
@@ -651,7 +647,7 @@ def q_embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (coarse quantizer)."""
     from mapreduce_project_spark.operators.similarity import pq_encode
 
-    out = pq_encode(t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 64, 4, 16, 1)
+    out = pq_encode(t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 64, 4, 16)
     return out.withColumnRenamed("id", "id").select(
         F.col("id"), "subspace", "code"
     )
@@ -673,7 +669,7 @@ def q_similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = t(spark, sf_dir, "embeddings")
     return topk_pq_adc(
-        emb, emb.filter(F.col("vec_id") < 10), "vec_id", "embedding", 5, 64, 4, 16, 1
+        emb, emb.filter(F.col("vec_id") < 10), "vec_id", "embedding", 5, 64, 4, 16
     )
 
 
@@ -1370,13 +1366,14 @@ def q_similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pca_power_oracle(iters: int = 8) -> str:
+def _pca_power_oracle() -> str:
     """DuckDB twin of `embedding_top_pc`: the identical integer
     pipeline — milli-quantized components, exact centered scatter
     S = n·Σqqᵀ − mmᵀ in BIGINT, and `iters` power-iteration steps
     u = S·v (order-independent integer SUM), v = u·1000 // max|u|
     (truncate-toward-zero, DuckDB // ≡ the driver's _tdiv) — unrolled
     as MATERIALIZED CTEs."""
+    iters = 8
     vs = ["""v0 AS MATERIALIZED (
       SELECT CAST(i AS BIGINT) AS i, CAST(1000 AS BIGINT) AS v
       FROM (SELECT unnest(generate_series(1, 64)) AS i))"""]
@@ -1414,7 +1411,7 @@ def _pca_power_oracle(iters: int = 8) -> str:
     """
 
 
-@query("embedding_top_pc", _pca_power_oracle(8))
+@query("embedding_top_pc", _pca_power_oracle())
 def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top PRINCIPAL COMPONENT of the embedding corpus (D219) — the
     train-free spectral sibling of JL projection (D194, random) and

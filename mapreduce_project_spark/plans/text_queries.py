@@ -130,7 +130,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix, Gopher-rule shaped). Pytest-only slot: the identical formula is
     driver-checked inside `pipeline_clean_corpus`'s oracle."""
     return t(spark, sf_dir, "documents").select(
-        "doc_id", quality_score("text").alias("quality")
+        "doc_id", quality_score().alias("quality")
     )
 
 
@@ -161,7 +161,7 @@ def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4: marker-stopword language ID with deterministic tie-break
     (placeholder for a pandas_udf fastText stage; same plumbing)."""
     return t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", predicted_lang("text").alias("pred_lang")
+        "doc_id", "lang", predicted_lang().alias("pred_lang")
     )
 
 
@@ -177,7 +177,7 @@ def q_text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4: BPE-ish subword token count (regex proxy; leftmost-first
     alternation semantics agree between Java regex and RE2 here)."""
     return t(spark, sf_dir, "documents").select(
-        "doc_id", bpe_token_count("text").cast("bigint").alias("n_bpe_tokens")
+        "doc_id", bpe_token_count().cast("bigint").alias("n_bpe_tokens")
     )
 
 
@@ -191,7 +191,7 @@ def q_text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4: canonical content fingerprint (md5 of normalized tokens)."""
     return t(spark, sf_dir, "documents").select(
-        "doc_id", doc_fingerprint("text").alias("fp")
+        "doc_id", doc_fingerprint().alias("fp")
     )
 
 
@@ -210,7 +210,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-id representative (dropDuplicates keeps an arbitrary row). At
     100 TB the shuffle carries 32-byte digests, not documents."""
     docs = t(spark, sf_dir, "documents").select(
-        "doc_id", doc_fingerprint("text").alias("fp")
+        "doc_id", doc_fingerprint().alias("fp")
     )
     return exact_dedup(docs, ["fp"], "doc_id")
 
@@ -249,7 +249,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     this very SQL (the fixture plants ~25 near-dup pairs at >=0.96 with
     a wide gap below, so the threshold is numerically safe
     cross-engine)."""
-    return jaccard_pairs(t(spark, sf_dir, "documents"), "doc_id", "text", 3, 0.8)
+    return jaccard_pairs(t(spark, sf_dir, "documents"), "doc_id", "text", 0.8)
 
 
 @query("dedup_jaccard_prefix_filter", _JACCARD_PAIRS_ORACLE)
@@ -264,7 +264,7 @@ def q_dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame
     from mapreduce_project_spark.operators.dedup import prefix_filter_jaccard_pairs
 
     return prefix_filter_jaccard_pairs(
-        t(spark, sf_dir, "documents"), "doc_id", "text", 3, 4, 5
+        t(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -327,9 +327,9 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
-        predicted_lang("text").alias("pred_lang"),
-        quality_score("text").alias("quality"),
-        doc_fingerprint("text").alias("fp"),
+        predicted_lang().alias("pred_lang"),
+        quality_score().alias("quality"),
+        doc_fingerprint().alias("fp"),
     ).filter((F.col("pred_lang") == "en") & (F.col("quality") >= 0.5))
     keep = scored.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     return scored.join(keep, ["fp", "doc_id"]).select("doc_id", "quality", "fp")
@@ -401,7 +401,7 @@ def q_dedup_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return sorted_neighborhood_pairs(
-        t(spark, sf_dir, "documents"), "doc_id", "text", 3, 24, 4, 0.8
+        t(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -417,7 +417,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ per-band match prob 0.8^4≈0.41, miss prob (1-0.41)^16 ≈ 2e-4
     per pair)."""
     return minhash_lsh_pairs(
-        t(spark, sf_dir, "documents"), "doc_id", "text", 3, 64, 16, 0.8
+        t(spark, sf_dir, "documents"), "doc_id", "text"
     ).select("id_a", "id_b", "jac")
 
 
@@ -468,7 +468,7 @@ def q_dedup_incremental_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     crawl = docs.filter(F.col("doc_id") % 5 == 0)
     index = minhash_index_build(corpus, "doc_id", "text", 3, 64)
-    return minhash_probe_pairs(index, crawl, "doc_id", "text", 3, 64, 16, 0.8)
+    return minhash_probe_pairs(index, crawl, "doc_id", "text", 16)
 
 
 @query(
@@ -502,7 +502,7 @@ def q_dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matched (~835 hot spans at sf0.01, ~8.7k at sf0.1)."""
     from mapreduce_project_spark.operators.dedup import duplicate_spans
 
-    return duplicate_spans(t(spark, sf_dir, "documents"), "doc_id", "text", 16, 2)
+    return duplicate_spans(t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @query(
@@ -597,7 +597,7 @@ def q_dsir_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_project_spark.operators.text import dsir_bucket_stats
 
     return dsir_bucket_stats(
-        t(spark, sf_dir, "documents"), "doc_id", "text", "doc_id % 50 = 0", 256
+        t(spark, sf_dir, "documents"), "doc_id", "text", "doc_id % 50 = 0"
     )
 
 
@@ -637,7 +637,7 @@ def q_dsir_select_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_project_spark.operators.text import dsir_select_topk
 
     return dsir_select_topk(
-        t(spark, sf_dir, "documents"), "doc_id", "text", "doc_id % 50 = 0", 256, 50
+        t(spark, sf_dir, "documents"), "doc_id", "text", "doc_id % 50 = 0", 50
     )
 
 
@@ -690,7 +690,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     and finds the same pairs with a plain all-pairs hamming join — the
     pigeonhole join is pure optimization, provably candidate-complete
     at hamming <= 3."""
-    return simhash_pairs(t(spark, sf_dir, "documents"), "doc_id", "text", 3).select(
+    return simhash_pairs(t(spark, sf_dir, "documents"), "doc_id", "text").select(
         "id_a", "id_b", "hamming"
     )
 
@@ -1752,7 +1752,7 @@ def q_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select(
         "lang",
         "source",
-        doc_fingerprint("text").alias("fp"),
+        doc_fingerprint().alias("fp"),
         F.size(tokens("text")).cast("bigint").alias("n_tok"),
     )
     return d.agg(
@@ -2209,7 +2209,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_project_spark.operators.dedup import minhash_lsh_pairs
 
     docs = t(spark, sf_dir, "documents")
-    prs = minhash_lsh_pairs(docs, "doc_id", "text", 3, 64, 16, 0.8).select(
+    prs = minhash_lsh_pairs(docs, "doc_id", "text").select(
         "id_a", "id_b"
     )
     srcs = docs.select("doc_id", "source")
@@ -2593,7 +2593,7 @@ def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_project_spark.operators.dedup import containment_pairs
 
     return containment_pairs(
-        t(spark, sf_dir, "documents"), "doc_id", "text", 3, 7, 10, 5
+        t(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -2639,7 +2639,7 @@ def q_tokenizer_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFra
         "source",
         F.length("text").cast("bigint").alias("n_chars"),
         F.size(tokens("text")).cast("bigint").alias("n_words"),
-        bpe_token_count("text").cast("bigint").alias("n_bpe"),
+        bpe_token_count().cast("bigint").alias("n_bpe"),
     )
     return d.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -300,7 +300,7 @@ def q_decontam_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = hash_split(t(spark, sf_dir, "documents"), "doc_id", 0.125)
     train = docs.filter(F.col("split") == "train")
     test = docs.filter(F.col("split") == "test")
-    return contamination_hits(train, test, "doc_id", "text", 3)
+    return contamination_hits(train, test, 3)
 
 
 @query(
@@ -453,9 +453,9 @@ def q_assemble_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "text",
-        predicted_lang("text").alias("pred_lang"),
-        quality_score("text").alias("quality"),
-        doc_fingerprint("text").alias("fp"),
+        predicted_lang().alias("pred_lang"),
+        quality_score().alias("quality"),
+        doc_fingerprint().alias("fp"),
     ).filter((F.col("pred_lang") == "en") & (F.col("quality") >= 0.5))
     # survivor pick as ONE fp-keyed window instead of groupBy(min) +
     # join-back: the join form re-ran the scan+score subtree for the
@@ -474,7 +474,7 @@ def q_assemble_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "text")
     )
     cleaned = decontaminate(
-        deduped.filter(~is_test), docs.filter(is_test), "doc_id", "text", 5
+        deduped.filter(~is_test), docs.filter(is_test), 5
     )
     mixed = mix_sources(
         cleaned, "doc_id", "source",
@@ -518,7 +518,7 @@ def q_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash_bits = F.expr(
         "cast(conv(substr(md5(cast(cast(doc_id AS string) AS binary)), 1, 8), 16, 10) AS bigint)"
     )
-    q = quality_score("text")
+    q = quality_score()
     return (
         docs.select("doc_id", q.alias("quality"))
         .filter(hash_bits < (F.col("quality") * F.lit(4294967296.0)).cast("bigint"))
@@ -779,8 +779,8 @@ def q_assemble_training_set_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     gated = docs.select(
         "doc_id", "text",
-        predicted_lang("text").alias("pred_lang"),
-        quality_score("text").alias("quality"),
+        predicted_lang().alias("pred_lang"),
+        quality_score().alias("quality"),
     ).filter((F.col("pred_lang") == "en") & (F.col("quality") >= 0.5))
     pd_ = passage_dedup(gated.select("doc_id", "text"), "doc_id", "text", 16)
     tagged = pd_.select(
@@ -885,7 +885,7 @@ def q_linear_gd_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint").alias("y_cents"),
     )
     return linear_gd_fixed(
-        li, ["bias", "qty", "disc_pct"], "y_cents", n_iter=2, lr_num=1, lr_den=1000
+        li, ["bias", "qty", "disc_pct"], "y_cents", n_iter=2, lr_den=1000
     )
 
 
@@ -967,7 +967,7 @@ def q_training_batches_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", F.size(tokens("text")).cast("bigint").alias("n_tok")
     )
-    return length_bucketed_batches(docs, "doc_id", "n_tok", 8, 64)
+    return length_bucketed_batches(docs, "doc_id", "n_tok", 8)
 
 
 _NEG_SAMPLES_ORACLE = """
@@ -1013,7 +1013,7 @@ def q_contrastive_negative_samples(spark: SparkSession, sf_dir: str) -> DataFram
 
     emb = t(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 50)
-    return negative_samples(emb, "vec_id", anchors, 4, 64)
+    return negative_samples(emb, "vec_id", anchors, 4)
 
 
 _CONTRASTIVE_ORACLE = f"""
@@ -1076,14 +1076,14 @@ def q_assemble_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: the pair stream feeds BOTH the output union and the
     # anchor-id draw — without it the whole prefix-filter Jaccard join
     # runs twice (measured ~2x this query's wall time)
-    pos = prefix_filter_jaccard_pairs(docs, "doc_id", "text", 3, 4, 5).select(
+    pos = prefix_filter_jaccard_pairs(docs, "doc_id", "text").select(
         F.col("id_a").alias("anchor"),
         F.col("id_b").alias("other"),
         F.lit("pos").alias("label"),
         "jac",
     ).cache()
     anchors = pos.select(F.col("anchor").alias("doc_id")).distinct()
-    negs = negative_samples(docs.select("doc_id"), "doc_id", anchors, 2, 64).select(
+    negs = negative_samples(docs.select("doc_id"), "doc_id", anchors, 2).select(
         F.col("anchor_id").alias("anchor"),
         F.col("neg_id").alias("other"),
         F.lit("neg").alias("label"),
@@ -1180,14 +1180,14 @@ def q_assemble_training_set_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     sel = dsir_select_topk(
-        docs, "doc_id", "text", "doc_id % 50 = 0", 256, 200
+        docs, "doc_id", "text", "doc_id % 50 = 0", 200
     ).select("doc_id")
     picked = docs.join(sel, "doc_id").select("doc_id", "text")
     dd = passage_dedup(picked, "doc_id", "text", 16)
     sized = dd.select(
         "doc_id", F.size(tokens("text_deduped")).cast("bigint").alias("n_tok")
     )
-    return length_bucketed_batches(sized, "doc_id", "n_tok", 8, 64)
+    return length_bucketed_batches(sized, "doc_id", "n_tok", 8)
 
 
 _LEAKSAFE_ORACLE = f"""
@@ -1457,7 +1457,7 @@ def q_decontam_bloom_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = hash_split(t(spark, sf_dir, "documents"), "doc_id", 0.125)
     train = docs.filter(F.col("split") == "train")
     test = docs.filter(F.col("split") == "test")
-    return bloom_contamination_audit(train, test, "doc_id", "text", 3, 3, 262144)
+    return bloom_contamination_audit(train, test)
 
 
 _V6_ORACLE = """

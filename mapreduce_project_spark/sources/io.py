@@ -61,11 +61,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load several tables at once as a dict name → DataFrame."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_tables(
     spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES
 ) -> None:

@@ -455,7 +455,7 @@ class Ctx:
     def anomaly(self):
         """(median, MAD, residual frame) of the batch EWMA residuals."""
         evx = self.ev.select("event_id", "user_id", "ts", cents_col().alias("xc"))
-        sm = ewma_fixed(evx, "user_id", ["ts"], "xc", 1, 2)
+        sm = ewma_fixed(evx, "user_id", ["ts"], "xc")
         w = Window.partitionBy("user_id").orderBy("ts")
         resid = sm.withColumn("r", F.col("x") - F.lag("ewma_fx").over(w)).filter(
             F.col("r").isNotNull()
@@ -823,7 +823,7 @@ def cmp_ewma(c, out):
         (r["user_id"], r["ts"], r["x"], r["ewma_fx"])
         for r in ewma_fixed(
             c.ev.select("event_id", "user_id", "ts", cents_col().alias("xc")),
-            "user_id", ["ts"], "xc", 1, 2,
+            "user_id", ["ts"], "xc",
         ).collect()
     }
     ok = got == want and bool(got)
@@ -975,7 +975,7 @@ SPECS = {s.name: s for s in (
          cmp_heavy_hitters),
     Spec("anomaly", "anomaly_stream", "flagged_rows",
          lambda c, out, ck, _inj, m: to_parquet(
-             S.anomaly_stream(x_stream(c, m), c.anomaly[0], c.anomaly[1], 5), out, ck),
+             S.anomaly_stream(x_stream(c, m), c.anomaly[0], c.anomaly[1]), out, ck),
          cmp_anomaly),
     Spec("twap", "twap_stream", "keys", start_twap, cmp_twap),
     Spec("cusum", "cusum_stream", "days", start_cusum, cmp_cusum),

@@ -363,7 +363,7 @@ def test_ewma_fixed_matches_sequential_reference(spark):
     )
     got = {
         (r["user_id"], r["ts"]): r["ewma_fx"]
-        for r in ewma_fixed(ev, "user_id", ["ts"], "x_cents", 1, 2).collect()
+        for r in ewma_fixed(ev, "user_id", ["ts"], "x_cents").collect()
     }
     rows = sorted(ev.collect(), key=lambda r: (r["user_id"], r["ts"]))
     state: dict[int, int] = {}
@@ -431,7 +431,7 @@ def test_new_operator_edges(spark):
     one = spark.createDataFrame(
         [(1, "2024-01-01 00:00:00", 40)], "user_id long, ts string, x long"
     ).select("user_id", F.col("ts").cast("timestamp").alias("ts"), "x")
-    rows = ewma_fixed(one, "user_id", ["ts"], "x", 1, 2).collect()
+    rows = ewma_fixed(one, "user_id", ["ts"], "x").collect()
     assert len(rows) == 1 and rows[0]["ewma_fx"] == 40
 
     # fold rewrite of empty and single-token arrays is the identity
@@ -444,7 +444,7 @@ def test_new_operator_edges(spark):
     from mapreduce_project_spark.operators.multimodal import patchify
 
     tiny = spark.createDataFrame([(7, b"abc", 64)], "doc_id long, payload binary, w long")
-    p = patchify(tiny, "doc_id", "payload", "w", 16).collect()
+    p = patchify(tiny, "w").collect()
     assert sum(r["n_real"] for r in p) == 3
     assert sum(r["byte_sum"] for r in p) == sum(b"abc")
     assert len(p) == 4  # one band, ceil(64/16) grid columns
@@ -478,7 +478,7 @@ def test_ewma_negative_values_match_duckdb_truncation(spark, duck):
     df = spark.createDataFrame(rows, "k long, i long, x long")
     got = {
         (r["k"], r["i"]): r["ewma_fx"]
-        for r in ewma_fixed(df, "k", ["i"], "x", 1, 2).collect()
+        for r in ewma_fixed(df, "k", ["i"], "x").collect()
     }
     vals = ", ".join(f"(1, {i}, {x})" for _, i, x in rows)
     want = {

@@ -26,9 +26,9 @@ def test_minhash_signatures_shape_and_determinism(spark):
     from tests.conftest import SF_DIR as _SF
 
     docs = load_table(spark, _SF, "documents").limit(50)
-    sig = {r["id"]: list(r["sig"]) for r in minhash_signatures(docs, "doc_id", "text", 3, 64).collect()}
+    sig = {r["id"]: list(r["sig"]) for r in minhash_signatures(docs, "doc_id", "text").collect()}
     assert all(len(s) == 64 for s in sig.values())
-    again = {r["id"]: list(r["sig"]) for r in minhash_signatures(docs, "doc_id", "text", 3, 64).collect()}
+    again = {r["id"]: list(r["sig"]) for r in minhash_signatures(docs, "doc_id", "text").collect()}
     assert sig == again  # seeded hash family → run-to-run identical
 
 
@@ -39,16 +39,16 @@ def test_minhash_subset_and_recall(spark):
     # >=0.8-Jaccard pair on the fixtures (measured exact at sf0.001,
     # sf0.01 and sf0.1; per-pair miss prob ~(1-0.8^4)^16 ≈ 2e-4)
     docs = load_table(spark, SF_DIR, "documents")
-    exact = _pairs(jaccard_pairs(docs, "doc_id", "text", 3, 0.8))
-    mh = _pairs(minhash_lsh_pairs(docs, "doc_id", "text", 3, 64, 16, 0.8))
+    exact = _pairs(jaccard_pairs(docs, "doc_id", "text", 0.8))
+    mh = _pairs(minhash_lsh_pairs(docs, "doc_id", "text"))
     assert exact, "fixture should contain planted near-dup pairs"
     assert mh == exact, f"fp: {mh - exact} / missed: {exact - mh}"
 
 
 def test_simhash_finds_planted_dups(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    exact = _pairs(jaccard_pairs(docs, "doc_id", "text", 3, 0.9))
-    sh = _pairs(simhash_pairs(docs, "doc_id", "text", 3))
+    exact = _pairs(jaccard_pairs(docs, "doc_id", "text", 0.9))
+    sh = _pairs(simhash_pairs(docs, "doc_id", "text"))
     assert sh, "simhash should find at least the closest planted dups"
     # hamming<=3 on 64-bit simhash is a much stricter notion than
     # jaccard>=0.9; every simhash pair should be a true near-dup pair
@@ -97,11 +97,11 @@ def test_prefix_filter_equals_quadratic_jaccard(spark):
     docs = load_table(spark, SF_DIR, "documents")
     exact = {
         (r["id_a"], r["id_b"], r["jac"])
-        for r in jaccard_pairs(docs, "doc_id", "text", 3, 0.8).collect()
+        for r in jaccard_pairs(docs, "doc_id", "text", 0.8).collect()
     }
     fast = {
         (r["id_a"], r["id_b"], r["jac"])
-        for r in prefix_filter_jaccard_pairs(docs, "doc_id", "text", 3, 4, 5).collect()
+        for r in prefix_filter_jaccard_pairs(docs, "doc_id", "text").collect()
     }
     assert fast == exact
     assert len(exact) > 0
@@ -120,7 +120,7 @@ def test_prefix_filter_on_identical_corpus(spark):
         F.col("id").alias("doc_id"),
         F.lit("alpha beta gamma delta epsilon zeta eta").alias("text"),
     )
-    out = prefix_filter_jaccard_pairs(docs, "doc_id", "text", 3, 4, 5).collect()
+    out = prefix_filter_jaccard_pairs(docs, "doc_id", "text").collect()
     assert len(out) == 12 * 11 // 2
     assert all(r["jac"] == 1.0 for r in out)
 
@@ -196,11 +196,11 @@ def test_probe_config_drift_is_hard_error(spark):
 
     idx32 = minhash_index_build(corpus, "doc_id", "text", 3, 32)
     with pytest.raises(Exception, match="n_perm"):
-        minhash_probe_pairs(idx32, crawl, "doc_id", "text", 3, 64, 16, 0.8).collect()
+        minhash_probe_pairs(idx32, crawl, "doc_id", "text", 16).collect()
 
     idx64 = minhash_index_build(corpus, "doc_id", "text", 3, 64)
     with pytest.raises(ValueError, match="multiple of bands"):
-        minhash_probe_pairs(idx64, crawl, "doc_id", "text", 3, 64, 24, 0.8)
+        minhash_probe_pairs(idx64, crawl, "doc_id", "text", 24)
 
 
 def test_probe_dup_heavy_crawl_verifies_every_pair(spark):
@@ -302,7 +302,7 @@ def test_containment_pairs_planted_asymmetry(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["contained_id"], r["container_id"]): r
-        for r in containment_pairs(df, "doc_id", "text", 3, 7, 10, 5).collect()
+        for r in containment_pairs(df, "doc_id", "text").collect()
     }
     assert (1, 2) in got
     r = got[(1, 2)]
@@ -345,7 +345,7 @@ def test_lsh_auto_bits_scales_with_corpus_and_keeps_planted_recall(spark):
     )
     full = emb.select("vec_id", "embedding", "label").unionByName(pl)
     out = embedding_dedup_clusters_lsh(
-        full, "vec_id", "embedding", 0.95, n_tables=32, n_bits="auto", dim=64
+        full, "vec_id", "embedding", 0.95, n_bits="auto", dim=64
     )
     got = {r["vec_id"]: r["rep_id"] for r in out.collect()}
     for i in range(2):
@@ -380,14 +380,14 @@ def test_snm_finds_prefix_sorted_dups_and_documents_its_miss_class(spark):
 
     got = {
         (r["id_a"], r["id_b"])
-        for r in sorted_neighborhood_pairs(df, "doc_id", "text", 3, 24, 4, 0.8).collect()
+        for r in sorted_neighborhood_pairs(df, "doc_id", "text").collect()
     }
     assert (1, 2) in got
     assert (3, 4) not in got, "changed-opening pair must be the SNM miss class"
     # the missed pair IS a true near-dup — MinHash catches it
     mh = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(df, "doc_id", "text", 3, 64, 16, 0.8).collect()
+        for r in minhash_lsh_pairs(df, "doc_id", "text").collect()
     }
     assert (3, 4) in mh
 

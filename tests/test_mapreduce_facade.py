@@ -61,7 +61,7 @@ def test_facade_matches_native_word_count(spark):
 
     native = {
         (r["word"], r["cnt"])
-        for r in word_count(load_table(spark, SF_DIR, "documents"), "text").collect()
+        for r in word_count(load_table(spark, SF_DIR, "documents")).collect()
     }
     facade = {
         (r["key"], int(r["value"]))

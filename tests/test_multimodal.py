@@ -37,7 +37,7 @@ def test_frame_sample_matches_python(spark):
     docs = load_table(spark, SF_DIR, "documents").limit(20)
     got: dict[tuple, bytes] = {
         (r["doc_id"], r["frame_idx"]): bytes(r["frame"])
-        for r in frame_sample(attach_payload(docs), frame_size=256, every=4).collect()
+        for r in frame_sample(attach_payload(docs)).collect()
     }
     for row in docs.select("doc_id", "text").collect():
         b = row["text"].encode("utf-8")
@@ -540,7 +540,7 @@ def test_logmel_planted_tone_lands_in_predicted_band(spark):
     )
     got = {
         r["id"]: r
-        for r in logmel_features(df, "id", "data", "sample_rate_hz",
+        for r in logmel_features(df, "id",
                                  n_fft, hop, n_mels).collect()
     }
     # independent reference for the tone
@@ -656,7 +656,7 @@ def test_phash_dedup_planted_perturbation(spark, tmp_path):
     )
     got = {
         r["doc_id"]: r["phash"]
-        for r in phash64(decode_media(enc, "doc_id", "payload")).collect()
+        for r in phash64(decode_media(enc)).collect()
     }
     assert got == ref
     # every hash is balanced: exactly 32 set bits by construction
@@ -702,7 +702,7 @@ def test_logmel_rate_is_read_positionally(spark):
     got = sorted(
         r["energy_q"]
         for r in logmel_features(
-            df, "id", "data", "sample_rate_hz", n_fft, hop, n_mels
+            df, "id", n_fft, hop, n_mels
         ).collect()
     )
     want = sorted([ref_energy_q(tone, 8000), ref_energy_q(tone, 16000)])

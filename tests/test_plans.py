@@ -482,7 +482,7 @@ def test_duplicate_spans_ground_truth_on_planted_docs(spark):
         (3, " ".join(f"z{chr(97 + i)}" for i in range(20))),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    rows = duplicate_spans(df, "doc_id", "text", 16, 2).collect()
+    rows = duplicate_spans(df, "doc_id", "text").collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["span"] == run

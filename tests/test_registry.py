@@ -4,8 +4,9 @@ The driver records its correctness rows in registry order, so the
 declared slate must be exactly `DECLARED`, in order, and every other
 registered query must stay reachable through `EXTRA_*` and `ALL_*`.
 No name, registered or module-level, may be defined twice, no block
-of engine code may be pasted twice, and no engine parameter may keep a
-default that every call leaves as it is.
+of engine code may be pasted twice, no engine parameter may keep a
+default that every call leaves as it is, and only one driver may call
+``applyInPandasWithState``.
 """
 
 from __future__ import annotations
@@ -150,6 +151,29 @@ def test_no_block_of_engine_code_is_pasted_twice():
     assert not copies, f"{CLONE_LINES}-line blocks written twice:\n" + "\n".join(copies)
 
 
+def test_only_the_keyed_fold_driver_calls_apply_in_pandas_with_state():
+    # every stateful stream is a per-key fold over one driver that owns
+    # the GroupState protocol; a second hand-written copy drifts from it
+    callers = []
+
+    def visit(node, owner, rel):
+        for child in ast.iter_child_nodes(node):
+            inner = owner
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            elif isinstance(child, ast.Call) and \
+                    getattr(child.func, "attr", None) == "applyInPandasWithState":
+                callers.append(f"{rel}::{owner}")
+            visit(child, inner, rel)
+
+    for path in sorted(glob.glob(os.path.join(ROOT, "mapreduce_project_spark", "**", "*.py"),
+                                 recursive=True)):
+        with open(path, encoding="utf-8") as fh:
+            visit(ast.parse(fh.read(), path), "<module>",
+                  os.path.relpath(path, os.path.join(ROOT, "mapreduce_project_spark")))
+    assert callers == ["streaming/events.py::_keyed_fold"]
+
+
 # Defaulted engine parameters that every call may leave at the default.
 # Each one is a real option of the interface it belongs to.
 OPTION_EXEMPT = {
@@ -158,10 +182,11 @@ OPTION_EXEMPT = {
 }
 
 
-def _engine_options() -> list[tuple[str, str, list[tuple[str, int | None]]]]:
+def _engine_options() -> list[tuple[str, str, list[tuple[str, int | None, ast.expr]]]]:
     """``(where, called name, [(defaulted param, its position or None
-    when keyword-only)])`` of every engine def; methods drop ``self``/
-    ``cls`` and a class's ``__init__`` is called by the class name."""
+    when keyword-only, its default)])`` of every engine def; methods drop
+    ``self``/``cls`` and a class's ``__init__`` is called by the class
+    name."""
     out = []
     for path in sorted(glob.glob(os.path.join(ROOT, "mapreduce_project_spark", "**", "*.py"),
                                  recursive=True)):
@@ -179,21 +204,34 @@ def _engine_options() -> list[tuple[str, str, list[tuple[str, int | None]]]]:
             ):
                 pos = pos[1:]
                 name = owner[id(node)].name if name == "__init__" else name
-            defaulted = [(p, pos.index(p)) for p in pos[len(pos) - len(a.defaults):]]
+            defaulted = [
+                (p, pos.index(p), d)
+                for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)
+            ]
             defaulted += [
-                (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+                (p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
             ]
             if defaulted:
                 out.append((f"{rel}::{node.name}", name, defaulted))
     return out
 
 
-def _set_by_some_call() -> dict[str, set]:
-    """Called name → what the checkout's calls pass: keyword names,
-    ``("#", n)`` for n positional arguments, or ``"*"`` when the callee
-    is referenced as a value or called with ``*args``/``**kwargs``
-    (every parameter then counts as set)."""
-    passed = collections.defaultdict(set)
+def _literal(node: ast.expr):
+    """``node``'s literal value tagged with its repr (so ``1``, ``1.0``
+    and ``True`` differ), or a fresh object, equal to nothing, when the
+    node is not a literal."""
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return object()
+
+
+def _calls() -> dict[str, list]:
+    """Called name → the checkout's calls of it, each ``(positional
+    argument nodes, {keyword: node})``, or ``"*"`` when the callee is
+    referenced as a value or called with ``*args``/``**kwargs`` (every
+    parameter then counts as set)."""
+    calls = collections.defaultdict(list)
     for path in glob.glob(os.path.join(ROOT, "**", "*.py"), recursive=True):
         with open(path, encoding="utf-8") as fh:
             tree = ast.parse(fh.read(), path)
@@ -206,32 +244,43 @@ def _set_by_some_call() -> dict[str, set]:
             if any(isinstance(x, ast.Starred) for x in node.args) or any(
                 k.arg is None for k in node.keywords
             ):
-                passed[name].add("*")
+                calls[name].append("*")
             else:
-                passed[name].update({("#", len(node.args))} | {k.arg for k in node.keywords})
+                calls[name].append((node.args, {k.arg: k.value for k in node.keywords}))
         for node in ast.walk(tree):
             if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load) \
                     and id(node) not in callees:
-                passed[node.id].add("*")
+                calls[node.id].append("*")
             elif isinstance(node, ast.Attribute) and id(node) not in callees:
-                passed[node.attr].add("*")
-    return passed
+                calls[node.attr].append("*")
+    return calls
+
+
+def _set_by_some_call(param: str, i: int | None, default: ast.expr, calls: list) -> bool:
+    """Whether one of ``calls`` passes ``param`` (at position ``i``, or
+    by keyword) a value other than its ``default``; an argument that is
+    not a literal counts as a different value."""
+    for call in calls:
+        if call == "*":
+            return True
+        args, kws = call
+        arg = args[i] if i is not None and i < len(args) else kws.get(param)
+        if arg is not None and _literal(arg) != _literal(default):
+            return True
+    return False
 
 
 def test_no_engine_option_is_left_at_its_default_by_every_call():
-    # a parameter no caller sets is a setting with one value in use:
-    # tests and benchmarks would have to cover the values nobody runs
-    passed = _set_by_some_call()
-    unset = set()
-    for where, name, defaulted in _engine_options():
-        got = passed.get(name, set())
-        if "*" in got:
-            continue
-        n_pos = max((x[1] for x in got if isinstance(x, tuple)), default=0)
-        unset.update(
-            f"{where}({p})" for p, i in defaulted
-            if p not in got and (i is None or i >= n_pos)
-        )
+    # a parameter no caller sets to another value is a setting with one
+    # value in use: tests and benchmarks would have to cover the values
+    # nobody runs
+    calls = _calls()
+    unset = {
+        f"{where}({p})"
+        for where, name, defaulted in _engine_options()
+        for p, i, d in defaulted
+        if not _set_by_some_call(p, i, d, calls.get(name, []))
+    }
     options = sorted(unset - set(OPTION_EXEMPT))
     assert not options, "parameters no call sets (make them constants):\n" + "\n".join(options)
     stale = sorted(set(OPTION_EXEMPT) - unset)

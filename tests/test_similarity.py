@@ -49,7 +49,7 @@ def test_ann_declared_config_full_recall(spark):
     ann = {
         tuple(r)
         for r in topk_ann_lsh(
-            emb, queries, "vec_id", "embedding", 5, n_tables=32, n_bits=4
+            emb, queries, "vec_id", "embedding", 5, n_tables=32
         ).collect()
     }
     assert ann == exact
@@ -150,7 +150,7 @@ def test_knn_join_ann_recall_vs_exact_graph(spark):
         (r["id"], r["neighbor_id"])
         for r in knn_join(emb, "vec_id", "embedding", 3).collect()
     }
-    ann_rows = knn_join_ann(emb, "vec_id", "embedding", 3, n_tables=32, n_bits=4).collect()
+    ann_rows = knn_join_ann(emb, "vec_id", "embedding", 3).collect()
     ann = {(r["id"], r["neighbor_id"]) for r in ann_rows}
     n_ids = emb.count()
     assert len(exact) == 3 * n_ids
@@ -257,11 +257,11 @@ def test_pq_adc_correct_when_a_cluster_empties(spark):
         f"codebook cids not re-densified: {[sorted(b) for b in books]}"
     )
     codes = {}
-    for r in pq_encode(df, "vec_id", "embedding", dim, m, k, iters=1).collect():
+    for r in pq_encode(df, "vec_id", "embedding", dim, m, k).collect():
         codes.setdefault(r["id"], {})[r["subspace"]] = r["code"]
     sub = dim // m
     vmap = dict(vecs)
-    out = topk_pq_adc(df, df, "vec_id", "embedding", 3, dim, m, k, iters=1).collect()
+    out = topk_pq_adc(df, df, "vec_id", "embedding", 3, dim, m, k).collect()
     assert len(out) == len(vecs) * 3
     for r in out:
         assert r["dist"] is not None
@@ -504,7 +504,7 @@ def test_lsh_cluster_recall_floor_and_high_threshold_regime(spark):
         for r in cosine_pairs_gemm(emb, "vec_id", "embedding", 0.3, "one").collect()
     }
     clustered = embedding_dedup_clusters_lsh(
-        emb, "vec_id", "embedding", 0.3, n_tables=32, n_bits=8, dim=64
+        emb, "vec_id", "embedding", 0.3, n_bits=8, dim=64
     )
     # recall proxy on the clustered-vector set: every exact pair whose
     # two ends land in the same output cluster was recovered
@@ -539,7 +539,7 @@ def test_lsh_cluster_recall_floor_and_high_threshold_regime(spark):
         vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = embedding_dedup_clusters_lsh(
-        df, "vec_id", "embedding", 0.95, n_tables=32, n_bits=8, dim=64
+        df, "vec_id", "embedding", 0.95, n_bits=8, dim=64
     ).collect()
     got: dict[int, set[int]] = {}
     for r in out:

@@ -134,7 +134,7 @@ def test_null_inputs_never_crash(spark):
         ),
     )
     stats = with_token_stats(docs).select(
-        "doc_id", quality_score("text").alias("q"), redact_pii("text").alias("r")
+        "doc_id", quality_score().alias("q"), redact_pii("text").alias("r")
     ).collect()
     assert {r["doc_id"] for r in stats} == {0, 1, 2}
     assert next(r for r in stats if r["doc_id"] == 1)["q"] is None
@@ -349,7 +349,7 @@ def test_hot_key_keyed_udf_paths_under_skew(spark):
     )
     out = {
         (r["ts"], r["ewma_fx"])
-        for r in ewma_fixed(base, "user_id", ["ts", "event_id"], "xc", 1, 2)
+        for r in ewma_fixed(base, "user_id", ["ts", "event_id"], "xc")
         .filter(F.col("user_id") == 7)
         .collect()
     }
@@ -488,7 +488,7 @@ def test_containment_prefix_immune_to_hot_shingle(spark):
                 want.add((da, db))
     got = {
         (r["contained_id"], r["container_id"])
-        for r in containment_pairs(skewed, "doc_id", "text", 3, 7, 10, 5).collect()
+        for r in containment_pairs(skewed, "doc_id", "text").collect()
     }
     assert got == want
     assert sum(1 for a, b in want if b >= 1000) >= 5  # planted pairs found

@@ -10,9 +10,16 @@ from __future__ import annotations
 
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_project_spark.operators.events import tumbling_window_agg
+from mapreduce_project_spark.operators.windows import (
+    cusum_fold,
+    ewma_fold,
+    holt_fold,
+    holt_winters_fold,
+)
 from mapreduce_project_spark.sources import load_table
 from mapreduce_project_spark.streaming.events import (
     read_event_stream,
@@ -587,7 +594,7 @@ def test_streaming_ewma_matches_batch_across_batches(spark, tmp_path):
     want = {
         (r["user_id"], r["ts"], r["x"], r["ewma_fx"])
         for r in ewma_fixed(
-            ev.withColumnRenamed("x", "xc"), "user_id", ["ts"], "xc", 1, 2
+            ev.withColumnRenamed("x", "xc"), "user_id", ["ts"], "xc"
         ).collect()
     }
     assert got == want and got
@@ -639,7 +646,7 @@ def test_streaming_ewma_negative_values_match_batch(spark, tmp_path):
     want = {
         (r["user_id"], r["x"], r["ewma_fx"])
         for r in ewma_fixed(
-            ev.withColumnRenamed("x", "xc"), "user_id", ["ts"], "xc", 1, 2
+            ev.withColumnRenamed("x", "xc"), "user_id", ["ts"], "xc"
         ).collect()
     }
     assert got == want and got
@@ -667,7 +674,7 @@ def test_streaming_anomaly_flags_match_batch(spark, tmp_path):
 
     from mapreduce_project_spark.operators.windows import ewma_fixed
 
-    sm = ewma_fixed(ev.withColumnRenamed("x", "xc"), "user_id", ["ts"], "xc", 1, 2)
+    sm = ewma_fixed(ev.withColumnRenamed("x", "xc"), "user_id", ["ts"], "xc")
     w = Window.partitionBy("user_id").orderBy("ts")
     resid = sm.withColumn("r", F.col("x") - F.lag("ewma_fx").over(w)).filter(
         F.col("r").isNotNull()
@@ -695,7 +702,7 @@ def test_streaming_anomaly_flags_match_batch(spark, tmp_path):
         .parquet(str(src) + "/*/")
     )
     q = (
-        anomaly_stream(stream, med, mad, 5)
+        anomaly_stream(stream, med, mad)
         .writeStream.format("memory")
         .queryName("anom_s")
         .outputMode("append")
@@ -1408,6 +1415,38 @@ def test_streaming_holt_winters_matches_replay_across_batches(spark, tmp_path):
     assert any(r[4] < 0 or r[5] < 0 for r in got)
 
 
+_FOLDS = {
+    "ewma": ewma_fold,
+    "cusum": lambda state, ns: cusum_fold(state, ns, 4000, 1000),
+    "holt": holt_fold,
+    "holt_winters": holt_winters_fold,
+}
+
+# 13 days: a negative step (EWMA 5 then -8 sums to -3, whose half
+# truncates to -1 but floors to -2), cuts inside the 7-day Holt-Winters
+# warm-up, right after it and in the seasonal phase; then a series
+# shorter than the warm-up
+_FOLD_SERIES = (
+    [5, -8, 3, 9, -1, 0, 12, -9, -4, 3, 3, -11, 6],
+    [4, -7, 2],
+)
+
+
+@pytest.mark.parametrize("name", sorted(_FOLDS))
+def test_shared_fold_cut_anywhere_equals_one_call(name):
+    # the stream twins fold each micro-batch from the carried state and
+    # the batch queries fold the whole series from None; both give the
+    # same rows only if a cut anywhere, state carried across it, changes
+    # nothing
+    fold = _FOLDS[name]
+    for ys in _FOLD_SERIES:
+        whole = fold(None, ys)
+        for cut in range(len(ys) + 1):
+            state, head = fold(None, ys[:cut])
+            end, tail = fold(state, ys[cut:])
+            assert (end, head + tail) == whole, (ys, cut)
+
+
 def test_streaming_psi_matches_batch_arithmetic_across_batches(spark, tmp_path):
     # Frozen reference bins (the model artifact); the current-window
     # counts accumulate across three micro-batches. The final reading
@@ -1915,7 +1954,7 @@ def test_erase_ids_from_streaming_trees(spark, tmp_path):
         for f in os.listdir(other_dir)
     }
     ids = spark.createDataFrame([(subject,)], "doc_id bigint")
-    n = erase_ids_from_tree(spark, idx, ids, id_col="id")
+    n = erase_ids_from_tree(spark, idx, ids)
     assert n >= 1
     after_ids = {r["id"] for r in read_signature_tree(spark, idx).collect()}
     assert subject not in after_ids
@@ -1926,7 +1965,7 @@ def test_erase_ids_from_streaming_trees(spark, tmp_path):
         for f in os.listdir(other_dir)
     } == mt_before
     # retry is a no-op
-    assert erase_ids_from_tree(spark, idx, ids, id_col="id") == 0
+    assert erase_ids_from_tree(spark, idx, ids) == 0
     assert {
         r["id"] for r in read_signature_tree(spark, idx).collect()
     } == after_ids

@@ -264,7 +264,7 @@ def test_linear_gd_predict_is_exact_dot_product(spark):
     )
     # lr = 1e-5 sits inside the stability bound 2/λmax(E[xxᵀ]) ≈ 1.5e-4
     # for x ∈ [0, 200) (E[x²] ≈ 13233)
-    w = linear_gd_fixed(df, ["b", "x"], "y", n_iter=2, lr_num=1, lr_den=100000)
+    w = linear_gd_fixed(df, ["b", "x"], "y", n_iter=2, lr_den=100000)
     wmap = {r["feature"]: r["w_fx"] for r in w.collect()}
     scored = linear_predict_fixed(df, w, ["b", "x"]).collect()
     for r in scored:
@@ -288,7 +288,7 @@ def test_linear_gd_converges_to_closed_form(spark):
         F.col("id").alias("x"), (F.col("id") * 3).alias("y")
     )
     # λmax = E[x²] = 28.5 → lr bound 0.070; lr = 1/30 converges in <8 rounds
-    w = linear_gd_fixed(df, ["x"], "y", n_iter=8, lr_num=1, lr_den=30)
+    w = linear_gd_fixed(df, ["x"], "y", n_iter=8, lr_den=30)
     wmap = {r["feature"]: r["w"] for r in w.collect()}
     assert abs(wmap["x"] - 3.0) < 0.1
 
@@ -328,7 +328,7 @@ def test_length_bucketed_batches_invariants(spark):
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", F.size(tokens("text")).cast("bigint").alias("n_tok")
     )
-    out = length_bucketed_batches(docs, "doc_id", "n_tok", 8, 64).collect()
+    out = length_bucketed_batches(docs, "doc_id", "n_tok", 8).collect()
     assert out
     total = 0
     for r in out:
@@ -383,7 +383,7 @@ def test_dsir_rank_key_is_partition_invariant(spark):
 
     def run(parts):
         out = dsir_select_topk(
-            df.repartition(parts), "doc_id", "text", "doc_id % 50 = 0", 256, 80
+            df.repartition(parts), "doc_id", "text", "doc_id % 50 = 0", 80
         ).collect()
         return [(r["doc_id"], r["logw"]) for r in out]
 
