@@ -19,6 +19,7 @@ from mapreduce_project_spark.operators.join import asof_join, range_join
 from mapreduce_project_spark.operators.relational import dec_sum, percentiles, pivot_count
 from mapreduce_project_spark.operators.similarity import topk_ivf
 from mapreduce_project_spark.queries_registry import query, t
+from mapreduce_project_spark.sources.io import observe_metrics
 
 
 def _cosupply_edges(
@@ -1930,6 +1931,36 @@ def _hits_oracle() -> str:
     """
 
 
+def _hits_half_round(
+    e: DataFrame, score: DataFrame, src: tuple[str, str], dst: tuple[str, str]
+) -> DataFrame:
+    """One HITS half-round over the edges ``e``: each ``dst`` node's raw
+    score is the sum of its ``src`` neighbours' scores, milli-normalized
+    by the largest raw sum of the round (``raw * 1000 div max``).
+    ``src``/``dst`` are (node column, score column) pairs.
+
+    The raw sums are checkpointed eagerly and their MAX is observed in
+    that same job, so the normalizer launches no job of its own and
+    enters the projection as a literal. MAX is idempotent: a task run
+    twice (a retry, a lost executor) cannot change the observed value.
+    With no edges the max is None and the (empty) scores are NULL, as
+    the oracle's scalar subquery gives. The score side is one small row
+    per node, so it is broadcast: left to AQE, the join is planned
+    sort-merge, shuffles both sides, and only then re-plans to a
+    broadcast join."""
+    raw, obs = observe_metrics(
+        e.join(F.broadcast(score), src[0])
+        .groupBy(dst[0])
+        .agg(F.sum(src[1]).cast("bigint").alias("raw")),
+        "hits_max",
+        m=F.max("raw"),
+    )
+    raw = raw.localCheckpoint(eager=True)
+    return raw.withColumn("m", F.lit(obs.get["m"]).cast("bigint")).select(
+        dst[0], F.expr("cast(raw * 1000 div m as bigint)").alias(dst[1])
+    )
+
+
 @query("graph_hits_bipartite", _hits_oracle())
 def q_graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities (D301, Kleinberg 1999) over the
@@ -1952,10 +1983,15 @@ def q_graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalings, and HITS rank order is invariant to per-round positive
     scaling); all sums exact BIGINTs (h ≤ 1000, so a_raw ≤ 1000·deg —
     int64 headroom to degree ~9e15); ties pinned (score DESC, node).
-    Plan: per round one edge⋈score equi-join + one node-keyed partial
-    agg + one singleton MAX broadcast — 4 bounded shuffle stages with
-    O(V) state each side, localCheckpoint per round (the k-core
-    lineage discipline). Top-20 per side at any scale. Reference: no
+    Plan: per half-round (`_hits_half_round`) one edge⋈score join
+    with the score side broadcast + one node-keyed partial agg, O(V)
+    state, checkpointed eagerly (the k-core lineage discipline) with
+    the round's MAX observed in that same job and applied as a literal
+    — 3 jobs a half-round, no job for the normalizer. Measured on the
+    benchmark fixture (sf0.01, 4 cores, schemas cached): 29 jobs — 3
+    build the edges, 3 each half-round (4 in the first, which also
+    lists the distinct customers) and 1 ranks and writes the result.
+    Top-20 per side at any scale. Reference: no
     graph surface in the reference; capability class per SURVEY §2
     D301."""
     o = (
@@ -1976,42 +2012,9 @@ def q_graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = e.select("c").distinct().withColumn(
         "h", F.lit(1000).cast("bigint")
     )
-    # Checkpoint the RAW per-round sums, not the normalized scores: the
-    # singleton MAX and the normalized projection both consume the raw
-    # table, so materializing `ar`/`hr` runs the edge⋈score join+agg
-    # ONCE per half-round, whereas checkpointing `a`/`h` ran it twice
-    # (once to build the max broadcast, once for the checkpoint —
-    # guide §5: materialize the subtree every consumer shares).
-    # Lineage stays bounded: each round's scores are one crossJoin
-    # projection above a checkpoint. Arithmetic unchanged.
-    # NOTE (r14): dropping the `ar` checkpoint (one checkpoint per
-    # round instead of two, betting on AQE ReusedExchange to dedup the
-    # max-broadcast and projection branches inside the hr action) was
-    # tried and measured SLOWER in 3 of 3 interleaved cycles (pooled
-    # min 2.84 vs 3.56 s) with MORE jobs (57 -> 70): the agg-over-ar
-    # broadcast branch materializes its own stages and the reuse does
-    # not cover them. The r13 two-checkpoint form stands.
     for _ in range(_HITS_ROUNDS):
-        ar = (
-            e.join(h, "c")
-            .groupBy("s")
-            .agg(F.sum("h").cast("bigint").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        am = ar.agg(F.max("raw").alias("m"))
-        a = ar.crossJoin(F.broadcast(am)).select(
-            "s", F.expr("cast(raw * 1000 div m as bigint)").alias("a")
-        )
-        hr = (
-            e.join(a, "s")
-            .groupBy("c")
-            .agg(F.sum("a").cast("bigint").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        hm = hr.agg(F.max("raw").alias("m"))
-        h = hr.crossJoin(F.broadcast(hm)).select(
-            "c", F.expr("cast(raw * 1000 div m as bigint)").alias("h")
-        )
+        a = _hits_half_round(e, h, ("c", "h"), ("s", "a"))
+        h = _hits_half_round(e, a, ("s", "a"), ("c", "h"))
     from pyspark.sql import Window
 
     wa = Window.orderBy(F.col("a").desc(), F.col("s"))

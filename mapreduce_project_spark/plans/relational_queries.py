@@ -3084,9 +3084,12 @@ def q_join_size_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     past ~9e18 output rows — a join nobody should run unsalted — with
     the natural DuckDB HUGEINT widening on the oracle side); the
     champion is pinned by (rows DESC, key ASC) via max_by struct
-    ordering. Plan: ONE partial agg per table side + a key-table
-    equi-join that shuffles ONE bigint per distinct key; nothing
-    corpus-width moves. Two rows out."""
+    ordering. Plan: ONE partial agg per table side + one full outer
+    equi-join of the two key tables (one bigint per distinct key
+    shuffled) + one singleton agg that yields both side totals, the
+    common-key count, the product-sum and the champion; nothing
+    corpus-width moves and no second pass counts a table. Two rows
+    out."""
     li = t(spark, sf_dir, "lineitem")
     od = t(spark, sf_dir, "orders")
     cu = t(spark, sf_dir, "customer")
@@ -3098,22 +3101,22 @@ def q_join_size_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
         ro = right.groupBy(F.col(rkey).alias("k")).agg(
             F.count(F.lit(1)).cast("bigint").alias("cr")
         )
-        jk = lo.join(ro, "k").select(
-            "k", (F.col("cl") * F.col("cr")).cast("bigint").alias("rows_k")
-        )
-        nl = left.agg(F.count(F.lit(1)).cast("bigint").alias("n_left"))
-        nr = right.agg(F.count(F.lit(1)).cast("bigint").alias("n_right"))
+        # one full outer join of the two count tables gives both side
+        # totals too; a NULL key never matches, so it counts in its
+        # side's total and nowhere else, as in the inner join predicted
+        rows_k = (F.col("cl") * F.col("cr")).cast("bigint")
         return (
-            jk.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_keys_common"),
-                F.sum("rows_k").cast("bigint").alias("predicted_rows"),
-                F.expr(
-                    "max_by(k, struct(rows_k, -k))"
+            lo.join(ro, "k", "full")
+            .agg(
+                F.coalesce(F.sum("cl"), F.lit(0)).cast("bigint").alias("n_left"),
+                F.coalesce(F.sum("cr"), F.lit(0)).cast("bigint").alias("n_right"),
+                F.count(rows_k).cast("bigint").alias("n_keys_common"),
+                F.sum(rows_k).cast("bigint").alias("predicted_rows"),
+                F.max_by(
+                    "k", F.when(rows_k.isNotNull(), F.struct(rows_k, -F.col("k")))
                 ).cast("bigint").alias("top_key"),
-                F.max("rows_k").cast("bigint").alias("top_key_rows"),
+                F.max(rows_k).cast("bigint").alias("top_key_rows"),
             )
-            .crossJoin(F.broadcast(nl))
-            .crossJoin(F.broadcast(nr))
             .select(
                 F.lit(name).alias("join_name"),
                 "n_left", "n_right", "n_keys_common", "predicted_rows",

@@ -24,10 +24,12 @@ should instead flow through the streaming/text paths.
 from __future__ import annotations
 
 import functools
+import os
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # The driver's synthetic test tables (TESTDATA.md).
 TABLES = (
@@ -44,6 +46,35 @@ TABLES = (
 )
 
 
+# Parquet schemas read so far, keyed by `_schema_key`. Unbounded: one
+# entry per distinct table file a session loads.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """What a parquet schema read depends on: the session (its
+    application id and the two inference confs the engine sets) and
+    the identity of every file at ``path`` — absolute path, size,
+    ``st_mtime_ns`` and inode. A Spark-written table is a directory
+    whose part files are named anew by each write, so a rewritten
+    table never matches an old key. None for a path that is not on
+    the local file system."""
+    path = os.path.abspath(path)
+    if os.path.isfile(path):
+        files = [path]
+    elif os.path.isdir(path):
+        files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+    else:
+        return None
+    stats = [(f, os.stat(f)) for f in files]
+    return (
+        spark.sparkContext.applicationId,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled"),
+        *((f, st.st_size, st.st_mtime_ns, st.st_ino) for f, st in stats),
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic parquet table from ``sf_dir``.
 
@@ -53,9 +84,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     microsecond timestamps with integer division (``div`` — a double
     division would lose precision at ns-epoch magnitude). DuckDB
     truncates ns → µs the same way, so oracle timestamps agree.
+
+    Spark infers a parquet schema with a job of its own, so each
+    table's schema is read once and handed to ``spark.read.schema`` on
+    later loads. The cache key (`_schema_key`) is the session's
+    application id and its ``nanosAsLong`` and ``inferTimestampNTZ``
+    confs, plus the path, size, ``st_mtime_ns`` and inode of each file
+    of the table, so a rewritten table is read afresh.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(spark, path)
+    if key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[key] = df.schema
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

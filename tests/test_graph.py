@@ -303,6 +303,34 @@ def test_hits_star_fixture_closed_form(spark, tmp_path):
     assert (1, 1, 1000) in got_h    # the concentrating customer
 
 
+def test_hits_window_without_edges_is_empty(spark, tmp_path):
+    # No order falls in January 1995, so there are no edges: every
+    # round's MAX is None, which must stay a NULL literal, not SQL text.
+    import datetime
+
+    _write(
+        spark, tmp_path, "orders",
+        "o_orderkey bigint, o_custkey bigint, o_orderdate date",
+        [(1, 1, datetime.date(1995, 3, 1))],
+    )
+    _write(spark, tmp_path, "lineitem", "l_orderkey bigint, l_suppkey bigint", [(1, 101)])
+    assert R.ALL_QUERIES["graph_hits_bipartite"](spark, str(tmp_path)).collect() == []
+
+
+def test_hits_job_count_on_benchmark_fixture(spark):
+    # Each half-round costs 3 jobs and observes its MAX inside its
+    # checkpoint job; with the two tables' schemas cached, the query is
+    # 29 jobs.
+    from mapreduce_project_spark.plans.inspect import run_noop
+    from mapreduce_project_spark.sources.io import load_table
+    from perfbench.fixture import BASE_DIR
+
+    for name in ("orders", "lineitem"):
+        load_table(spark, BASE_DIR, name)
+    got = run_noop(lambda: R.ALL_QUERIES["graph_hits_bipartite"](spark, BASE_DIR))
+    assert got["jobs"] == 29
+
+
 # ---------------------------------------------------------------- D303
 
 

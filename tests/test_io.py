@@ -385,6 +385,63 @@ def test_observe_metrics_rides_along_with_action(spark, tmp_path):
     assert got["total"] == sum(i for i in range(1000) if i % 10 != 0)
 
 
+def _jobs_launched(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-launched-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reads_a_rewritten_table_afresh(spark, tmp_path):
+    from mapreduce_project_spark.sources.io import load_table
+    from tests.conftest import _write
+
+    _write(spark, tmp_path, "orders", "o_orderkey bigint", [(1,)])
+    assert load_table(spark, str(tmp_path), "orders").columns == ["o_orderkey"]
+    _write(spark, tmp_path, "orders", "o_orderkey bigint, o_note string", [(2, "x")])
+    df = load_table(spark, str(tmp_path), "orders")
+    assert df.columns == ["o_orderkey", "o_note"]
+    assert [tuple(r) for r in df.collect()] == [(2, "x")]
+
+
+def test_load_table_reads_an_unchanged_schema_once(spark, tmp_path):
+    from mapreduce_project_spark.sources.io import load_table
+    from tests.conftest import _write
+
+    _write(spark, tmp_path, "orders", "o_orderkey bigint", [(1,)])
+    first = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    again = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    assert first >= 1  # the schema read
+    assert again == 0
+
+
+def test_load_table_events_ts_is_timestamp_when_schema_cached(spark, tmp_path):
+    # a TIMESTAMP(NANOS) events.ts is read as long and truncated to
+    # microseconds; a load from the cached schema does the same
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_project_spark.sources.io import load_table
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({"user_id": pa.array([1, 2], pa.int64()),
+                  "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    for _ in range(2):
+        df = load_table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = [r[0] for r in df.orderBy("user_id").select(F.unix_micros("ts")).collect()]
+        assert got == [x // 1000 for x in ns]
+
 def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
     import glob
 

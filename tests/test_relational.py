@@ -372,6 +372,36 @@ def test_join_preflight_champion_tie_breaks_low_key(spark, tmp_path):
     assert got.loc["lineitem_orders"].top_key == 1
 
 
+def test_join_preflight_null_keys_one_sided_keys_and_a_hot_key(spark, tmp_path):
+    # lineitem keys {1 x3, 2 x2, 5 (left only), NULL x2}; orders keys
+    # {1 x2, 2, 3 (right only), NULL}: key 1 is hot on both sides, so
+    # predicted = 3*2 + 2*1 = 8 over 2 common keys, champion 1 at 6/8.
+    # orders custkeys {10 x3, 20 (left only), NULL}; customers {10, 30
+    # (right only), NULL}: predicted 3 over 1 common key, champion 10.
+    # NULL keys count in their side's total and never match.
+    _write_trio(
+        spark, tmp_path,
+        lineitems=[1, 1, 1, 2, 2, 5, None, None],
+        orders=[(1, 10), (1, 10), (2, 20), (3, None), (None, 10)],
+        customers=[10, 30, None],
+    )
+    got = (
+        R.ALL_QUERIES["join_size_preflight"](spark, str(tmp_path))
+        .toPandas()
+        .set_index("join_name")
+    )
+    n = {name: spark.read.parquet(str(tmp_path / f"{name}.parquet")).count()
+         for name in ("lineitem", "orders", "customer")}
+    lo = got.loc["lineitem_orders"]
+    assert (lo.n_left, lo.n_right) == (n["lineitem"], n["orders"]) == (8, 5)
+    assert (lo.n_keys_common, lo.predicted_rows, lo.top_key) == (2, 8, 1)
+    assert (lo.top_key_rows, lo.top_share_ppm) == (6, 750000)
+    oc = got.loc["orders_customer"]
+    assert (oc.n_left, oc.n_right) == (n["orders"], n["customer"]) == (5, 3)
+    assert (oc.n_keys_common, oc.predicted_rows, oc.top_key) == (1, 3, 10)
+    assert (oc.top_key_rows, oc.top_share_ppm) == (3, 1000000)
+
+
 # ---------------------------------------------------------------- D288
 
 
