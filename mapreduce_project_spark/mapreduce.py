@@ -34,8 +34,13 @@ Reference parity, piece by piece (SURVEY.md §2.A):
 
 Scale notes: both python stages are Arrow-batched; ``repartition(n,
 key)`` makes the reduce parallelism explicit like ``num_reducers``
-(``master.py:257-263``) — at 100 TB let AQE coalesce instead by passing
-``num_partitions=None``. The reduce stage materializes one PARTITION's
+(``master.py:257-263``). Pass ``num_partitions=None`` to let AQE size
+the reduce stage from the data instead, at any scale: each reduce
+partition is a Python task with a fixed cost, so at sf0.01 a pinned 8
+runs eight tasks for 31 rows where ``None`` coalesces them into one,
+and at 100 TB the byte target keeps each reducer's partition bounded.
+The registered ``word_count_mr`` and ``inverted_index_mr`` pass
+``None``. The reduce stage materializes one PARTITION's
 value lists in memory — exactly the reference reducer's model
 (``worker.py:193-198``, which reads and groups its whole partition);
 algebraic reductions should use native ``groupBy().agg`` instead.

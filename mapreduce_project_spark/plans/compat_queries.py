@@ -41,7 +41,7 @@ def _docs_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_word_count_mr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4-A9 facade: word count through run_job (map emits (word,1),
     reduce sums) — differentially equal to the native `word_count`."""
-    return run_job(spark, _docs_kv(spark, sf_dir), wc.mr_map, wc.mr_reduce, num_partitions=8)
+    return run_job(spark, _docs_kv(spark, sf_dir), wc.mr_map, wc.mr_reduce, num_partitions=None)
 
 
 @query(
@@ -67,7 +67,7 @@ def q_inverted_index_mr(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the facade's driver signal; this second facade job is
     oracle-checked in tests plus the local-executor differential
     (tests/test_mapreduce_facade.py)."""
-    return run_job(spark, _docs_kv(spark, sf_dir), ii.mr_map, ii.mr_reduce, num_partitions=8)
+    return run_job(spark, _docs_kv(spark, sf_dir), ii.mr_map, ii.mr_reduce, num_partitions=None)
 
 
 @query(
